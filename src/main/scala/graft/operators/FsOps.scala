@@ -119,29 +119,36 @@ private[graft] object FsOps {
       spark: org.apache.spark.sql.SparkSession, tableDir: String,
       batch: DataFrame, leg: String): Unit = {
     val fs = fsOf(spark, tableDir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(tableDir))) {
-      // Name AND type, order-insensitive: a batch with matching names
-      // but a different type (label INT vs stored STRING) would also
-      // append cleanly and leave mixed-type files that fail — or
-      // silently coerce — on the next read, the exact corruption class
-      // this guard exists to reject. Nullability is excluded AT EVERY
-      // DEPTH (simpleString erases it, including array containsNull —
-      // parquet round-trips flip it freely and the union is harmless).
-      def shape(s: org.apache.spark.sql.types.StructType) =
-        s.fields.map(f => (f.name, f.dataType.simpleString))
-          .sortBy(_._1).toSeq
-      val stored = shape(spark.read.parquet(tableDir).schema)
-      val incoming = shape(batch.schema)
-      require(incoming == stored,
-        s"$leg: appended batch schema " +
-          s"[${incoming.map(f => s"${f._1}: ${f._2}").mkString(", ")}]" +
-          " does not match the stored index schema " +
-          s"[${stored.map(f => s"${f._1}: ${f._2}").mkString(", ")}]" +
-          " — metadata columns persist beside the vector for the " +
-          "filtered serve, so every batch must carry the same column " +
-          "set AND types the index was built with (a raw parquet " +
-          "append would leave mixed-schema files behind instead of " +
-          "failing)")
-    }
+    if (fs.exists(new org.apache.hadoop.fs.Path(tableDir)))
+      requireColumns(spark.read.parquet(tableDir).schema, batch, leg)
+  }
+
+  /** [[requireAppendColumns]] against an already-known stored schema
+    * (an opened [[IndexSnapshot]] holds it), so the gate runs no
+    * schema-inference job. */
+  def requireColumns(storedSchema: org.apache.spark.sql.types.StructType,
+      batch: DataFrame, leg: String): Unit = {
+    // Name AND type, order-insensitive: a batch with matching names
+    // but a different type (label INT vs stored STRING) would also
+    // append cleanly and leave mixed-type files that fail — or
+    // silently coerce — on the next read, the exact corruption class
+    // this guard exists to reject. Nullability is excluded AT EVERY
+    // DEPTH (simpleString erases it, including array containsNull —
+    // parquet round-trips flip it freely and the union is harmless).
+    def shape(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => (f.name, f.dataType.simpleString))
+        .sortBy(_._1).toSeq
+    val stored = shape(storedSchema)
+    val incoming = shape(batch.schema)
+    require(incoming == stored,
+      s"$leg: appended batch schema " +
+        s"[${incoming.map(f => s"${f._1}: ${f._2}").mkString(", ")}]" +
+        " does not match the stored index schema " +
+        s"[${stored.map(f => s"${f._1}: ${f._2}").mkString(", ")}]" +
+        " — metadata columns persist beside the vector for the " +
+        "filtered serve, so every batch must carry the same column " +
+        "set AND types the index was built with (a raw parquet " +
+        "append would leave mixed-schema files behind instead of " +
+        "failing)")
   }
 }

@@ -944,9 +944,9 @@ object TextAnalysis {
     // prune to the WRONG partitions and silently return partial
     // results; a future postings reshape bumps fmt so stale dirs are
     // rejected loudly instead of mis-served.
-    IndexMeta.write(documents.sparkSession, dir,
+    IndexMeta.write(documents.sparkSession, dir, Seq(
       "layout" -> "inverted", "nBuckets" -> nBuckets.toString,
-      "fmt" -> "1")
+      "fmt" -> "1") ++ IndexSnapshot.buildTokens(): _*)
   }
 
   /** DELETE documents from a persisted [[writeInvertedIndex]] layout —
@@ -983,6 +983,7 @@ object TextAnalysis {
     merged.write.mode("overwrite").parquet(staging)
     FsOps.swapInto(FsOps.fsOf(spark, dir), staging,
       s"$dir/tombstones")
+    IndexSnapshot.bumpData(spark, dir)
   }
 
   /** Drain the tombstones of a [[deleteFromInvertedIndex]]'d layout by
@@ -1023,6 +1024,7 @@ object TextAnalysis {
       }
       FsOps.deleteIfExists(fs, new Path(s"$dir/tombstones"))
     }
+    IndexSnapshot.bumpData(spark, dir)
   }
 
   private val TombSchema = "doc_id LONG, dl BIGINT"
@@ -1048,6 +1050,70 @@ object TextAnalysis {
     val ts = dirs.flatMap(shardTombstones(spark, _))
     if (ts.isEmpty) None else Some(ts.reduce(_.unionByName(_)))
   }
+
+  /** One opened [[writeInvertedIndex]] shard: its directory and the
+    * [[IndexSnapshot]] of its current generation, checked against the
+    * serve's bucketing (serving at a different bucketing than the
+    * build would prune to the wrong partitions). */
+  private final case class Shard(dir: String, snap: IndexSnapshot.Snapshot)
+
+  private def openShards(spark: org.apache.spark.sql.SparkSession,
+      dirs: Seq[String], nBuckets: Int): Seq[Shard] =
+    dirs.map(d => Shard(d, IndexSnapshot.open(spark, d,
+      "layout" -> "inverted", "nBuckets" -> nBuckets.toString,
+      "fmt" -> "1")))
+
+  /** A shard's sub-table read with the schema its build stored (a
+    * delete or compaction rewrites rows, never columns) — no
+    * schema-inference job per request. */
+  private def shardTable(spark: org.apache.spark.sql.SparkSession,
+      sh: Shard, table: String): DataFrame = {
+    val path = s"${sh.dir}/$table"
+    spark.read.schema(sh.snap.quantizer(s"$table.schema")(
+      spark.read.parquet(path).schema)).parquet(path)
+  }
+
+  /** Whether a shard has a tombstone table — part of its generation. */
+  private def tombstoned(spark: org.apache.spark.sql.SparkSession,
+      sh: Shard): Boolean =
+    sh.snap.data[java.lang.Boolean]("tombstones")(
+      Boolean.box(shardTombstones(spark, sh.dir).isDefined))
+
+  /** [[unionTombstones]] over opened shards. */
+  private def openTombstones(spark: org.apache.spark.sql.SparkSession,
+      shards: Seq[Shard]): Option[DataFrame] = {
+    val ts = shards.filter(tombstoned(spark, _))
+      .map(sh => spark.read.schema(TombSchema)
+        .parquet(s"${sh.dir}/tombstones"))
+    if (ts.isEmpty) None else Some(ts.reduce(_.unionByName(_)))
+  }
+
+  /** One shard's corpus-stat sums and, when it has tombstones, its
+    * deleted docs' (count, Σdl) — each sum None where SQL's sum is
+    * NULL, so shards combine exactly as the old serve-time union
+    * aggregate did. */
+  private final case class ShardStats(nDocs: Option[Long],
+      totDl: Option[Long], deleted: Option[(Long, Long)])
+
+  private def shardStats(spark: org.apache.spark.sql.SparkSession,
+      sh: Shard): ShardStats =
+    sh.snap.data("stats") {
+      // The stats table is one row per build: collected and summed
+      // here, with SQL's sum rules (NULLs skipped; all NULL is NULL).
+      val raw = shardTable(spark, sh, "stats")
+        .select(col("n_docs"), col("tot_dl")).collect()
+      def total(i: Int) = {
+        val xs = raw.filterNot(_.isNullAt(i)).map(_.getLong(i))
+        if (xs.isEmpty) None else Some(xs.sum)
+      }
+      val del = if (!tombstoned(spark, sh)) None else {
+        val r = spark.read.schema(TombSchema)
+          .parquet(s"${sh.dir}/tombstones")
+          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
+        Some((r.getLong(0), r.getLong(1)))
+      }
+      ShardStats(total(0), total(1), del)
+    }
 
   /** The masked (doc_id, term) posting pairs of a stored layout — the
     * lexical-overlap view serving COMPOSITIONS (hybrid RRF from
@@ -1080,12 +1146,10 @@ object TextAnalysis {
       nBuckets: Int = 64): DataFrame = {
     require(dirs.nonEmpty, "at least one index shard required")
     require(phrase.nonEmpty, "phrase must have at least one term")
-    dirs.foreach(d => IndexMeta.requireMatch(spark, d,
-      "layout" -> "inverted", "nBuckets" -> nBuckets.toString,
-      "fmt" -> "1"))
-    val tombs = unionTombstones(spark, dirs)
+    val shards = openShards(spark, dirs, nBuckets)
+    val tombs = openTombstones(spark, shards)
     val legs = phrase.zipWithIndex.map { case (t, i) =>
-      val postings = dirs.map(d => spark.read.parquet(s"$d/postings")
+      val postings = shards.map(sh => shardTable(spark, sh, "postings")
           .filter(col("tbucket") === lit(Sampling.hashBucketLocal(t,
             nBuckets)) && col("term") === t)
           .select(col("doc_id"), col("positions")))
@@ -1144,26 +1208,24 @@ object TextAnalysis {
       dirs: Seq[String], terms: Seq[String], nBuckets: Int = 64,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(dirs.nonEmpty, "at least one index shard required")
-    dirs.foreach(d => IndexMeta.requireMatch(spark, d,
-      "layout" -> "inverted", "nBuckets" -> nBuckets.toString,
-      "fmt" -> "1"))
+    val shards = openShards(spark, dirs, nBuckets)
     val buckets = terms.map(t => Sampling.hashBucketLocal(t, nBuckets))
       .distinct
-    val tombs = unionTombstones(spark, dirs)
-    val rawStats = dirs.map(d => spark.read.parquet(s"$d/stats")
-        .select(col("n_docs"), col("tot_dl")))
-      .reduce(_.unionByName(_))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-    // Tombstone adjustment: subtract the deleted docs' exact (count,
-    // Σdl) so idf and avgdl equal an index rebuilt without them.
-    val stats = tombs.map { tb =>
-      rawStats.crossJoin(broadcast(tb.agg(
-          count(lit(1)).as("del_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("del_dl"))))
-        .select((col("n_docs") - col("del_docs")).as("n_docs"),
-          (col("tot_dl") - col("del_dl")).as("tot_dl"))
-    }.getOrElse(rawStats)
-    val tf0 = dirs.map(d => spark.read.parquet(s"$d/postings")
+    val tombs = openTombstones(spark, shards)
+    // Corpus stats are scalars of the opened generations: the shards'
+    // (n_docs, Σdl) sums, minus — when any shard deleted — the deleted
+    // docs' exact (count, Σdl), so idf and avgdl equal an index
+    // rebuilt without them. Integer sums, combined with SQL's NULL
+    // rules, so the literals equal the one-row aggregate the serve
+    // used to cross-join per request.
+    val st = shards.map(shardStats(spark, _))
+    val deleted = st.flatMap(_.deleted)
+    def total(raw: Seq[Option[Long]], del: Seq[Long]) =
+      (if (raw.forall(_.isEmpty)) None else Some(raw.flatten.sum - del.sum))
+        .map(lit(_)).getOrElse(lit(null).cast("long"))
+    val nDocs = total(st.map(_.nDocs), deleted.map(_._1))
+    val totDl = total(st.map(_.totDl), deleted.map(_._2))
+    val tf0 = shards.map(sh => shardTable(spark, sh, "postings")
         .filter(col("tbucket").isin(buckets: _*) &&
           col("term").isin(terms: _*))
         .select(col("term"), col("doc_id"), col("tf"), col("dl")))
@@ -1172,15 +1234,14 @@ object TextAnalysis {
         Seq("doc_id"), "left_anti"))
       .getOrElse(tf0)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val avgdl = col("tot_dl").cast("double") / col("n_docs").cast("double")
+    val avgdl = totDl.cast("double") / nDocs.cast("double")
     val idf = log(lit(1.0) +
-      (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
+      (nDocs.cast("double") - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5)))
     val weight = idf * (col("tf").cast("double") * lit(k1 + 1.0)) /
       (col("tf").cast("double") +
         lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
     tf.join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"),
         sum(round(weight, 6).cast("decimal(18,6)")).cast("double").as("score"))

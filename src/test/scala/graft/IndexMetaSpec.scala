@@ -247,4 +247,158 @@ class IndexMetaSpec extends SparkSpec {
       assert(e.getMessage.contains("rename"))
     }
   }
+
+  // ---- generation-keyed serve snapshots -----------------------------
+
+  private lazy val annVecs = {
+    import spark.implicits._
+    graft.operators.Similarity.vectors(Tables.embeddings(spark, sfDir))
+      .select($"vec_id", $"v")
+  }
+  private lazy val annProbes = {
+    import spark.implicits._
+    annVecs.filter($"vec_id" < 4)
+  }
+  private val Terms = Seq("hash", "join", "spark")
+  private val Phrase = Seq("slow", "hash", "batch")
+
+  private def annServe(dir: String): Set[org.apache.spark.sql.Row] =
+    graft.operators.Similarity.searchIvfPqIndex(spark, dir, annVecs,
+      annProbes, 5, rerankDepth = graft.operators.Similarity.AutoRerankDepth)
+      .collect().toSet
+  private def bm25Serve(dir: String): Set[org.apache.spark.sql.Row] =
+    graft.operators.TextAnalysis.searchInvertedIndex(spark, dir, Terms, 8)
+      .collect().toSet
+  private def phraseServe(dir: String): Set[org.apache.spark.sql.Row] =
+    graft.operators.TextAnalysis.searchPhraseIndex(spark, dir, Phrase, 8)
+      .collect().toSet
+
+  /** The serve through whatever the cache holds, then again from an
+    * emptied cache: they must agree after every write leg. */
+  private def warmEqualsCold[A](step: String)(serve: => A): A = {
+    val warm = serve
+    graft.operators.IndexSnapshot.clear()
+    val cold = serve
+    assert(warm == cold,
+      s"after $step the serve through the open snapshot differs from a " +
+        "cold-cache serve — a write did not retire its generation")
+    warm
+  }
+
+  private def ids(rows: Set[org.apache.spark.sql.Row], col: String) =
+    rows.map(_.getAs[Long](col))
+
+  test("IVF-PQ serves after append, delete, compact and rebuild equal cold-cache serves") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    withTempDir("graft_snap_ann") { dir =>
+      Similarity.writeIvfPqIndex(annVecs.filter($"vec_id" % 2 === 0), dir,
+        quantizer = Some(annVecs))
+      val built = warmEqualsCold("build")(annServe(dir))
+      assert(ids(built, "neighbor_id").forall(_ % 2 == 0))
+      Similarity.appendIvfPqIndex(spark,
+        annVecs.filter($"vec_id" % 2 =!= 0), dir)
+      val appended = warmEqualsCold("append")(annServe(dir))
+      assert(ids(appended, "neighbor_id").exists(_ % 2 != 0),
+        "the appended vectors must be served")
+      val victims = ids(appended, "neighbor_id").toSeq.sorted.take(3)
+      Similarity.deleteFromIvfIndex(spark, victims.toDF("vec_id"), dir)
+      val deleted = warmEqualsCold("delete")(annServe(dir))
+      assert(ids(deleted, "neighbor_id").intersect(victims.toSet).isEmpty,
+        "deleted vectors must not be served")
+      Similarity.compactIvfPqIndex(spark, dir)
+      assert(warmEqualsCold("compact")(annServe(dir)) === deleted)
+      // Same parameters, same directory, a different corpus.
+      Similarity.writeIvfPqIndex(annVecs.filter($"vec_id" % 3 =!= 0), dir)
+      val rebuilt = warmEqualsCold("rebuild")(annServe(dir))
+      assert(rebuilt.nonEmpty && ids(rebuilt, "neighbor_id").forall(_ % 3 != 0))
+    }
+  }
+
+  test("BM25 and phrase serves after delete, compact and rebuild equal cold-cache serves") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    val docs = Tables.documents(spark, sfDir)
+    withTempDir("graft_snap_text") { dir =>
+      TextAnalysis.writeInvertedIndex(docs, dir, 8)
+      val built = warmEqualsCold("build")((bm25Serve(dir), phraseServe(dir)))
+      val victims = ids(built._1, "doc_id").toSeq.sorted.take(5) ++
+        ids(built._2, "doc_id").toSeq.sorted.take(2)
+      TextAnalysis.deleteFromInvertedIndex(spark, victims.toDF("doc_id"), dir)
+      val deleted = warmEqualsCold("delete")((bm25Serve(dir), phraseServe(dir)))
+      assert((ids(deleted._1, "doc_id") ++ ids(deleted._2, "doc_id"))
+        .intersect(victims.toSet).isEmpty, "deleted docs must not be served")
+      TextAnalysis.compactInvertedIndex(spark, dir)
+      assert(warmEqualsCold("compact")((bm25Serve(dir), phraseServe(dir))) ===
+        deleted)
+      TextAnalysis.writeInvertedIndex(docs.filter($"doc_id" % 2 === 0), dir, 8)
+      val rebuilt = warmEqualsCold("rebuild")((bm25Serve(dir), phraseServe(dir)))
+      assert(ids(rebuilt._1, "doc_id").forall(_ % 2 == 0))
+    }
+  }
+
+  test("a rebuild written from a second SparkSession retires the first session's snapshot") {
+    import graft.operators.{Similarity, TextAnalysis}
+    val other = spark.newSession()
+    import other.implicits._
+    withTempDir("graft_snap_sess") { root =>
+      val (ann, text) = (s"$root/ann", s"$root/text")
+      Similarity.writeIvfPqIndex(annVecs, ann)
+      TextAnalysis.writeInvertedIndex(Tables.documents(spark, sfDir), text, 8)
+      val before = (annServe(ann), bm25Serve(text))
+      Similarity.writeIvfPqIndex(
+        Similarity.vectors(Tables.embeddings(other, sfDir))
+          .select($"vec_id", $"v").filter($"vec_id" % 2 === 0), ann)
+      TextAnalysis.writeInvertedIndex(
+        Tables.documents(other, sfDir).filter($"doc_id" % 2 === 0), text, 8)
+      val after = warmEqualsCold("the other session's rebuild")(
+        (annServe(ann), bm25Serve(text)))
+      assert(after != before && ids(after._1, "neighbor_id").forall(_ % 2 == 0) &&
+        ids(after._2, "doc_id").forall(_ % 2 == 0))
+    }
+  }
+
+  test("four threads serving one index at once get identical results") {
+    import graft.operators.{IndexSnapshot, Similarity, TextAnalysis}
+    withTempDir("graft_snap_threads") { root =>
+      val (ann, text) = (s"$root/ann", s"$root/text")
+      Similarity.writeIvfPqIndex(annVecs, ann)
+      TextAnalysis.writeInvertedIndex(Tables.documents(spark, sfDir), text, 8)
+      val want = (annServe(ann), bm25Serve(text), phraseServe(text))
+      IndexSnapshot.clear()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val got = (1 to 4).map(_ => pool.submit(
+          new java.util.concurrent.Callable[AnyRef] {
+            def call(): AnyRef = {
+              start.await()
+              (annServe(ann), bm25Serve(text), phraseServe(text))
+            }
+          }))
+        start.countDown()
+        got.foreach(f => assert(
+          f.get(10, java.util.concurrent.TimeUnit.MINUTES) == want))
+      } finally pool.shutdownNow()
+    }
+  }
+
+  test("a sidecar without generation tokens memoizes nothing") {
+    import spark.implicits._
+    import graft.operators.{IndexSnapshot, Similarity}
+    withTempDir("graft_snap_legacy") { dir =>
+      Similarity.writeIvfPqIndex(annVecs, dir)
+      // A sidecar as an older build wrote it: no generation tokens.
+      IndexMeta.write(spark, dir, (IndexMeta.read(spark, dir) --
+        Seq(IndexSnapshot.QuantizerGen, IndexSnapshot.DataGen)).toSeq: _*)
+      val first = annServe(dir)
+      val victims = ids(first, "neighbor_id").toSeq.sorted.take(3)
+      Similarity.deleteFromIvfIndex(spark, victims.toDF("vec_id"), dir)
+      assert(!IndexMeta.read(spark, dir).contains(IndexSnapshot.DataGen),
+        "a write leg must not add tokens to a token-less sidecar")
+      val after = annServe(dir)
+      assert(ids(after, "neighbor_id").intersect(victims.toSet).isEmpty,
+        "a token-less index must re-derive its state on every serve")
+    }
+  }
 }

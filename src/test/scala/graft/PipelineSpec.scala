@@ -605,6 +605,40 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("inline cell and pair assignment reject a reserved input column loudly") {
+    // Metadata columns ride beside the codes on the fmt-2 build and
+    // append legs, and the inline assignment adds its own `cell` (or
+    // `c0`/`c1`) column: an input column of that name must fail at
+    // entry, naming the column, instead of being silently replaced or
+    // duplicated in the stored rows.
+    import graft.operators.Similarity
+    val vecs = clusteredVecs()
+    def rejects(col: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(s"input column '$col' is reserved"),
+        s"wrong rejection message: ${e.getMessage}")
+    }
+    withTempDir("graft_reserved_cell") { dir =>
+      rejects("cell")(Similarity.writeIvfPqIndex(
+        vecs.withColumn("cell", $"label"), dir))
+      Similarity.writeIvfPqIndex(vecs, dir)
+      rejects("cell")(Similarity.appendIvfPqIndex(spark,
+        vecs.drop("label").withColumn("cell", lit(1)), dir))
+      rejects("cell")(Similarity.writeIvfIndex(
+        vecs.withColumn("Cell", $"label"),
+        Similarity.kmeansTrain(vecs.select($"vec_id", $"v"), 4, 1),
+        s"$dir/flat"))
+    }
+    withTempDir("graft_reserved_pair") { dir =>
+      rejects("c0")(Similarity.writeImiPqIndex(
+        vecs.withColumn("c0", $"label"), Similarity.imiSubCentroids(vecs),
+        dir))
+      rejects("c1")(Similarity.writeImiIndex(
+        vecs.withColumn("c1", $"label"), Similarity.imiSubCentroids(vecs),
+        dir))
+    }
+  }
+
   test("imiSuggestedRerankDepth absorbs the largest virtual cell and " +
       "never loses recall to the fixed default") {
     // The clustered curve proved depth-vs-occupancy is THE recall

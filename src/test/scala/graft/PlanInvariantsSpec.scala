@@ -290,4 +290,59 @@ class PlanInvariantsSpec extends SparkSpec {
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
+
+  test("an opened persisted index builds its serve frames with no Spark job; collect job counts pinned") {
+    // The persisted serves derive their per-index state (schemas,
+    // collected quantizer, occupancy, corpus stats, tombstone
+    // presence) once per index generation (IndexSnapshot). On an index
+    // already served since its last write, building a request's frame
+    // must therefore run NO job, and the collect's job count is pinned
+    // at its current value: a job added to either half shows here.
+    import graft.operators.{Similarity, TextAnalysis}
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[A](f: => A): (A, Int) = {
+      org.apache.spark.graft.GraftSpillBridge.waitListenerBus(sc)
+      jobs.set(0)
+      val r = f
+      org.apache.spark.graft.GraftSpillBridge.waitListenerBus(sc)
+      (r, jobs.get)
+    }
+    withTempDir("graft_serve_jobs") { root =>
+      val (ann, text) = (s"$root/ann", s"$root/text")
+      val vecs = Similarity.vectors(Tables.embeddings(spark, sfDir))
+        .select($"vec_id", $"v")
+      Similarity.writeIvfPqIndex(vecs, ann)
+      TextAnalysis.writeInvertedIndex(Tables.documents(spark, sfDir), text, 8)
+      // One serving request: a single local probe vector.
+      val probe = Seq((-1L, vecs.filter($"vec_id" === 3).head.getSeq[Double](1)))
+        .toDF("vec_id", "v")
+      val serves = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "ann" -> (() => Similarity.searchIvfPqIndex(spark, ann, vecs, probe,
+          5, rerankDepth = Similarity.AutoRerankDepth)),
+        "bm25" -> (() => TextAnalysis.searchInvertedIndex(spark, text,
+          Seq("hash", "join", "spark"), 8)),
+        "phrase" -> (() => TextAnalysis.searchPhraseIndex(spark, text,
+          Seq("slow", "hash", "batch"), 8)))
+      serves.foreach(_._2().collect()) // opens both indexes
+      sc.addSparkListener(listener)
+      try {
+        val counts = serves.map { case (name, serve) =>
+          val (df, built) = jobsOf(serve())
+          val (_, collected) = jobsOf(df.collect())
+          name -> (built, collected)
+        }.toMap
+        info(s"serve jobs (build, collect): $counts")
+        assert(counts === Map("ann" -> (0, 6), "bm25" -> (0, 4),
+          "phrase" -> (0, 3)))
+      } finally sc.removeSparkListener(listener)
+    }
+  }
 }
