@@ -418,17 +418,8 @@ object Similarity {
     * layout-agnostic tombstone table ([[deleteFromBqIndex]]) beside
     * the code table, the same lifecycle discipline as the flat/SQ8/PQ
     * rungs. A rebuild clears stale tombstones first. */
-  def writeBqIndex(vecs: DataFrame, dir: String): Unit = {
-    clearTombstones(vecs.sparkSession, dir)
-    bqCodeRows(vecs).write.mode("overwrite").parquet(s"$dir/codes")
-    // fmt=2: the code table lives under `codes/` (fmt 1 — pre-r14 —
-    // wrote code files at the dir root). Every append/serve/compact
-    // leg requireMatches fmt so an old-layout dir is REJECTED loudly
-    // instead of appending a codes/ subdir the fmt-1 reader ignores
-    // (silent corpus loss) or serving half the corpus.
-    IndexMeta.write(vecs.sparkSession, dir,
-      "layout" -> "bq", "bits" -> "64", "fmt" -> "2")
-  }
+  def writeBqIndex(vecs: DataFrame, dir: String): Unit =
+    buildLayout(vecs.sparkSession, dir, BqLayout)(bqCodeRows(vecs))
 
   /** The stored code-row frame of the flat BQ build/append legs:
     * (vec_id, code0, code1, metadata…) — non-vector input columns
@@ -446,19 +437,12 @@ object Similarity {
   /** APPEND a vector batch's codes to a stored [[writeBqIndex]]
     * layout — per-vector rows, so build-half + append-half IS the
     * monolithic table (same rows, any file split); the gated query
-    * shares the monolithic oracle. Tombstones for re-added ids
-    * reconcile AFTER the data append commits ([[appendIvfIndex]]'s
-    * crash-window contract). */
+    * shares the monolithic oracle. The table is unpartitioned, so a
+    * full-drain placeholder stays harmlessly beside the appended rows. */
   def appendBqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "bq", "bits" -> "64", "fmt" -> "2")
-    val rows = bqCodeRows(vecs)
-    // Rows may carry metadata for the filtered serve — same column-set
-    // + type contract as every metadata-carrying append leg.
-    FsOps.requireAppendColumns(spark, s"$dir/codes", rows, "appendBqIndex")
-    rows.write.mode("append").parquet(s"$dir/codes")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs.select(col("vec_id")))
+    requireLayout(spark, dir, BqLayout)
+    appendRows(spark, dir, BqLayout, vecs, bqCodeRows(vecs), "appendBqIndex")
   }
 
   /** Tombstone-DELETE from the BQ layout — the tombstone table is
@@ -470,57 +454,18 @@ object Similarity {
     * under-returning k). [[compactBqIndex]] reclaims the space. */
   def deleteFromBqIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "bq", "bits" -> "64",
-      "fmt" -> "2")
+    requireLayout(spark, dir, BqLayout)
     deleteFromIvfIndex(spark, ids, dir)
   }
 
-  /** Compact the BQ layout: rewrite the code table without the
-    * tombstoned rows and drain the tombstone table — the whole-dir
-    * staged swap (codes are NOT cell-partitioned, so the unit of
-    * rewrite is the table, simpler than [[compactIvfIndex]]'s
-    * per-partition loop; the table is 16 B/vector, so even a full
-    * rewrite moves 1/32nd of the corpus bytes). A compaction that
-    * drains EVERY row swaps in a zero-row schema-preserving file so
-    * the table stays readable, and a later [[appendBqIndex]] appends
-    * beside it harmlessly (the table is unpartitioned — no
-    * mixed-partition-depth hazard). Serve parity with the uncompacted
-    * masked table is bit-for-bit (spec-pinned).
-    *
-    * CRASH-WINDOW ORDERING between the two swaps (shared by every
-    * compacting layout): the compacted CODE table commits first, the
-    * tombstone drain second. A crash between them leaves tombstones
-    * naming rows the code table no longer holds — harmless for
-    * serves (the anti-join masks ids that are already absent) but a
-    * later append that RE-ADDS one of those ids depends on
-    * [[reconcileTombstonesAfterAppend]] clearing the stale tombstone,
-    * or the re-added row would serve masked. The reverse order would
-    * be worse: draining tombstones first would UNMASK the deleted
-    * rows if the code swap then crashed. */
+  /** Compact the BQ layout: [[compactLayout]]'s whole-table rewrite —
+    * the codes are NOT cell-partitioned, so the unit of rewrite is the
+    * table (16 B/vector, so even a full rewrite moves 1/32nd of the
+    * corpus bytes). Serve parity with the uncompacted masked table is
+    * bit-for-bit (spec-pinned). */
   def compactBqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    IndexMeta.requireMatch(spark, dir, "layout" -> "bq", "bits" -> "64", "fmt" -> "2")
-    val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    readTombstones(spark, dir).foreach { tombs =>
-      val codes = spark.read.parquet(s"$dir/codes")
-      val staging = s"$dir/codes_compacting"
-      codes.join(broadcast(tombs), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(staging)
-      // A full drain can leave the staged write with no data file
-      // (every task empty); re-stage a zero-row schema-preserving
-      // file so the swapped-in table still reads.
-      val hasData = fs.listStatus(new Path(staging))
-        .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      if (!hasData)
-        codes.limit(0).write.mode("overwrite").parquet(staging)
-      FsOps.swapInto(fs, staging, s"$dir/codes")
-      val tombStaging = s"$dir/tombstones_next"
-      tombs.limit(0).write.mode("overwrite").parquet(tombStaging)
-      FsOps.swapInto(fs, tombStaging, s"$dir/tombstones")
-    }
-  }
+      dir: String): Unit =
+    compactLayout(spark, dir, BqLayout)
 
   /** [[bqRerank]] served from a stored [[writeBqIndex]] code table —
     * bit-identical to the in-memory path (BIGINT codes round-trip
@@ -566,11 +511,8 @@ object Similarity {
     * modes. */
   private def bqMaskedCodes(spark: org.apache.spark.sql.SparkSession,
       dir: String, pred: Option[Column]): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "bq", "bits" -> "64", "fmt" -> "2")
-    val codes1 = pred.foldLeft(spark.read.parquet(s"$dir/codes"))(_ filter _)
-    readTombstones(spark, dir)
-      .map(t => codes1.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(codes1)
+    requireLayout(spark, dir, BqLayout)
+    liveRows(spark, dir, BqLayout, readTombstones(spark, dir), pred)
   }
 
   private def bqServe(codes: DataFrame, vecs: DataFrame,
@@ -661,16 +603,11 @@ object Similarity {
     * tombstone table, [[compactIvfBqIndex]] is the affected-partition
     * rewrite. */
   def writeIvfBqIndex(vecs: DataFrame, cents: DataFrame,
-      dir: String): Unit = {
-    clearTombstones(vecs.sparkSession, dir)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val stored = vecs.sparkSession.read.parquet(s"$dir/centroids")
-    ivfBqCodeRows(vecs, stored)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    IndexMeta.write(vecs.sparkSession, dir, "layout" -> "ivf_bq",
-      "bits" -> "64", "fmt" -> "1")
-  }
+      dir: String): Unit =
+    buildLayout(vecs.sparkSession, dir, IvfBqLayout) {
+      cents.write.mode("overwrite").parquet(s"$dir/centroids")
+      ivfBqCodeRows(vecs, vecs.sparkSession.read.parquet(s"$dir/centroids"))
+    }
 
   /** The stored code-row frame of the IVF-BQ build/append legs:
     * (vec_id, code0, code1, metadata…, cell) — non-vector input
@@ -690,24 +627,13 @@ object Similarity {
   /** APPEND a batch to a persisted [[writeIvfBqIndex]] layout —
     * per-vector codes + stored-centroid assignment, so write(A) then
     * append(B) is row-for-row write(A ∪ B) under the same quantizer
-    * (the gated twin shares the monolithic oracle). Clears a
-    * full-drain placeholder first and reconciles re-added ids'
-    * tombstones after the data append commits. */
+    * (the gated twin shares the monolithic oracle). */
   def appendIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_bq",
-      "bits" -> "64", "fmt" -> "1")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val rows = ivfBqCodeRows(vecs2, cents)
-    // Rows may carry metadata for the filtered serve — same column-set
-    // + type contract as every metadata-carrying append leg.
-    FsOps.requireAppendColumns(spark, s"$dir/codes", rows, "appendIvfBqIndex")
-    clearDrainedPlaceholder(spark, s"$dir/codes")
-    rows
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs2.select(col("vec_id")))
+    requireLayout(spark, dir, IvfBqLayout)
+    appendRows(spark, dir, IvfBqLayout, vecs2,
+      ivfBqCodeRows(vecs2, spark.read.parquet(s"$dir/centroids")),
+      "appendIvfBqIndex")
   }
 
   /** Tombstone-DELETE from the IVF-BQ layout (layout-agnostic id
@@ -716,15 +642,11 @@ object Similarity {
       ids: DataFrame, dir: String): Unit =
     deleteFromIvfIndex(spark, ids, dir)
 
-  /** Compaction for the IVF-BQ layout: the affected-partition rewrite
-    * over the cell-partitioned code table ([[compactCellTable]] keys
-    * on vec_id/cell only). */
+  /** Compaction for the IVF-BQ layout: the affected-cell rewrite of
+    * [[compactLayout]] over the cell-partitioned code table. */
   def compactIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_bq",
-      "fmt" -> "1")
-    compactCellTable(spark, dir, "codes")
-  }
+      dir: String): Unit =
+    compactLayout(spark, dir, IvfBqLayout)
 
   /** Serve [[ivfBqTopK]] from a persisted [[writeIvfBqIndex]] layout —
     * bit-identical to the in-memory path (BIGINT codes round-trip
@@ -784,13 +706,10 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, shortlist: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_bq",
-      "bits" -> "64", "fmt" -> "1")
+    requireLayout(spark, dir, IvfBqLayout)
     val cents = spark.read.parquet(s"$dir/centroids")
-    val codes1 = pred.foldLeft(spark.read.parquet(s"$dir/codes"))(_ filter _)
-    val codes = readTombstones(spark, dir)
-      .map(t => codes1.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(codes1)
+    val codes = liveRows(spark, dir, IvfBqLayout, readTombstones(spark, dir),
+      pred)
     bqRefinedStage(ivfBqHam(codes, cents, probes, nprobe), vecs,
       probes, shortlist)
   }
@@ -1203,45 +1122,33 @@ object Similarity {
     * the persisted serve is bit-identical to [[imiTopK]] under the
     * same codebooks (spec-pinned). */
   def writeImiIndex(vecs: DataFrame, cents: DataFrame,
-      dir: String): Unit = {
-    clearTombstones(vecs.sparkSession, dir)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val stored = vecs.sparkSession.read.parquet(s"$dir/centroids")
-    // All input columns persist (metadata like `label` rides beside
-    // the vector), so [[searchImiIndexWhere]]'s predicate pushes to
-    // the stored scan — the same filtered-serve contract as the flat
-    // layout. The pair assignment is inline on the corpus row
-    // ([[withInlinePair]]) — no aggregate, no re-attach join.
-    withInlinePair(withNorm(vecs), collectHalves(stored))
-      .write.mode("overwrite").partitionBy("c0", "c1")
-      .parquet(s"$dir/index")
-    IndexMeta.write(vecs.sparkSession, dir, "layout" -> "imi",
-      "fmt" -> "1")
-  }
+      dir: String): Unit =
+    buildLayout(vecs.sparkSession, dir, ImiLayout) {
+      cents.write.mode("overwrite").parquet(s"$dir/centroids")
+      // All input columns persist (metadata like `label` rides beside
+      // the vector), so [[searchImiIndexWhere]]'s predicate pushes to
+      // the stored scan — the same filtered-serve contract as the flat
+      // layout. The pair assignment is inline on the corpus row
+      // ([[withInlinePair]]) — no aggregate, no re-attach join.
+      withInlinePair(withNorm(vecs), collectHalves(
+        vecs.sparkSession.read.parquet(s"$dir/centroids")))
+    }
 
   /** APPEND a corpus batch to a persisted [[writeImiIndex]] layout:
     * the batch assigns against the STORED codebooks (the quantizer is
     * fixed once trained — FAISS's `add` contract), so write(A) then
     * append(B) serves identically to write(A ∪ B) under the same
-    * codebooks (spec-pinned bit-for-bit). Tombstones of re-added ids
-    * are reconciled after the data append commits, same crash-window
-    * ordering as the flat layout's append. The batch must carry the
+    * codebooks (spec-pinned bit-for-bit). The batch must carry the
     * SAME column set the index was built with (metadata columns
     * persist beside the vector for the filtered serve) — ENFORCED by
-    * [[FsOps.requireAppendColumns]]: a mismatched batch fails loudly at
-    * entry instead of leaving mixed-schema parquet files behind. */
+    * [[appendRows]], with the rest of the shared append leg. */
   def appendImiIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "imi", "fmt" -> "1")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val rows = withInlinePair(withNorm(vecs2), collectHalves(cents))
-    FsOps.requireAppendColumns(spark, s"$dir/index", rows, "appendImiIndex")
-    clearDrainedPlaceholder(spark, s"$dir/index")
-    rows
-      .write.mode("append").partitionBy("c0", "c1")
-      .parquet(s"$dir/index")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs2.select(col("vec_id")))
+    requireLayout(spark, dir, ImiLayout)
+    appendRows(spark, dir, ImiLayout, vecs2,
+      withInlinePair(withNorm(vecs2),
+        collectHalves(spark.read.parquet(s"$dir/centroids"))),
+      "appendImiIndex")
   }
 
   /** Serve a persisted [[writeImiIndex]] layout: probes rank virtual-
@@ -1296,99 +1203,22 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    IndexMeta.requireMatch(spark, dir, "layout" -> "imi", "fmt" -> "1")
+    requireLayout(spark, dir, ImiLayout)
     val cents = spark.read.parquet(s"$dir/centroids")
     val assigned = inlineProbePairsRanked(probes, collectHalves(cents),
         nprobe)
       .select(col("probe_id"), col("l0"), col("l1"))
-    val idx1 = pred.foldLeft(spark.read.parquet(s"$dir/index"))(_ filter _)
-    val idx = readTombstones(spark, dir)
-      .map(t => idx1.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(idx1)
-    imiScored(probes, assigned, idx)
+    imiScored(probes, assigned,
+      liveRows(spark, dir, ImiLayout, readTombstones(spark, dir), pred))
   }
 
   /** Physically COMPACT a persisted [[writeImiIndex]] layout:
-    * rewrite only the virtual cells holding tombstoned rows and drain
-    * the tombstone table — [[compactIvfIndex]]'s affected-partition
-    * contract over the multi-index's TWO-LEVEL partitioning (the
-    * replace unit is the leaf pair dir `c0=X/c1=Y`; the parent level
-    * is only a directory shell). Reclamation must never change a
-    * result: the post-compaction serve is bit-identical to the
-    * tombstone-masked serve it replaces (oracle-gated, like every
-    * other persisted ANN layout). Same crash-window discipline:
-    * staging swept at entry, checked delete + checked rename per leaf
-    * (no rename-aside — a transient `c1=Y_old` would match the
-    * partition pattern and corrupt a concurrent partitioned read),
-    * tombstones drained to a zero-row table LAST so a crash
-    * mid-rename leaves deleted rows still masked, never unmasked. */
+    * [[compactLayout]] over the multi-index's TWO-LEVEL partitioning —
+    * the replace unit is the leaf pair dir `c0=X/c1=Y`; the parent
+    * level is only a directory shell. */
   def compactImiIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "imi", "fmt" -> "1")
-    compactPairTable(spark, dir, "index")
-  }
-
-  /** The pair-partitioned affected-leaf rewrite shared by
-    * [[compactImiIndex]] (raw-float `index/`) and
-    * [[compactImiPqIndex]] (code-only `codes/`) —
-    * [[compactCellTable]]'s contract over the two-level (c0, c1)
-    * partitioning. */
-  private def compactPairTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    readTombstones(spark, dir).foreach { tombs =>
-      val idx = spark.read.parquet(s"$dir/$table")
-      val affected = idx.join(broadcast(tombs), Seq("vec_id"))
-        .select(col("c0"), col("c1")).distinct()
-      val rewritten = idx.join(broadcast(affected), Seq("c0", "c1"))
-        .join(broadcast(tombs), Seq("vec_id"), "left_anti")
-      // Pair count is codebook-bounded (k²), so collecting the
-      // affected/emptied pair lists is metadata-sized — the same
-      // scale class as the rename loop itself.
-      def pairName(r: org.apache.spark.sql.Row) =
-        s"${partSegment("c0", r.get(0))}/${partSegment("c1", r.get(1))}"
-      val emptied = affected
-        .join(rewritten.select(col("c0"), col("c1")).distinct(),
-          Seq("c0", "c1"), "left_anti")
-        .collect().map(pairName).toSet
-      val staging = s"$dir/${table}_compacting"
-      rewritten.write.mode("overwrite").partitionBy("c0", "c1")
-        .parquet(staging)
-      def leafPairs(root: String): Set[String] = {
-        val rp = new Path(root)
-        if (!fs.exists(rp)) Set.empty
-        else fs.listStatus(rp).map(_.getPath)
-          .filter(_.getName.startsWith("c0=")).flatMap(p0 =>
-            fs.listStatus(p0).map(_.getPath.getName)
-              .filter(_.startsWith("c1="))
-              .map(n1 => s"${p0.getName}/$n1")).toSet
-      }
-      val stagedPairs = leafPairs(staging)
-      val livePairs = leafPairs(s"$dir/$table")
-      if (emptied.nonEmpty &&
-          ((livePairs -- emptied) ++ stagedPairs).isEmpty) {
-        val emptyStaging = s"$dir/${table}_empty"
-        idx.limit(0).write.mode("overwrite").parquet(emptyStaging)
-        FsOps.swapInto(fs, emptyStaging, s"$dir/$table")
-      } else {
-        stagedPairs.foreach { name =>
-          val dest = new Path(s"$dir/$table/$name")
-          FsOps.deleteIfExists(fs, dest)
-          fs.mkdirs(dest.getParent)
-          FsOps.checkedRename(fs, new Path(s"$staging/$name"), dest)
-        }
-        emptied.foreach { name =>
-          FsOps.deleteIfExists(fs, new Path(s"$dir/$table/$name"))
-        }
-      }
-      FsOps.deleteIfExists(fs, new Path(staging))
-      val tombStaging = s"$dir/tombstones_next"
-      tombs.limit(0).write.mode("overwrite").parquet(tombStaging)
-      FsOps.swapInto(fs, tombStaging, s"$dir/tombstones")
-    }
-  }
+      dir: String): Unit =
+    compactLayout(spark, dir, ImiLayout)
 
   /** Half-codebook mean ARRAYS — (sub, clabel, cv) with cv ordered by
     * pos ([[centroidArrays]]'s shape at the half-codebook key):
@@ -1639,29 +1469,24 @@ object Similarity {
       m: Int = 4, codebookK: Int = 8,
       quantizer: Option[DataFrame] = None): Unit = {
     val spark = vecs.sparkSession
-    clearTombstones(spark, dir)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val stored = spark.read.parquet(s"$dir/centroids")
-    // Fused inline encode (round 19): assignment + residual in one
-    // projection on the corpus row — no per-vector argmin aggregate,
-    // no re-attach join.
-    val halves = collectHalves(stored)
-    val rcorp = inlinePairResiduals(vecs, halves)
-    // The default (quantizer = batch) REUSES the batch's own residual
-    // frame for codebook training — computing the same assignment
-    // twice measured ~1.5 s/row at sf0.1 for nothing.
-    val qres = quantizer.map(qsrc => inlinePairResiduals(qsrc, halves))
-      .getOrElse(rcorp)
-    codebookOf(qres.select(col("vec_id"), col("rv").as("v")), m,
-        codebookK)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    val codebook = spark.read.parquet(s"$dir/codebook")
-    imiPqCodeRows(codebook, rcorp, vecs, m)
-      .write.mode("overwrite").partitionBy("c0", "c1")
-      .parquet(s"$dir/codes")
-    IndexMeta.write(spark, dir, "layout" -> "imi_pq",
-      "m" -> m.toString, "codebookK" -> codebookK.toString,
-      "fmt" -> "2")
+    buildLayout(spark, dir, ImiPqLayout, "m" -> m.toString,
+        "codebookK" -> codebookK.toString) {
+      cents.write.mode("overwrite").parquet(s"$dir/centroids")
+      // Fused inline encode (round 19): assignment + residual in one
+      // projection on the corpus row — no per-vector argmin aggregate,
+      // no re-attach join.
+      val halves = collectHalves(spark.read.parquet(s"$dir/centroids"))
+      val rcorp = inlinePairResiduals(vecs, halves)
+      // The default (quantizer = batch) REUSES the batch's own residual
+      // frame for codebook training — computing the same assignment
+      // twice measured ~1.5 s/row at sf0.1 for nothing.
+      val qres = quantizer.map(qsrc => inlinePairResiduals(qsrc, halves))
+        .getOrElse(rcorp)
+      codebookOf(qres.select(col("vec_id"), col("rv").as("v")), m,
+          codebookK)
+        .write.mode("overwrite").parquet(s"$dir/codebook")
+      imiPqCodeRows(spark.read.parquet(s"$dir/codebook"), rcorp, vecs, m)
+    }
   }
 
   /** The stored code-row frame shared by the imi_pq build and append
@@ -1696,34 +1521,17 @@ object Similarity {
     * carry the input's metadata columns for the filtered serve, so the
     * batch gates through [[FsOps.requireAppendColumns]] (name + type) like
     * every metadata-carrying append leg; the sidecar still rejects a
-    * mismatched `m` loudly. Same tombstone reconciliation ordering as
-    * every append leg. */
+    * mismatched `m` loudly. */
   def appendImiPqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String, m: Int = 4): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "imi_pq",
-      "m" -> m.toString, "fmt" -> "2")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val codebook = spark.read.parquet(s"$dir/codebook")
-    val rcorp = inlinePairResiduals(vecs2, collectHalves(cents))
-    val rows = imiPqCodeRows(codebook, rcorp, vecs2, m)
-    FsOps.requireAppendColumns(spark, s"$dir/codes", rows, "appendImiPqIndex")
-    clearDrainedPlaceholder(spark, s"$dir/codes")
-    rows
-      .write.mode("append").partitionBy("c0", "c1")
-      .parquet(s"$dir/codes")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs2.select(col("vec_id")))
+    requireLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
+    val rcorp = inlinePairResiduals(vecs2,
+      collectHalves(spark.read.parquet(s"$dir/centroids")))
+    appendRows(spark, dir, ImiPqLayout, vecs2,
+      imiPqCodeRows(spark.read.parquet(s"$dir/codebook"), rcorp, vecs2, m),
+      "appendImiPqIndex")
   }
 
-  /** Serve a persisted [[writeImiPqIndex]] layout: probes rank pairs
-    * against the stored half codebooks, the pair-partitioned CODE
-    * scan joins the broadcast per-(probe, pair) distance table, and
-    * the ADC shortlist re-ranks with exact cosine over the supplied
-    * corpus floats ([[imiPqServeEncoded]] — the same serve frame as
-    * the in-memory [[imiPqTopK]], so the contracts cannot diverge;
-    * parquet round-trips the doubles, so results are bit-identical at
-    * the same parameters, spec-pinned). Tombstones mask the code
-    * rows BEFORE the ADC shortlist, the fleet contract. */
   /** Sentinel `rerankDepth` for the persisted Multi-D-ADC serves:
     * derive the ADC shortlist depth from the STORED index's pair
     * occupancy at serve time — max(k, 40, max-pair-occupancy), the
@@ -1736,6 +1544,15 @@ object Similarity {
     * measured depth keep passing it explicitly. */
   val AutoRerankDepth: Int = -1
 
+  /** Serve a persisted [[writeImiPqIndex]] layout: probes rank pairs
+    * against the stored half codebooks, the pair-partitioned CODE
+    * scan joins the broadcast per-(probe, pair) distance table, and
+    * the ADC shortlist re-ranks with exact cosine over the supplied
+    * corpus floats ([[imiPqServeEncoded]] — the same serve frame as
+    * the in-memory [[imiPqTopK]], so the contracts cannot diverge;
+    * parquet round-trips the doubles, so results are bit-identical at
+    * the same parameters, spec-pinned). Tombstones mask the code
+    * rows BEFORE the ADC shortlist, the fleet contract. */
   def searchImiPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, k: Int,
       m: Int = 4, nprobe: Int = 2, rerankDepth: Int = 40): DataFrame = {
@@ -1798,19 +1615,14 @@ object Similarity {
       vecs: DataFrame, probes: DataFrame, m: Int, nprobe: Int,
       rerankDepth: Int, pred: Option[Column], k: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    IndexMeta.requireMatch(spark, dir, "layout" -> "imi_pq",
-      "m" -> m.toString, "fmt" -> "2")
+    requireLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
     val cents = spark.read.parquet(s"$dir/centroids")
     val codebook = spark.read.parquet(s"$dir/codebook")
     // Read once, mask once, THEN branch: the LIVE (tombstone-masked,
     // pre-predicate) frame is both the occupancy source and the serve
-    // scan's input — one lineage, so a future mask change cannot be
-    // edited into one copy only, and the predicate commutes with the
-    // mask (both row filters).
-    val live = readTombstones(spark, dir)
-      .map(t => spark.read.parquet(s"$dir/codes")
-        .join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(spark.read.parquet(s"$dir/codes"))
+    // scan's input, and the predicate commutes with the mask (both row
+    // filters).
+    val live = liveRows(spark, dir, ImiPqLayout, readTombstones(spark, dir))
     val codes = pred.foldLeft(live)(_ filter _)
     // [[AutoRerankDepth]]: occupancy of the live code rows — each
     // vector stores m sub-rows, so count div m per pair is the exact
@@ -1832,14 +1644,10 @@ object Similarity {
   }
 
   /** Physically COMPACT a persisted [[writeImiPqIndex]] layout — the
-    * pair-partitioned affected-leaf rewrite shared with
-    * [[compactImiIndex]], over the `codes/` table. */
+    * pair-leaf rewrite of [[compactImiIndex]] over the `codes/` table. */
   def compactImiPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "imi_pq",
-      "fmt" -> "2")
-    compactPairTable(spark, dir, "codes")
-  }
+      dir: String): Unit =
+    compactLayout(spark, dir, ImiPqLayout)
 
   /** Multi-D-ADC with an exact refine stage — the inverted
     * multi-index with PRODUCT-QUANTIZED residual codes in its virtual
@@ -2609,8 +2417,9 @@ object Similarity {
     * small ints + a cell id per vector, the ~32× compression that
     * makes billion-vector serving fit on disk budgets the raw
     * embeddings never could). The full-precision vectors appear
-    * nowhere in the index; [[searchIvfPqIndex]] never needs them. */
-  /** `quantizer` optionally trains the cell centroids and PQ codebook
+    * nowhere in the index; [[searchIvfPqIndex]] never needs them.
+    *
+    * `quantizer` optionally trains the cell centroids and PQ codebook
     * on a DIFFERENT corpus than the one being encoded (defaults to
     * `vecs`) — the incremental-ingestion shape: train once on the
     * full/representative corpus, build the index on the first batch,
@@ -2619,43 +2428,35 @@ object Similarity {
     * later append encodes against byte-identical quantizer state. */
   def writeIvfPqIndex(vecs: DataFrame, dir: String, m: Int = 4,
       codebookK: Int = 8, kCells: Int = 8, iters: Int = 2,
-      quantizer: Option[DataFrame] = None): Unit = {
-    clearTombstones(vecs.sparkSession, dir)
-    val qsrc = quantizer.getOrElse(vecs)
-    // Same build discipline as [[writeIvfIndex]]: persist the trained
-    // centroids FIRST and assign against the re-read table, so the
-    // Lloyd trajectory runs once instead of once per downstream
-    // action (exact: parquet round-trips the means).
-    kmeansTrain(qsrc, kCells, iters)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    val cents = vecs.sparkSession.read.parquet(s"$dir/centroids")
-    // BY-RESIDUAL (fmt=2, [[ivfPqrTopK]]'s encoding): the codebook
-    // trains on the quantizer corpus's residuals against the STORED
-    // centroids, and every vector's code encodes v − centroid(cell).
-    // fmt=1 dirs held raw-vector codes — a fmt=2 serve over them
-    // would score garbage, so every lifecycle leg requireMatches the
-    // key and rejects a stale dir loudly.
-    val qres = residualsOf(qsrc, cents, 1)
-      .select(col("vec_id"), col("rv").as("v"))
-    codebookOf(qres, m, codebookK)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    val codebook = vecs.sparkSession.read.parquet(s"$dir/codebook")
-    val rcorp = residualsOf(vecs, cents, 1)
-    ivfPqCodeRows(collectCodebook(codebook), rcorp, vecs, m)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    IndexMeta.write(vecs.sparkSession, dir, Seq("layout" -> "ivf_pq",
-      "m" -> m.toString, "codebookK" -> codebookK.toString,
-      "kCells" -> kCells.toString, "fmt" -> "2") ++
-      IndexSnapshot.buildTokens(): _*)
-  }
+      quantizer: Option[DataFrame] = None): Unit =
+    buildLayout(vecs.sparkSession, dir, IvfPqLayout, "m" -> m.toString,
+        "codebookK" -> codebookK.toString, "kCells" -> kCells.toString) {
+      val qsrc = quantizer.getOrElse(vecs)
+      // Same build discipline as [[writeIvfIndex]]: persist the trained
+      // centroids FIRST and assign against the re-read table, so the
+      // Lloyd trajectory runs once instead of once per downstream
+      // action (exact: parquet round-trips the means).
+      kmeansTrain(qsrc, kCells, iters)
+        .write.mode("overwrite").parquet(s"$dir/centroids")
+      val cents = vecs.sparkSession.read.parquet(s"$dir/centroids")
+      // BY-RESIDUAL ([[ivfPqrTopK]]'s encoding): the codebook trains on
+      // the quantizer corpus's residuals against the STORED centroids,
+      // and every vector's code encodes v − centroid(cell).
+      val qres = residualsOf(qsrc, cents, 1)
+        .select(col("vec_id"), col("rv").as("v"))
+      codebookOf(qres, m, codebookK)
+        .write.mode("overwrite").parquet(s"$dir/codebook")
+      val codebook = vecs.sparkSession.read.parquet(s"$dir/codebook")
+      ivfPqCodeRows(collectCodebook(codebook), residualsOf(vecs, cents, 1),
+        vecs, m)
+    }
 
   /** The [[IndexSnapshot]] of a persisted [[writeIvfPqIndex]] layout,
     * checked against the serve's sub-vector split. */
   private def ivfPqSnapshot(spark: org.apache.spark.sql.SparkSession,
       dir: String, m: Int): IndexSnapshot.Snapshot =
-    IndexSnapshot.open(spark, dir, "layout" -> "ivf_pq",
-      "m" -> m.toString, "fmt" -> "2")
+    IndexSnapshot.open(spark, dir,
+      IvfPqLayout.sidecar :+ ("m" -> m.toString): _*)
 
   /** The stored quantizer of an opened ivf_pq generation: centroid
     * and residual-codebook entries, collected once per build. */
@@ -2715,20 +2516,9 @@ object Similarity {
     // The entries come from the opened generation: an append after a
     // serve collects nothing.
     val (cents, codebook) = ivfPqQuantizer(spark, dir, snap)
-    val rcorp = residualsWith(vecs2, cents, 1)
-    val rows = ivfPqCodeRows(codebook, rcorp, vecs2, m)
-    // Code rows may carry metadata for the filtered serve, so the
-    // batch gates through the same column-set + type contract as
-    // every metadata-carrying append leg.
-    FsOps.requireColumns(ivfPqCodesSchema(spark, dir, snap), rows,
-      "appendIvfPqIndex")
-    clearDrainedPlaceholder(spark, s"$dir/codes")
-    rows
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs2.select(col("vec_id")))
-    IndexSnapshot.bumpData(spark, dir)
+    appendRows(spark, dir, IvfPqLayout, vecs2,
+      ivfPqCodeRows(codebook, residualsWith(vecs2, cents, 1), vecs2, m),
+      "appendIvfPqIndex", Some(ivfPqCodesSchema(spark, dir, snap)))
   }
 
   /** Serve the BY-RESIDUAL refine composition from a persisted
@@ -2813,8 +2603,6 @@ object Similarity {
     // served since its last write, building this frame runs no job.
     val snap = ivfPqSnapshot(spark, dir, m)
     val (cents, codebook) = ivfPqQuantizer(spark, dir, snap)
-    val scan = spark.read.schema(ivfPqCodesSchema(spark, dir, snap))
-      .parquet(s"$dir/codes")
     // Mask once, THEN branch ([[imiPqRefinedFromIndex]]'s structure):
     // the LIVE (tombstone-masked, pre-predicate) frame feeds both the
     // occupancy aggregate and the serve scan, and the predicate
@@ -2826,11 +2614,9 @@ object Similarity {
     // empty table would otherwise cost a broadcast job per serve).
     val tombstoned = snap.data[java.lang.Boolean]("tombstones")(
       Boolean.box(readTombstones(spark, dir).exists(!_.isEmpty)))
-    val live =
-      if (tombstoned) scan.join(broadcast(
-        spark.read.schema(TombstoneSchema).parquet(s"$dir/tombstones")),
-        Seq("vec_id"), "left_anti")
-      else scan
+    val live = liveRows(spark, dir, IvfPqLayout,
+      if (tombstoned) readTombstones(spark, dir) else None,
+      schema = Some(ivfPqCodesSchema(spark, dir, snap)))
     val codes = pred.foldLeft(live)(_ filter _)
     // [[AutoRerankDepth]] at the single-level cell key: occupancy of
     // the live code rows, count div m per cell —
@@ -2847,19 +2633,6 @@ object Similarity {
       depth)
   }
 
-  /** One Lloyd's-iteration update step over an embedding corpus:
-    * assign every vector to its max-cosine centroid (deterministic
-    * centroid-id tie-break), then recompute each centroid dimension as
-    * the mean of its members.
-    *
-    * Scale shape: the K centroids broadcast (K·dim doubles); assignment
-    * is a map-side scan with a bounded per-row argmax — no shuffle. The
-    * update is one aggregation keyed by (centroid, dim) after
-    * posexplode: dim fan-out × corpus rows, hash-partial-aggregated
-    * map-side, so the shuffle carries ≤ K·dim·partitions rows. Means
-    * come from exact decimal sums (order-independent) divided as
-    * doubles — bit-stable at any parallelism.
-    */
   /** Per-dimension winsorization — clip each embedding dimension to its
     * corpus [pLow, pHigh] percentile band, the standard outlier guard
     * before quantization (a single extreme value otherwise stretches
@@ -3426,29 +3199,22 @@ object Similarity {
     * index is consulted more often than it is rebuilt. Norms are
     * precomputed at index time (`nrm` column), so serving never
     * re-reduces the vectors. */
-  def writeIvfIndex(vecs: DataFrame, cents: DataFrame, dir: String): Unit = {
-    clearTombstones(vecs.sparkSession, dir)
-    // Centroids first, then assign against the RE-READ table: `cents`
-    // is typically a live kmeansTrain lineage, and each write action
-    // would replay the whole training trajectory (caching it was
-    // measured slower in-query — knnJoinIndexed's note — but a BUILD
-    // is exactly the "materialize the index outside the query" case
-    // that note prescribes). Parquet round-trips the means exactly,
-    // so the assignment is bit-identical either way.
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val stored = vecs.sparkSession.read.parquet(s"$dir/centroids")
-    // Inline rank-1 assignment on the row ([[withInlineCell]],
-    // round 20) — the separate assignment frame + corpus-sized
-    // re-attach join on vec_id are gone; same argmin, same rows.
-    withInlineCell(withNorm(vecs), stored)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/index")
-    // Layout marker: the flat and SQ8 layouts both store an `index/`
-    // table, so an append or serve against the wrong one must fail
-    // loudly instead of silently merging mismatched schemas.
-    IndexMeta.write(vecs.sparkSession, dir, "layout" -> "ivf_flat",
-      "fmt" -> "1")
-  }
+  def writeIvfIndex(vecs: DataFrame, cents: DataFrame, dir: String): Unit =
+    buildLayout(vecs.sparkSession, dir, IvfFlatLayout) {
+      // Centroids first, then assign against the RE-READ table: `cents`
+      // is typically a live kmeansTrain lineage, and each write action
+      // would replay the whole training trajectory (caching it was
+      // measured slower in-query — knnJoinIndexed's note — but a BUILD
+      // is exactly the "materialize the index outside the query" case
+      // that note prescribes). Parquet round-trips the means exactly,
+      // so the assignment is bit-identical either way.
+      cents.write.mode("overwrite").parquet(s"$dir/centroids")
+      // Inline rank-1 assignment on the row ([[withInlineCell]],
+      // round 20) — the separate assignment frame + corpus-sized
+      // re-attach join on vec_id are gone; same argmin, same rows.
+      withInlineCell(withNorm(vecs),
+        vecs.sparkSession.read.parquet(s"$dir/centroids"))
+    }
 
   /** APPEND a new corpus batch to a persisted [[writeIvfIndex]] layout
     * — the incremental-ingestion path for ANN serving: the new vectors
@@ -3461,33 +3227,98 @@ object Similarity {
     * same centroids (PipelineSpec pins the served parity bit-for-bit).
     * Re-TRAINING the quantizer, by contrast, is a rebuild — new cells
     * re-bucket everything, same rule as the streaming-dedup family
-    * switch.
-    *
-    * Tombstone reconciliation: an APPEND of a previously deleted
-    * vec_id is a re-add, and the serve's anti-join must stop masking
-    * it — without this, the re-added rows stay invisible and a later
-    * [[compactIvfIndex]] would drop them while draining their
-    * tombstones (silent data loss in a delete-then-re-add flow). The
-    * incoming batch's ids are anti-joined out of `tombstones/` AFTER
-    * the data append commits, so a crash in the window leaves the new
-    * rows masked (retryable) rather than stale rows visible. */
+    * switch. An append of a previously deleted vec_id is a re-add:
+    * [[appendRows]] clears its tombstone after the data commits. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_flat",
-      "fmt" -> "1")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val rows = withInlineCell(withNorm(vecs2), cents)
-    // Same loud column-set contract as the IMI append: this layout
-    // persists ALL input columns (metadata rides beside the vector
-    // for searchIvfIndexWhere), so a mismatched batch must fail at
-    // entry, not corrupt the table.
-    FsOps.requireAppendColumns(spark, s"$dir/index", rows, "appendIvfIndex")
-    clearDrainedPlaceholder(spark, s"$dir/index")
-    rows
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/index")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs2.select(col("vec_id")))
+    requireLayout(spark, dir, IvfFlatLayout)
+    appendRows(spark, dir, IvfFlatLayout, vecs2,
+      withInlineCell(withNorm(vecs2), spark.read.parquet(s"$dir/centroids")),
+      "appendIvfIndex")
+  }
+
+  /** One tombstoned vector layout: the fixed fields its sidecar records
+    * and every lifecycle leg checks, its row table under the index dir,
+    * and the keys that table is partitioned by (none, the coarse
+    * `cell`, or the IMI pair `c0`, `c1`). Build parameters such as
+    * PQ's `m` ride beside the fixed fields. */
+  private final case class VectorLayout(sidecar: Seq[(String, String)],
+      table: String, partKeys: Seq[String]) {
+    def name: String = sidecar.head._2
+    def rows(dir: String): String = s"$dir/$table"
+  }
+
+  // BQ fmt=2: the code table lives under `codes/` (fmt 1, pre-r14,
+  // wrote code files at the dir root), so an old-layout dir is rejected
+  // loudly instead of appending a `codes/` subdir the fmt-1 reader
+  // ignores or serving half the corpus. IVF-PQ fmt=2 marks by-residual
+  // codes (fmt 1 held raw-vector codes a fmt-2 serve would score as
+  // garbage); IMI-PQ fmt=2 marks code rows that carry metadata. The
+  // flat and SQ8 layouts both store an `index/` table, so the layout
+  // key keeps an append or serve against the wrong one from merging
+  // mismatched schemas.
+  private val BqLayout = VectorLayout(
+    Seq("layout" -> "bq", "bits" -> "64", "fmt" -> "2"), "codes", Nil)
+  private val IvfBqLayout = VectorLayout(
+    Seq("layout" -> "ivf_bq", "bits" -> "64", "fmt" -> "1"), "codes",
+    Seq("cell"))
+  private val IvfFlatLayout = VectorLayout(
+    Seq("layout" -> "ivf_flat", "fmt" -> "1"), "index", Seq("cell"))
+  private val IvfSq8Layout = VectorLayout(
+    Seq("layout" -> "ivf_sq8", "bits" -> "8", "fmt" -> "1"), "index",
+    Seq("cell"))
+  private val IvfPqLayout = VectorLayout(
+    Seq("layout" -> "ivf_pq", "fmt" -> "2"), "codes", Seq("cell"))
+  private val ImiLayout = VectorLayout(
+    Seq("layout" -> "imi", "fmt" -> "1"), "index", Seq("c0", "c1"))
+  private val ImiPqLayout = VectorLayout(
+    Seq("layout" -> "imi_pq", "fmt" -> "2"), "codes", Seq("c0", "c1"))
+
+  /** Sidecar layouts whose ids [[deleteFromIvfIndex]] may tombstone:
+    * the seven vector layouts and the knn-assignment table. */
+  private val TombstonedLayouts =
+    Seq(BqLayout, IvfBqLayout, IvfFlatLayout, IvfSq8Layout, IvfPqLayout,
+      ImiLayout, ImiPqLayout).map(_.name).toSet + "knn_assign"
+
+  /** Fail unless `dir`'s sidecar records `layout`'s fixed fields and
+    * the given build parameters. */
+  private def requireLayout(spark: org.apache.spark.sql.SparkSession,
+      dir: String, layout: VectorLayout, params: (String, String)*): Unit =
+    IndexMeta.requireMatch(spark, dir, layout.sidecar ++ params: _*)
+
+  /** The build leg of every vector layout: clear the previous
+    * generation's tombstones, run `rows` (which writes the layout's
+    * quantizer tables, if any, and returns the row frame), write the
+    * rows partitioned by the layout's keys, then the sidecar with fresh
+    * generation tokens ([[IndexSnapshot]]). */
+  private def buildLayout(spark: org.apache.spark.sql.SparkSession,
+      dir: String, layout: VectorLayout, params: (String, String)*)(
+      rows: => DataFrame): Unit = {
+    clearTombstones(spark, dir)
+    rows.write.mode("overwrite").partitionBy(layout.partKeys: _*)
+      .parquet(layout.rows(dir))
+    IndexMeta.write(spark, dir,
+      layout.sidecar ++ params ++ IndexSnapshot.buildTokens(): _*)
+  }
+
+  /** The append leg of every vector layout, after the caller's sidecar
+    * check: gate `rows` on the stored column set (`stored` when the
+    * caller already holds the schema, else read from the table — rows
+    * carry metadata for the filtered serves, so a mismatched batch must
+    * fail at entry, not leave mixed-schema files), clear a full-drain
+    * placeholder, append partitioned by the layout's keys, clear the
+    * tombstones of re-added `batch` ids, then write a new data token. */
+  private def appendRows(spark: org.apache.spark.sql.SparkSession,
+      dir: String, layout: VectorLayout, batch: DataFrame, rows: DataFrame,
+      leg: String,
+      stored: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+    val table = layout.rows(dir)
+    stored.fold(FsOps.requireAppendColumns(spark, table, rows, leg))(
+      FsOps.requireColumns(_, rows, leg))
+    layout.partKeys.headOption.foreach(clearDrainedPlaceholder(spark, table, _))
+    rows.write.mode("append").partitionBy(layout.partKeys: _*).parquet(table)
+    reconcileTombstonesAfterAppend(spark, dir, batch.select(col("vec_id")))
+    IndexSnapshot.bumpData(spark, dir)
   }
 
   /** Shared by the append legs: anti-join the appended ids out of the
@@ -3514,25 +3345,24 @@ object Similarity {
         s"$dir/tombstones")
     }
 
-  /** Search a persisted [[writeIvfIndex]] layout: probes assign to
-    * their `nprobe` nearest stored centroids, then join the
-    * cell-partitioned index on the cell key — Spark's dynamic partition
-    * pruning drives the scan from the (tiny) probe-cell set, so a
-    * serving query physically reads only the consulted cells'
-    * partitions, not the corpus (PipelineSpec pins both the
-    * bit-for-bit parity with [[ivfSearchTrained]] and the DPP filter
-    * in the plan). Exactly the contract of the in-memory path:
-    * rounded-cosine desc, neighbor asc, top-k per probe. */
-  /** Tombstone-DELETE vectors from a persisted [[writeIvfIndex]]
-    * layout — the removal half of the index lifecycle (user deletion
-    * requests, retracted documents) next to [[appendIvfIndex]]'s add
-    * half. Ids land in a side table (`tombstones/`), the index files
-    * are untouched, and [[searchIvfIndex]] masks them with one
-    * broadcast anti-join — O(|deletes|) serve overhead, zero rewrite
-    * cost, exactly the tombstone contract every LSM-shaped store uses.
-    * [[compactIvfIndex]] reclaims the space and drains the table. */
+  /** Tombstone-DELETE vectors from a persisted vector layout (any of
+    * the seven, or a [[writeKnnAssignIndex]] table) — the removal half
+    * of the index lifecycle (user deletion requests, retracted
+    * documents) next to the append half. Ids land in a side table
+    * (`tombstones/`), the index files are untouched, and every serve
+    * masks them with one broadcast anti-join — O(|deletes|) serve
+    * overhead, zero rewrite cost, exactly the tombstone contract every
+    * LSM-shaped store uses. The dir's sidecar is checked first: a
+    * delete aimed at a mistyped path or another kind of index would
+    * otherwise "succeed" and mask nothing. The layout's compaction
+    * reclaims the space and drains the table. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
+    val layout = IndexMeta.read(spark, dir).getOrElse("layout", "<absent>")
+    require(TombstonedLayouts(layout),
+      s"index at $dir has layout=$layout, which has no tombstone " +
+        s"table; deletes apply to ${TombstonedLayouts.toSeq.sorted
+          .mkString(", ")}")
     ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
       .write.mode("append").parquet(s"$dir/tombstones")
     IndexSnapshot.bumpData(spark, dir)
@@ -3555,18 +3385,6 @@ object Similarity {
     FsOps.deleteIfExists(fs, p)
   }
 
-  /** A FULL-DRAIN compaction replaces a cell-partitioned table with a
-    * zero-row NON-partitioned placeholder file at the table root
-    * ([[compactCellTable]]'s drained branch — a partitioned write of
-    * zero rows would leave no parquet footer at all and the next read
-    * would fail schema inference). A later partitioned APPEND would
-    * write `cell=` dirs BESIDE that root file, and the next read of
-    * the table fails Spark's partition discovery (mixed partition
-    * depths) — so every append leg clears the placeholder first.
-    * Root-level data files with no `cell=` sibling can ONLY be the
-    * drained marker (every build/append writes partitioned), so the
-    * whole table dir is safe to drop; with any `cell=` dir present
-    * the table is live and nothing is touched. */
   /** Partition-dir segment for a value, escaped exactly as Spark's
     * partitioned writes escape it (ExternalCatalogUtils.escapePathName
     * — the writer-side codec), so the compaction rename/delete loops
@@ -3582,27 +3400,34 @@ object Similarity {
     s"$colName=${ExternalCatalogUtils.escapePathName(s)}"
   }
 
-
+  /** A FULL-DRAIN compaction replaces a partitioned table with a
+    * zero-row NON-partitioned placeholder file at the table root
+    * ([[compactLayout]]'s drained branch — a partitioned write of zero
+    * rows would leave no parquet footer at all and the next read would
+    * fail schema inference). A later partitioned APPEND would write
+    * `key=` dirs BESIDE that root file, and the next read of the table
+    * fails Spark's partition discovery (mixed partition depths) — so
+    * every partitioned append clears the placeholder first. Root-level
+    * data files with no `key=` sibling (`key` is the table's first
+    * partition key) can ONLY be the drained marker (every build/append
+    * writes partitioned), so the whole table dir is safe to drop; with
+    * any `key=` dir present the table is live and nothing is touched,
+    * whatever stray root files sit beside it. */
   private def clearDrainedPlaceholder(
-      spark: org.apache.spark.sql.SparkSession, tableDir: String): Unit = {
+      spark: org.apache.spark.sql.SparkSession, tableDir: String,
+      key: String): Unit = {
     import org.apache.hadoop.fs.Path
     val p = new Path(tableDir)
     val fs = FsOps.fsOf(spark, tableDir)
     if (fs.exists(p)) {
       val entries = fs.listStatus(p)
-      // Both partition layouts guard the delete: a table holding live
-      // `cell=` (single-level) or `c0=` (IMI pair) partition dirs is
-      // NOT a drained placeholder, whatever stray root files sit
-      // beside them — deleting it would drop live partitions.
-      val hasCells = entries.exists(s => s.isDirectory && {
-        val n = s.getPath.getName
-        n.startsWith("cell=") || n.startsWith("c0=")
-      })
+      val hasParts = entries.exists(s =>
+        s.isDirectory && s.getPath.getName.startsWith(s"$key="))
       val rootData = entries.exists(s => s.isFile && {
         val n = s.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
       })
-      if (!hasCells && rootData) FsOps.deleteIfExists(fs, p)
+      if (!hasParts && rootData) FsOps.deleteIfExists(fs, p)
     }
   }
 
@@ -3613,7 +3438,7 @@ object Similarity {
 
   /** The tombstone table if one exists, else an empty frame — read
     * with an explicit schema so a drained (zero-part-file) table after
-    * [[compactIvfIndex]] still reads cleanly. */
+    * [[compactLayout]] still reads cleanly. */
   private def readTombstones(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
@@ -3622,97 +3447,158 @@ object Similarity {
     else None
   }
 
-  /** Rewrite the cell partitions that contain tombstoned rows,
-    * dropping those rows, and DELETE OUTRIGHT the partition directory
-    * of any cell whose rows all died (zero rows cannot be "rewritten
-    * in", so the dir itself is the unit of removal) — tombstones
-    * therefore fully drain on every compaction; there is no retention
-    * corner. Only affected partitions move: untouched cells' files
-    * are never read or written. The rewrite stages to a sibling
-    * directory and swaps per-cell via checked filesystem renames — a
-    * metadata loop bounded by the quantizer's cell count (the same
-    * driver-side commit shape Spark's own dynamic-partition protocol
-    * uses), never data through the driver. A compaction that drains
-    * EVERY cell swaps in a zero-row schema-preserving file instead,
-    * so the table stays readable (a dir with no parquet footers would
-    * fail schema inference at the next serve). */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_flat",
-      "fmt" -> "1")
-    compactCellTable(spark, dir, "index")
+  /** The tombstone-masked row scan under every vector serve: the
+    * layout's row table (read with `schema` when the caller holds it),
+    * the optional metadata predicate, then one broadcast anti-join
+    * against `tombs` — the tombstone table when the caller found one
+    * to apply, so an index without deletes plans no mask. */
+  private def liveRows(spark: org.apache.spark.sql.SparkSession,
+      dir: String, layout: VectorLayout, tombs: Option[DataFrame],
+      pred: Option[Column] = None,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame = {
+    val scan = schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(layout.rows(dir))
+    val rows = pred.foldLeft(scan)(_ filter _)
+    tombs.fold(rows)(t => rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
   }
 
-  /** [[compactIvfIndex]] for the PQ layout — same machinery over the
-    * cell-partitioned `codes/` table (same schema discipline: rows
-    * keyed by vec_id, partitioned by cell). */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_pq",
-      "fmt" -> "2")
-    compactCellTable(spark, dir, "codes")
-    IndexSnapshot.bumpData(spark, dir)
-  }
+  /** The partition leaf dirs under `root` for `keys`, relative to it
+    * (`cell=3`, `c0=1/c1=2`); none when `root` is absent. */
+  private def partitionLeaves(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, keys: Seq[String]): Set[String] =
+    keys.foldLeft(Set("")) { (parents, key) =>
+      parents.flatMap { rel =>
+        val p = new org.apache.hadoop.fs.Path(root + rel)
+        if (!fs.exists(p)) Nil
+        else fs.listStatus(p).map(_.getPath.getName)
+          .filter(_.startsWith(s"$key=")).map(n => s"$rel/$n")
+      }
+    }.map(_.stripPrefix("/"))
 
-  private def compactCellTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String): Unit = {
+  /** The compaction leg of every vector layout: check the sidecar,
+    * drop the tombstoned rows from the row table and drain the
+    * tombstone table.
+    * Reclamation never changes a result: the compacted serve equals the
+    * masked serve it replaces (oracle-gated per layout).
+    *
+    * The unit of rewrite follows the partition keys. An unpartitioned
+    * table (flat BQ, 16 B/vector) is rewritten whole and swapped in. A
+    * partitioned table rewrites only the leaves (`cell=N` or
+    * `c0=X/c1=Y`) that hold tombstoned rows — untouched leaves are
+    * never read or written. The survivors stage to a sibling dir, and
+    * each leaf is replaced by a checked delete plus a checked rename: a
+    * driver-side metadata loop bounded by the quantizer's cell count
+    * (the commit shape of Spark's own dynamic-partition protocol), never
+    * data through the driver. There is no rename-aside: a transient
+    * `cell=N_old` sibling would match the partition-dir pattern and
+    * corrupt a concurrent partitioned read. A leaf whose rows all died
+    * is deleted outright, so tombstones always drain fully. A
+    * compaction that leaves no row at all swaps in a zero-row
+    * schema-preserving file at the table root instead, so the table
+    * still reads ([[clearDrainedPlaceholder]] clears it before the next
+    * partitioned append).
+    *
+    * CRASH-WINDOW ORDER: staging left by a crashed leg is swept at
+    * entry; the compacted rows commit first, the tombstone drain
+    * second, the data token last. A crash after the row commit leaves
+    * tombstones naming rows that are already gone — harmless for
+    * serves, and an append that re-adds one of those ids clears it
+    * ([[reconcileTombstonesAfterAppend]]). The reverse order would
+    * unmask the deleted rows if the row swap then crashed. A crash
+    * before the token write leaves JVMs that had opened the index on
+    * their old derived values until the next write ([[IndexSnapshot]]);
+    * re-running the compaction recovers. */
+  private def compactLayout(spark: org.apache.spark.sql.SparkSession,
+      dir: String, layout: VectorLayout): Unit = {
     import org.apache.hadoop.fs.Path
+    requireLayout(spark, dir, layout)
     val fs = FsOps.fsOf(spark, dir)
     FsOps.clearStaging(fs, dir)
     readTombstones(spark, dir).foreach { tombs =>
-      val idx = spark.read.parquet(s"$dir/$table")
-      val affected = idx.join(broadcast(tombs), Seq("vec_id"))
-        .select(col("cell")).distinct()
-      val rewritten = idx.join(broadcast(affected), Seq("cell"))
-        .join(broadcast(tombs), Seq("vec_id"), "left_anti")
-      // Cells with NO survivors: their partition dirs are deleted
-      // below instead of rewritten. Cell count is quantizer-bounded,
-      // so collecting the values is a metadata-sized driver list —
-      // the same scale class as the rename loop.
-      val emptied = affected
-        .join(rewritten.select(col("cell")).distinct(), Seq("cell"),
-          "left_anti")
-        .collect().map(r => partSegment("cell", r.get(0))).toSet
-      val staging = s"$dir/${table}_compacting"
-      rewritten.write.mode("overwrite").partitionBy("cell")
-        .parquet(staging)
-      val stagedCells = fs.listStatus(new Path(staging))
-        .map(_.getPath.getName).filter(_.startsWith("cell=")).toSet
-      val liveCells = fs.listStatus(new Path(s"$dir/$table"))
-        .map(_.getPath.getName).filter(_.startsWith("cell=")).toSet
-      if (emptied.nonEmpty &&
-          ((liveCells -- emptied) ++ stagedCells).isEmpty) {
-        // Fully drained: nothing survives anywhere. Replace the whole
-        // table with a zero-row file carrying the schema (cell rides
-        // as a plain column; the staged empty write happens while the
-        // source files are still in place).
-        val emptyStaging = s"$dir/${table}_empty"
-        idx.limit(0).write.mode("overwrite").parquet(emptyStaging)
-        FsOps.swapInto(fs, emptyStaging, s"$dir/$table")
-      } else {
-        // No rename-aside here: a transient `cell=N_old` sibling would
-        // match the partition-dir pattern and corrupt a concurrent
-        // partitioned read. Checked delete + checked rename per cell.
-        stagedCells.foreach { name =>
-          val dest = new Path(s"$dir/$table/$name")
-          FsOps.deleteIfExists(fs, dest)
-          FsOps.checkedRename(fs, new Path(s"$staging/$name"), dest)
+      val table = layout.rows(dir)
+      val staging = s"${table}_compacting"
+      val keys = layout.partKeys
+      val rows = spark.read.parquet(table)
+      // Both rewrites report whether no row survived anywhere.
+      def rewriteWhole(): Boolean = {
+        rows.join(broadcast(tombs), Seq("vec_id"), "left_anti")
+          .write.mode("overwrite").parquet(staging)
+        // A full drain can leave the staged write with no data file.
+        val hasData = fs.listStatus(new Path(staging))
+          .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        if (hasData) FsOps.swapInto(fs, staging, table)
+        !hasData
+      }
+      def rewriteLeaves(): Boolean = {
+        val affected = rows.join(broadcast(tombs), Seq("vec_id"))
+          .select(keys.map(col): _*).distinct()
+        val rewritten = rows.join(broadcast(affected), keys)
+          .join(broadcast(tombs), Seq("vec_id"), "left_anti")
+        // Leaves with NO survivors are deleted below instead of
+        // rewritten. Leaf count is quantizer-bounded, so collecting
+        // them is a metadata-sized driver list.
+        val emptied = affected
+          .join(rewritten.select(keys.map(col): _*).distinct(), keys,
+            "left_anti")
+          .collect().map(r => keys.indices
+            .map(i => partSegment(keys(i), r.get(i))).mkString("/")).toSet
+        rewritten.write.mode("overwrite").partitionBy(keys: _*)
+          .parquet(staging)
+        val staged = partitionLeaves(fs, staging, keys)
+        val drained = emptied.nonEmpty &&
+          ((partitionLeaves(fs, table, keys) -- emptied) ++ staged).isEmpty
+        if (!drained) {
+          staged.foreach { name =>
+            val dest = new Path(s"$table/$name")
+            FsOps.deleteIfExists(fs, dest)
+            fs.mkdirs(dest.getParent)
+            FsOps.checkedRename(fs, new Path(s"$staging/$name"), dest)
+          }
+          emptied.foreach(name =>
+            FsOps.deleteIfExists(fs, new Path(s"$table/$name")))
         }
-        emptied.foreach { name =>
-          FsOps.deleteIfExists(fs, new Path(s"$dir/$table/$name"))
-        }
+        drained
+      }
+      if (if (keys.isEmpty) rewriteWhole() else rewriteLeaves()) {
+        // The placeholder is staged while the source files are still in
+        // place; partition keys ride in it as plain columns.
+        val emptyStaging = s"${table}_empty"
+        rows.limit(0).write.mode("overwrite").parquet(emptyStaging)
+        FsOps.swapInto(fs, emptyStaging, table)
       }
       FsOps.deleteIfExists(fs, new Path(staging))
-      // Every deleted row's files are gone (rewritten or dir-dropped):
-      // the tombstone table drains to zero rows but stays present, so
-      // a post-compaction serve reads an empty mask, not a missing
-      // path.
+      // The tombstone table drains to zero rows but stays present, so a
+      // later serve reads an empty mask, not a missing path.
       val tombStaging = s"$dir/tombstones_next"
       tombs.limit(0).write.mode("overwrite").parquet(tombStaging)
       FsOps.swapInto(fs, tombStaging, s"$dir/tombstones")
     }
+    IndexSnapshot.bumpData(spark, dir)
   }
 
+  /** Physically compact a persisted [[writeIvfIndex]] layout: the
+    * affected-cell rewrite of [[compactLayout]] over the float cell
+    * table. */
+  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Unit =
+    compactLayout(spark, dir, IvfFlatLayout)
+
+  /** [[compactIvfIndex]] for the PQ layout — the same rewrite over the
+    * cell-partitioned `codes/` table. */
+  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Unit =
+    compactLayout(spark, dir, IvfPqLayout)
+
+  /** Search a persisted [[writeIvfIndex]] layout: probes assign to
+    * their `nprobe` nearest stored centroids, then join the
+    * cell-partitioned index on the cell key — Spark's dynamic partition
+    * pruning drives the scan from the (tiny) probe-cell set, so a
+    * serving query physically reads only the consulted cells'
+    * partitions, not the corpus (PipelineSpec pins both the
+    * bit-for-bit parity with [[ivfSearchTrained]] and the DPP filter
+    * in the plan). Exactly the contract of the in-memory path:
+    * rounded-cosine desc, neighbor asc, top-k per probe. */
   def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, k: Int, nprobe: Int = 1): DataFrame =
     searchIvfIndexImpl(spark, dir, probes, k, nprobe, None)
@@ -3771,16 +3657,10 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_flat",
-      "fmt" -> "1")
+    requireLayout(spark, dir, IvfFlatLayout)
     val cents = spark.read.parquet(s"$dir/centroids")
-    val idx1 = pred.foldLeft(spark.read.parquet(s"$dir/index"))(_ filter _)
-    // Tombstone mask (see [[deleteFromIvfIndex]]): deleted ids are
-    // anti-joined out via one broadcast — absent for layouts that
-    // never deleted, so their plans are unchanged.
-    val idx = readTombstones(spark, dir)
-      .map(t => idx1.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(idx1)
+    val idx = liveRows(spark, dir, IvfFlatLayout, readTombstones(spark, dir),
+      pred)
     val pcells = trainedAssign(probes, cents, nprobe)
       .select(col("probe_id"), col("cid").as("pcell"))
     val pb = withNorm(probes).select(col("vec_id").as("probe_id"),
@@ -3829,18 +3709,14 @@ object Similarity {
     * factors out of the code-side sum: ⟨p, s·q⟩ = s·⟨p, q⟩), the
     * standard SQ serve. */
   def writeIvfSq8Index(vecs: DataFrame, cents: DataFrame,
-      dir: String): Unit = {
-    clearTombstones(vecs.sparkSession, dir)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val stored = vecs.sparkSession.read.parquet(s"$dir/centroids")
-    // Inline assignment + metadata carry ([[withInlineCell]] under
-    // [[sq8Rows]]' projection, round 20) — no re-attach join.
-    sq8Rows(withInlineCell(vecs, stored))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/index")
-    IndexMeta.write(vecs.sparkSession, dir, "layout" -> "ivf_sq8",
-      "bits" -> "8", "fmt" -> "1")
-  }
+      dir: String): Unit =
+    buildLayout(vecs.sparkSession, dir, IvfSq8Layout) {
+      cents.write.mode("overwrite").parquet(s"$dir/centroids")
+      // Inline assignment + metadata carry ([[withInlineCell]] under
+      // [[sq8Rows]]' projection, round 20) — no re-attach join.
+      sq8Rows(withInlineCell(vecs,
+        vecs.sparkSession.read.parquet(s"$dir/centroids")))
+    }
 
   /** APPEND a batch to a persisted [[writeIvfSq8Index]] layout — the
     * [[appendIvfIndex]] contract on the compressed rows: assignment
@@ -3850,19 +3726,10 @@ object Similarity {
     * for re-added ids reconcile after the data append commits. */
   def appendIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_sq8",
-      "fmt" -> "1")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val rows = sq8Rows(withInlineCell(vecs2, cents))
-    // Rows may carry metadata for the filtered serve — same column-set
-    // + type contract as every metadata-carrying append leg.
-    FsOps.requireAppendColumns(spark, s"$dir/index", rows, "appendIvfSq8Index")
-    clearDrainedPlaceholder(spark, s"$dir/index")
-    rows
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/index")
-    reconcileTombstonesAfterAppend(spark, dir,
-      vecs2.select(col("vec_id")))
+    requireLayout(spark, dir, IvfSq8Layout)
+    appendRows(spark, dir, IvfSq8Layout, vecs2,
+      sq8Rows(withInlineCell(vecs2, spark.read.parquet(s"$dir/centroids"))),
+      "appendIvfSq8Index")
   }
 
   /** Tombstone-DELETE from the SQ8 layout — the tombstone table is
@@ -3872,15 +3739,11 @@ object Similarity {
       ids: DataFrame, dir: String): Unit =
     deleteFromIvfIndex(spark, ids, dir)
 
-  /** Compaction for the SQ8 layout: same affected-partition rewrite as
-    * [[compactIvfIndex]] — the cell table carries (vec_id, scale, q,
-    * cell), and [[compactCellTable]] only keys on vec_id/cell. */
+  /** Compaction for the SQ8 layout: the affected-cell rewrite of
+    * [[compactLayout]] over the (vec_id, scale, q, cell) table. */
   def compactIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_sq8",
-      "fmt" -> "1")
-    compactCellTable(spark, dir, "index")
-  }
+      dir: String): Unit =
+    compactLayout(spark, dir, IvfSq8Layout)
 
   /** Serve maximum-inner-product top-k from a persisted
     * [[writeIvfSq8Index]] layout: probes assign to their `nprobe`
@@ -3911,14 +3774,10 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, k: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_sq8",
-      "fmt" -> "1")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val idx1 = pred.foldLeft(spark.read.parquet(s"$dir/index"))(_ filter _)
-    val idx = readTombstones(spark, dir)
-      .map(t => idx1.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(idx1)
-    sq8TopKFrom(idx, cents, probes, k, nprobe)
+    requireLayout(spark, dir, IvfSq8Layout)
+    sq8TopKFrom(
+      liveRows(spark, dir, IvfSq8Layout, readTombstones(spark, dir), pred),
+      spark.read.parquet(s"$dir/centroids"), probes, k, nprobe)
   }
 
   /** IN-MEMORY SQ8 serve — [[searchIvfSq8Index]]'s exact scoring
@@ -3979,17 +3838,25 @@ object Similarity {
   def searchIvfSq8IndexRange(spark: org.apache.spark.sql.SparkSession,
       dir: String, probes: DataFrame, tau: Double,
       nprobe: Int = 1): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "ivf_sq8",
-      "fmt" -> "1")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val idx1 = spark.read.parquet(s"$dir/index")
-    val idx = readTombstones(spark, dir)
-      .map(t => idx1.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(idx1)
-    sq8ScoredFrom(idx, cents, probes, nprobe)
+    requireLayout(spark, dir, IvfSq8Layout)
+    sq8ScoredFrom(liveRows(spark, dir, IvfSq8Layout, readTombstones(spark, dir)),
+        spark.read.parquet(s"$dir/centroids"), probes, nprobe)
       .filter(col("ip_r") >= tau)
   }
 
+  /** One Lloyd's-iteration update step over an embedding corpus:
+    * assign every vector to its max-cosine centroid (deterministic
+    * centroid-id tie-break), then recompute each centroid dimension as
+    * the mean of its members.
+    *
+    * Scale shape: the K centroids broadcast (K·dim doubles); assignment
+    * is a map-side scan with a bounded per-row argmax — no shuffle. The
+    * update is one aggregation keyed by (centroid, dim) after
+    * posexplode: dim fan-out × corpus rows, hash-partial-aggregated
+    * map-side, so the shuffle carries ≤ K·dim·partitions rows. Means
+    * come from exact decimal sums (order-independent) divided as
+    * doubles — bit-stable at any parallelism.
+    */
   def kmeansUpdateStep(vecs: DataFrame, centroids: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cents = broadcast(withNorm(centroids)

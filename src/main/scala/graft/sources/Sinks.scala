@@ -46,11 +46,12 @@ object Sinks {
     */
   def idempotentBatchWriter(path: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // A writer option, not the session conf: setting the conf would
+    // turn every later overwrite in the session dynamic.
     batch
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
       .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(path)
   }

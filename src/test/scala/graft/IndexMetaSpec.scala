@@ -40,6 +40,27 @@ class IndexMetaSpec extends SparkSpec {
     }
   }
 
+  test("deleteFromIvfIndex refuses a dir that is not a tombstoned vector layout") {
+    // The delete is layout-agnostic, so the sidecar is its only guard:
+    // a mistyped path or an index of another kind must fail before any
+    // tombstone is written, not "succeed" and mask nothing.
+    import spark.implicits._
+    import graft.operators.{Similarity, TextAnalysis}
+    withTempDir("graft_del_checked") { root =>
+      val (empty, text) = (s"$root/empty", s"$root/text")
+      val fs = FsOps.fsOf(spark, root)
+      fs.mkdirs(new Path(empty))
+      TextAnalysis.writeInvertedIndex(Tables.documents(spark, sfDir), text, 8)
+      for (dir <- Seq(empty, text)) {
+        intercept[IllegalArgumentException] {
+          Similarity.deleteFromIvfIndex(spark, Seq(1L, 2L).toDF("vec_id"), dir)
+        }
+        assert(!fs.exists(new Path(s"$dir/tombstones")),
+          s"a refused delete left a tombstone table under $dir")
+      }
+    }
+  }
+
   test("knnJoinFromIndex fails loudly when the sidecar lacks the nprobe key") {
     import spark.implicits._
     import graft.operators.Similarity

@@ -438,6 +438,57 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("persisted IMI index: delete, compaction, full drain and re-append keep the in-memory contract") {
+    // The lifecycle legs of the test above, on the same fixture, without
+    // its plan-shape pin: a tombstoned id vanishes, compaction serves
+    // bit-identically to the mask it replaces, and a two-level full
+    // drain followed by an append serves like a fresh build.
+    import graft.operators.Similarity
+    val vecs = clusteredVecs()
+    val probes = vecs.filter($"vec_id" % 100 < 2)
+    val cents = Similarity.imiSubCentroids(vecs)
+    val want = Similarity.imiTopK(vecs, probes, 3, nprobe = 2)
+      .collect().toSet
+    withTempDir("graft_imi_life") { dir =>
+      Similarity.writeImiIndex(vecs, cents, dir)
+      val victim = want.head.getLong(want.head.fieldIndex("neighbor_id"))
+      Similarity.deleteFromIvfIndex(spark,
+        Seq(victim).toDF("vec_id"), dir)
+      val masked = Similarity.searchImiIndex(spark, dir, probes,
+          Int.MaxValue, nprobe = 2)
+        .select($"neighbor_id").distinct().collect().map(_.getLong(0))
+      assert(!masked.contains(victim), "tombstoned id still served")
+      val wantMasked = Similarity.searchImiIndex(spark, dir, probes, 3,
+        nprobe = 2).collect().toSet
+      Similarity.compactImiIndex(spark, dir)
+      val compacted = Similarity.searchImiIndex(spark, dir, probes, 3,
+        nprobe = 2).collect().toSet
+      assert(compacted === wantMasked,
+        "compaction changed a served result")
+      assert(spark.read.parquet(s"$dir/index")
+        .filter($"vec_id" === victim).count() === 0,
+        "compaction left the tombstoned row's files on disk")
+      assert(spark.read.parquet(s"$dir/tombstones").count() === 0,
+        "compaction did not drain the tombstone table")
+    }
+    withTempDir("graft_imi_life_app") { dir =>
+      Similarity.writeImiIndex(vecs.filter($"vec_id" % 2 === 0), cents, dir)
+      Similarity.appendImiIndex(spark, vecs.filter($"vec_id" % 2 === 1),
+        dir)
+      assert(Similarity.searchImiIndex(spark, dir, probes, 3, nprobe = 2)
+        .collect().toSet === want,
+        "write(A) + append(B) must serve identically to write(A ∪ B)")
+      Similarity.deleteFromIvfIndex(spark, vecs.select($"vec_id"), dir)
+      Similarity.compactImiIndex(spark, dir)
+      assert(Similarity.searchImiIndex(spark, dir, probes, 3, nprobe = 2)
+        .count() === 0, "fully drained IMI index must serve empty")
+      Similarity.appendImiIndex(spark, vecs, dir)
+      assert(Similarity.searchImiIndex(spark, dir, probes, 3, nprobe = 2)
+        .collect().toSet === want,
+        "re-append after a full drain must serve like a fresh build")
+    }
+  }
+
   test("imiPqTopK: exhaustive config equals brute force bit-for-bit; " +
       "shipped config keeps recall") {
     // Multi-D-ADC + refine: with every pair probed and the shortlist

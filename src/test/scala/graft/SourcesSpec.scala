@@ -79,6 +79,11 @@ class SourcesSpec extends SparkSpec {
     import graft.sources.Sinks
     val dir = Files.createTempDirectory("graft-idem").toFile.getAbsolutePath
     val write = Sinks.idempotentBatchWriter(dir) _
+    // The writer must not change the session's overwrite mode: a
+    // static conf stays static for every later overwrite.
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
+    spark.conf.set(modeKey, "static")
     write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
     write(Seq((3L, "c")).toDF("id", "v"), 1L)
     // Batch 1 redelivered (failure retry) with the same content: the
@@ -95,6 +100,9 @@ class SourcesSpec extends SparkSpec {
     assert(after.filter(col("batch_id") === 0).count() === 2)
     assert(after.filter(col("batch_id") === 1).as[(Long, String, Int)]
       .collect().map(_._2).sorted.toSeq === Seq("c2", "d"))
+    assert(spark.conf.get(modeKey) === "static",
+      "idempotentBatchWriter changed the session's partitionOverwriteMode")
+    modeBefore.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
   }
 
   test("observe counters report total and failed records (OP-22)") {
