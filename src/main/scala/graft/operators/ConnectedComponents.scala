@@ -31,12 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Transitive components of an undirected pair graph.
-    *
-    * @param edges DataFrame with columns (id_a, id_b), one row per pair.
-    * @return (doc_id, component) for every vertex that appears in any
-    *         edge; component is the minimum doc_id reachable from it.
-    */
   /** Transitive components with pointer jumping: each round, after the
     * min-over-neighbors propagation, every vertex also adopts its
     * label's label (`component ← label(component)`), halving the
@@ -48,6 +42,12 @@ object ConnectedComponents {
   def componentsPointerJump(edges: DataFrame, maxIter: Int = 20): DataFrame =
     components(edges, maxIter, pointerJump = true)
 
+  /** Transitive components of an undirected pair graph.
+    *
+    * @param edges DataFrame with columns (id_a, id_b), one row per pair.
+    * @return (doc_id, component) for every vertex that appears in any
+    *         edge; component is the minimum doc_id reachable from it.
+    */
   def components(edges: DataFrame, maxIter: Int = 25,
       pointerJump: Boolean = false): DataFrame =
     componentsWithRounds(edges, maxIter, pointerJump)._1

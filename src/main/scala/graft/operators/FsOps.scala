@@ -102,11 +102,11 @@ private[graft] object FsOps {
     checkedRename(fs, stagingPath, livePath)
     deleteIfExists(fs, old)
   }
-  /** Loud schema contract on the metadata-carrying append legs
-    * ([[Similarity.appendIvfIndex]], [[Similarity.appendImiIndex]],
-    * the NB model, the substring-fp layout — every layout that
-    * persist ALL input columns so metadata rides beside the vector
-    * for the filtered serves): the frame about to be appended must
+  /** Loud schema contract on the metadata-carrying append legs (the
+    * NB model, the substring-fp layout; the vector layouts check
+    * [[requireColumns]] against their opened schema — every layout
+    * that persists ALL input columns so metadata rides beside the
+    * row for the filtered serves): the frame about to be appended must
     * carry exactly the stored table's column set. A parquet append
     * with a different set would not fail — it would leave
     * mixed-schema files behind, and the filtered serve would read

@@ -240,29 +240,6 @@ object Graph {
     ranks
   }
 
-  /** Common-neighbor link prediction over a bipartite edge list: for
-    * every pair of left nodes sharing at least `minShared` right
-    * neighbors, the shared count and Jaccard similarity of their
-    * neighbor sets — "which suppliers are substitutable because they
-    * stock the same parts", the same score family (neighbor-set
-    * Jaccard) the dedup LSH path applies to shingle sets.
-    *
-    * Scale shape: the canonical friends-of-friends self-join, keyed on
-    * the RIGHT node — one shuffle co-partitions both sides, and the
-    * pair blow-up per right node is degree², so the whole cost is
-    * Σ deg(r)². That sum is exactly what makes this operator explode
-    * on power-law hubs, so right nodes with degree > `degreeCap` are
-    * EXCLUDED from pair generation (the standard hub-drop: a part
-    * stocked by every supplier carries no similarity signal, and at
-    * 100 TB it alone would generate more pairs than the rest of the
-    * graph). Degrees for the Jaccard union still count ALL edges —
-    * the cap bounds work, not the denominator. Jaccard is emitted in
-    * exact integer micro-units (`shared·10^6 div union`) — no doubles,
-    * bit-identical across engines.
-    *
-    * Output: (a, b, shared, jac_micro) with a < b, one row per
-    * qualifying pair.
-    */
   /** Bounded-round k-core peeling (Seidman 1983; the distributed
     * peel is the Pregel/"scan-and-peel" formulation — degrees
     * recount on the surviving subgraph, nodes under `k` drop, repeat):
@@ -338,6 +315,29 @@ object Graph {
         .agg(count(lit(1)).as("_pc"))
         .groupBy(col(key)).agg(sum(col("_pc")).as(out))
 
+  /** Common-neighbor link prediction over a bipartite edge list: for
+    * every pair of left nodes sharing at least `minShared` right
+    * neighbors, the shared count and Jaccard similarity of their
+    * neighbor sets — "which suppliers are substitutable because they
+    * stock the same parts", the same score family (neighbor-set
+    * Jaccard) the dedup LSH path applies to shingle sets.
+    *
+    * Scale shape: the canonical friends-of-friends self-join, keyed on
+    * the RIGHT node — one shuffle co-partitions both sides, and the
+    * pair blow-up per right node is degree², so the whole cost is
+    * Σ deg(r)². That sum is exactly what makes this operator explode
+    * on power-law hubs, so right nodes with degree > `degreeCap` are
+    * EXCLUDED from pair generation (the standard hub-drop: a part
+    * stocked by every supplier carries no similarity signal, and at
+    * 100 TB it alone would generate more pairs than the rest of the
+    * graph). Degrees for the Jaccard union still count ALL edges —
+    * the cap bounds work, not the denominator. Jaccard is emitted in
+    * exact integer micro-units (`shared·10^6 div union`) — no doubles,
+    * bit-identical across engines.
+    *
+    * Output: (a, b, shared, jac_micro) with a < b, one row per
+    * qualifying pair.
+    */
   def commonNeighbors(edges: DataFrame, degreeCap: Int = 1000,
       minShared: Long = 2L, salts: Int = 1): DataFrame = {
     val e = edges.select(col("src").as("l"), col("dst").as("r")).distinct()

@@ -214,28 +214,6 @@ object Sampling {
     (for { s <- 0 until nShards; v <- 0 until vnodes }
       yield (md5Hex(s"shard-$s:vn-$v"), s)).sortBy(_._1)
 
-  /** Training-mixture schedule: per source, how many epochs of it a run
-    * with `budgetTokens` total and an equal per-source target share can
-    * afford, capped at `maxEpochs` (the standard guard against
-    * over-repeating small high-quality sources). Emits each source's
-    * document/token mass, its epoch multiplier, and the tokens it
-    * contributes to the mix.
-    *
-    * Scale shape: one aggregation keyed by source, a 1-row source-count
-    * aggregate broadcast back (no collect), and a pure projection — the
-    * whole schedule is computed without ever touching a document twice.
-    * All outputs are fixed IEEE chains over exact integer aggregates, so
-    * any partial-aggregation order reproduces the same bits. */
-  /** Curriculum ordering — the quality-first training schedule: rank
-    * each source's documents into quality deciles (best decile first),
-    * then order within the schedule by decile, length, id. Two windows
-    * per source shard (decile assignment, then the schedule rank);
-    * parallelism = source count, state = one source's rows per
-    * partition — the same shard-window shape as the length filter. The
-    * quality score is the fixed IEEE chain of TextAnalysis.stats, so
-    * decile boundaries are engine- and partitioning-stable (ties break
-    * on doc_id).
-    */
   /** Greedy per-source token-budget cut — the materialization step of
     * a mixture recipe expressed in TOKENS (the unit training budgets
     * are written in), not documents: within each source, documents
@@ -264,6 +242,16 @@ object Sampling {
       .filter(col("cum_tokens") <= budget)
   }
 
+  /** Curriculum ordering — the quality-first training schedule: rank
+    * each source's documents into quality deciles (best decile first),
+    * then order within the schedule by decile, length, id. Two windows
+    * per source shard (decile assignment, then the schedule rank);
+    * parallelism = source count, state = one source's rows per
+    * partition — the same shard-window shape as the length filter. The
+    * quality score is the fixed IEEE chain of TextAnalysis.stats, so
+    * decile boundaries are engine- and partitioning-stable (ties break
+    * on doc_id).
+    */
   def curriculumOrder(documents: DataFrame, deciles: Int = 10): DataFrame = {
     val wDecile = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
@@ -386,6 +374,18 @@ object Sampling {
           .as("boost"))
   }
 
+  /** Training-mixture schedule: per source, how many epochs of it a run
+    * with `budgetTokens` total and an equal per-source target share can
+    * afford, capped at `maxEpochs` (the standard guard against
+    * over-repeating small high-quality sources). Emits each source's
+    * document/token mass, its epoch multiplier, and the tokens it
+    * contributes to the mix.
+    *
+    * Scale shape: one aggregation keyed by source, a 1-row source-count
+    * aggregate broadcast back (no collect), and a pure projection — the
+    * whole schedule is computed without ever touching a document twice.
+    * All outputs are fixed IEEE chains over exact integer aggregates, so
+    * any partial-aggregation order reproduces the same bits. */
   def mixtureWeights(documents: DataFrame, budgetTokens: Double,
       maxEpochs: Double = 4.0): DataFrame = {
     val perSrc = documents

@@ -51,6 +51,36 @@ object Similarity {
   private def withNorm(vecs: DataFrame): DataFrame =
     vecs.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
 
+  /** The per-probe top-k every ranked vector serve ends in: `score`
+    * desc, `neighbor_id` asc (the family's determinism contract), the
+    * 1-based rank kept as `rnk`. */
+  private def topKPerProbe(scored: DataFrame, k: Int,
+      score: String = "cos_r"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+  }
+
+  /** The exact refine of a shortlist (probe_id, neighbor_id, `carry`…):
+    * ONLY the shortlisted neighbors' floats are fetched from `vecs`
+    * (a neighbor-id join, so the corpus floats never broadcast) and
+    * scored against the broadcast probe floats as 6-dp cosine `cos_r`.
+    * Callers broadcast `short` when it is probe-bounded. */
+  private def refineExact(short: DataFrame, vecs: DataFrame,
+      probes: DataFrame, carry: String*): DataFrame = {
+    val pv = broadcast(withNorm(probes)
+      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
+        col("nrm").as("pnrm")))
+    short
+      .join(withNorm(vecs).select(col("vec_id").as("neighbor_id"),
+        col("v"), col("nrm")), Seq("neighbor_id"))
+      .join(pv, Seq("probe_id"))
+      .select((Seq(col("probe_id"), col("neighbor_id")) ++ carry.map(col) :+
+        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
+          .as("cos_r")): _*)
+  }
+
   /** Embedding-cosine near-duplicate pairs, blocked by label. */
   def cosineDupPairs(vecs: DataFrame, threshold: Double): DataFrame = {
     val vn = withNorm(vecs)
@@ -160,18 +190,13 @@ object Similarity {
     * equivalence is property-pinned in PipelineSpec rather than
     * duplicated as a second operator.
     */
-  def mipsTopK(vecs: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = broadcast(probes
+  def mipsTopK(vecs: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    topKPerProbe(broadcast(probes
         .select(col("vec_id").as("probe_id"), col("v").as("pv")))
       .join(vecs.select(col("vec_id").as("neighbor_id"), col("v")),
         col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        round(dot(col("pv"), col("v")), 6).as("ip_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("ip_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
+        round(dot(col("pv"), col("v")), 6).as("ip_r")), k, "ip_r")
 
   /** Cosine radius search: every corpus vector whose (6-dp rounded)
     * cosine to a probe meets the threshold — the "find all neighbors
@@ -408,7 +433,8 @@ object Similarity {
     * the oracle pins the shortlist stage, not just the final ranks. */
   def bqRerank(vecs: DataFrame, probes: DataFrame, shortlist: Int = 20,
       k: Int = 3): DataFrame =
-    bqServe(bqCodes(vecs), vecs, probes, shortlist, k)
+    topKPerProbe(bqRefinedStage(bqHamFlat(bqCodes(vecs), probes), vecs,
+      probes, shortlist), k)
 
   /** Persist the BQ layout: the (vec_id, code0, code1) code table
     * under `$dir/codes` — 16 bytes/vector, the artifact a BQ
@@ -440,10 +466,9 @@ object Similarity {
     * shares the monolithic oracle. The table is unpartitioned, so a
     * full-drain placeholder stays harmlessly beside the appended rows. */
   def appendBqIndex(spark: org.apache.spark.sql.SparkSession,
-      vecs: DataFrame, dir: String): Unit = {
-    requireLayout(spark, dir, BqLayout)
-    appendRows(spark, dir, BqLayout, vecs, bqCodeRows(vecs), "appendBqIndex")
-  }
+      vecs: DataFrame, dir: String): Unit =
+    appendRows(openLayout(spark, dir, BqLayout), vecs, bqCodeRows(vecs),
+      "appendBqIndex")
 
   /** Tombstone-DELETE from the BQ layout — the tombstone table is
     * layout-agnostic (ids only), so this IS [[deleteFromIvfIndex]]'s
@@ -453,10 +478,8 @@ object Similarity {
     * never with ghosts that the re-rank would then drop —
     * under-returning k). [[compactBqIndex]] reclaims the space. */
   def deleteFromBqIndex(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, dir: String): Unit = {
-    requireLayout(spark, dir, BqLayout)
-    deleteFromIvfIndex(spark, ids, dir)
-  }
+      ids: DataFrame, dir: String): Unit =
+    deleteRows(openLayout(spark, dir, BqLayout), ids)
 
   /** Compact the BQ layout: [[compactLayout]]'s whole-table rewrite —
     * the codes are NOT cell-partitioned, so the unit of rewrite is the
@@ -495,8 +518,7 @@ object Similarity {
   def bqRangeFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, tau: Double,
       shortlist: Int = 20): DataFrame =
-    bqRefinedStage(bqHamFlat(bqMaskedCodes(spark, dir, None), probes),
-        vecs, probes, shortlist)
+    bqRefinedFromIndex(spark, dir, vecs, probes, shortlist, None)
       .filter(col("cos_r") >= tau)
       .select(col("probe_id"), col("neighbor_id"), col("cos_r"))
 
@@ -504,20 +526,17 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, shortlist: Int, k: Int,
       pred: Option[Column]): DataFrame =
-    bqServe(bqMaskedCodes(spark, dir, pred), vecs, probes, shortlist, k)
+    topKPerProbe(
+      bqRefinedFromIndex(spark, dir, vecs, probes, shortlist, pred), k)
 
-  /** The live code scan of the flat-BQ serves: sidecar gate, optional
-    * metadata predicate, tombstone mask — one read path for all
-    * modes. */
-  private def bqMaskedCodes(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pred: Option[Column]): DataFrame = {
-    requireLayout(spark, dir, BqLayout)
-    liveRows(spark, dir, BqLayout, readTombstones(spark, dir), pred)
-  }
-
-  private def bqServe(codes: DataFrame, vecs: DataFrame,
-      probes: DataFrame, shortlist: Int, k: Int): DataFrame =
-    bqRerankStage(bqHamFlat(codes, probes), vecs, probes, shortlist, k)
+  /** The refined scored frame of the flat-BQ serves (top-k, filtered,
+    * range): the opened layout's live code scan, Hamming gate, exact
+    * refine — one read path for all modes. */
+  private def bqRefinedFromIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String, vecs: DataFrame, probes: DataFrame, shortlist: Int,
+      pred: Option[Column]): DataFrame =
+    bqRefinedStage(bqHamFlat(openLayout(spark, dir, BqLayout).liveRows(pred),
+      probes), vecs, probes, shortlist)
 
   /** The Hamming frame of the flat-BQ serves: broadcast probe codes
     * past every live code row, probe ≠ neighbor. */
@@ -533,27 +552,12 @@ object Similarity {
           .cast("int").as("ham"))
   }
 
-  /** Shared tail of every BQ serve (flat and cell-blocked): the
-    * Hamming shortlist window (ham asc, neighbor asc, top
-    * `shortlist`) and the exact-cosine re-rank of the survivors
-    * against the corpus floats (cos desc, neighbor asc, top `k`) —
-    * one definition so the two serve shapes cannot diverge on the
-    * determinism contract. */
-  private def bqRerankStage(ham: DataFrame, vecs: DataFrame,
-      probes: DataFrame, shortlist: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    bqRefinedStage(ham, vecs, probes, shortlist)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
-
-  /** The exact-refined scored frame under the BQ serve modes (top-k,
-    * filtered, range): Hamming gates the `shortlist`, ONLY the
-    * shortlist's floats are fetched, exact 6-dp cosine — one
-    * definition so the modes cannot diverge ([[imiPqRefined]]'s split
-    * at the binary-code shape). */
+  /** The exact-refined scored frame under every BQ serve (flat and
+    * cell-blocked; top-k, filtered, range): the Hamming shortlist
+    * window (ham asc, neighbor asc, top `shortlist`), then
+    * [[refineExact]] of the survivors — one definition so the serve
+    * shapes and modes cannot diverge ([[imiPqRefined]]'s split at the
+    * binary-code shape). */
   private def bqRefinedStage(ham: DataFrame, vecs: DataFrame,
       probes: DataFrame, shortlist: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -562,16 +566,7 @@ object Similarity {
     val short = ham.withColumn("hrnk", row_number().over(wH))
       .filter(col("hrnk") <= shortlist)
       .select(col("probe_id"), col("neighbor_id"), col("ham"))
-    val pv = broadcast(withNorm(probes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm")))
-    short
-      .join(withNorm(vecs).select(col("vec_id").as("neighbor_id"),
-        col("v"), col("nrm")), Seq("neighbor_id"))
-      .join(pv, Seq("probe_id"))
-      .select(col("probe_id"), col("neighbor_id"), col("ham"),
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r"))
+    refineExact(short, vecs, probes, "ham")
   }
 
   /** CELL-BLOCKED binary quantization — the IVF composition of the BQ
@@ -587,11 +582,12 @@ object Similarity {
     * bounded by nprobe exactly as in every IVF serve; probing every
     * cell degenerates to the flat BQ serve bit-for-bit (cells
     * partition the corpus — spec-pinned). Shortlist and re-rank
-    * contracts are [[bqRerank]]'s, shared via [[bqRerankStage]]. */
+    * contracts are [[bqRerank]]'s, shared via [[bqRefinedStage]]. */
   def ivfBqTopK(vecs: DataFrame, probes: DataFrame, cents: DataFrame,
       shortlist: Int = 20, k: Int = 3, nprobe: Int = 2): DataFrame = {
-    ivfBqServe(bqCodes(withInlineCell(vecs, cents)), cents, vecs,
-      probes, shortlist, k, nprobe)
+    val cs = collectCents(cents, "dim")
+    topKPerProbe(bqRefinedStage(ivfBqHam(bqCodes(withInlineCell(vecs, cs)),
+      cs, probes, nprobe), vecs, probes, shortlist), k)
   }
 
   /** Persist the IVF-BQ layout: trained centroids + the code table
@@ -605,8 +601,7 @@ object Similarity {
   def writeIvfBqIndex(vecs: DataFrame, cents: DataFrame,
       dir: String): Unit =
     buildLayout(vecs.sparkSession, dir, IvfBqLayout) {
-      cents.write.mode("overwrite").parquet(s"$dir/centroids")
-      ivfBqCodeRows(vecs, vecs.sparkSession.read.parquet(s"$dir/centroids"))
+      ivfBqCodeRows(vecs, storedCents(cents, dir))
     }
 
   /** The stored code-row frame of the IVF-BQ build/append legs:
@@ -614,7 +609,7 @@ object Similarity {
     * columns ride beside the 16-byte codes for
     * [[searchIvfBqIndexWhere]]'s pushed predicate; metadata-less
     * inputs produce the previous schema exactly. */
-  private def ivfBqCodeRows(vecs: DataFrame, cents: DataFrame): DataFrame = {
+  private def ivfBqCodeRows(vecs: DataFrame, cents: CentEntries): DataFrame = {
     val metaCols = vecs.columns.filterNot(c => c == "v" || c == "vec_id")
     // Cell assignment ([[withInlineCell]]) and metadata both ride the
     // packing projection (round 20) — the two corpus-sized re-attach
@@ -630,17 +625,17 @@ object Similarity {
     * (the gated twin shares the monolithic oracle). */
   def appendIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    requireLayout(spark, dir, IvfBqLayout)
-    appendRows(spark, dir, IvfBqLayout, vecs2,
-      ivfBqCodeRows(vecs2, spark.read.parquet(s"$dir/centroids")),
+    val open = openLayout(spark, dir, IvfBqLayout)
+    appendRows(open, vecs2, ivfBqCodeRows(vecs2, open.cents),
       "appendIvfBqIndex")
   }
 
   /** Tombstone-DELETE from the IVF-BQ layout (layout-agnostic id
-    * table; the serve masks BEFORE the Hamming shortlist ranks). */
+    * table; the serve masks BEFORE the Hamming shortlist ranks). The
+    * dir must hold an IVF-BQ layout. */
   def deleteFromIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit =
-    deleteFromIvfIndex(spark, ids, dir)
+    deleteRows(openLayout(spark, dir, IvfBqLayout), ids)
 
   /** Compaction for the IVF-BQ layout: the affected-cell rewrite of
     * [[compactLayout]] over the cell-partitioned code table. */
@@ -688,44 +683,27 @@ object Similarity {
   private def searchIvfBqIndexImpl(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, shortlist: Int, k: Int,
-      nprobe: Int, pred: Option[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    ivfBqRefinedFromIndex(spark, dir, vecs, probes, shortlist, nprobe,
-        pred)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
+      nprobe: Int, pred: Option[Column]): DataFrame =
+    topKPerProbe(ivfBqRefinedFromIndex(spark, dir, vecs, probes, shortlist,
+      nprobe, pred), k)
 
   /** The refined scored frame of the persisted IVF-BQ serves (top-k,
-    * filtered, range): stored centroids, tombstone mask, optional
-    * metadata predicate on the cell-partitioned code scan, Hamming
-    * gate, exact refine — one read path for all modes. */
+    * filtered, range): the opened layout's centroids and live code
+    * scan (optional metadata predicate on the cell-partitioned codes),
+    * Hamming gate, exact refine — one read path for all modes. */
   private def ivfBqRefinedFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, shortlist: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
-    requireLayout(spark, dir, IvfBqLayout)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val codes = liveRows(spark, dir, IvfBqLayout, readTombstones(spark, dir),
-      pred)
-    bqRefinedStage(ivfBqHam(codes, cents, probes, nprobe), vecs,
-      probes, shortlist)
+    val open = openLayout(spark, dir, IvfBqLayout)
+    bqRefinedStage(ivfBqHam(open.liveRows(pred), open.cents, probes, nprobe),
+      vecs, probes, shortlist)
   }
 
-  /** Shared IVF-BQ scoring stage: probe cell assignment (nprobe
-    * nearest stored cells), cell-equi Hamming over the probed cells'
-    * codes, then the flat serve's shortlist + re-rank tail. */
-  private def ivfBqServe(codes: DataFrame, cents: DataFrame,
-      vecs: DataFrame, probes: DataFrame, shortlist: Int, k: Int,
-      nprobe: Int): DataFrame =
-    bqRerankStage(ivfBqHam(codes, cents, probes, nprobe), vecs, probes,
-      shortlist, k)
-
-  /** The Hamming frame of the IVF-BQ serves: broadcast probe codes
-    * against the cell-pruned code scan, probe ≠ neighbor. */
-  private def ivfBqHam(codes: DataFrame, cents: DataFrame,
+  /** The Hamming frame of the IVF-BQ serves (in-memory and persisted):
+    * probes assigned to their `nprobe` nearest cells, broadcast probe
+    * codes against the cell-pruned code scan, probe ≠ neighbor. */
+  private def ivfBqHam(codes: DataFrame, cents: CentEntries,
       probes: DataFrame, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val pcells = trainedAssign(probes, cents, nprobe)
@@ -938,7 +916,7 @@ object Similarity {
   }
 
   /** Fused inline encode: (vec_id, metadata…, c0, c1, rv) with rv =
-    * v − [cent0(c0); cent1(c1)] — [[imiPairResiduals]] at the corpus
+    * v − [cent0(c0); cent1(c1)] ([[pairResidual]]) at the corpus
     * rank-1 shape with assignment, centroid lookup, and subtraction
     * all on the src row (zero joins, zero aggregates). Non-vector
     * input columns RIDE THROUGH the projection (round 20), so a
@@ -946,19 +924,27 @@ object Similarity {
     * corpus-sized join downstream. */
   private def inlinePairResiduals(src: DataFrame,
       halves: Seq[Seq[(Any, Seq[Double])]]): DataFrame = {
-    val maps = halves.map(es =>
-      if (es.isEmpty) expr("CAST(map() AS map<int,array<double>>)")
-      else map(es.flatMap { case (cl, cv) =>
-        Seq(lit(cl), array(cv.map(lit(_)): _*)) }: _*))
     val carry = src.columns
       .filterNot(c => c == "v" || c == "vec_id").map(col).toSeq
     withInlinePair(src, halves)
       .select(Seq(col("vec_id")) ++ carry ++ Seq(col("c0"), col("c1"),
-        zip_with(col("v"),
-          concat(element_at(maps(0), col("c0")),
-            element_at(maps(1), col("c1"))),
-          (a, b) => a - b).as("rv")): _*)
+        pairResidual(halves, col("c0"), col("c1")).as("rv")): _*)
   }
+
+  /** v − [cent0(c0); cent1(c1)]: the row's residual against the
+    * concatenated centroid of the pair (`c0`, `c1`), looked up in the
+    * collected halves — the encode side ([[inlinePairResiduals]]) and
+    * the probe side ([[imiPqAdcScores]]) share it. */
+  private def pairResidual(halves: Seq[CentEntries], c0: Column,
+      c1: Column): Column =
+    zip_with(col("v"), concat(element_at(centMap(halves(0)), c0),
+      element_at(centMap(halves(1)), c1)), (a, b) => a - b)
+
+  /** Collected centroids as a literal `map<cid, cvec>`. */
+  private def centMap(entries: CentEntries): Column =
+    if (entries.isEmpty) expr("CAST(map() AS map<int,array<double>>)")
+    else map(entries.flatMap { case (cid, cvec) =>
+      Seq(lit(cid), array(cvec.map(lit(_)): _*)) }: _*)
 
   /** Top-`nprobe` virtual-cell pairs computed INLINE on the probe row
     * — all k² (sum of rounded half-distances, l0, l1) structs built
@@ -1084,13 +1070,8 @@ object Similarity {
     * diverge on the scoring contract (rounded-cosine desc, neighbor
     * asc). */
   private def imiServe(probes: DataFrame, assigned: DataFrame,
-      corpus: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    imiScored(probes, assigned, corpus)
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
+      corpus: DataFrame, k: Int): DataFrame =
+    topKPerProbe(imiScored(probes, assigned, corpus), k)
 
   /** The scored frame under both IMI serve modes (top-k and range):
     * broadcast (probe, pair) rows against the pair-indexed corpus,
@@ -1124,14 +1105,13 @@ object Similarity {
   def writeImiIndex(vecs: DataFrame, cents: DataFrame,
       dir: String): Unit =
     buildLayout(vecs.sparkSession, dir, ImiLayout) {
-      cents.write.mode("overwrite").parquet(s"$dir/centroids")
       // All input columns persist (metadata like `label` rides beside
       // the vector), so [[searchImiIndexWhere]]'s predicate pushes to
       // the stored scan — the same filtered-serve contract as the flat
       // layout. The pair assignment is inline on the corpus row
       // ([[withInlinePair]]) — no aggregate, no re-attach join.
-      withInlinePair(withNorm(vecs), collectHalves(
-        vecs.sparkSession.read.parquet(s"$dir/centroids")))
+      withInlinePair(withNorm(vecs),
+        collectHalves(storedQuantizer(cents, dir, "centroids")))
     }
 
   /** APPEND a corpus batch to a persisted [[writeImiIndex]] layout:
@@ -1144,10 +1124,8 @@ object Similarity {
     * [[appendRows]], with the rest of the shared append leg. */
   def appendImiIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    requireLayout(spark, dir, ImiLayout)
-    appendRows(spark, dir, ImiLayout, vecs2,
-      withInlinePair(withNorm(vecs2),
-        collectHalves(spark.read.parquet(s"$dir/centroids"))),
+    val open = openLayout(spark, dir, ImiLayout)
+    appendRows(open, vecs2, withInlinePair(withNorm(vecs2), open.halves),
       "appendImiIndex")
   }
 
@@ -1175,13 +1153,8 @@ object Similarity {
 
   private def searchImiIndexImpl(spark: org.apache.spark.sql.SparkSession,
       dir: String, probes: DataFrame, k: Int, nprobe: Int,
-      pred: Option[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    imiScoredFromIndex(spark, dir, probes, nprobe, pred)
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
+      pred: Option[Column]): DataFrame =
+    topKPerProbe(imiScoredFromIndex(spark, dir, probes, nprobe, pred), k)
 
   /** Cosine radius search over a persisted [[writeImiIndex]] layout —
     * the range mode of the pair-partitioned serve: all neighbors in
@@ -1196,20 +1169,17 @@ object Similarity {
       .filter(col("cos_r") >= tau)
 
   /** The scored frame of the persisted-IMI serves (top-k, filtered,
-    * range): probe pairs against the STORED codebooks, pair-equi join
-    * into the pair-partitioned index (DPP-prunable, tombstone mask
-    * applied), rounded cosine. */
+    * range): probe pairs against the opened layout's codebooks,
+    * pair-equi join into its live pair-partitioned index
+    * (DPP-prunable), rounded cosine. */
   private def imiScoredFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    requireLayout(spark, dir, ImiLayout)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val assigned = inlineProbePairsRanked(probes, collectHalves(cents),
-        nprobe)
+    val open = openLayout(spark, dir, ImiLayout)
+    val assigned = inlineProbePairsRanked(probes, open.halves, nprobe)
       .select(col("probe_id"), col("l0"), col("l1"))
-    imiScored(probes, assigned,
-      liveRows(spark, dir, ImiLayout, readTombstones(spark, dir), pred))
+    imiScored(probes, assigned, open.liveRows(pred))
   }
 
   /** Physically COMPACT a persisted [[writeImiIndex]] layout:
@@ -1219,51 +1189,6 @@ object Similarity {
   def compactImiIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     compactLayout(spark, dir, ImiLayout)
-
-  /** Half-codebook mean ARRAYS — (sub, clabel, cv) with cv ordered by
-    * pos ([[centroidArrays]]'s shape at the half-codebook key):
-    * array_sort on the (pos, cmean) struct sorts on the first field,
-    * so the order is deterministic regardless of collect_list's
-    * partition order. 2·k rows of dim/2 doubles: always
-    * broadcastable. Serves BOTH codebook shapes — label-mean
-    * ([[imiSubCentroids]], absolute positions) and trained
-    * ([[imiTrainedAsSubCents]], rebased positions): positions are
-    * only an ordering key within a half, and both shapes order the
-    * half's dims identically. */
-  private def imiCentArrays(cents: DataFrame): DataFrame =
-    cents.groupBy(col("sub"), col("clabel"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("cmean"))))
-        .as("p"))
-      .select(col("sub"), col("clabel"),
-        expr("transform(p, q -> q.cmean)").as("cv"))
-
-  /** Residuals against the CONCATENATED pair centroid — rv = v −
-    * [cent0(c0); cent1(c1)], the multi-index's natural coarse
-    * reconstruction (each half's quantizer explains its half): one
-    * row per (vector, assigned pair). `assign` carries (vec_id, c0,
-    * c1) — rank-1 pairs on the corpus encode side (one row per
-    * vector), probed pairs on the query side (nprobe rows per probe —
-    * the residual is pair-dependent, exactly [[residualsOf]]'s
-    * n = nprobe shape at the pair key). `broadcastAssign` marks the
-    * assignment side broadcastable — set it on PROBE-side calls; the
-    * corpus-side encode assignment is corpus-sized and the co-keyed
-    * join is the correct build shape. The half-mean arrays broadcast
-    * (2·k rows) and concat per matched pair — all k² pair centroids
-    * are never materialized, only the pairs rows actually need. */
-  private def imiPairResiduals(src: DataFrame, assign: DataFrame,
-      cents: DataFrame, broadcastAssign: Boolean = false): DataFrame = {
-    val ca = imiCentArrays(cents)
-    val a0 = broadcast(ca.filter(col("sub") === 0)
-      .select(col("clabel").as("c0"), col("cv").as("cv0")))
-    val a1 = broadcast(ca.filter(col("sub") === 1)
-      .select(col("clabel").as("c1"), col("cv").as("cv1")))
-    val asg = if (broadcastAssign) broadcast(assign) else assign
-    src.join(asg, Seq("vec_id"))
-      .join(a0, Seq("c0")).join(a1, Seq("c1"))
-      .select(col("vec_id"), col("c0"), col("c1"),
-        zip_with(col("v"), concat(col("cv0"), col("cv1")),
-          (a, b) => a - b).as("rv"))
-  }
 
   /** The ENCODE half of [[imiPqTopK]] split out ([[ivfPqrEncode]]'s
     * shape at the pair key) — (residual codebook, residual codes) of
@@ -1286,93 +1211,54 @@ object Similarity {
     (rcb, codes)
   }
 
-  /** Shared serve of the Multi-D-ADC composition ([[imiPqTopK]] and
-    * the recall curve's PQ rung route here): probes residualize
-    * against each PROBED pair's concatenated centroid, the per-
-    * (probe, pair) distance table builds against the residual
-    * codebook, ADC nominates `rerankDepth` candidates per probe from
-    * the probed pairs only, and ONLY those candidates' raw vectors
-    * are fetched back for the exact-cosine re-rank — [[pqrServe]]'s
-    * contract at the pair key. Each corpus vector lives in exactly
-    * one virtual cell, so a (probe, vec) ADC group sums exactly m
-    * terms (candidates never duplicate across probed pairs).
-    * Determinism: the family contract — exact-decimal ADC sums with
-    * vec-id tie-break for the shortlist, 6-dp cosine with neighbor-id
-    * tie-break for the final rank. Scale: dtab is probe-bounded
+  /** The exact-refined scored frame of every Multi-D-ADC serve
+    * ([[imiPqTopK]], the persisted top-k, filtered and range modes):
+    * probes residualize against each PROBED pair's concatenated
+    * centroid, the per-(probe, pair) distance table builds against
+    * the residual codebook, ADC nominates `rerankDepth` candidates per
+    * probe from the probed pairs only, and ONLY those candidates' raw
+    * vectors are fetched back for [[refineExact]] — [[pqrRefined]]'s
+    * contract at the pair key. Each corpus vector lives in exactly one
+    * virtual cell, so a (probe, vec) ADC group sums exactly m terms.
+    * Determinism: exact-decimal ADC sums with vec-id tie-break for the
+    * shortlist, 6-dp cosine downstream. Scale: dtab is probe-bounded
     * (|probes|·nprobe·m·codebookK rows) and broadcasts; the code scan
-    * joins it within probed pairs only; the float fetch is shortlist-
-    * bounded (|probes|·rerankDepth rows probe the corpus scan — the
-    * corpus floats never shuffle and never broadcast). */
-  private def imiPqServeEncoded(codes: DataFrame, rcb: DataFrame,
-      cents: DataFrame, vecs: DataFrame, probes: DataFrame,
-      assigned: DataFrame, k: Int, m: Int, rerankDepth: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rerankDepth >= k, s"rerankDepth $rerankDepth must cover k=$k")
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    imiPqRefined(codes, rcb, cents, vecs, probes, assigned, m,
-        rerankDepth)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
-
-  /** The exact-refined scored frame under both Multi-D-ADC serve modes
-    * (top-k and range): ADC-shortlist the probed pairs to
-    * `rerankDepth` candidates, fetch ONLY those candidates' floats,
-    * exact 6-dp cosine — one definition so the modes cannot diverge on
-    * the determinism, shortlist, or deletion contracts (the
-    * [[imiScored]] split at the encoded shape). The range mode
-    * thresholds this frame directly: approximate distances GATE the
-    * shortlist, the exact refine applies the radius — a true neighbor
-    * outside the depth-`rerankDepth` ADC shortlist is not seen, the
-    * same recall knob as the top-k mode (documented, measured by the
-    * recall curve). */
-  private def imiPqRefined(codes: DataFrame, rcb: DataFrame,
-      cents: DataFrame, vecs: DataFrame, probes: DataFrame,
+    * joins it within probed pairs only; the float fetch is
+    * shortlist-bounded. The range mode thresholds this frame directly:
+    * approximate distances GATE the shortlist, the exact refine
+    * applies the radius — a true neighbor outside the
+    * depth-`rerankDepth` ADC shortlist is not seen, the same recall
+    * knob as the top-k mode (measured by the recall curve). */
+  private def imiPqRefined(codes: DataFrame, codebook: CodebookEntries,
+      halves: Seq[CentEntries], vecs: DataFrame, probes: DataFrame,
       assigned: DataFrame, m: Int, rerankDepth: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wS = Window.partitionBy(col("probe_id"))
       .orderBy(col("adist").asc, col("vec_id").asc)
     val short = broadcast(
-      imiPqAdcScores(codes, rcb, cents, probes, assigned, m)
+      imiPqAdcScores(codes, codebook, halves, probes, assigned, m)
         .withColumn("srnk", row_number().over(wS))
         .filter(col("srnk") <= rerankDepth)
         .select(col("probe_id"), col("vec_id").as("neighbor_id")))
-    val pv = broadcast(withNorm(probes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm")))
-    short
-      .join(withNorm(vecs).select(col("vec_id").as("neighbor_id"),
-        col("v"), col("nrm")), Seq("neighbor_id"))
-      .join(pv, Seq("probe_id"))
-      .select(col("probe_id"), col("neighbor_id"),
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r"))
+    refineExact(short, vecs, probes)
   }
 
   /** The ADC distance frame of the Multi-D-ADC serve — (probe_id,
     * vec_id, adist) over the probed pairs only, split out so the
     * recall curve can rank ONE scored frame per operating point
     * (each (probe, vec) row belongs to exactly one pair, so scoping
-    * by pair rank downstream is a filter, not a re-score). */
-  private def imiPqAdcScores(codes: DataFrame, rcb: DataFrame,
-      cents: DataFrame, probes: DataFrame, assigned: DataFrame,
+    * by pair rank downstream is a filter, not a re-score). The probe
+    * residual v − [cent0(l0); cent1(l1)] and the distance table
+    * ([[adcDistTableWith]]) are projections against the collected
+    * quantizer, so no quantizer table is joined. */
+  private def imiPqAdcScores(codes: DataFrame, codebook: CodebookEntries,
+      halves: Seq[CentEntries], probes: DataFrame, assigned: DataFrame,
       m: Int): DataFrame = {
-    val passign = assigned.select(col("probe_id").as("vec_id"),
-      col("l0").as("c0"), col("l1").as("c1"))
-    val psubs = imiPairResiduals(probes, passign, cents,
-        broadcastAssign = true)
-      .select(col("vec_id").as("probe_id"), col("c0").as("l0"),
-        col("c1").as("l1"),
-        explode(expr(s"sequence(0, ${m - 1})")).as("sub"), col("rv"))
-      .select(col("probe_id"), col("l0"), col("l1"), col("sub"),
-        expr(s"slice(rv, sub * (size(rv) div $m) + 1, size(rv) div $m)")
-          .as("sv"))
-    val dtab = psubs.join(broadcast(rcb), Seq("sub"))
-      .select(col("probe_id"), col("l0"), col("l1"), col("sub"),
-        col("cid"),
-        (dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("cv")) +
-          dot(col("cv"), col("cv"))).as("pd2"))
+    val res = probes.select(col("vec_id").as("probe_id"), col("v"))
+      .join(broadcast(assigned), Seq("probe_id"))
+      .select(col("probe_id"), col("l0"), col("l1"),
+        pairResidual(halves, col("l0"), col("l1")).as("rv"))
+    val dtab = adcDistTableWith(res, Seq("l0", "l1"), codebook, m)
     codes.join(broadcast(dtab),
         codes("sub") === dtab("sub") && codes("cid") === dtab("cid") &&
           col("c0") === col("l0") && col("c1") === col("l1") &&
@@ -1471,45 +1357,21 @@ object Similarity {
     val spark = vecs.sparkSession
     buildLayout(spark, dir, ImiPqLayout, "m" -> m.toString,
         "codebookK" -> codebookK.toString) {
-      cents.write.mode("overwrite").parquet(s"$dir/centroids")
       // Fused inline encode (round 19): assignment + residual in one
       // projection on the corpus row — no per-vector argmin aggregate,
       // no re-attach join.
-      val halves = collectHalves(spark.read.parquet(s"$dir/centroids"))
+      val halves = collectHalves(storedQuantizer(cents, dir, "centroids"))
       val rcorp = inlinePairResiduals(vecs, halves)
       // The default (quantizer = batch) REUSES the batch's own residual
       // frame for codebook training — computing the same assignment
       // twice measured ~1.5 s/row at sf0.1 for nothing.
       val qres = quantizer.map(qsrc => inlinePairResiduals(qsrc, halves))
         .getOrElse(rcorp)
-      codebookOf(qres.select(col("vec_id"), col("rv").as("v")), m,
-          codebookK)
-        .write.mode("overwrite").parquet(s"$dir/codebook")
-      imiPqCodeRows(spark.read.parquet(s"$dir/codebook"), rcorp, vecs, m)
+      val codebook = collectCodebook(storedQuantizer(
+        codebookOf(qres.select(col("vec_id"), col("rv").as("v")), m,
+          codebookK), dir, "codebook"))
+      pqCodeRows(codebook, rcorp, vecs, m, ImiPqLayout.partKeys)
     }
-  }
-
-  /** The stored code-row frame shared by the imi_pq build and append
-    * legs: (vec_id, sub, cid, metadata…, c0, c1) — the m-byte residual
-    * codes with every non-vector input column attached (each vector's
-    * m sub-rows carry identical metadata, so a filtered serve's
-    * predicate keeps or drops whole vectors and the ADC group still
-    * sums exactly m terms). The metadata join keys on vec_id like the
-    * pair join beside it — same co-partitioning, no extra exchange
-    * class at build time. */
-  private def imiPqCodeRows(codebook: DataFrame, rcorp: DataFrame,
-      vecs: DataFrame, m: Int): DataFrame = {
-    val metaCols = vecs.columns.filterNot(c => c == "v" || c == "vec_id")
-    // Pair keys (round 19) AND metadata (round 20) ride through the
-    // code assignment — zero re-attach joins on the encode path: the
-    // residual frame is a pure projection of the input row, so every
-    // input column is already beside the residual when the code
-    // argmin runs.
-    val base = pqCodesAgainst(codebook, rcorp.select(
-      (Seq(col("vec_id")) ++ metaCols.map(col) ++
-        Seq(col("c0"), col("c1"), col("rv").as("v"))): _*), m)
-    base.select((Seq("vec_id", "sub", "cid") ++ metaCols ++
-      Seq("c0", "c1")).map(col): _*)
   }
 
   /** APPEND a corpus batch to a persisted [[writeImiPqIndex]] layout:
@@ -1519,17 +1381,15 @@ object Similarity {
     * write(A, quantizer = A ∪ B) then append(B) serves bit-identically
     * to the monolithic build (spec-pinned). Since fmt 2 the code rows
     * carry the input's metadata columns for the filtered serve, so the
-    * batch gates through [[FsOps.requireAppendColumns]] (name + type) like
-    * every metadata-carrying append leg; the sidecar still rejects a
+    * batch gates on the stored column set ([[appendRows]]) like every
+    * metadata-carrying append leg; the sidecar still rejects a
     * mismatched `m` loudly. */
   def appendImiPqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String, m: Int = 4): Unit = {
-    requireLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
-    val rcorp = inlinePairResiduals(vecs2,
-      collectHalves(spark.read.parquet(s"$dir/centroids")))
-    appendRows(spark, dir, ImiPqLayout, vecs2,
-      imiPqCodeRows(spark.read.parquet(s"$dir/codebook"), rcorp, vecs2, m),
-      "appendImiPqIndex")
+    val open = openLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
+    appendRows(open, vecs2, pqCodeRows(open.codebook,
+      inlinePairResiduals(vecs2, open.halves), vecs2, m,
+      ImiPqLayout.partKeys), "appendImiPqIndex")
   }
 
   /** Sentinel `rerankDepth` for the persisted Multi-D-ADC serves:
@@ -1548,24 +1408,16 @@ object Similarity {
     * against the stored half codebooks, the pair-partitioned CODE
     * scan joins the broadcast per-(probe, pair) distance table, and
     * the ADC shortlist re-ranks with exact cosine over the supplied
-    * corpus floats ([[imiPqServeEncoded]] — the same serve frame as
+    * corpus floats ([[imiPqRefined]] — the same serve frame as
     * the in-memory [[imiPqTopK]], so the contracts cannot diverge;
     * parquet round-trips the doubles, so results are bit-identical at
     * the same parameters, spec-pinned). Tombstones mask the code
     * rows BEFORE the ADC shortlist, the fleet contract. */
   def searchImiPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, k: Int,
-      m: Int = 4, nprobe: Int = 2, rerankDepth: Int = 40): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    require(rerankDepth == AutoRerankDepth || rerankDepth >= k,
-      s"rerankDepth $rerankDepth must cover k=$k (or AutoRerankDepth)")
-    imiPqRefinedFromIndex(spark, dir, vecs, probes, m, nprobe,
-        rerankDepth, None, k)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
+      m: Int = 4, nprobe: Int = 2, rerankDepth: Int = 40): DataFrame =
+    depthRanked(rerankDepth, k)(imiPqRefinedFromIndex(spark, dir, vecs,
+      probes, m, nprobe, rerankDepth, None, k))
 
   /** [[searchImiPqIndex]] with a metadata predicate pushed to the
     * stored CODE scan — the code rows carry every non-vector input
@@ -1577,17 +1429,9 @@ object Similarity {
   def searchImiPqIndexWhere(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, k: Int,
       pred: Column, m: Int = 4, nprobe: Int = 2,
-      rerankDepth: Int = 40): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    require(rerankDepth == AutoRerankDepth || rerankDepth >= k,
-      s"rerankDepth $rerankDepth must cover k=$k (or AutoRerankDepth)")
-    imiPqRefinedFromIndex(spark, dir, vecs, probes, m, nprobe,
-        rerankDepth, Some(pred), k)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
+      rerankDepth: Int = 40): DataFrame =
+    depthRanked(rerankDepth, k)(imiPqRefinedFromIndex(spark, dir, vecs,
+      probes, m, nprobe, rerankDepth, Some(pred), k))
 
   /** Cosine radius search over a persisted [[writeImiPqIndex]] layout
     * — the range mode of the encoded serve: ADC distances GATE the
@@ -1606,41 +1450,20 @@ object Similarity {
       .filter(col("cos_r") >= tau)
 
   /** The refined scored frame of the persisted Multi-D-ADC serves
-    * (top-k, filtered, range): stored quantizers, tombstone mask, then
-    * the optional metadata predicate on the pair-partitioned code
-    * scan, then [[imiPqRefined]] — one read path so the three modes
+    * (top-k, filtered, range): the opened layout's quantizers and live
+    * code scan (optional metadata predicate on the pair-partitioned
+    * codes), then [[imiPqRefined]] — one read path so the three modes
     * cannot diverge on masking order or the scoring contract. */
   private def imiPqRefinedFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, m: Int, nprobe: Int,
       rerankDepth: Int, pred: Option[Column], k: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    requireLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val codebook = spark.read.parquet(s"$dir/codebook")
-    // Read once, mask once, THEN branch: the LIVE (tombstone-masked,
-    // pre-predicate) frame is both the occupancy source and the serve
-    // scan's input, and the predicate commutes with the mask (both row
-    // filters).
-    val live = liveRows(spark, dir, ImiPqLayout, readTombstones(spark, dir))
-    val codes = pred.foldLeft(live)(_ filter _)
-    // [[AutoRerankDepth]]: occupancy of the live code rows — each
-    // vector stores m sub-rows, so count div m per pair is the exact
-    // [[imiPairStats]] occupancy, read from the index itself (one
-    // ≤ k²-row aggregate; never the raw corpus). Derived BEFORE the
-    // metadata predicate: the depth sizes the grid, and filtered
-    // serves must not shrink their shortlist just because few rows
-    // match.
-    val depth =
-      if (rerankDepth != AutoRerankDepth) rerankDepth
-      else imiSuggestedRerankDepth(
-        live.groupBy(col("c0"), col("c1"))
-          .agg(expr(s"count(1) div $m").as("n_vectors")), k)
-    val assigned = inlineProbePairsRanked(probes, collectHalves(cents),
-        nprobe)
+    val open = openLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
+    val assigned = inlineProbePairsRanked(probes, open.halves, nprobe)
       .select(col("probe_id"), col("l0"), col("l1"))
-    imiPqRefined(codes, codebook, cents, vecs, probes, assigned, m,
-      depth)
+    imiPqRefined(open.liveRows(pred), open.codebook, open.halves, vecs,
+      probes, assigned, m, open.rerankDepth(rerankDepth, k, m))
   }
 
   /** Physically COMPACT a persisted [[writeImiPqIndex]] layout — the
@@ -1679,13 +1502,14 @@ object Similarity {
       m: Int = 4, codebookK: Int = 8, nprobe: Int = 2,
       rerankDepth: Int = 40): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    require(rerankDepth >= k, s"rerankDepth $rerankDepth must cover k=$k")
     val cents = imiSubCentroids(vecs)
-    val assigned = inlineProbePairsRanked(probes, collectHalves(cents),
-        nprobe)
+    val halves = collectHalves(cents)
+    val assigned = inlineProbePairsRanked(probes, halves, nprobe)
       .select(col("probe_id"), col("l0"), col("l1"))
     val (rcb, codes) = imiPqEncode(vecs, cents, m, codebookK)
-    imiPqServeEncoded(codes, rcb, cents, vecs, probes, assigned, k, m,
-      rerankDepth)
+    topKPerProbe(imiPqRefined(codes, collectCodebook(rcb), halves, vecs,
+      probes, assigned, m, rerankDepth), k)
   }
 
   /** IVF-blocked k-NN JOIN: every vector is a probe — for each of the
@@ -1706,7 +1530,6 @@ object Similarity {
     * Determinism: rounded-L2² assignment with label tie-break, rounded
     * cosine with neighbor-id tie-break — same contract as [[ivfTopK]]. */
   def knnJoin(vecs: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val assigned = assignCells(vecs, vecs, nprobe)
     // Probe rows re-keyed by their assigned cell(s): corpus-sized, so
     // this join (probe_id) and the cell scan below (cell key) are both
@@ -1722,9 +1545,7 @@ object Similarity {
         col("vec_id").as("neighbor_id"),
         round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
           .as("cos_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topKPerProbe(scored, k)
   }
 
   /** SELF-INDEXED k-NN join — [[knnJoin]] with the corpus side blocked
@@ -1741,7 +1562,6 @@ object Similarity {
     * labels themselves are the trusted clustering. One
     * [[assignCellsRanked]] aggregation serves both sides. */
   def knnJoinIndexed(vecs: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // The two consumers filter the assignment at different ranks
     // (index = rn 1, probes = rn ≤ nprobe); Catalyst pushes DIFFERENT
     // WindowGroupLimits into the two branches, so they stop being
@@ -1757,7 +1577,16 @@ object Similarity {
     // the query: [[writeKnnAssignIndex]] persists the ranked table
     // once and [[knnJoinFromIndex]] serves both branches from it,
     // bit-identically (PipelineSpec pins the parity).
-    val ranked = assignCellsRanked(vecs, vecs, nprobe)
+    knnScored(vecs, assignCellsRanked(vecs, vecs, nprobe), k)
+  }
+
+  /** The scoring tail of the self-join k-NN serves
+    * ([[knnJoinIndexed]], [[knnJoinFromIndex]]) over a ranked
+    * assignment (probe_id, assigned_label, rn): rn = 1 rows block the
+    * corpus side, every row expands the probe side, cell-equi join,
+    * rounded cosine, per-probe top-k. */
+  private def knnScored(vecs: DataFrame, ranked: DataFrame,
+      k: Int): DataFrame = {
     val probeCells = ranked.select(col("probe_id"), col("assigned_label"))
     val indexCells = ranked.filter(col("rn") === 1)
       .select(col("probe_id").as("corpus_id"),
@@ -1776,9 +1605,7 @@ object Similarity {
         col("vec_id").as("neighbor_id"),
         round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
           .as("cos_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topKPerProbe(scored, k)
   }
 
   /** Materialize [[knnJoinIndexed]]'s ranked cell assignment next to
@@ -1794,18 +1621,9 @@ object Similarity {
     * — all integers, so parquet round-trips it exactly and the served
     * join is bit-identical to the in-memory twin. */
   def writeKnnAssignIndex(vecs: DataFrame, dir: String,
-      nprobe: Int = 1): Unit = {
-    // Subdir layout (`assign/` under the index root, like `index/` and
-    // `codes/`): the root holds the meta sidecar and an optional
-    // tombstone table, which must not sit inside a parquet table's
-    // own directory listing.
-    clearTombstones(vecs.sparkSession, dir)
-    assignCellsRanked(vecs, vecs, nprobe)
-      .write.mode("overwrite").parquet(s"$dir/assign")
-    IndexMeta.write(vecs.sparkSession, dir,
-      "layout" -> "knn_assign", "nprobe" -> nprobe.toString,
-      "fmt" -> "1")
-  }
+      nprobe: Int = 1): Unit =
+    buildLayout(vecs.sparkSession, dir, KnnAssignLayout,
+      "nprobe" -> nprobe.toString)(assignCellsRanked(vecs, vecs, nprobe))
 
   /** [[knnJoinIndexed]] served from a [[writeKnnAssignIndex]] table:
     * identical scoring/tie-break contract, but the assignment pass is
@@ -1823,7 +1641,6 @@ object Similarity {
     * the doubled distance aggregation. */
   def knnJoinFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     // Presence is part of the contract: a sidecar WITHOUT the key
     // (hand-copied from another layout, say) must fail loudly, not
@@ -1856,28 +1673,7 @@ object Similarity {
         broadcast(t.withColumnRenamed("vec_id", "probe_id")),
         Seq("probe_id"), "left_anti"))
       .getOrElse(ranked0)
-    val probeCells = ranked.filter(col("rn") <= nprobe)
-      .select(col("probe_id"), col("assigned_label"))
-    val indexCells = ranked.filter(col("rn") === 1)
-      .select(col("probe_id").as("corpus_id"),
-        col("assigned_label").as("cell"))
-    val pb = withNorm(vecs).select(col("vec_id").as("probe_id"),
-      col("v").as("pv"), col("nrm").as("pnrm"))
-      .join(probeCells, Seq("probe_id"))
-    val corpus = withNorm(vecs)
-      .join(indexCells, col("vec_id") === col("corpus_id"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val scored = pb
-      .join(corpus,
-        col("assigned_label") === col("cell") &&
-          col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"),
-        col("vec_id").as("neighbor_id"),
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    knnScored(vecs, ranked.filter(col("rn") <= nprobe), k)
   }
 
   /** Bucketed ANN: candidates share the probe's sign bucket. */
@@ -2055,6 +1851,29 @@ object Similarity {
         (dot(col("pv"), col("pv")) - lit(2.0) * dot(col("pv"), col("cv")) +
           dot(col("cv"), col("cv"))).as("pd2"))
 
+  /** The per-probe distance table of a BY-RESIDUAL ADC serve: probe
+    * residual rows (probe_id, `keys`…, rv), one per probed cell or
+    * pair, split into their m sub-vectors, each exploding its sub's
+    * slice of the collected codebook ([[codebookBySub]]) — a
+    * projection of the probe rows, so no codebook table is scanned or
+    * broadcast per serve. The distance is [[adcDistTableFrom]]'s
+    * expression: (probe_id, `keys`…, sub, cid, pd2). Shared by both PQ
+    * layouts ([[pqrRefined]], [[imiPqAdcScores]]). */
+  private def adcDistTableWith(res: DataFrame, keys: Seq[String],
+      codebook: CodebookEntries, m: Int): DataFrame = {
+    val kc = (Seq("probe_id") ++ keys).map(col)
+    res.select(kc ++ Seq(explode(expr(s"sequence(0, ${m - 1})")).as("sub"),
+        col("rv")): _*)
+      .select(kc ++ Seq(col("sub"),
+        expr(s"slice(rv, sub * (size(rv) div $m) + 1, size(rv) div $m)")
+          .as("sv")): _*)
+      .select(kc ++ Seq(col("sub"), col("sv"),
+        explode(element_at(codebookBySub(codebook), col("sub"))).as("e")): _*)
+      .select(kc ++ Seq(col("sub"), col("e.cid").as("cid"),
+        (dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("e.cv")) +
+          dot(col("e.cv"), col("e.cv"))).as("pd2")): _*)
+  }
+
   /** [[adcDistTableFrom]] with the codebook derived from `vecs` (the
     * corpus), the same sample [[pqCodesOf]] assigns against. */
   private def adcDistTable(vecs: DataFrame, probes: DataFrame, m: Int,
@@ -2127,7 +1946,7 @@ object Similarity {
       m: Int = 4, codebookK: Int = 8, kCells: Int = 8, iters: Int = 2,
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cents = kmeansTrain(vecs, kCells, iters)
+    val cents = collectCents(kmeansTrain(vecs, kCells, iters), "dim")
     val pcells = trainedAssign(probes, cents, nprobe)
       .select(col("probe_id"), col("cid").as("pcell"))
     // Cell assignment rides the encode projection ([[withInlineCell]]
@@ -2196,10 +2015,7 @@ object Similarity {
     // frame and again to broadcast centroid arrays (two joins and a
     // shuffle of the corpus side per encode). Values unchanged: same
     // rounded-distance ranking, same double subtraction.
-    val cvm =
-      if (entries.isEmpty) expr("CAST(map() AS map<int,array<double>>)")
-      else map(entries.flatMap { case (cid, cvec) =>
-        Seq(lit(cid), array(cvec.map(lit(_)): _*)) }: _*)
+    val cvm = centMap(entries)
     // Non-vector input columns ride through (round 20) — the encode
     // side's metadata and any downstream key live beside the residual
     // with no re-attach join.
@@ -2220,20 +2036,15 @@ object Similarity {
     * builds against the residual codebook, ADC nominates
     * `rerankDepth` candidates per probe, and ONLY those candidates'
     * raw vectors are fetched back for an exact-cosine re-rank — the
-    * [[bqRerankStage]] refinement contract applied to the PQ rung.
+    * [[bqRefinedStage]] refinement contract applied to the PQ rung.
     * `codes` carries (vec_id, sub, cid, cell); output
     * (probe_id, neighbor_id, cos_r, rnk). */
   private def pqrServe(codes: DataFrame, cents: DataFrame,
       codebook: DataFrame, vecs: DataFrame, probes: DataFrame, k: Int,
       m: Int, nprobe: Int, rerankDepth: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rerankDepth >= k, s"rerankDepth $rerankDepth must cover k=$k")
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    pqrRefined(codes, collectCents(cents, "dim"),
-        collectCodebook(codebook), vecs, probes, m, nprobe, rerankDepth)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
+    topKPerProbe(pqrRefined(codes, collectCents(cents, "dim"),
+      collectCodebook(codebook), vecs, probes, m, nprobe, rerankDepth), k)
   }
 
   /** The exact-refined scored frame under the by-residual IVF-PQ
@@ -2245,42 +2056,15 @@ object Similarity {
   private def pqrRefined(codes: DataFrame, cents: CentEntries,
       codebook: CodebookEntries, vecs: DataFrame, probes: DataFrame,
       m: Int, nprobe: Int, rerankDepth: Int): DataFrame = {
-    val psubs = residualsWith(probes, cents, nprobe)
+    val dtab = adcDistTableWith(residualsWith(probes, cents, nprobe)
       .select(col("vec_id").as("probe_id"), col("cell").as("pcell"),
-        explode(expr(s"sequence(0, ${m - 1})")).as("sub"), col("rv"))
-      .select(col("probe_id"), col("pcell"), col("sub"),
-        expr(s"slice(rv, sub * (size(rv) div $m) + 1, size(rv) div $m)")
-          .as("sv"))
-    // The distance table is a projection of the probe rows against the
-    // collected codebook (the way [[residualsWith]] inlines the
-    // centroids): each probe sub-vector explodes its sub's codebook
-    // slice — the same (probe, cell, sub, cid) rows and the same
-    // codegen'd distance expression the broadcast codebook join
-    // produced, with no codebook scan or broadcast job per serve.
-    val dtab = psubs
-      .select(col("probe_id"), col("pcell"), col("sub"), col("sv"),
-        explode(element_at(codebookBySub(codebook), col("sub"))).as("e"))
-      .select(col("probe_id"), col("pcell"), col("sub"),
-        col("e.cid").as("cid"), col("sv"), col("e.cv").as("cv"))
-      .select(col("probe_id"), col("pcell"), col("sub"), col("cid"),
-        (dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("cv")) +
-          dot(col("cv"), col("cv"))).as("pd2"))
+        col("rv")), Seq("pcell"), codebook, m)
     // The shortlist is |probes|·rerankDepth rows — broadcast it so
     // the corpus-float fetch PROBES the corpus scan instead of
     // shuffling it (at 100 TB the floats never move; only shortlist
     // survivors flow out of the join).
-    val short = broadcast(adcCellTopK(codes, dtab, rerankDepth)
-      .select(col("probe_id"), col("neighbor_id")))
-    val pv = broadcast(withNorm(probes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm")))
-    short
-      .join(withNorm(vecs).select(col("vec_id").as("neighbor_id"),
-        col("v"), col("nrm")), Seq("neighbor_id"))
-      .join(pv, Seq("probe_id"))
-      .select(col("probe_id"), col("neighbor_id"),
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r"))
+    refineExact(broadcast(adcCellTopK(codes, dtab, rerankDepth)
+      .select(col("probe_id"), col("neighbor_id"))), vecs, probes)
   }
 
   /** BY-RESIDUAL IVF-PQ with an exact refine stage — the deployment
@@ -2365,7 +2149,7 @@ object Similarity {
     * more cells. Cost: the assignment pass + a kCells-row aggregate;
     * the one-row total broadcasts. */
   def ivfCellStats(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val cells = trainedAssign(vecs, cents, 1)
+    val cells = trainedAssign(vecs, collectCents(cents, "dim"), 1)
       .groupBy(col("cid")).agg(count(lit(1)).as("n_vectors"))
     val tot = cells.agg(sum(col("n_vectors")).as("total"),
       count(lit(1)).as("n_cells"))
@@ -2392,23 +2176,9 @@ object Similarity {
     * recall and the re-rank makes the reported scores exact. */
   def adcRerankTopK(vecs: DataFrame, probes: DataFrame, k: Int,
       rerankDepth: Int = 20, m: Int = 4, codebookK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rerankDepth >= k, s"rerankDepth $rerankDepth must cover k=$k")
-    val cand = adcTopK(vecs, probes, rerankDepth, m, codebookK)
-      .select(col("probe_id"), col("neighbor_id"))
-    val pn = broadcast(withNorm(probes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm")))
-    val vn = withNorm(vecs)
-      .select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-    val scored = cand.join(pn, Seq("probe_id"))
-      .join(vn, Seq("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"),
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topKPerProbe(refineExact(adcTopK(vecs, probes, rerankDepth, m, codebookK)
+      .select(col("probe_id"), col("neighbor_id")), vecs, probes), k)
   }
 
   /** Materialize the IVF-PQ index: trained centroids, the PQ codebook,
@@ -2436,65 +2206,35 @@ object Similarity {
       // centroids FIRST and assign against the re-read table, so the
       // Lloyd trajectory runs once instead of once per downstream
       // action (exact: parquet round-trips the means).
-      kmeansTrain(qsrc, kCells, iters)
-        .write.mode("overwrite").parquet(s"$dir/centroids")
-      val cents = vecs.sparkSession.read.parquet(s"$dir/centroids")
+      val cents = storedCents(kmeansTrain(qsrc, kCells, iters), dir)
       // BY-RESIDUAL ([[ivfPqrTopK]]'s encoding): the codebook trains on
       // the quantizer corpus's residuals against the STORED centroids,
       // and every vector's code encodes v − centroid(cell).
-      val qres = residualsOf(qsrc, cents, 1)
+      val qres = residualsWith(qsrc, cents, 1)
         .select(col("vec_id"), col("rv").as("v"))
-      codebookOf(qres, m, codebookK)
-        .write.mode("overwrite").parquet(s"$dir/codebook")
-      val codebook = vecs.sparkSession.read.parquet(s"$dir/codebook")
-      ivfPqCodeRows(collectCodebook(codebook), residualsOf(vecs, cents, 1),
-        vecs, m)
+      val codebook = collectCodebook(storedQuantizer(
+        codebookOf(qres, m, codebookK), dir, "codebook"))
+      pqCodeRows(codebook, residualsWith(vecs, cents, 1), vecs, m,
+        IvfPqLayout.partKeys)
     }
 
-  /** The [[IndexSnapshot]] of a persisted [[writeIvfPqIndex]] layout,
-    * checked against the serve's sub-vector split. */
-  private def ivfPqSnapshot(spark: org.apache.spark.sql.SparkSession,
-      dir: String, m: Int): IndexSnapshot.Snapshot =
-    IndexSnapshot.open(spark, dir,
-      IvfPqLayout.sidecar :+ ("m" -> m.toString): _*)
-
-  /** The stored quantizer of an opened ivf_pq generation: centroid
-    * and residual-codebook entries, collected once per build. */
-  private def ivfPqQuantizer(spark: org.apache.spark.sql.SparkSession,
-      dir: String, snap: IndexSnapshot.Snapshot)
-      : (CentEntries, CodebookEntries) = (
-    snap.quantizer("centroids")(
-      collectCents(spark.read.parquet(s"$dir/centroids"), "dim")),
-    snap.quantizer("codebook")(
-      collectCodebook(spark.read.parquet(s"$dir/codebook"))))
-
-  /** The stored code-table schema of an opened ivf_pq layout, so code
-    * scans read with it instead of inferring it per request. Fixed by
-    * the build: appends must match it, compaction keeps it (a fully
-    * drained table's placeholder file carries the same columns). */
-  private def ivfPqCodesSchema(spark: org.apache.spark.sql.SparkSession,
-      dir: String, snap: IndexSnapshot.Snapshot)
-      : org.apache.spark.sql.types.StructType =
-    snap.quantizer("codes.schema")(spark.read.parquet(s"$dir/codes").schema)
-
-  /** The stored code-row frame shared by the ivf_pq build and append
-    * legs — [[imiPqCodeRows]] at the single-level cell key: (vec_id,
-    * sub, cid, metadata…, cell), every non-vector input column riding
-    * beside the m-byte residual codes for [[searchIvfPqIndexWhere]]'s
-    * pushed predicate. Metadata-less inputs (vec_id, v) produce the
-    * previous schema exactly, so existing layouts are unchanged. */
-  private def ivfPqCodeRows(codebook: CodebookEntries, rcorp: DataFrame,
-      vecs: DataFrame, m: Int): DataFrame = {
-    val metaCols = vecs.columns.filterNot(c => c == "v" || c == "vec_id")
-    // The cell key and the metadata ride through the code assignment
-    // (round 20): [[residualsOf]] is a pure projection that carries
-    // every non-vector input column, so the old cell re-attach join
-    // AND the metadata re-attach join are gone from the encode path.
-    val base = pqCodesWith(codebook, rcorp.select(
-      (Seq(col("vec_id")) ++ metaCols.map(col) ++
-        Seq(col("cell"), col("rv").as("v"))): _*), m)
-    base.select((Seq("vec_id", "sub", "cid") ++ metaCols ++
-      Seq("cell")).map(col): _*)
+  /** The stored code-row frame shared by the build and append legs of
+    * both PQ layouts: (vec_id, sub, cid, metadata…, `keys`…) — the
+    * m-byte residual codes, with every non-vector input column and the
+    * layout's partition keys (`cell`, or the pair `c0`, `c1`) riding
+    * through the code assignment from the residual frame `rcorp` (a
+    * pure projection of the input row, so no re-attach join). Each
+    * vector's m sub-rows carry identical metadata, so a filtered
+    * serve's predicate keeps or drops whole vectors and the ADC group
+    * still sums exactly m terms. Metadata-less inputs (vec_id, v)
+    * produce the metadata-free schema. */
+  private def pqCodeRows(codebook: CodebookEntries, rcorp: DataFrame,
+      vecs: DataFrame, m: Int, keys: Seq[String]): DataFrame = {
+    val carried = vecs.columns.filterNot(c => c == "v" || c == "vec_id") ++
+      keys
+    pqCodesWith(codebook, rcorp.select((Seq(col("vec_id")) ++
+        carried.map(col) :+ col("rv").as("v")): _*), m)
+      .select((Seq("vec_id", "sub", "cid") ++ carried).map(col): _*)
   }
 
   /** APPEND a corpus batch to a persisted [[writeIvfPqIndex]] layout —
@@ -2508,17 +2248,14 @@ object Similarity {
     * tombstone clears AFTER the data append commits. */
   def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String, m: Int = 4): Unit = {
-    val snap = ivfPqSnapshot(spark, dir, m)
     // Residual encode against the STORED quantizer state (both
     // levels: coarse centroids AND residual codebook are fixed once
     // trained), so the appended union is bit-identical to the
     // monolithic build — FAISS's `add` contract at by_residual=true.
-    // The entries come from the opened generation: an append after a
-    // serve collects nothing.
-    val (cents, codebook) = ivfPqQuantizer(spark, dir, snap)
-    appendRows(spark, dir, IvfPqLayout, vecs2,
-      ivfPqCodeRows(codebook, residualsWith(vecs2, cents, 1), vecs2, m),
-      "appendIvfPqIndex", Some(ivfPqCodesSchema(spark, dir, snap)))
+    val open = openLayout(spark, dir, IvfPqLayout, "m" -> m.toString)
+    appendRows(open, vecs2, pqCodeRows(open.codebook,
+      residualsWith(vecs2, open.cents, 1), vecs2, m, IvfPqLayout.partKeys),
+      "appendIvfPqIndex")
   }
 
   /** Serve the BY-RESIDUAL refine composition from a persisted
@@ -2537,17 +2274,9 @@ object Similarity {
     * sim_ivfpqr_topk's oracle). */
   def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, k: Int,
-      m: Int = 4, nprobe: Int = 2, rerankDepth: Int = 40): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rerankDepth == AutoRerankDepth || rerankDepth >= k,
-      s"rerankDepth $rerankDepth must cover k=$k (or AutoRerankDepth)")
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    pqrRefinedFromIndex(spark, dir, vecs, probes, m, nprobe,
-        rerankDepth, None, k)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
+      m: Int = 4, nprobe: Int = 2, rerankDepth: Int = 40): DataFrame =
+    depthRanked(rerankDepth, k)(pqrRefinedFromIndex(spark, dir, vecs,
+      probes, m, nprobe, rerankDepth, None, k))
 
   /** [[searchIvfPqIndex]] with a metadata predicate pushed to the
     * stored CODE scan — code rows carry every non-vector input column
@@ -2559,17 +2288,9 @@ object Similarity {
   def searchIvfPqIndexWhere(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, k: Int,
       pred: Column, m: Int = 4, nprobe: Int = 2,
-      rerankDepth: Int = 40): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rerankDepth == AutoRerankDepth || rerankDepth >= k,
-      s"rerankDepth $rerankDepth must cover k=$k (or AutoRerankDepth)")
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    pqrRefinedFromIndex(spark, dir, vecs, probes, m, nprobe,
-        rerankDepth, Some(pred), k)
-      .withColumn("rnk", row_number().over(wC))
-      .filter(col("rnk") <= k)
-  }
+      rerankDepth: Int = 40): DataFrame =
+    depthRanked(rerankDepth, k)(pqrRefinedFromIndex(spark, dir, vecs,
+      probes, m, nprobe, rerankDepth, Some(pred), k))
 
   /** Cosine radius search over a persisted [[writeIvfPqIndex]] layout
     * — ADC distances gate the depth-`rerankDepth` shortlist, the
@@ -2585,52 +2306,22 @@ object Similarity {
       .filter(col("cos_r") >= tau)
 
   /** The refined scored frame of the persisted IVF-PQ serves (top-k,
-    * filtered, range): stored quantizers, tombstone mask, then the
-    * optional metadata predicate on the cell-partitioned code scan,
+    * filtered, range): the opened layout's quantizers and live code
+    * scan (optional metadata predicate on the cell-partitioned codes),
     * then [[pqrRefined]] — one read path so the modes cannot diverge
-    * on masking order or the scoring contract. */
+    * on masking order or the scoring contract. Serving at a different
+    * sub-vector split than the build would slice probe vectors against
+    * codes that mean something else — the sidecar makes it a loud
+    * failure instead of silent garbage, and fmt=2 rejects a
+    * pre-residual (raw-code) dir the same way. */
   private def pqrRefinedFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, m: Int, nprobe: Int,
       rerankDepth: Int, pred: Option[Column], k: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // Serving at a different sub-vector split than the build would
-    // slice probe vectors against codes that mean something else —
-    // the sidecar makes it a loud failure instead of silent garbage,
-    // and fmt=2 rejects a pre-residual (raw-code) dir the same way.
-    // Everything derived from the stored tables below comes from the
-    // opened generation ([[IndexSnapshot]]): on an index already
-    // served since its last write, building this frame runs no job.
-    val snap = ivfPqSnapshot(spark, dir, m)
-    val (cents, codebook) = ivfPqQuantizer(spark, dir, snap)
-    // Mask once, THEN branch ([[imiPqRefinedFromIndex]]'s structure):
-    // the LIVE (tombstone-masked, pre-predicate) frame feeds both the
-    // occupancy aggregate and the serve scan, and the predicate
-    // commutes with the mask (both row filters). Same tombstone mask
-    // as [[searchIvfIndex]] — [[deleteFromIvfIndex]] is
-    // layout-agnostic (it only writes ids), so PQ serving honors
-    // deletions identically. The mask is skipped when no tombstone
-    // row exists — never deleted, or drained by a compaction (whose
-    // empty table would otherwise cost a broadcast job per serve).
-    val tombstoned = snap.data[java.lang.Boolean]("tombstones")(
-      Boolean.box(readTombstones(spark, dir).exists(!_.isEmpty)))
-    val live = liveRows(spark, dir, IvfPqLayout,
-      if (tombstoned) readTombstones(spark, dir) else None,
-      schema = Some(ivfPqCodesSchema(spark, dir, snap)))
-    val codes = pred.foldLeft(live)(_ filter _)
-    // [[AutoRerankDepth]] at the single-level cell key: occupancy of
-    // the live code rows, count div m per cell —
-    // [[imiPqRefinedFromIndex]]'s rule over `cell` instead of
-    // (c0, c1); one ≤ K-row aggregate of the index, run once per
-    // data generation.
-    val depth =
-      if (rerankDepth != AutoRerankDepth) rerankDepth
-      else suggestedRerankDepth(
-        snap.data[java.lang.Long]("occupancy")(Long.box(maxOccupancy(
-          live.groupBy(col("cell"))
-            .agg(expr(s"count(1) div $m").as("n_vectors"))))), k)
-    pqrRefined(codes, cents, codebook, vecs, probes, m, nprobe,
-      depth)
+    val open = openLayout(spark, dir, IvfPqLayout, "m" -> m.toString)
+    pqrRefined(open.liveRows(pred), open.cents, open.codebook, vecs, probes,
+      m, nprobe, open.rerankDepth(rerankDepth, k, m))
   }
 
   /** Per-dimension winsorization — clip each embedding dimension to its
@@ -2774,16 +2465,20 @@ object Similarity {
     * recall curve serves 16 rungs off one trained-cents frame) would
     * otherwise re-run the bounded collect as a separate Spark action
     * per serve leg. It dedups actions within one composition, the
-    * job localCheckpoint does for frames.
+    * job localCheckpoint does for frames; it serves the in-memory
+    * compositions only.
     *
-    * The persisted serves keep their collected quantizer in the
-    * index's [[IndexSnapshot]] instead, beside the stored code-table
-    * schema, tombstone presence and cell occupancy: values derived
-    * from the stored tables, never DataFrames or results, and held
-    * only while the sidecar's generation tokens are unchanged. That
-    * is no cross-run result cache either: the query suite rebuilds
-    * each index on every run, the rebuild writes fresh tokens, and
-    * nothing derived from an earlier run is ever served. */
+    * The persisted layouts never reach it with a frame worth keeping:
+    * every serve, append and compaction of the seven vector layouts
+    * goes through [[openLayout]], whose [[IndexSnapshot]] holds the
+    * collected centroids, IMI halves and PQ codebook beside the
+    * stored table schemas, tombstone presence and occupancy — values
+    * derived from the stored tables, never DataFrames or results, and
+    * held only while the sidecar's generation tokens are unchanged.
+    * That is no cross-run result cache either: the query suite
+    * rebuilds each index on every run, the rebuild writes fresh
+    * tokens, and nothing derived from an earlier run is ever
+    * served. */
   private val quantizerMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, Map[String, AnyRef]]())
 
@@ -2844,24 +2539,14 @@ object Similarity {
   private def nearestIn(cs: Column, v: Column): Column =
     array_min(distStructs(cs, v)).getField("cid")
 
-  /** IVF search over TRAINED cells — the production composition
-    * train → index → search with no labels anywhere: `cents` is a
-    * trained quantizer in [[kmeansTrain]]'s exploded (cid, dim, cmean)
-    * form; the corpus indexes under each vector's nearest trained cell
-    * (rank 1, the self-indexed contract of [[knnJoinIndexed]] — with
-    * no labels, assignment is the only possible blocking) and probes
-    * search their `nprobe` nearest cells. Same determinism contract as
-    * the whole IVF family: rounded L2² with cid tie-break, rounded
-    * cosine with neighbor-id tie-break. Probing every cell is
-    * exhaustive by construction (cells partition the corpus), pinned
-    * against brute force in PipelineSpec. */
   /** Trained-centroid cell assignment shared by [[ivfSearchTrained]]
     * and the persisted-index pair ([[writeIvfIndex]] /
     * [[searchIvfIndex]]) — one implementation so the determinism
     * contract (rounded L2² asc, cid asc) cannot diverge between the
-    * in-memory and persisted paths. `cents` carries (cid, dim, cmean),
-    * dims 1-based. */
-  private def trainedAssign(src: DataFrame, cents: DataFrame,
+    * in-memory and persisted paths. `cents` are collected (cid, cvec)
+    * entries ([[collectCents]] of a (cid, dim, cmean) table, dims
+    * 1-based). */
+  private def trainedAssign(src: DataFrame, cents: CentEntries,
       n: Int): DataFrame =
     trainedAssignRanked(src, cents, n).select(col("probe_id"), col("cid"))
 
@@ -2874,9 +2559,10 @@ object Similarity {
     * the bounded quantizer, so the join bought nothing. Same argmin
     * expression ([[nearestIn]] over [[distStructs]]), same null
     * filter for an empty quantizer — assignments bit-identical. */
-  private def withInlineCell(src: DataFrame, cents: DataFrame): DataFrame = {
+  private def withInlineCell(src: DataFrame,
+      cents: CentEntries): DataFrame = {
     requireUnreserved(src, "cell assignment", "cell")
-    src.withColumn("cell", nearestIn(csLiteral(cents, "dim"), col("v")))
+    src.withColumn("cell", nearestIn(csLiteralFrom(cents), col("v")))
       .filter(col("cell").isNotNull)
   }
 
@@ -2897,7 +2583,7 @@ object Similarity {
     * cid, rn), rn 1-based by (rounded L2² asc, cid asc) — so a
     * multi-nprobe enumeration (the recall curve) can scope one
     * assignment pass per np with a filter instead of re-assigning. */
-  private def trainedAssignRanked(src: DataFrame, cents: DataFrame,
+  private def trainedAssignRanked(src: DataFrame, cents: CentEntries,
       n: Int): DataFrame =
     // Ranks over [[distStructs]] — ONE implementation of the
     // centroid-distance computation, so the ranked and unranked
@@ -2908,8 +2594,7 @@ object Similarity {
     // src side at all (round-19 rewrite of the exploded join +
     // window form).
     src.select(col("vec_id").as("probe_id"), posexplode(
-        slice(array_sort(distStructs(csLiteral(cents, "dim"), col("v"))),
-          1, n))
+        slice(array_sort(distStructs(csLiteralFrom(cents), col("v"))), 1, n))
         .as(Seq("i", "e")))
       .select(col("probe_id"), col("e.cid").as("cid"),
         (col("i") + 1).as("rn"))
@@ -2953,7 +2638,7 @@ object Similarity {
 
   /** TRAINED half-quantizers re-keyed to the (sub, clabel, pos,
     * cmean) half-codebook shape ([[imiSubCentroids]]'s), so the
-    * residual machinery ([[imiCentArrays]], [[imiPairResiduals]])
+    * residual machinery ([[collectHalves]], [[pairResidual]])
     * serves both codebook trainings through one implementation.
     * Positions re-base to the half slice (kmeansTrain's 1-based dim
     * − 1) — an ordering key within a half only, so the concatenated
@@ -3105,7 +2790,8 @@ object Similarity {
     // rung.
     val subCents = imiTrainedAsSubCents(cents)
     val (rcb, codes) = imiPqEncode(vecs, subCents, m, codebookK)
-    val scoredRn = imiPqAdcScores(codes, rcb, subCents, probes,
+    val scoredRn = imiPqAdcScores(codes, collectCodebook(rcb),
+        collectHalves(subCents), probes,
         ranked.select(col("probe_id"), col("l0"), col("l1")), m)
       .join(idx.select(col("corpus_id").as("vec_id"), col("c0"),
         col("c1")), Seq("vec_id"))
@@ -3119,26 +2805,13 @@ object Similarity {
     // the round-16 rule, re-measured here rather than assumed).
     val wS = Window.partitionBy(col("probe_id"))
       .orderBy(col("adist").asc, col("vec_id").asc)
-    val wC = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    val pvb = broadcast(withNorm(probes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm")))
-    val vn = withNorm(vecs).select(col("vec_id").as("neighbor_id"),
-      col("v"), col("nrm"))
     val pqRungs = nps.map { np =>
       val short = scoredRn.filter(col("rn") <= np)
         .withColumn("srnk", row_number().over(wS))
         .filter(col("srnk") <= rerankDepth)
         .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-      val served = broadcast(short).join(vn, Seq("neighbor_id"))
-        .join(pvb, Seq("probe_id"))
-        .select(col("probe_id"), col("neighbor_id"),
-          round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-            .as("cos_r"))
-        .withColumn("rnk", row_number().over(wC))
-        .filter(col("rnk") <= k)
-      recallAtK(bf, served)
+      recallAtK(bf, topKPerProbe(refineExact(broadcast(short), vecs, probes),
+        k))
         .select(lit(np).as("np"), col("probe_id"), col("hits"),
           col("n_exact"))
     }.reduce(_ unionByName _)
@@ -3162,35 +2835,32 @@ object Similarity {
     * kCells-row size table broadcast into the probe assignment. */
   def probedCellSizes(vecs: DataFrame, probes: DataFrame,
       cents: DataFrame, nprobe: Int): DataFrame = {
-    val sizes = trainedAssign(vecs, cents, 1)
+    val cs = collectCents(cents, "dim")
+    val sizes = trainedAssign(vecs, cs, 1)
       .groupBy(col("cid")).agg(count(lit(1)).as("cell_n"))
-    trainedAssignRanked(probes, cents, nprobe)
+    trainedAssignRanked(probes, cs, nprobe)
       .join(broadcast(sizes), Seq("cid"))
       .select(col("probe_id"), col("rn"), col("cell_n"))
   }
 
+  /** IVF search over TRAINED cells — the production composition
+    * train → index → search with no labels anywhere: `cents` is a
+    * trained quantizer in [[kmeansTrain]]'s exploded (cid, dim, cmean)
+    * form; the corpus indexes under each vector's nearest trained cell
+    * (rank 1, the self-indexed contract of [[knnJoinIndexed]] — with
+    * no labels, assignment is the only possible blocking) and probes
+    * search their `nprobe` nearest cells. Same determinism contract as
+    * the whole IVF family: rounded L2² with cid tie-break, rounded
+    * cosine with neighbor-id tie-break. Probing every cell is
+    * exhaustive by construction (cells partition the corpus), pinned
+    * against brute force in PipelineSpec. */
   def ivfSearchTrained(vecs: DataFrame, probes: DataFrame,
       cents: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val pcells = trainedAssign(probes, cents, nprobe)
-      .select(col("probe_id"), col("cid").as("pcell"))
-    val pb = withNorm(probes).select(col("vec_id").as("probe_id"),
-      col("v").as("pv"), col("nrm").as("pnrm"))
-      .join(pcells, Seq("probe_id"))
+    val cs = collectCents(cents, "dim")
     // Inline rank-1 assignment on the corpus row ([[withInlineCell]],
     // round 20) — no assignment frame, no re-attach join.
-    val corpus = withInlineCell(withNorm(vecs), cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val scored = pb
-      .join(corpus,
-        col("pcell") === col("cell") && col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topKPerProbe(ivfScored(probes, cs, withInlineCell(withNorm(vecs), cs)
+      .select(col("vec_id"), col("v"), col("nrm"), col("cell")), nprobe), k)
   }
 
   /** Materialize the IVF index next to the corpus: every vector with
@@ -3201,19 +2871,10 @@ object Similarity {
     * re-reduces the vectors. */
   def writeIvfIndex(vecs: DataFrame, cents: DataFrame, dir: String): Unit =
     buildLayout(vecs.sparkSession, dir, IvfFlatLayout) {
-      // Centroids first, then assign against the RE-READ table: `cents`
-      // is typically a live kmeansTrain lineage, and each write action
-      // would replay the whole training trajectory (caching it was
-      // measured slower in-query — knnJoinIndexed's note — but a BUILD
-      // is exactly the "materialize the index outside the query" case
-      // that note prescribes). Parquet round-trips the means exactly,
-      // so the assignment is bit-identical either way.
-      cents.write.mode("overwrite").parquet(s"$dir/centroids")
       // Inline rank-1 assignment on the row ([[withInlineCell]],
       // round 20) — the separate assignment frame + corpus-sized
       // re-attach join on vec_id are gone; same argmin, same rows.
-      withInlineCell(withNorm(vecs),
-        vecs.sparkSession.read.parquet(s"$dir/centroids"))
+      withInlineCell(withNorm(vecs), storedCents(cents, dir))
     }
 
   /** APPEND a new corpus batch to a persisted [[writeIvfIndex]] layout
@@ -3231,14 +2892,13 @@ object Similarity {
     * [[appendRows]] clears its tombstone after the data commits. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    requireLayout(spark, dir, IvfFlatLayout)
-    appendRows(spark, dir, IvfFlatLayout, vecs2,
-      withInlineCell(withNorm(vecs2), spark.read.parquet(s"$dir/centroids")),
+    val open = openLayout(spark, dir, IvfFlatLayout)
+    appendRows(open, vecs2, withInlineCell(withNorm(vecs2), open.cents),
       "appendIvfIndex")
   }
 
-  /** One tombstoned vector layout: the fixed fields its sidecar records
-    * and every lifecycle leg checks, its row table under the index dir,
+  /** One tombstoned layout: the fixed fields its sidecar records and
+    * every lifecycle leg checks, its row table under the index dir,
     * and the keys that table is partitioned by (none, the coarse
     * `cell`, or the IMI pair `c0`, `c1`). Build parameters such as
     * PQ's `m` ride beside the fixed fields. */
@@ -3256,7 +2916,9 @@ object Similarity {
   // garbage); IMI-PQ fmt=2 marks code rows that carry metadata. The
   // flat and SQ8 layouts both store an `index/` table, so the layout
   // key keeps an append or serve against the wrong one from merging
-  // mismatched schemas.
+  // mismatched schemas. Every table sits in a subdir: the root holds
+  // the sidecar and the tombstone table, which must not sit inside a
+  // parquet table's own listing.
   private val BqLayout = VectorLayout(
     Seq("layout" -> "bq", "bits" -> "64", "fmt" -> "2"), "codes", Nil)
   private val IvfBqLayout = VectorLayout(
@@ -3273,20 +2935,118 @@ object Similarity {
     Seq("layout" -> "imi", "fmt" -> "1"), "index", Seq("c0", "c1"))
   private val ImiPqLayout = VectorLayout(
     Seq("layout" -> "imi_pq", "fmt" -> "2"), "codes", Seq("c0", "c1"))
+  private val KnnAssignLayout = VectorLayout(
+    Seq("layout" -> "knn_assign", "fmt" -> "1"), "assign", Nil)
 
-  /** Sidecar layouts whose ids [[deleteFromIvfIndex]] may tombstone:
-    * the seven vector layouts and the knn-assignment table. */
+  /** Sidecar layouts whose ids [[deleteFromIvfIndex]] may tombstone. */
   private val TombstonedLayouts =
     Seq(BqLayout, IvfBqLayout, IvfFlatLayout, IvfSq8Layout, IvfPqLayout,
-      ImiLayout, ImiPqLayout).map(_.name).toSet + "knn_assign"
+      ImiLayout, ImiPqLayout, KnnAssignLayout).map(_.name).toSet
 
-  /** Fail unless `dir`'s sidecar records `layout`'s fixed fields and
-    * the given build parameters. */
-  private def requireLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, layout: VectorLayout, params: (String, String)*): Unit =
-    IndexMeta.requireMatch(spark, dir, layout.sidecar ++ params: _*)
+  /** One opened generation of a persisted vector layout: `dir`'s
+    * sidecar checked against the layout's fixed fields and the
+    * caller's build parameters, and every value the serve, append and
+    * compaction legs derive from the stored tables, held by the
+    * index's [[IndexSnapshot]] so it is derived once per generation:
+    *  - the schema of the row table, the one table still read as a
+    *    frame (quantizer-keyed: an append must match it, a compaction
+    *    keeps it);
+    *  - the collected quantizer — cell centroids, IMI halves, PQ
+    *    codebook — so no leg past the build reads a quantizer table
+    *    as a frame;
+    *  - tombstone presence and live occupancy (data-keyed).
+    * On an index already opened since its last write, building a
+    * serve frame therefore runs no Spark job. */
+  private final class OpenedLayout(
+      val spark: org.apache.spark.sql.SparkSession, val dir: String,
+      val layout: VectorLayout,
+      snap: IndexSnapshot.Snapshot) {
+    private def stored(table: String): DataFrame =
+      spark.read.parquet(s"$dir/$table")
 
-  /** The build leg of every vector layout: clear the previous
+    def rowSchema: org.apache.spark.sql.types.StructType =
+      snap.quantizer(s"${layout.table}.schema")(stored(layout.table).schema)
+
+    def cents: CentEntries =
+      snap.quantizer("centroids")(collectCents(stored("centroids"), "dim"))
+
+    def halves: Seq[CentEntries] =
+      snap.quantizer("halves")(collectHalvesUncached(stored("centroids")))
+
+    def codebook: CodebookEntries =
+      snap.quantizer("codebook")(collectCodebook(stored("codebook")))
+
+    /** A non-empty tombstone table exists: never deleted, or drained by
+      * a compaction, plans no mask (an empty one would still cost a
+      * broadcast job per serve). */
+    def tombstoned: Boolean = snap.data[java.lang.Boolean]("tombstones")(
+      Boolean.box(readTombstones(spark, dir).exists(!_.isEmpty)))
+
+    /** The row table read with its held schema, the optional metadata
+      * predicate, then one broadcast anti-join against the tombstones
+      * when any exist. The predicate commutes with the mask (both row
+      * filters). */
+    def liveRows(pred: Option[Column] = None): DataFrame = {
+      val rows = pred.foldLeft(spark.read.schema(rowSchema)
+        .parquet(layout.rows(dir)))(_ filter _)
+      if (!tombstoned) rows
+      else readTombstones(spark, dir).fold(rows)(t =>
+        rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    }
+
+    /** `rerankDepth`, or for [[AutoRerankDepth]] the
+      * [[imiSuggestedRerankDepth]] rule (q = 1) over the live rows'
+      * largest partition leaf: each vector stores m code rows, so
+      * count div m per leaf is the exact [[imiPairStats]] /
+      * [[ivfCellStats]] occupancy, read from the index itself (one
+      * leaf-bounded aggregate per data generation, never the raw
+      * corpus). Derived before any metadata predicate: the depth sizes
+      * the grid, and filtered serves must not shrink their shortlist
+      * just because few rows match. */
+    def rerankDepth(requested: Int, k: Int, m: Int): Int =
+      if (requested != AutoRerankDepth) requested
+      else suggestedRerankDepth(snap.data[java.lang.Long]("occupancy")(
+        Long.box(maxOccupancy(liveRows()
+          .groupBy(layout.partKeys.map(col): _*)
+          .agg(expr(s"count(1) div $m").as("n_vectors"))))), k)
+  }
+
+  /** Open `dir`'s current generation as `layout`, failing loudly
+    * unless its sidecar records the layout's fixed fields and the
+    * given build parameters. */
+  private def openLayout(spark: org.apache.spark.sql.SparkSession,
+      dir: String, layout: VectorLayout,
+      params: (String, String)*): OpenedLayout =
+    new OpenedLayout(spark, dir, layout,
+      IndexSnapshot.open(spark, dir, layout.sidecar ++ params: _*))
+
+  /** The `rerankDepth` precondition of the persisted PQ serves, then
+    * the per-probe top-k of their `refined` frame. */
+  private def depthRanked(rerankDepth: Int, k: Int)(
+      refined: => DataFrame): DataFrame = {
+    require(rerankDepth == AutoRerankDepth || rerankDepth >= k,
+      s"rerankDepth $rerankDepth must cover k=$k (or AutoRerankDepth)")
+    topKPerProbe(refined, k)
+  }
+
+  /** A build's quantizer table written under `dir` and read back, so
+    * the build's rows encode against exactly the stored values (and
+    * `df`, often a live training lineage, runs once). */
+  private def storedQuantizer(df: DataFrame, dir: String,
+      table: String): DataFrame = {
+    df.write.mode("overwrite").parquet(s"$dir/$table")
+    df.sparkSession.read.parquet(s"$dir/$table")
+  }
+
+  /** [[storedQuantizer]] for trained (cid, dim, cmean) cell centroids,
+    * collected. Caching a live kmeansTrain lineage was measured slower
+    * in-query (knnJoinIndexed's note), but a build is exactly the
+    * "materialize outside the query" case; parquet round-trips the
+    * means exactly, so the assignment is bit-identical either way. */
+  private def storedCents(cents: DataFrame, dir: String): CentEntries =
+    collectCents(storedQuantizer(cents, dir, "centroids"), "dim")
+
+  /** The build leg of every tombstoned layout: clear the previous
     * generation's tombstones, run `rows` (which writes the layout's
     * quantizer tables, if any, and returns the row frame), write the
     * rows partitioned by the layout's keys, then the sidecar with fresh
@@ -3301,20 +3061,17 @@ object Similarity {
       layout.sidecar ++ params ++ IndexSnapshot.buildTokens(): _*)
   }
 
-  /** The append leg of every vector layout, after the caller's sidecar
-    * check: gate `rows` on the stored column set (`stored` when the
-    * caller already holds the schema, else read from the table — rows
-    * carry metadata for the filtered serves, so a mismatched batch must
-    * fail at entry, not leave mixed-schema files), clear a full-drain
-    * placeholder, append partitioned by the layout's keys, clear the
-    * tombstones of re-added `batch` ids, then write a new data token. */
-  private def appendRows(spark: org.apache.spark.sql.SparkSession,
-      dir: String, layout: VectorLayout, batch: DataFrame, rows: DataFrame,
-      leg: String,
-      stored: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+  /** The append leg of every vector layout: gate `rows` on the opened
+    * layout's stored column set (rows carry metadata for the filtered
+    * serves, so a mismatched batch must fail at entry, not leave
+    * mixed-schema files), clear a full-drain placeholder, append
+    * partitioned by the layout's keys, clear the tombstones of
+    * re-added `batch` ids, then write a new data token. */
+  private def appendRows(open: OpenedLayout, batch: DataFrame,
+      rows: DataFrame, leg: String): Unit = {
+    import open.{dir, layout, spark}
     val table = layout.rows(dir)
-    stored.fold(FsOps.requireAppendColumns(spark, table, rows, leg))(
-      FsOps.requireColumns(_, rows, leg))
+    FsOps.requireColumns(open.rowSchema, rows, leg)
     layout.partKeys.headOption.foreach(clearDrainedPlaceholder(spark, table, _))
     rows.write.mode("append").partitionBy(layout.partKeys: _*).parquet(table)
     reconcileTombstonesAfterAppend(spark, dir, batch.select(col("vec_id")))
@@ -3358,11 +3115,22 @@ object Similarity {
     * reclaims the space and drains the table. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
-    val layout = IndexMeta.read(spark, dir).getOrElse("layout", "<absent>")
-    require(TombstonedLayouts(layout),
-      s"index at $dir has layout=$layout, which has no tombstone " +
+    val name = IndexMeta.read(spark, dir).getOrElse("layout", "<absent>")
+    require(TombstonedLayouts(name),
+      s"index at $dir has layout=$name, which has no tombstone " +
         s"table; deletes apply to ${TombstonedLayouts.toSeq.sorted
           .mkString(", ")}")
+    writeTombstones(spark, ids, dir)
+  }
+
+  /** The delete leg of a layout-named delete: [[deleteFromIvfIndex]]
+    * on a dir the open has already checked to hold that layout. */
+  private def deleteRows(open: OpenedLayout, ids: DataFrame): Unit =
+    writeTombstones(open.spark, ids, open.dir)
+
+  /** Append `ids` to the tombstone table, then write a new data token. */
+  private def writeTombstones(spark: org.apache.spark.sql.SparkSession,
+      ids: DataFrame, dir: String): Unit = {
     ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
       .write.mode("append").parquet(s"$dir/tombstones")
     IndexSnapshot.bumpData(spark, dir)
@@ -3447,22 +3215,6 @@ object Similarity {
     else None
   }
 
-  /** The tombstone-masked row scan under every vector serve: the
-    * layout's row table (read with `schema` when the caller holds it),
-    * the optional metadata predicate, then one broadcast anti-join
-    * against `tombs` — the tombstone table when the caller found one
-    * to apply, so an index without deletes plans no mask. */
-  private def liveRows(spark: org.apache.spark.sql.SparkSession,
-      dir: String, layout: VectorLayout, tombs: Option[DataFrame],
-      pred: Option[Column] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val scan = schema.fold(spark.read)(spark.read.schema(_))
-      .parquet(layout.rows(dir))
-    val rows = pred.foldLeft(scan)(_ filter _)
-    tombs.fold(rows)(t => rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
-  }
-
   /** The partition leaf dirs under `root` for `keys`, relative to it
     * (`cell=3`, `c0=1/c1=2`); none when `root` is absent. */
   private def partitionLeaves(fs: org.apache.hadoop.fs.FileSystem,
@@ -3476,8 +3228,8 @@ object Similarity {
       }
     }.map(_.stripPrefix("/"))
 
-  /** The compaction leg of every vector layout: check the sidecar,
-    * drop the tombstoned rows from the row table and drain the
+  /** The compaction leg of every vector layout: open the layout (its
+    * sidecar check and held row schema), drop the tombstoned rows from the row table and drain the
     * tombstone table.
     * Reclamation never changes a result: the compacted serve equals the
     * masked serve it replaces (oracle-gated per layout).
@@ -3512,14 +3264,14 @@ object Similarity {
   private def compactLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, layout: VectorLayout): Unit = {
     import org.apache.hadoop.fs.Path
-    requireLayout(spark, dir, layout)
+    val open = openLayout(spark, dir, layout)
     val fs = FsOps.fsOf(spark, dir)
     FsOps.clearStaging(fs, dir)
     readTombstones(spark, dir).foreach { tombs =>
       val table = layout.rows(dir)
       val staging = s"${table}_compacting"
       val keys = layout.partKeys
-      val rows = spark.read.parquet(table)
+      val rows = spark.read.schema(open.rowSchema).parquet(table)
       // Both rewrites report whether no row survived anywhere.
       def rewriteWhole(): Boolean = {
         rows.join(broadcast(tombs), Seq("vec_id"), "left_anti")
@@ -3625,13 +3377,8 @@ object Similarity {
 
   private def searchIvfIndexImpl(spark: org.apache.spark.sql.SparkSession,
       dir: String, probes: DataFrame, k: Int, nprobe: Int,
-      pred: Option[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = ivfScoredFromIndex(spark, dir, probes, nprobe, pred)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_r").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
+      pred: Option[Column]): DataFrame =
+    topKPerProbe(ivfScoredFromIndex(spark, dir, probes, nprobe, pred), k)
 
   /** RANGE serve from the persisted IVF layout: every neighbor in the
     * probed cells with cosine ≥ `tau` — [[rangeSearch]]'s contract
@@ -3649,24 +3396,30 @@ object Similarity {
       .filter(col("cos_r") >= tau)
 
   /** The shared scoring frame of the persisted-IVF serves (top-k,
-    * filtered, range): probe→cell assignment against the STORED
-    * centroids, cell-equi join into the index (DPP-prunable, tombstone
-    * mask applied), rounded cosine. One definition so the serve modes
-    * cannot diverge on the determinism or deletion contracts. */
+    * filtered, range): [[ivfScored]] over the opened layout's
+    * centroids and live index rows. */
   private def ivfScoredFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {
+    val open = openLayout(spark, dir, IvfFlatLayout)
+    ivfScored(probes, open.cents, open.liveRows(pred), nprobe)
+  }
+
+  /** The scored frame of every flat-IVF serve (in-memory
+    * [[ivfSearchTrained]] and the persisted modes): probe→cell
+    * assignment against `cents`, cell-equi join into the `corpus`
+    * rows (vec_id, v, nrm, cell — DPP-prunable when stored), rounded
+    * cosine. One definition so the paths and modes cannot diverge on
+    * the determinism or deletion contracts. */
+  private def ivfScored(probes: DataFrame, cents: CentEntries,
+      corpus: DataFrame, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    requireLayout(spark, dir, IvfFlatLayout)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val idx = liveRows(spark, dir, IvfFlatLayout, readTombstones(spark, dir),
-      pred)
     val pcells = trainedAssign(probes, cents, nprobe)
       .select(col("probe_id"), col("cid").as("pcell"))
     val pb = withNorm(probes).select(col("vec_id").as("probe_id"),
       col("v").as("pv"), col("nrm").as("pnrm"))
     pb.join(pcells, Seq("probe_id"))
-      .join(idx,
+      .join(corpus,
         col("pcell") === col("cell") && col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
@@ -3711,11 +3464,9 @@ object Similarity {
   def writeIvfSq8Index(vecs: DataFrame, cents: DataFrame,
       dir: String): Unit =
     buildLayout(vecs.sparkSession, dir, IvfSq8Layout) {
-      cents.write.mode("overwrite").parquet(s"$dir/centroids")
       // Inline assignment + metadata carry ([[withInlineCell]] under
       // [[sq8Rows]]' projection, round 20) — no re-attach join.
-      sq8Rows(withInlineCell(vecs,
-        vecs.sparkSession.read.parquet(s"$dir/centroids")))
+      sq8Rows(withInlineCell(vecs, storedCents(cents, dir)))
     }
 
   /** APPEND a batch to a persisted [[writeIvfSq8Index]] layout — the
@@ -3726,18 +3477,17 @@ object Similarity {
     * for re-added ids reconcile after the data append commits. */
   def appendIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    requireLayout(spark, dir, IvfSq8Layout)
-    appendRows(spark, dir, IvfSq8Layout, vecs2,
-      sq8Rows(withInlineCell(vecs2, spark.read.parquet(s"$dir/centroids"))),
+    val open = openLayout(spark, dir, IvfSq8Layout)
+    appendRows(open, vecs2, sq8Rows(withInlineCell(vecs2, open.cents)),
       "appendIvfSq8Index")
   }
 
   /** Tombstone-DELETE from the SQ8 layout — the tombstone table is
     * layout-agnostic (ids only), so this IS [[deleteFromIvfIndex]]'s
-    * contract applied to the SQ8 dir. */
+    * contract applied to the SQ8 dir, which must hold an SQ8 layout. */
   def deleteFromIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit =
-    deleteFromIvfIndex(spark, ids, dir)
+    deleteRows(openLayout(spark, dir, IvfSq8Layout), ids)
 
   /** Compaction for the SQ8 layout: the affected-cell rewrite of
     * [[compactLayout]] over the (vec_id, scale, q, cell) table. */
@@ -3774,10 +3524,9 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, k: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
-    requireLayout(spark, dir, IvfSq8Layout)
-    sq8TopKFrom(
-      liveRows(spark, dir, IvfSq8Layout, readTombstones(spark, dir), pred),
-      spark.read.parquet(s"$dir/centroids"), probes, k, nprobe)
+    val open = openLayout(spark, dir, IvfSq8Layout)
+    topKPerProbe(sq8ScoredFrom(open.liveRows(pred), open.cents, probes,
+      nprobe), k, "ip_r")
   }
 
   /** IN-MEMORY SQ8 serve — [[searchIvfSq8Index]]'s exact scoring
@@ -3788,30 +3537,19 @@ object Similarity {
     * the determinism contract. */
   def ivfSq8TopK(vecs: DataFrame, probes: DataFrame, cents: DataFrame,
       k: Int, nprobe: Int = 1): DataFrame = {
-    val cells = trainedAssign(vecs, cents, 1)
+    val cs = collectCents(cents, "dim")
+    val cells = trainedAssign(vecs, cs, 1)
       .select(col("probe_id").as("vec_id"), col("cid").as("cell"))
-    sq8TopKFrom(sq8Rows(vecs).join(cells, Seq("vec_id")), cents, probes,
-      k, nprobe)
+    topKPerProbe(sq8ScoredFrom(sq8Rows(vecs).join(cells, Seq("vec_id")), cs,
+      probes, nprobe), k, "ip_r")
   }
 
-  /** Shared SQ8 scoring stage (in-memory and persisted serves): probe
-    * cell assignment, cell-equi candidate join, asymmetric MIPS over
-    * the dequantized codes, rank (ip_r desc, neighbor asc, top-k). */
-  private def sq8TopKFrom(idx: DataFrame, cents: DataFrame,
-      probes: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("ip_r").desc, col("neighbor_id").asc)
-    sq8ScoredFrom(idx, cents, probes, nprobe)
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
-
-  /** The SQ8 serves' shared scored frame (probe → nprobe cells,
-    * cell-equi join, round(scale·⟨p,q⟩, 6)) — one definition so the
-    * top-k and range modes cannot diverge on the determinism or
-    * deletion contracts (the [[ivfScoredFromIndex]] discipline on the
-    * compressed rows). */
-  private def sq8ScoredFrom(idx: DataFrame, cents: DataFrame,
+  /** The SQ8 serves' shared scored frame (in-memory and persisted,
+    * top-k and range): probe → nprobe cells, cell-equi join,
+    * round(scale·⟨p,q⟩, 6) — one definition so the paths and modes
+    * cannot diverge on the determinism or deletion contracts (the
+    * [[ivfScored]] discipline on the compressed rows). */
+  private def sq8ScoredFrom(idx: DataFrame, cents: CentEntries,
       probes: DataFrame, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val pcells = trainedAssign(probes, cents, nprobe)
@@ -3838,9 +3576,8 @@ object Similarity {
   def searchIvfSq8IndexRange(spark: org.apache.spark.sql.SparkSession,
       dir: String, probes: DataFrame, tau: Double,
       nprobe: Int = 1): DataFrame = {
-    requireLayout(spark, dir, IvfSq8Layout)
-    sq8ScoredFrom(liveRows(spark, dir, IvfSq8Layout, readTombstones(spark, dir)),
-        spark.read.parquet(s"$dir/centroids"), probes, nprobe)
+    val open = openLayout(spark, dir, IvfSq8Layout)
+    sq8ScoredFrom(open.liveRows(), open.cents, probes, nprobe)
       .filter(col("ip_r") >= tau)
   }
 

@@ -425,18 +425,6 @@ object Sketches {
       .agg(count(lit(1)).as("c"))
   }
 
-  /** Heavy-hitter estimates: candidate keys scored against a broadcast
-    * count-min sketch, with the true count alongside so the one-sided
-    * error (est ≥ true, inflated only by collisions) is visible.
-    *
-    * Scale shape: the sketch is d×w rows (broadcast); each candidate
-    * expands to its d cells and min-reduces after a broadcast equi-join
-    * — candidates stream through map-side, nothing shuffles but the
-    * candidate aggregate itself. At 100 TB the candidate set comes from
-    * a cheap prior (a per-shard top-N, a previous day's heavy list);
-    * here it is the keys at/above `minCount` so the oracle can rebuild
-    * it exactly.
-    */
   /** Sum two (or more, via union) CMS cell tables — count-min is
     * linear, so per-shard sketches merge by cell-wise addition into
     * exactly the sketch a monolithic pass would have built. The
@@ -482,6 +470,18 @@ object Sketches {
       .filter(col("c") > 0)
   }
 
+  /** Heavy-hitter estimates: candidate keys scored against a broadcast
+    * count-min sketch, with the true count alongside so the one-sided
+    * error (est ≥ true, inflated only by collisions) is visible.
+    *
+    * Scale shape: the sketch is d×w rows (broadcast); each candidate
+    * expands to its d cells and min-reduces after a broadcast equi-join
+    * — candidates stream through map-side, nothing shuffles but the
+    * candidate aggregate itself. At 100 TB the candidate set comes from
+    * a cheap prior (a per-shard top-N, a previous day's heavy list);
+    * here it is the keys at/above `minCount` so the oracle can rebuild
+    * it exactly.
+    */
   def cmsHeavyHitters(df: DataFrame, key: Column, depth: Int = 3,
       width: Int = 256, minCount: Long = 100L): DataFrame =
     cmsScore(cmsBuild(df, key, depth, width),

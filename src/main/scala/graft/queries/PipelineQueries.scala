@@ -129,13 +129,6 @@ object PipelineQueries {
       |         start_a - delta + (end_a - start_a) AS re
       |  FROM espans WHERE end_a - start_a >= 40)""".stripMargin
 
-  /** The byte-interval surgery tail shared by every rewrite replay
-    * (cross-doc, withinDoc, scrub) — gaps-and-islands merge of `rem`,
-    * complement pieces, reassembly, audit counts. One text so the
-    * surgery contract cannot diverge across replays. No UTF-8 snap
-    * CTE: the oracle corpus is ASCII (octet_length == length on every
-    * doc), where the engine's codepoint snap is a 0-step no-op —
-    * multibyte behavior is spec-pinned, not oracle-gated. */
   /** Shared NB-model replay (the [[substringSurgeryTail]] discipline —
     * ONE text so the smoothing/quantization contract cannot diverge
     * across the three gated NB replays): per-(label, token) add-one
@@ -188,6 +181,13 @@ object PipelineQueries {
       |  SELECT *, row_number() OVER (PARTITION BY doc_id
       |    ORDER BY score_micro DESC, label ASC) AS rnk FROM scores)""".stripMargin
 
+  /** The byte-interval surgery tail shared by every rewrite replay
+    * (cross-doc, withinDoc, scrub) — gaps-and-islands merge of `rem`,
+    * complement pieces, reassembly, audit counts. One text so the
+    * surgery contract cannot diverge across replays. No UTF-8 snap
+    * CTE: the oracle corpus is ASCII (octet_length == length on every
+    * doc), where the engine's codepoint snap is a 0-step no-op —
+    * multibyte behavior is spec-pinned, not oracle-gated. */
   private lazy val substringSurgeryTail: String =
     """fl AS (
       |  SELECT *, CASE WHEN
@@ -566,10 +566,6 @@ object PipelineQueries {
     * exact for doubles. */
   private lazy val ivfKmeansSearchSql: String = ivfKmeansSearchSqlWhere("")
 
-  /** The trained-IVF search replay with an optional extra predicate on
-    * the INDEX side (`AND ...` fragment over `vec_id`) — shared by the
-    * build/persist/append twins (empty predicate) and sim_ivf_delete
-    * (tombstoned ids excluded from the index, probes untouched). */
   /** Sequential replay of the SQ8 serve (same trained cells / probe
     * set as the IVF family, MIPS scoring over per-vector-scaled int8
     * codes): quantize every corpus vector symmetric-int8 (scale =
@@ -844,6 +840,10 @@ object PipelineQueries {
        |  FROM short s JOIN vecsl p ON p.vec_id = s.probe_id
        |  JOIN vecsl o ON o.vec_id = s.neighbor_id)""".stripMargin
 
+  /** The trained-IVF search replay with an optional extra predicate on
+    * the INDEX side (`AND ...` fragment over `vec_id`) — shared by the
+    * build/persist/append twins (empty predicate) and sim_ivf_delete
+    * (tombstoned ids excluded from the index, probes untouched). */
   private def ivfKmeansSearchSqlWhere(idxPred: String): String =
     s"""WITH $ovecsCte,
        |$kmeansCte,
@@ -1835,13 +1835,6 @@ object PipelineQueries {
     * transformed vectors. */
   private val imiCurveSql: String = imiCurveSqlOver(ovecsCte)
 
-  /** [[imiCurveSql]] over the deterministic CLUSTERED fixture — each
-    * vector snaps to its (label % 8) center (the spec suite's
-    * ±1-pattern centers: bit (j−1) % 3 of the cluster id) plus 0.1×
-    * the original embedding as noise. This is the corpus the
-    * multi-index is FOR (the structureless default is its adversarial
-    * case); the twin row records the other half of the pick-IMI
-    * guidance. */
   /** [[imiCurveSql]] probed by EXTERNAL vectors — no probe has an
     * index row, so nothing subtracts from any candidate count and
     * the membership-checked figure is exact by construction; the
@@ -1850,6 +1843,13 @@ object PipelineQueries {
   private lazy val imiCurveExternalSql: String =
     imiCurveSqlOver(ovecsCte, imiCurveExternalProbesCte)
 
+  /** [[imiCurveSql]] over the deterministic CLUSTERED fixture — each
+    * vector snaps to its (label % 8) center (the spec suite's
+    * ±1-pattern centers: bit (j−1) % 3 of the cluster id) plus 0.1×
+    * the original embedding as noise. This is the corpus the
+    * multi-index is FOR (the structureless default is its adversarial
+    * case); the twin row records the other half of the pick-IMI
+    * guidance. */
   private val imiCurveClusteredSql: String = imiCurveSqlOver(
     """ovecs AS (
       |  SELECT vec_id,

@@ -43,18 +43,27 @@ class IndexMetaSpec extends SparkSpec {
   test("deleteFromIvfIndex refuses a dir that is not a tombstoned vector layout") {
     // The delete is layout-agnostic, so the sidecar is its only guard:
     // a mistyped path or an index of another kind must fail before any
-    // tombstone is written, not "succeed" and mask nothing.
+    // tombstone is written, not "succeed" and mask nothing. A
+    // layout-named delete must refuse every other layout's dir too.
     import spark.implicits._
     import graft.operators.{Similarity, TextAnalysis}
     withTempDir("graft_del_checked") { root =>
-      val (empty, text) = (s"$root/empty", s"$root/text")
+      val Seq(empty, text, pq, flat) =
+        Seq("empty", "text", "ivf_pq", "ivf_flat").map(n => s"$root/$n")
       val fs = FsOps.fsOf(spark, root)
       fs.mkdirs(new Path(empty))
       TextAnalysis.writeInvertedIndex(Tables.documents(spark, sfDir), text, 8)
-      for (dir <- Seq(empty, text)) {
-        intercept[IllegalArgumentException] {
-          Similarity.deleteFromIvfIndex(spark, Seq(1L, 2L).toDF("vec_id"), dir)
-        }
+      Similarity.writeIvfPqIndex(annVecs, pq)
+      Similarity.writeIvfIndex(annVecs, Similarity.kmeansTrain(annVecs, 8, 2),
+        flat)
+      val ids = Seq(1L, 2L).toDF("vec_id")
+      val refused = Seq[(String, () => Unit)](
+        empty -> (() => Similarity.deleteFromIvfIndex(spark, ids, empty)),
+        text -> (() => Similarity.deleteFromIvfIndex(spark, ids, text)),
+        pq -> (() => Similarity.deleteFromIvfSq8Index(spark, ids, pq)),
+        flat -> (() => Similarity.deleteFromIvfBqIndex(spark, ids, flat)))
+      for ((dir, delete) <- refused) {
+        intercept[IllegalArgumentException](delete())
         assert(!fs.exists(new Path(s"$dir/tombstones")),
           s"a refused delete left a tombstone table under $dir")
       }
@@ -309,30 +318,99 @@ class IndexMetaSpec extends SparkSpec {
   private def ids(rows: Set[org.apache.spark.sql.Row], col: String) =
     rows.map(_.getAs[Long](col))
 
-  test("IVF-PQ serves after append, delete, compact and rebuild equal cold-cache serves") {
+  /** One persisted vector layout's lifecycle legs over a corpus slice
+    * (`build` trains its quantizer on the whole corpus, so an append
+    * encodes under it) and a top-5 serve of [[annProbes]]. */
+  private case class VectorCase(name: String,
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      append: (org.apache.spark.sql.DataFrame, String) => Unit,
+      delete: (org.apache.spark.sql.DataFrame, String) => Unit,
+      compact: String => Unit,
+      serve: String => Set[org.apache.spark.sql.Row])
+
+  /** The seven tombstoned vector layouts. The IMI layouts index the
+    * labeled corpus (their codebooks train on labels); the rest index
+    * (vec_id, v). */
+  private lazy val vectorCases: Seq[VectorCase] = {
+    import graft.operators.Similarity
+    val labeled = Similarity.vectors(Tables.embeddings(spark, sfDir))
+    val cents = Similarity.kmeansTrain(annVecs, 8, 2)
+    val imiCents = Similarity.imiSubCentroids(labeled)
+    def plain(df: org.apache.spark.sql.DataFrame) = df.select("vec_id", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    Seq(
+      VectorCase("bq", (v, d) => Similarity.writeBqIndex(plain(v), d),
+        (v, d) => Similarity.appendBqIndex(spark, plain(v), d),
+        (i, d) => Similarity.deleteFromBqIndex(spark, i, d),
+        d => Similarity.compactBqIndex(spark, d),
+        d => rows(Similarity.bqRerankFromIndex(spark, d, annVecs, annProbes,
+          k = 5))),
+      VectorCase("ivf_bq",
+        (v, d) => Similarity.writeIvfBqIndex(plain(v), cents, d),
+        (v, d) => Similarity.appendIvfBqIndex(spark, plain(v), d),
+        (i, d) => Similarity.deleteFromIvfBqIndex(spark, i, d),
+        d => Similarity.compactIvfBqIndex(spark, d),
+        d => rows(Similarity.searchIvfBqIndex(spark, d, annVecs, annProbes,
+          k = 5))),
+      VectorCase("ivf_flat",
+        (v, d) => Similarity.writeIvfIndex(plain(v), cents, d),
+        (v, d) => Similarity.appendIvfIndex(spark, plain(v), d),
+        (i, d) => Similarity.deleteFromIvfIndex(spark, i, d),
+        d => Similarity.compactIvfIndex(spark, d),
+        d => rows(Similarity.searchIvfIndex(spark, d, annProbes, 5))),
+      VectorCase("ivf_sq8",
+        (v, d) => Similarity.writeIvfSq8Index(plain(v), cents, d),
+        (v, d) => Similarity.appendIvfSq8Index(spark, plain(v), d),
+        (i, d) => Similarity.deleteFromIvfSq8Index(spark, i, d),
+        d => Similarity.compactIvfSq8Index(spark, d),
+        d => rows(Similarity.searchIvfSq8Index(spark, d, annProbes, 5))),
+      VectorCase("ivf_pq",
+        (v, d) => Similarity.writeIvfPqIndex(plain(v), d,
+          quantizer = Some(annVecs)),
+        (v, d) => Similarity.appendIvfPqIndex(spark, plain(v), d),
+        (i, d) => Similarity.deleteFromIvfIndex(spark, i, d),
+        d => Similarity.compactIvfPqIndex(spark, d), annServe),
+      VectorCase("imi", (v, d) => Similarity.writeImiIndex(v, imiCents, d),
+        (v, d) => Similarity.appendImiIndex(spark, v, d),
+        (i, d) => Similarity.deleteFromIvfIndex(spark, i, d),
+        d => Similarity.compactImiIndex(spark, d),
+        d => rows(Similarity.searchImiIndex(spark, d, annProbes, 5))),
+      VectorCase("imi_pq",
+        (v, d) => Similarity.writeImiPqIndex(v, imiCents, d,
+          quantizer = Some(labeled)),
+        (v, d) => Similarity.appendImiPqIndex(spark, v, d),
+        (i, d) => Similarity.deleteFromIvfIndex(spark, i, d),
+        d => Similarity.compactImiPqIndex(spark, d),
+        d => rows(Similarity.searchImiPqIndex(spark, d, labeled, annProbes, 5,
+          rerankDepth = Similarity.AutoRerankDepth))))
+  }
+
+  test("seven vector layouts: warm serves equal cold-cache serves after every write") {
     import spark.implicits._
     import graft.operators.Similarity
-    withTempDir("graft_snap_ann") { dir =>
-      Similarity.writeIvfPqIndex(annVecs.filter($"vec_id" % 2 === 0), dir,
-        quantizer = Some(annVecs))
-      val built = warmEqualsCold("build")(annServe(dir))
-      assert(ids(built, "neighbor_id").forall(_ % 2 == 0))
-      Similarity.appendIvfPqIndex(spark,
-        annVecs.filter($"vec_id" % 2 =!= 0), dir)
-      val appended = warmEqualsCold("append")(annServe(dir))
+    val labeled = Similarity.vectors(Tables.embeddings(spark, sfDir))
+    for (c <- vectorCases) withTempDir(s"graft_snap_${c.name}") { dir =>
+      def step(leg: String) = s"${c.name} $leg"
+      c.build(labeled.filter($"vec_id" % 2 === 0), dir)
+      val built = warmEqualsCold(step("build"))(c.serve(dir))
+      assert(ids(built, "neighbor_id").forall(_ % 2 == 0), step("build"))
+      c.append(labeled.filter($"vec_id" % 2 =!= 0), dir)
+      val appended = warmEqualsCold(step("append"))(c.serve(dir))
       assert(ids(appended, "neighbor_id").exists(_ % 2 != 0),
-        "the appended vectors must be served")
+        s"${c.name}: the appended vectors must be served")
       val victims = ids(appended, "neighbor_id").toSeq.sorted.take(3)
-      Similarity.deleteFromIvfIndex(spark, victims.toDF("vec_id"), dir)
-      val deleted = warmEqualsCold("delete")(annServe(dir))
+      c.delete(victims.toDF("vec_id"), dir)
+      val deleted = warmEqualsCold(step("delete"))(c.serve(dir))
       assert(ids(deleted, "neighbor_id").intersect(victims.toSet).isEmpty,
-        "deleted vectors must not be served")
-      Similarity.compactIvfPqIndex(spark, dir)
-      assert(warmEqualsCold("compact")(annServe(dir)) === deleted)
+        s"${c.name}: deleted vectors must not be served")
+      c.compact(dir)
+      assert(warmEqualsCold(step("compact"))(c.serve(dir)) === deleted,
+        step("compact"))
       // Same parameters, same directory, a different corpus.
-      Similarity.writeIvfPqIndex(annVecs.filter($"vec_id" % 3 =!= 0), dir)
-      val rebuilt = warmEqualsCold("rebuild")(annServe(dir))
-      assert(rebuilt.nonEmpty && ids(rebuilt, "neighbor_id").forall(_ % 3 != 0))
+      c.build(labeled.filter($"vec_id" % 3 =!= 0), dir)
+      val rebuilt = warmEqualsCold(step("rebuild"))(c.serve(dir))
+      assert(rebuilt.nonEmpty &&
+        ids(rebuilt, "neighbor_id").forall(_ % 3 != 0), step("rebuild"))
     }
   }
 
@@ -406,20 +484,24 @@ class IndexMetaSpec extends SparkSpec {
 
   test("a sidecar without generation tokens memoizes nothing") {
     import spark.implicits._
-    import graft.operators.{IndexSnapshot, Similarity}
-    withTempDir("graft_snap_legacy") { dir =>
-      Similarity.writeIvfPqIndex(annVecs, dir)
-      // A sidecar as an older build wrote it: no generation tokens.
-      IndexMeta.write(spark, dir, (IndexMeta.read(spark, dir) --
-        Seq(IndexSnapshot.QuantizerGen, IndexSnapshot.DataGen)).toSeq: _*)
-      val first = annServe(dir)
-      val victims = ids(first, "neighbor_id").toSeq.sorted.take(3)
-      Similarity.deleteFromIvfIndex(spark, victims.toDF("vec_id"), dir)
-      assert(!IndexMeta.read(spark, dir).contains(IndexSnapshot.DataGen),
-        "a write leg must not add tokens to a token-less sidecar")
-      val after = annServe(dir)
-      assert(ids(after, "neighbor_id").intersect(victims.toSet).isEmpty,
-        "a token-less index must re-derive its state on every serve")
-    }
+    import graft.operators.IndexSnapshot
+    val labeled = graft.operators.Similarity.vectors(
+      Tables.embeddings(spark, sfDir))
+    for (c <- vectorCases.filter(c => Set("ivf_pq", "ivf_flat")(c.name)))
+      withTempDir(s"graft_snap_legacy_${c.name}") { dir =>
+        c.build(labeled, dir)
+        // A sidecar as an older build wrote it: no generation tokens.
+        IndexMeta.write(spark, dir, (IndexMeta.read(spark, dir) --
+          Seq(IndexSnapshot.QuantizerGen, IndexSnapshot.DataGen)).toSeq: _*)
+        val first = c.serve(dir)
+        val victims = ids(first, "neighbor_id").toSeq.sorted.take(3)
+        c.delete(victims.toDF("vec_id"), dir)
+        assert(!IndexMeta.read(spark, dir).contains(IndexSnapshot.DataGen),
+          s"${c.name}: a write leg must not add tokens to a token-less sidecar")
+        val after = c.serve(dir)
+        assert(ids(after, "neighbor_id").intersect(victims.toSet).isEmpty,
+          s"${c.name}: a token-less index must re-derive its state on " +
+            "every serve")
+      }
   }
 }

@@ -111,8 +111,7 @@ class PipelineSpec extends SparkSpec {
       "monolithic filter; the sidecar gates the layout") {
     val base = docs.select($"doc_id", $"text")
     val incoming = corpus.filter($"doc_id" >= 100000)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bloom_spec").toString
+    val dir = tempDir("graft_bloom_spec")
     Dedup.writeBloomIndex(base, dir, shards = 8)
     val served = Dedup.bloomPrefilterFromIndex(spark, incoming, base, dir)
       .as[(Long, String)].collect().sortBy(_._1)
@@ -1579,31 +1578,18 @@ class PipelineSpec extends SparkSpec {
       .select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 12)
     val cents = Similarity.kmeansTrain(vecs, 8, 1)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val (dirMono, dirApp) = (tmp("graft_ivf_mono"), tmp("graft_ivf_app"))
-    try {
-      Similarity.writeIvfIndex(vecs, cents, dirMono)
-      Similarity.writeIvfIndex(vecs.filter($"vec_id" % 2 === 0), cents,
-        dirApp)
-      Similarity.appendIvfIndex(spark, vecs.filter($"vec_id" % 2 =!= 0),
-        dirApp)
-      val mono = Similarity.searchIvfIndex(spark, dirMono, probes, 3,
-        nprobe = 2).collect().toSet
-      val appended = Similarity.searchIvfIndex(spark, dirApp, probes, 3,
-        nprobe = 2).collect().toSet
-      assert(mono.nonEmpty && appended === mono,
-        "append-built index must serve exactly like the monolithic build")
-    } finally {
-      Seq(dirMono, dirApp).foreach { dir =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } finally walk.close()
-      }
-    }
+    val (dirMono, dirApp) = (tempDir("graft_ivf_mono"), tempDir("graft_ivf_app"))
+    Similarity.writeIvfIndex(vecs, cents, dirMono)
+    Similarity.writeIvfIndex(vecs.filter($"vec_id" % 2 === 0), cents,
+      dirApp)
+    Similarity.appendIvfIndex(spark, vecs.filter($"vec_id" % 2 =!= 0),
+      dirApp)
+    val mono = Similarity.searchIvfIndex(spark, dirMono, probes, 3,
+      nprobe = 2).collect().toSet
+    val appended = Similarity.searchIvfIndex(spark, dirApp, probes, 3,
+      nprobe = 2).collect().toSet
+    assert(mono.nonEmpty && appended === mono,
+      "append-built index must serve exactly like the monolithic build")
   }
 
   test("persisted IVF-PQ index: file-backed ADC equals in-memory, scan is cell-pruned") {
@@ -1640,36 +1626,23 @@ class PipelineSpec extends SparkSpec {
       (1L, "a b c a b"), (2L, "a a a b"), (3L, "b a"),
       (4L, "c c c"), (5L, "x a b y a b a b"), (6L, "a b")
     ).toDF("doc_id", "text")
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
     val (dirFull, dirA, dirB) =
-      (tmp("graft_ph_full"), tmp("graft_ph_a"), tmp("graft_ph_b"))
-    try {
-      TextAnalysis.writeInvertedIndex(phDocs, dirFull)
-      TextAnalysis.writeInvertedIndex(phDocs.filter($"doc_id" % 2 === 0),
-        dirA)
-      TextAnalysis.writeInvertedIndex(phDocs.filter($"doc_id" % 2 =!= 0),
-        dirB)
-      val want = TextAnalysis.phraseMatch(phDocs, phrase).collect().toSet
-      val served = TextAnalysis.searchPhraseIndex(spark, dirFull, phrase)
-        .collect().toSet
-      val sharded = TextAnalysis
-        .searchPhraseIndexShards(spark, Seq(dirA, dirB), phrase)
-        .collect().toSet
-      assert(want.nonEmpty && served === want,
-        "index-served phrase search must equal the corpus intersection")
-      assert(sharded === want,
-        "sharded phrase serve must equal the corpus intersection")
-    } finally {
-      Seq(dirFull, dirA, dirB).foreach { dir =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } finally walk.close()
-      }
-    }
+      (tempDir("graft_ph_full"), tempDir("graft_ph_a"), tempDir("graft_ph_b"))
+    TextAnalysis.writeInvertedIndex(phDocs, dirFull)
+    TextAnalysis.writeInvertedIndex(phDocs.filter($"doc_id" % 2 === 0),
+      dirA)
+    TextAnalysis.writeInvertedIndex(phDocs.filter($"doc_id" % 2 =!= 0),
+      dirB)
+    val want = TextAnalysis.phraseMatch(phDocs, phrase).collect().toSet
+    val served = TextAnalysis.searchPhraseIndex(spark, dirFull, phrase)
+      .collect().toSet
+    val sharded = TextAnalysis
+      .searchPhraseIndexShards(spark, Seq(dirA, dirB), phrase)
+      .collect().toSet
+    assert(want.nonEmpty && served === want,
+      "index-served phrase search must equal the corpus intersection")
+    assert(sharded === want,
+      "sharded phrase serve must equal the corpus intersection")
   }
 
   test("sharded inverted-index serve equals the single full index bit-for-bit") {
@@ -1679,31 +1652,18 @@ class PipelineSpec extends SparkSpec {
     // equality is exact, not approximate.
     import graft.operators.TextAnalysis
     val terms = Seq("hash", "join", "spark")
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
     val (dirFull, dirA, dirB) =
-      (tmp("graft_inv_full"), tmp("graft_inv_sa"), tmp("graft_inv_sb"))
-    try {
-      TextAnalysis.writeInvertedIndex(docs, dirFull)
-      TextAnalysis.writeInvertedIndex(docs.filter($"doc_id" % 2 === 0), dirA)
-      TextAnalysis.writeInvertedIndex(docs.filter($"doc_id" % 2 =!= 0), dirB)
-      val full = TextAnalysis.searchInvertedIndex(spark, dirFull, terms)
-        .collect().toSet
-      val sharded = TextAnalysis
-        .searchInvertedIndexShards(spark, Seq(dirA, dirB), terms)
-        .collect().toSet
-      assert(full.nonEmpty && sharded === full,
-        "sharded serve must equal the monolithic index bit-for-bit")
-    } finally {
-      Seq(dirFull, dirA, dirB).foreach { dir =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } finally walk.close()
-      }
-    }
+      (tempDir("graft_inv_full"), tempDir("graft_inv_sa"), tempDir("graft_inv_sb"))
+    TextAnalysis.writeInvertedIndex(docs, dirFull)
+    TextAnalysis.writeInvertedIndex(docs.filter($"doc_id" % 2 === 0), dirA)
+    TextAnalysis.writeInvertedIndex(docs.filter($"doc_id" % 2 =!= 0), dirB)
+    val full = TextAnalysis.searchInvertedIndex(spark, dirFull, terms)
+      .collect().toSet
+    val sharded = TextAnalysis
+      .searchInvertedIndexShards(spark, Seq(dirA, dirB), terms)
+      .collect().toSet
+    assert(full.nonEmpty && sharded === full,
+      "sharded serve must equal the monolithic index bit-for-bit")
   }
 
   test("multi-probe IVF recovers boundary probes single-probe loses") {

@@ -317,10 +317,18 @@ class PlanInvariantsSpec extends SparkSpec {
     }
     withTempDir("graft_serve_jobs") { root =>
       val (ann, text) = (s"$root/ann", s"$root/text")
-      val vecs = Similarity.vectors(Tables.embeddings(spark, sfDir))
-        .select($"vec_id", $"v")
+      val labeled = Similarity.vectors(Tables.embeddings(spark, sfDir))
+      val vecs = labeled.select($"vec_id", $"v")
+      val cents = Similarity.kmeansTrain(vecs, 8, 2)
+      val imiCents = Similarity.imiSubCentroids(labeled)
       Similarity.writeIvfPqIndex(vecs, ann)
       TextAnalysis.writeInvertedIndex(Tables.documents(spark, sfDir), text, 8)
+      Similarity.writeBqIndex(vecs, s"$root/bq")
+      Similarity.writeIvfBqIndex(vecs, cents, s"$root/ivf_bq")
+      Similarity.writeIvfIndex(vecs, cents, s"$root/ivf_flat")
+      Similarity.writeIvfSq8Index(vecs, cents, s"$root/ivf_sq8")
+      Similarity.writeImiIndex(labeled, imiCents, s"$root/imi")
+      Similarity.writeImiPqIndex(labeled, imiCents, s"$root/imi_pq")
       // One serving request: a single local probe vector.
       val probe = Seq((-1L, vecs.filter($"vec_id" === 3).head.getSeq[Double](1)))
         .toDF("vec_id", "v")
@@ -330,8 +338,20 @@ class PlanInvariantsSpec extends SparkSpec {
         "bm25" -> (() => TextAnalysis.searchInvertedIndex(spark, text,
           Seq("hash", "join", "spark"), 8)),
         "phrase" -> (() => TextAnalysis.searchPhraseIndex(spark, text,
-          Seq("slow", "hash", "batch"), 8)))
-      serves.foreach(_._2().collect()) // opens both indexes
+          Seq("slow", "hash", "batch"), 8)),
+        "bq" -> (() => Similarity.bqRerankFromIndex(spark, s"$root/bq", vecs,
+          probe, k = 5)),
+        "ivf_bq" -> (() => Similarity.searchIvfBqIndex(spark,
+          s"$root/ivf_bq", vecs, probe, k = 5)),
+        "ivf_flat" -> (() => Similarity.searchIvfIndex(spark,
+          s"$root/ivf_flat", probe, 5)),
+        "ivf_sq8" -> (() => Similarity.searchIvfSq8Index(spark,
+          s"$root/ivf_sq8", probe, 5)),
+        "imi" -> (() => Similarity.searchImiIndex(spark, s"$root/imi", probe,
+          5)),
+        "imi_pq" -> (() => Similarity.searchImiPqIndex(spark, s"$root/imi_pq",
+          labeled, probe, 5, rerankDepth = Similarity.AutoRerankDepth)))
+      serves.foreach(_._2().collect()) // opens every index
       sc.addSparkListener(listener)
       try {
         val counts = serves.map { case (name, serve) =>
@@ -341,7 +361,9 @@ class PlanInvariantsSpec extends SparkSpec {
         }.toMap
         info(s"serve jobs (build, collect): $counts")
         assert(counts === Map("ann" -> (0, 6), "bm25" -> (0, 4),
-          "phrase" -> (0, 3)))
+          "phrase" -> (0, 3), "bq" -> (0, 6), "ivf_bq" -> (0, 6),
+          "ivf_flat" -> (0, 4), "ivf_sq8" -> (0, 4), "imi" -> (0, 4),
+          "imi_pq" -> (0, 8)))
       } finally sc.removeSparkListener(listener)
     }
   }

@@ -97,10 +97,8 @@ class RetrievalOpsSpec extends SparkSpec {
       "BOTH indexes removes it from the fused list") {
     import graft.operators.TextAnalysis
     val documents = docs
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val invDir = tmp("graft_hyb_inv_spec")
-    val ivfDir = tmp("graft_hyb_ivf_spec")
+    val invDir = tempDir("graft_hyb_inv_spec")
+    val ivfDir = tempDir("graft_hyb_ivf_spec")
     val cents = Similarity.kmeansTrain(vecs, 8, 2)
     TextAnalysis.writeInvertedIndex(documents, invDir)
     Similarity.writeIvfIndex(vecs, cents, ivfDir)

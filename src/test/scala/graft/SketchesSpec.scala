@@ -183,8 +183,7 @@ class SketchesSpec extends SparkSpec {
       "estimates identically") {
     val df = (1 to 800).map(i => (s"key$i", s"g${i % 3}"))
       .toDF("key", "grp")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hll_rt").toString
+    val dir = tempDir("graft_hll_rt")
     val served = Sketches.hllPersistRoundTrip(df, col("key"), col("grp"),
       dir)
     val mono = Sketches.hllDistinct(df, col("key"), col("grp"))

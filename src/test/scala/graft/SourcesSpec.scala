@@ -14,7 +14,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("text source round-trips synthesized flow-log lines") {
-    val dir = Files.createTempDirectory("graft_lines").toString
+    val dir = tempDir("graft_lines")
     val lines = FlowLog.synthesizeLines(Tables.lineitem(spark, sfDir))
     lines.select("line").write.mode("overwrite").text(dir)
     val parsed = FlowLogSource.readParsed(spark, dir)
@@ -25,7 +25,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JSON envelope source decodes the CloudWatch wire format") {
-    val dir = Files.createTempDirectory("graft_env").toString
+    val dir = tempDir("graft_env")
     val payload =
       """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"g","logStream":"s","logEvents":[{"id":"0","timestamp":1,"message":"m1"},{"id":"1","timestamp":2,"message":"m2"}]}"""
     val bos = new java.io.ByteArrayOutputStream()
@@ -39,7 +39,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV schema-on-read types the 14 fields and corrupt lines keep the payload") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv")
     val good =
       "2 123456789010 eni-1854f949 72.21.196.65 172.31.16.21 20641 22 6 20 4249 1418530010 1418530070 ACCEPT OK"
     Files.writeString(java.nio.file.Paths.get(dir, "flow.log"),
@@ -58,7 +58,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("streaming file source drives the decorator end-to-end") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     FlowLog.synthesizeLines(Tables.lineitem(spark, sfDir)).limit(200)
       .select("line").write.mode("overwrite").text(dir)
     val eni = FlowLog.eniDimension(Tables.supplier(spark, sfDir))
@@ -77,7 +77,7 @@ class SourcesSpec extends SparkSpec {
 
   test("idempotentBatchWriter: a retried batch replaces, never duplicates") {
     import graft.sources.Sinks
-    val dir = Files.createTempDirectory("graft-idem").toFile.getAbsolutePath
+    val dir = tempDir("graft-idem")
     val write = Sinks.idempotentBatchWriter(dir) _
     // The writer must not change the session's overwrite mode: a
     // static conf stays static for every later overwrite.
@@ -127,7 +127,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned sink layout enables partition pruning at read time") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     val parsed = FlowLog.parseFlowLines(
       FlowLog.synthesizeLines(Tables.lineitem(spark, sfDir)))
       .filter(!$"error")
@@ -144,7 +144,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC sink round-trips with partition pruning and pushed filters") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc")
     val parsed = FlowLog.parseFlowLines(
       FlowLog.synthesizeLines(Tables.lineitem(spark, sfDir)))
       .filter(!$"error")

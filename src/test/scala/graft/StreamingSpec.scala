@@ -98,8 +98,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup state survives a checkpointed restart") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_dd_out").toString
+    val ckpt = tempDir("graft_ckpt")
+    val outDir = tempDir("graft_dd_out")
     val input = MemoryStream[(Long, Timestamp, String)](spark)
     // file sink: fault-tolerant, so the query can recover from the
     // checkpoint (the memory sink cannot)
@@ -170,7 +170,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{FlowLogSource, Sinks}
     import graft.operators.Ingestor
     val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("upsert").toFile, "log")
+      new java.io.File(tempDir("upsert")), "log")
       .getAbsolutePath
     val input = MemoryStream[Long](spark)
     val docs = Ingestor.decodeEnvelopes(
@@ -209,9 +209,9 @@ class StreamingSpec extends SparkSpec {
     // byte-identical to the batch decorator on the same ticks.
     import graft.sources.{FlowLogSource, Sinks}
     import graft.operators.Ingestor
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_e2e_ckpt").toString
+    val ckpt = tempDir("graft_e2e_ckpt")
     val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_e2e").toFile, "log")
+      new java.io.File(tempDir("graft_e2e")), "log")
       .getAbsolutePath
     val eni = Seq(("eni-1", Seq("sg-a"), "172.31.16.1"))
       .toDF("interface_id", "security_group_ids", "ip_address")
@@ -463,8 +463,8 @@ class StreamingSpec extends SparkSpec {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fam_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fam_out").toString
+    val ckpt = tempDir("graft_fam_ckpt")
+    val outDir = tempDir("graft_fam_out")
     val corpus = Dedup.augmentCorpus(Tables.documents(s, sfDir))
       .select($"doc_id".cast("long"), $"text")
       .as[(Long, String)].collect()
@@ -636,7 +636,7 @@ class StreamingSpec extends SparkSpec {
     val allDocs = Tables.documents(s, sfDir)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val (b1, b2) = allDocs.partition(_._1 % 2 == 0)
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_idx")
+    val base = tempDir("graft_stream_idx")
     val shardDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val input = MemoryStream[(Long, String)](s)
     val q = input.toDF().toDF("doc_id", "text")
@@ -664,15 +664,7 @@ class StreamingSpec extends SparkSpec {
         .searchInvertedIndexShards(s, dirs, terms).collect().toSet
       assert(want.nonEmpty && served === want,
         "stream-built shards must serve exactly like a corpus scan")
-    } finally {
-      q.stop()
-      val walk = java.nio.file.Files.walk(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } finally walk.close()
-    }
+    } finally q.stop()
   }
 
   test("streaming PQ serving: probe stream over the persisted codes-only index") {
@@ -688,45 +680,35 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     val vecs = Similarity.vectors(Tables.embeddings(s, sfDir))
       .select($"vec_id", $"v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_stream")
-      .toString
+    val dir = tempDir("graft_ivfpq_stream")
     val results = new java.util.concurrent.ConcurrentLinkedQueue[
       (Long, Long, Double, Int)]()
     val input = MemoryStream[(Long, Seq[Double])](s)
+    Similarity.writeIvfPqIndex(vecs, dir)
+    val probeRows = vecs.filter($"vec_id" < 10)
+      .as[(Long, Seq[Double])].collect()
+    val (p1, p2) = probeRows.partition(_._1 % 2 == 0)
+    val q = input.toDF().toDF("vec_id", "v")
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        Similarity.searchIvfPqIndex(s, dir, vecs, batch, 5)
+          .collect().foreach(r => results.add((r.getLong(0), r.getLong(1),
+            r.getDouble(2), r.getInt(3))))
+      }
+      .start()
     try {
-      Similarity.writeIvfPqIndex(vecs, dir)
-      val probeRows = vecs.filter($"vec_id" < 10)
-        .as[(Long, Seq[Double])].collect()
-      val (p1, p2) = probeRows.partition(_._1 % 2 == 0)
-      val q = input.toDF().toDF("vec_id", "v")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Similarity.searchIvfPqIndex(s, dir, vecs, batch, 5)
-            .collect().foreach(r => results.add((r.getLong(0), r.getLong(1),
-              r.getDouble(2), r.getInt(3))))
-        }
-        .start()
-      try {
-        input.addData(p1.toSeq: _*)
-        q.processAllAvailable()
-        input.addData(p2.toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      import scala.jdk.CollectionConverters._
-      val got = results.asScala.toSet
-      val want = Similarity.searchIvfPqIndex(s, dir, vecs,
-          vecs.filter($"vec_id" < 10), 5)
-        .as[(Long, Long, Double, Int)].collect().toSet
-      assert(want.nonEmpty && got === want,
-        s"served results (${got.size}) must equal batch serve (${want.size})")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } finally walk.close()
-    }
+      input.addData(p1.toSeq: _*)
+      q.processAllAvailable()
+      input.addData(p2.toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    val got = results.asScala.toSet
+    val want = Similarity.searchIvfPqIndex(s, dir, vecs,
+        vecs.filter($"vec_id" < 10), 5)
+      .as[(Long, Long, Double, Int)].collect().toSet
+    assert(want.nonEmpty && got === want,
+      s"served results (${got.size}) must equal batch serve (${want.size})")
   }
 
   test("stateful sessionization closes a session on inactivity gap") {
@@ -813,10 +795,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(s, sfDir)
     val vecs = Similarity.vectors(Tables.embeddings(s, sfDir))
       .select($"vec_id", $"v")
-    val invDir = java.nio.file.Files
-      .createTempDirectory("graft_hyb_inv_stream").toString
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory("graft_hyb_ivf_stream").toString
+    val invDir = tempDir("graft_hyb_inv_stream")
+    val ivfDir = tempDir("graft_hyb_ivf_stream")
     TextAnalysis.writeInvertedIndex(docs, invDir)
     Similarity.writeIvfIndex(vecs, Similarity.kmeansTrain(vecs, 8, 2),
       ivfDir)
@@ -948,10 +928,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(s, sfDir)
     val vecs = Similarity.vectors(Tables.embeddings(s, sfDir))
       .select($"vec_id", $"v")
-    val invDir = java.nio.file.Files
-      .createTempDirectory("graft_hybbq_inv_stream").toString
-    val bqDir = java.nio.file.Files
-      .createTempDirectory("graft_hybbq_idx_stream").toString
+    val invDir = tempDir("graft_hybbq_inv_stream")
+    val bqDir = tempDir("graft_hybbq_idx_stream")
     TextAnalysis.writeInvertedIndex(docs, invDir)
     Similarity.writeIvfBqIndex(vecs, Similarity.kmeansTrain(vecs, 8, 2),
       bqDir)
@@ -1028,8 +1006,7 @@ class StreamingSpec extends SparkSpec {
     val vecs = Similarity.vectors(Tables.embeddings(s, sfDir))
       .select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 6)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bq_compact_race").toString
+    val dir = tempDir("graft_bq_compact_race")
     Similarity.writeBqIndex(vecs, dir)
     val ids = vecs.filter($"vec_id" % 7 === 0).select($"vec_id")
     Similarity.deleteFromBqIndex(s, ids, dir)
@@ -1106,8 +1083,7 @@ class StreamingSpec extends SparkSpec {
     val vecs = Similarity.vectors(Tables.embeddings(s, sfDir))
       .select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 6)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_compact_race").toString
+    val dir = tempDir("graft_ivf_compact_race")
     Similarity.writeIvfIndex(vecs, Similarity.kmeansTrain(vecs, 8, 2),
       dir)
     val ids = vecs.filter($"vec_id" % 7 === 0).select($"vec_id")
@@ -1161,8 +1137,7 @@ class StreamingSpec extends SparkSpec {
     val labeled = Similarity.vectors(Tables.embeddings(s, sfDir))
     val vecs = labeled.select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 6)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_imi_compact_race").toString
+    val dir = tempDir("graft_imi_compact_race")
     Similarity.writeImiIndex(vecs, Similarity.imiSubCentroids(labeled),
       dir)
     val ids = vecs.filter($"vec_id" % 7 === 0).select($"vec_id")
@@ -1217,8 +1192,7 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     val labeled = Similarity.vectors(Tables.embeddings(s, sfDir))
     val probes = labeled.filter($"vec_id" < 6)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_imipq_compact_race").toString
+    val dir = tempDir("graft_imipq_compact_race")
     Similarity.writeImiPqIndex(labeled,
       Similarity.imiSubCentroids(labeled), dir)
     val ids = labeled.filter($"vec_id" % 7 === 0).select($"vec_id")
@@ -1272,8 +1246,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark.newSession()
     import s.implicits._
     val docs = Tables.documents(s, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_spell_race").toString
+    val dir = tempDir("graft_spell_race")
     TextAnalysis.writeSpellIndex(docs, dir)
     val victims = Seq("the", "of").toDF("word")
     TextAnalysis.deleteFromSpellIndex(s, victims, dir)
@@ -1318,8 +1291,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark.newSession()
     import s.implicits._
     val docs = Tables.documents(s, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_inv_race").toString
+    val dir = tempDir("graft_inv_race")
     TextAnalysis.writeInvertedIndex(docs, dir)
     val ids = docs.filter($"doc_id" % 7 === 0).select($"doc_id")
     TextAnalysis.deleteFromInvertedIndex(s, ids, dir)
@@ -1360,8 +1332,7 @@ class StreamingSpec extends SparkSpec {
     // the same pattern as ANN serving over the persisted IVF index.
     // Estimates must be bit-identical to the batch cmsScore.
     val ev = Tables.events(spark, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cms_serve").toString
+    val dir = tempDir("graft_cms_serve")
     operators.Sketches.cmsBuild(ev, col("user_id"), 3, 64)
       .write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
@@ -1405,8 +1376,7 @@ class StreamingSpec extends SparkSpec {
       Sketches.quantileSample(ev, 32), Seq(25, 50, 75, 95))
       .as[(String, Int, Long, Long)].collect().toSet
 
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_qsk_serve").toString
+    val base = tempDir("graft_qsk_serve")
     @volatile var version = -1
     val in = MemoryStream[(String, Long, Long)](spark)
     val q = in.toDF().toDF("grp", "h", "v").writeStream
@@ -1446,8 +1416,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = operators.Dedup.augmentCorpus(
       Tables.documents(spark, sfDir))
     val sigs = operators.Dedup.minhashSignaturesV2(corpus)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lsh_serve").toString
+    val dir = tempDir("graft_lsh_serve")
     operators.Dedup.writeLshIndex(sigs.filter($"doc_id" < 100000), dir,
       sep = "|")
     val want = operators.Dedup.lshIncrementalFromIndex(spark, dir,
@@ -1489,10 +1458,8 @@ class StreamingSpec extends SparkSpec {
       .select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 10)
     val cents = Similarity.kmeansTrain(vecs, 8, 2)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_ivf_stream")
-    val dirMono = tmp("graft_ivf_stream_mono")
+    val dir = tempDir("graft_ivf_stream")
+    val dirMono = tempDir("graft_ivf_stream_mono")
     Similarity.writeIvfIndex(vecs, cents, dirMono)
     val want = Similarity.searchIvfIndex(spark, dirMono, probes, 3,
       nprobe = 2).collect().toSet
@@ -1512,7 +1479,7 @@ class StreamingSpec extends SparkSpec {
       // Mid-stream: the partial index must serve exactly like a build
       // over the delivered subset — no torn batch, no stale cell.
       val midWant = {
-        val d = tmp("graft_ivf_stream_mid")
+        val d = tempDir("graft_ivf_stream_mid")
         val delivered = vecs.filter($"vec_id" % 3 === 0)
           .unionByName(b1.toSeq.toDF("vec_id", "v"))
         Similarity.writeIvfIndex(delivered, cents, d)
@@ -1543,10 +1510,8 @@ class StreamingSpec extends SparkSpec {
     val vecs = labeled.select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 10)
     val cents = Similarity.imiSubCentroids(labeled)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_imi_stream")
-    val dirMono = tmp("graft_imi_stream_mono")
+    val dir = tempDir("graft_imi_stream")
+    val dirMono = tempDir("graft_imi_stream_mono")
     Similarity.writeImiIndex(vecs, cents, dirMono)
     val want = Similarity.searchImiIndex(spark, dirMono, probes, 3,
       nprobe = 2).collect().toSet
@@ -1585,10 +1550,8 @@ class StreamingSpec extends SparkSpec {
     val vecs = labeled.select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 10)
     val cents = Similarity.imiSubCentroids(labeled)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_imipq_stream")
-    val dirMono = tmp("graft_imipq_stream_mono")
+    val dir = tempDir("graft_imipq_stream")
+    val dirMono = tempDir("graft_imipq_stream_mono")
     Similarity.writeImiPqIndex(vecs, cents, dirMono)
     val want = Similarity.searchImiPqIndex(spark, dirMono, vecs, probes,
       3).collect().toSet
@@ -1624,10 +1587,8 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Similarity
     val labeled = Similarity.vectors(Tables.embeddings(spark, sfDir))
     val probes = labeled.filter($"vec_id" < 10)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_bq_meta_stream")
-    val dirMono = tmp("graft_bq_meta_stream_mono")
+    val dir = tempDir("graft_bq_meta_stream")
+    val dirMono = tempDir("graft_bq_meta_stream_mono")
     Similarity.writeBqIndex(labeled, dirMono)
     val want = Similarity.bqRerankFromIndexWhere(spark, dirMono,
       labeled, probes, $"label" % 2 === 0).collect().toSet
@@ -1677,10 +1638,8 @@ class StreamingSpec extends SparkSpec {
       .select($"vec_id", $"v")
     val probes = vecs.filter($"vec_id" < 10)
     val cents = Similarity.kmeansTrain(vecs, 8, 2)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_ivfbq_stream")
-    val dirMono = tmp("graft_ivfbq_stream_mono")
+    val dir = tempDir("graft_ivfbq_stream")
+    val dirMono = tempDir("graft_ivfbq_stream_mono")
     Similarity.writeIvfBqIndex(vecs, cents, dirMono)
     val want = Similarity.searchIvfBqIndex(spark, dirMono, vecs, probes)
       .collect().toSet
@@ -1700,7 +1659,7 @@ class StreamingSpec extends SparkSpec {
       in.addData(b1.toSeq: _*); q.processAllAvailable()
       // Mid-stream: serve equals a build over exactly the delivered rows.
       val midWant = {
-        val d = tmp("graft_ivfbq_stream_mid")
+        val d = tempDir("graft_ivfbq_stream_mid")
         val delivered = vecs.filter($"vec_id" % 3 === 0)
           .unionByName(b1.toSeq.toDF("vec_id", "v"))
         Similarity.writeIvfBqIndex(delivered, cents, d)
@@ -1737,12 +1696,10 @@ class StreamingSpec extends SparkSpec {
     // here proven under micro-batch delivery with a mid-stream read).
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
     val terms = Seq("hash", "join", "spark")
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_inv_stream")
+    val dir = tempDir("graft_inv_stream")
     operators.TextAnalysis.writeInvertedIndex(docs, dir)
     def rebuiltServe(keep: org.apache.spark.sql.Column) = {
-      val d = tmp("graft_inv_rebuild")
+      val d = tempDir("graft_inv_rebuild")
       operators.TextAnalysis.writeInvertedIndex(docs.filter(keep), d)
       operators.TextAnalysis.searchInvertedIndex(spark, d, terms)
         .collect().toSet
@@ -1783,8 +1740,7 @@ class StreamingSpec extends SparkSpec {
     // the batch bpeApply over the same corpus (strings and string
     // arrays round-trip parquet exactly).
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bpe_vocab").toString
+    val dir = tempDir("graft_bpe_vocab")
     operators.TextAnalysis.bpeWriteVocab(docs, dir, merges = 3)
     val want = operators.TextAnalysis.bpeApply(docs, merges = 3)
       .as[(Long, Int, String)].collect().toSet
@@ -1883,8 +1839,7 @@ class StreamingSpec extends SparkSpec {
     val want = Sketches.kmvEstimate(Sketches.kmvSynopsis(ev, 16), 16)
       .as[(String, Long, Long)].collect().toSet
 
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_kmv_serve").toString
+    val base = tempDir("graft_kmv_serve")
     @volatile var version = -1
     val in = MemoryStream[(String, Long)](spark)
     val q = in.toDF().toDF("grp", "h").writeStream
@@ -1925,10 +1880,8 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id", $"text")
     val extras = operators.Dedup.augmentCorpus(
       Tables.documents(spark, sfDir)).filter($"doc_id" >= 100000)
-    val sDir = java.nio.file.Files
-      .createTempDirectory("graft_store_stream").toString
-    val bDir = java.nio.file.Files
-      .createTempDirectory("graft_store_batch").toString
+    val sDir = tempDir("graft_store_stream")
+    val bDir = tempDir("graft_store_batch")
     operators.Multimodal.writeChunkStore(base, sDir)
     operators.Multimodal.writeChunkStore(base, bDir)
     operators.Multimodal.appendChunkStore(spark, extras, bDir)
@@ -1970,15 +1923,13 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.TextAnalysis
     val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"text")
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dirMono = tmp("graft_spell_stream_mono")
+    val dirMono = tempDir("graft_spell_stream_mono")
     TextAnalysis.writeSpellIndex(docs, dirMono)
     def serve(dir: String) =
       TextAnalysis.searchSpellIndex(spark, docs, dir).collect().toSet
     val want = serve(dirMono)
 
-    val dir = tmp("graft_spell_stream")
+    val dir = tempDir("graft_spell_stream")
     TextAnalysis.writeSpellIndex(docs.filter($"doc_id" % 3 === 0), dir)
     val in = MemoryStream[(Long, String)](spark)
     val q = in.toDF().toDF("doc_id", "text").writeStream
@@ -1992,7 +1943,7 @@ class StreamingSpec extends SparkSpec {
       val (b1, b2) = rows.splitAt(rows.length / 2)
       in.addData(b1.toSeq: _*); q.processAllAvailable()
       val midWant = {
-        val d = tmp("graft_spell_stream_mid")
+        val d = tempDir("graft_spell_stream_mid")
         TextAnalysis.writeSpellIndex(
           docs.filter($"doc_id" % 3 === 0)
             .unionByName(b1.toSeq.toDF("doc_id", "text")), d)
@@ -2018,9 +1969,7 @@ class StreamingSpec extends SparkSpec {
     val base = Tables.documents(spark, sfDir).select($"doc_id", $"text")
     val incoming = Dedup.augmentCorpus(Tables.documents(spark, sfDir))
       .filter($"doc_id" >= 100000)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dir = tmp("graft_bloom_stream")
+    val dir = tempDir("graft_bloom_stream")
     Dedup.writeBloomIndex(base.filter($"doc_id" % 3 === 0), dir, shards = 8)
     val in = MemoryStream[(Long, String)](spark)
     val q = in.toDF().toDF("doc_id", "text").writeStream
@@ -2099,16 +2048,14 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"source".as("label"), $"text")
     val incoming = docs.select($"doc_id", $"text")
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val dirMono = tmp("graft_nb_stream_mono")
+    val dirMono = tempDir("graft_nb_stream_mono")
     TextAnalysis.nbWriteModel(docs, dirMono)
     def serve(dir: String) =
       TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
         .collect().map(_.toSeq).toSet
     val want = serve(dirMono)
 
-    val dir = tmp("graft_nb_stream")
+    val dir = tempDir("graft_nb_stream")
     TextAnalysis.nbWriteModel(docs.filter($"doc_id" % 3 === 0), dir)
     val in = MemoryStream[(Long, String, String)](spark)
     val q = in.toDF().toDF("doc_id", "label", "text").writeStream

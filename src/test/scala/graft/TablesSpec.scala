@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -24,8 +22,8 @@ class TablesSpec extends SparkSpec {
   /** Writes the sf fixture's events rows as both generations; returns
     * (ntzDir, legacyDir) each laid out like a testdata sf dir. */
   private lazy val (ntzDir, legacyDir): (String, String) = {
-    val ntz = Files.createTempDirectory("graft_ev_ntz").toString
-    val legacy = Files.createTempDirectory("graft_ev_legacy").toString
+    val ntz = tempDir("graft_ev_ntz")
+    val legacy = tempDir("graft_ev_legacy")
     val src = Tables.eventsRaw(spark, sfDir)
     src.write.mode("overwrite").parquet(s"$ntz/events.parquet")
     src.withColumn("ts",
@@ -62,7 +60,7 @@ class TablesSpec extends SparkSpec {
     // -1500 ns is between -2 µs and -1 µs; flooring (DuckDB's
     // epoch_us/TIMESTAMP_NS semantics) gives -2 µs — truncation toward
     // zero would give -1 µs. Positive sub-micro remainders floor down.
-    val dir = Files.createTempDirectory("graft_ev_preepoch").toString
+    val dir = tempDir("graft_ev_preepoch")
     Seq((1L, -1500L), (2L, -1000L), (3L, 1500L), (4L, 0L))
       .toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -82,7 +80,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("an unrecognized ts physical type fails loudly, not silently") {
-    val dir = Files.createTempDirectory("graft_ev_bad").toString
+    val dir = tempDir("graft_ev_bad")
     Seq((1L, "not-a-time")).toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     intercept[IllegalStateException](Tables.events(spark, dir))

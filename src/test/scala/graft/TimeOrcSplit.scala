@@ -22,9 +22,7 @@ object TimeOrcSplit {
     val cols = Seq("id", "version", "account_id", "interface_id",
       "srcaddr", "destaddr", "srcport", "dstport", "protocol", "packets",
       "bytes", "start", "end", "action", "log_status").map(col)
-    for (_ <- 1 to 4) {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_orc_split").toString
+    for (_ <- 1 to 4) graft.SparkSpec.withTempDir("graft_orc_split") { path =>
       val src = FlowLogQueries.parsed(spark, d)
         .filter(!col("error") && expr("(id div 8) % 8") === 0)
         .select(cols: _*)

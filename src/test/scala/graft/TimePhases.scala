@@ -52,12 +52,11 @@ object TimePhases {
       Similarity.vectors(Tables.embeddings(spark, sfDir)).count()
     }
 
-    for (round <- 1 to 2) {
+    for (round <- 1 to 2) SparkSpec.withTempDir("graft_phases") { root =>
       println(s"--- round $round ---")
       val vecs = Similarity.vectors(Tables.embeddings(spark, sfDir))
         .select(col("vec_id"), col("v"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_phases_ivfpq").toString
+      val dir = s"$root/ivfpq"
       t("kmeansTrain(8,2).count") {
         Similarity.kmeansTrain(vecs, 8, 2).write.format("noop")
           .mode("overwrite").save()
@@ -69,8 +68,7 @@ object TimePhases {
           .orderBy("probe_id", "rnk").count()
       }
       val vecsL = Similarity.vectors(Tables.embeddings(spark, sfDir))
-      val dir2 = java.nio.file.Files
-        .createTempDirectory("graft_phases_imipq").toString
+      val dir2 = s"$root/imipq"
       val cents = Similarity.imiSubCentroids(vecsL)
       t("imi indexCells.noop") {
         Similarity.imiIndexCells(
@@ -86,8 +84,7 @@ object TimePhases {
           .orderBy("probe_id", "rnk").count()
       }
       val vecsL2 = Similarity.vectors(Tables.embeddings(spark, sfDir))
-      val dir3 = java.nio.file.Files
-        .createTempDirectory("graft_phases_imi").toString
+      val dir3 = s"$root/imi"
       t("writeImiIndex") {
         Similarity.writeImiIndex(vecsL2,
           Similarity.imiSubCentroids(vecsL2), dir3)

@@ -820,8 +820,7 @@ class TrainingOpsSpec extends SparkSpec {
     import spark.implicits._
     val train = Seq((1L, "abab abab"), (2L, "xab xab"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bpe_oov").toString
+    val dir = tempDir("graft_bpe_oov")
     graft.operators.TextAnalysis.bpeWriteVocab(train, dir, merges = 2)
     // In-vocab corpus: serve equals the live train→apply composition.
     val want = graft.operators.TextAnalysis.bpeApply(train, merges = 2)
@@ -925,8 +924,7 @@ class TrainingOpsSpec extends SparkSpec {
   test("searchSpellIndex serves bit-identically to the corpus-scan " +
       "spellCandidates; the sidecar gates the edit radius") {
     val docs = Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_spell_spec").toString
+    val dir = tempDir("graft_spell_spec")
     TextAnalysis.writeSpellIndex(docs, dir)
     val direct = TextAnalysis.spellCandidates(docs)
       .as[(String, String, Long, Int, Int)].collect().sortBy(r => (r._1, r._5))
@@ -955,10 +953,8 @@ class TrainingOpsSpec extends SparkSpec {
 
     // Append: keys dedup at serve, freqs sum at serve, so the two
     // half-batches must serve bit-identically to one full build.
-    val dirM = java.nio.file.Files
-      .createTempDirectory("graft_spell_mono").toString
-    val dirA = java.nio.file.Files
-      .createTempDirectory("graft_spell_app").toString
+    val dirM = tempDir("graft_spell_mono")
+    val dirA = tempDir("graft_spell_app")
     TextAnalysis.writeSpellIndex(docs, dirM)
     TextAnalysis.writeSpellIndex(docs.filter(col("doc_id") % 2 === 0),
       dirA)
@@ -976,12 +972,10 @@ class TrainingOpsSpec extends SparkSpec {
       .filter(length(col("word")) >= 8).distinct()
     assert(tombstones.count() > 0,
       "fixture needs at least one length-8+ vocabulary word")
-    val dirD = java.nio.file.Files
-      .createTempDirectory("graft_spell_del").toString
+    val dirD = tempDir("graft_spell_del")
     TextAnalysis.writeSpellIndex(docs, dirD)
     TextAnalysis.deleteFromSpellIndex(spark, tombstones, dirD)
-    val dirR = java.nio.file.Files
-      .createTempDirectory("graft_spell_reb").toString
+    val dirR = tempDir("graft_spell_reb")
     val cleaned = docs.select(col("doc_id"),
       array_join(filter(split(col("text"), " "),
         w => length(w) < 8), " ").as("text"))
