@@ -949,8 +949,18 @@ object Similarity {
   /** Top-`nprobe` virtual-cell pairs computed INLINE on the probe row
     * — all k² (sum of rounded half-distances, l0, l1) structs built
     * in one expression, array_sorted ((r0+r1) asc, l0 asc, l1 asc —
-    * [[imiProbePairsRanked]]'s window contract verbatim) and sliced;
-    * no half self-join, no row_number shuffle (round 19). */
+    * [[imiProbePairsRanked]]'s window contract verbatim), exploded
+    * with their position and cut to the first `nprobe`; no half
+    * self-join, no row_number shuffle (round 19).
+    *
+    * The cut is a relational `Filter` on the position, NOT a `slice`
+    * inside the generator: Spark's PartitionPruning rule inserts a
+    * dynamic pruning filter into the pair-partitioned index scan only
+    * when the filtering side of the join holds a selective `Filter`,
+    * and a slice inside `posexplode` is not one: a probe frame without
+    * a filter of its own (a local relation) would then leave the
+    * persisted IMI serves scanning every pair partition. Rows and ranks
+    * are the same as a slice's. */
   private def inlineProbePairsRanked(probeSrc: DataFrame,
       halves: Seq[Seq[(Any, Seq[Double])]], nprobe: Int): DataFrame = {
     val hd = halfDistStructs(halves)
@@ -960,7 +970,8 @@ object Similarity {
         a.getField("cid").as("l0"),
         b.getField("cid").as("l1")))))
     probeSrc.select(col("vec_id").as("probe_id"),
-        posexplode(slice(array_sort(pairs), 1, nprobe)).as(Seq("i", "e")))
+        posexplode(array_sort(pairs)).as(Seq("i", "e")))
+      .filter(col("i") < nprobe)
       .select(col("probe_id"), col("e.l0").as("l0"),
         col("e.l1").as("l1"), (col("i") + 1).as("rn"))
   }
@@ -1094,11 +1105,14 @@ object Similarity {
   /** Persist the inverted multi-index: the two half-vector codebooks
     * to `centroids/` and the corpus — each row in its rank-1 (c0, c1)
     * virtual cell — to `index/`, partitioned by BOTH pair keys, so a
-    * serve's (l0, l1) equi-join partition-prunes to exactly the probed
-    * pairs. `cents` is passed explicitly (an [[imiSubCentroids]]
-    * frame), the [[writeIvfIndex]] trainer-separation contract: the
-    * quantizer may be trained on a different corpus slice than the
-    * batch being indexed, which is what makes the append leg exact.
+    * serve's (l0, l1) equi-join partition-prunes the scan: one dynamic
+    * pruning filter per key (`c0 IN` the probed l0s, `c1 IN` the probed
+    * l1s) reads the product {l0}×{l1}, a superset of the probed pairs
+    * that is exact for one probe at nprobe 1. `cents` is passed
+    * explicitly (an [[imiSubCentroids]] frame), the [[writeIvfIndex]]
+    * trainer-separation contract: the quantizer may be trained on a
+    * different corpus slice than the batch being indexed, which is
+    * what makes the append leg exact.
     * Codebook means are doubles — parquet round-trips them exactly, so
     * the persisted serve is bit-identical to [[imiTopK]] under the
     * same codebooks (spec-pinned). */
@@ -1132,11 +1146,15 @@ object Similarity {
   /** Serve a persisted [[writeImiIndex]] layout: probes rank virtual-
     * cell pairs against the stored codebooks ([[imiProbePairs]]) and
     * the pair-partitioned index is joined on BOTH cell keys — the
-    * probed-pair set drives partition pruning, so the scan reads
-    * ~nprobe/k² of the corpus. Deleted ids ([[deleteFromIvfIndex]] —
-    * the tombstone table is layout-agnostic) mask via one broadcast
-    * anti-join before scoring. Same serve frame as [[imiTopK]]
-    * ([[imiServe]]), so the contract cannot diverge. */
+    * probed-pair set drives dynamic partition pruning, one filter per
+    * key, so the scan reads the pair partitions in {probed l0}×{probed
+    * l1}: ~nprobe/k² of the corpus for a single probe, more when
+    * several probes' pairs cross (see [[inlineProbePairsRanked]] for
+    * why the nprobe cut must stay a `Filter`). Deleted ids
+    * ([[deleteFromIvfIndex]] — the tombstone table is layout-agnostic)
+    * mask via one broadcast anti-join before scoring. Same serve
+    * frame as [[imiTopK]] ([[imiServe]]), so the contract cannot
+    * diverge. */
   def searchImiIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, probes: DataFrame, k: Int,
       nprobe: Int = 1): DataFrame =
@@ -1170,8 +1188,11 @@ object Similarity {
 
   /** The scored frame of the persisted-IMI serves (top-k, filtered,
     * range): probe pairs against the opened layout's codebooks,
-    * pair-equi join into its live pair-partitioned index
-    * (DPP-prunable), rounded cosine. */
+    * pair-equi join into its live pair-partitioned index, rounded
+    * cosine. The scan is DPP-pruned on each key separately (`c0 IN`
+    * the probed l0s, `c1 IN` the probed l1s — a superset of the probed
+    * pairs), which needs the `Filter`-form nprobe cut of
+    * [[inlineProbePairsRanked]] on the probe side. */
   private def imiScoredFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {

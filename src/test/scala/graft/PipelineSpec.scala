@@ -437,6 +437,40 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("persisted IMI index: a one-probe serve at nprobe 1 reads one pair partition") {
+    // The test above pins that a dynamic pruning filter is in the plan;
+    // this one pins that it prunes. Each 8-dim half of a clusteredVecs
+    // center carries all three bits of the center index (bit d % 3), so
+    // the 8 centers land in 8 distinct (c0, c1) leaves, and one probed
+    // pair is one leaf. The count is the scan's numPartitions metric
+    // after the serve ran; AQE wraps scans in query stages, so the scan
+    // is found through AdaptiveSparkPlanHelper.
+    import graft.operators.Similarity
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val vecs = clusteredVecs()
+    withTempDir("graft_imi_prune") { dir =>
+      Similarity.writeImiIndex(vecs, Similarity.imiSubCentroids(vecs), dir)
+      val onDisk = spark.read.parquet(s"$dir/index")
+        .select($"c0", $"c1").distinct().count()
+      assert(onDisk === 8, s"fixture holds $onDisk pair leaves, not 8")
+      val served = Similarity.searchImiIndex(spark, dir,
+        vecs.filter($"vec_id" === 0), 3, nprobe = 1)
+      assert(served.collect().nonEmpty, "one-probe serve returned nothing")
+      val helper = new AdaptiveSparkPlanHelper {}
+      val read = helper.collect(served.queryExecution.executedPlan) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths
+              .exists(_.toString.endsWith("/index")) =>
+          f.metrics("numPartitions").value
+      }
+      assert(read.nonEmpty, "no file scan over the IMI index found")
+      assert(read.max === 1,
+        s"one-probe nprobe-1 serve read ${read.max} of $onDisk pair " +
+          "partitions; the probed pair is one")
+    }
+  }
+
   test("persisted IMI index: delete, compaction, full drain and re-append keep the in-memory contract") {
     // The lifecycle legs of the test above, on the same fixture, without
     // its plan-shape pin: a tombstoned id vanishes, compaction serves
