@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -65,21 +67,79 @@ object Similarity {
   /** The exact refine of a shortlist (probe_id, neighbor_id, `carry`…):
     * ONLY the shortlisted neighbors' floats are fetched from `vecs`
     * (a neighbor-id join, so the corpus floats never broadcast) and
-    * scored against the broadcast probe floats as 6-dp cosine `cos_r`.
-    * Callers broadcast `short` when it is probe-bounded. */
+    * scored against the probe floats as 6-dp cosine `cos_r`. The
+    * probe floats and norms of a LOCAL probe frame ([[localProbes]])
+    * are a literal map keyed by probe id; any other frame's are
+    * broadcast. Callers broadcast `short` when it is probe-bounded. */
   private def refineExact(short: DataFrame, vecs: DataFrame,
       probes: DataFrame, carry: String*): DataFrame = {
-    val pv = broadcast(withNorm(probes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm")))
-    short
-      .join(withNorm(vecs).select(col("vec_id").as("neighbor_id"),
-        col("v"), col("nrm")), Seq("neighbor_id"))
-      .join(pv, Seq("probe_id"))
-      .select((Seq(col("probe_id"), col("neighbor_id")) ++ carry.map(col) :+
-        round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-          .as("cos_r")): _*)
+    val cands = short.join(withNorm(vecs).select(col("vec_id")
+      .as("neighbor_id"), col("v"), col("nrm")), Seq("neighbor_id"))
+    // A local probe frame's floats and norms ride in as one literal
+    // keyed by probe id; any other frame is broadcast.
+    val scored = localProbes(withNorm(probes), col("v").as("pv"),
+        col("nrm").as("pnrm")) match {
+      case Some(lp) =>
+        cands.withColumn("p", try_element_at(lp.byId, col("probe_id")))
+          .filter(col("p").isNotNull)
+          .select(col("*"), col("p.pv").as("pv"), col("p.pnrm").as("pnrm"))
+      case None =>
+        cands.join(broadcast(withNorm(probes).select(col("vec_id")
+          .as("probe_id"), col("v").as("pv"), col("nrm").as("pnrm"))),
+          Seq("probe_id"))
+    }
+    scored.select((Seq(col("probe_id"), col("neighbor_id")) ++
+      carry.map(col) :+ round(dot(col("pv"), col("v")) /
+        (col("pnrm") * col("nrm")), 6).as("cos_r")): _*)
   }
+
+  /** A LOCAL probe frame's `cols`, evaluated on the driver: one row per
+    * probe, its id (`probe_id`) first. */
+  private final case class LocalProbes(rows: Seq[Row], schema: StructType) {
+    /** The value fields as one literal `map<probe_id, struct<…>>`. */
+    def byId: Column = typedLiteral(
+      ListMap(rows.map(r => r.get(0) -> Row(r.toSeq.tail: _*)): _*),
+      MapType(schema.head.dataType, StructType(schema.tail),
+        valueContainsNull = false))
+  }
+
+  /** The probe-side values of a LOCAL probe frame, computed on the
+    * driver by the same expressions a distributed plan evaluates:
+    * Some when `probes` projected through `cols` optimizes to a local
+    * relation (a `Seq.toDF`, filtered or not — Spark folds a projection
+    * over a local relation while it optimizes, so the collect runs no
+    * job) and the probe ids are distinct and non-null. The callers
+    * then carry the values as literals: a plan-time `cell IN (…)`
+    * filter on the stored scan, a distance-table or probe-vector map
+    * keyed the way the join was. Any other frame gets None and keeps
+    * the broadcast joins, and with them dynamic partition pruning;
+    * repeated ids keep them too, since a literal keyed by id cannot
+    * repeat a probe the way a join does. */
+  private def localProbes(probes: DataFrame,
+      cols: Column*): Option[LocalProbes] = {
+    val p = probes.select(col("vec_id").as("probe_id") +: cols: _*)
+    p.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val rows = p.collect().toSeq
+        val ids = rows.map(_.get(0))
+        if (ids.contains(null) || ids.distinct.size != ids.size) None
+        else Some(LocalProbes(rows, p.schema))
+      case _ => None
+    }
+  }
+
+  /** `rows` cut to the cells `probes` consult, when the probes are
+    * LOCAL ([[localProbes]]): a literal `cell IN (…)` filter, so a
+    * stored cell-partitioned scan lists and reads only those
+    * partitions, decided at plan time. Other probe frames leave `rows`
+    * as they are, and the cell join prunes them by DPP. */
+  private def probedCellsOnly(rows: DataFrame, probes: DataFrame,
+      cents: CentEntries, nprobe: Int): DataFrame =
+    localProbes(probes, rankedCells(cents, nprobe).getField("cid"))
+      .fold(rows)(lp => rows.filter(cellIn(lp.rows.flatMap(_.getSeq[Any](1)))))
+
+  private def cellIn(cells: Seq[Any]): Column =
+    col("cell").isin(cells.distinct: _*)
 
   /** Embedding-cosine near-duplicate pairs, blocked by label. */
   def cosineDupPairs(vecs: DataFrame, threshold: Double): DataFrame = {
@@ -645,9 +705,10 @@ object Similarity {
 
   /** Serve [[ivfBqTopK]] from a persisted [[writeIvfBqIndex]] layout —
     * bit-identical to the in-memory path (BIGINT codes round-trip
-    * parquet exactly); the code scan prunes to the probed cells via
-    * DPP and deleted ids mask via the broadcast tombstone anti-join
-    * before the shortlist window. */
+    * parquet exactly); the code scan prunes to the probed cells
+    * ([[searchIvfIndex]]'s rule: a literal filter for a local probe
+    * frame, DPP otherwise) and deleted ids mask via the broadcast
+    * tombstone anti-join before the shortlist window. */
   def searchIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame,
       shortlist: Int = 20, k: Int = 3, nprobe: Int = 2): DataFrame =
@@ -713,8 +774,9 @@ object Similarity {
         col("code1").as("p1"))
       .join(pcells, Seq("probe_id")))
     pcodes
-      .join(codes.select(col("vec_id").as("neighbor_id"), col("code0"),
-        col("code1"), col("cell")),
+      .join(probedCellsOnly(codes, probes, cents, nprobe)
+        .select(col("vec_id").as("neighbor_id"), col("code0"),
+          col("code1"), col("cell")),
         col("pcell") === col("cell") &&
           col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
@@ -774,10 +836,8 @@ object Similarity {
       collectCents(centroids(vecs)
         .select(col("label").as("cid"), col("pos"), col("cmean")), "pos")
     }
-    probeSrc.select(col("vec_id").as("probe_id"), posexplode(
-        slice(array_sort(
-          distStructs(csLiteralFrom(entries), col("v"))), 1, nprobe))
-        .as(Seq("i", "e")))
+    probeSrc.select(col("vec_id").as("probe_id"),
+        posexplode(rankedCells(entries, nprobe)).as(Seq("i", "e")))
       .select(col("probe_id"), col("e.cid").as("assigned_label"),
         (col("i") + 1).as("rn"))
   }
@@ -943,8 +1003,8 @@ object Similarity {
   /** Collected centroids as a literal `map<cid, cvec>`. */
   private def centMap(entries: CentEntries): Column =
     if (entries.isEmpty) expr("CAST(map() AS map<int,array<double>>)")
-    else map(entries.flatMap { case (cid, cvec) =>
-      Seq(lit(cid), array(cvec.map(lit(_)): _*)) }: _*)
+    else typedLiteral(ListMap(entries: _*), MapType(typeOf(entries.head._1),
+      DoubleArray, valueContainsNull = false))
 
   /** Top-`nprobe` virtual-cell pairs computed INLINE on the probe row
     * — all k² (sum of rounded half-distances, l0, l1) structs built
@@ -1851,11 +1911,14 @@ object Similarity {
   private def codebookBySub(codebook: CodebookEntries): Column =
     if (codebook.isEmpty)
       expr("CAST(map() AS map<int,array<struct<cid:bigint,cv:array<double>>>>)")
-    else map(codebook.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
-      case (sub, es) => Seq(lit(sub), array(es.map { case (_, cid, cv) =>
-        struct(lit(cid).as("cid"), array(cv.map(lit(_)): _*).as("cv"))
-      }: _*))
-    }: _*)
+    else typedLiteral(
+      ListMap(codebook.groupBy(_._1).toSeq.sortBy(_._1).map {
+        case (sub, es) => sub -> es.map { case (_, cid, cv) => (cid, cv) }
+      }: _*),
+      MapType(IntegerType, ArrayType(StructType(Seq(
+        StructField("cid", typeOf(codebook.head._2), nullable = false),
+        StructField("cv", DoubleArray, nullable = false))),
+        containsNull = false), valueContainsNull = false))
 
   /** Per-probe ADC distance table against an explicit codebook frame
     * (in-memory or read back from a persisted index — parquet
@@ -1885,14 +1948,37 @@ object Similarity {
     val kc = (Seq("probe_id") ++ keys).map(col)
     res.select(kc ++ Seq(explode(expr(s"sequence(0, ${m - 1})")).as("sub"),
         col("rv")): _*)
-      .select(kc ++ Seq(col("sub"),
-        expr(s"slice(rv, sub * (size(rv) div $m) + 1, size(rv) div $m)")
-          .as("sv")): _*)
+      .select(kc ++ Seq(col("sub"), subSlice(col("rv"), col("sub"), m)
+        .as("sv")): _*)
       .select(kc ++ Seq(col("sub"), col("sv"),
         explode(element_at(codebookBySub(codebook), col("sub"))).as("e")): _*)
       .select(kc ++ Seq(col("sub"), col("e.cid").as("cid"),
-        (dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("e.cv")) +
-          dot(col("e.cv"), col("e.cv"))).as("pd2")): _*)
+        adcTerm(col("sv"), col("e.cv")).as("pd2")): _*)
+  }
+
+  /** Sub-vector `sub` (0-based) of `v` split into m equal slices. */
+  private def subSlice(v: Column, sub: Column, m: Int): Column = {
+    val w = call_function("div", size(v), lit(m))
+    slice(v, sub * w + 1, w)
+  }
+
+  /** One ADC table term d²(sv, cv) by the dot-product identity
+    * |a−b|² = a·a − 2a·b + b·b. */
+  private def adcTerm(sv: Column, cv: Column): Column =
+    dot(sv, sv) - lit(2.0) * dot(sv, cv) + dot(cv, cv)
+
+  /** The ADC table of one residual `rv`: per sub (the array position),
+    * the (cid, pd2) structs over that sub's codebook slice — the rows
+    * [[adcDistTableWith]] explodes, as a projection of the probe row
+    * for [[localProbes]]. A sub without codebook entries gives a null
+    * array, where the exploding form gives no rows. */
+  private def adcTableOf(rv: Column, codebook: CodebookEntries,
+      m: Int): Column = {
+    val cbs = codebookBySub(codebook)
+    transform(sequence(lit(0), lit(m - 1)), s =>
+      transform(try_element_at(cbs, s), e => struct(
+        e.getField("cid").as("cid"),
+        adcTerm(subSlice(rv, s, m), e.getField("cv")).as("pd2"))))
   }
 
   /** [[adcDistTableFrom]] with the codebook derived from `vecs` (the
@@ -1981,29 +2067,32 @@ object Similarity {
     // whole dtab subtree stays map-side before its own broadcast.
     val dtab = adcDistTable(vecs, probes, m, codebookK)
       .join(broadcast(pcells), Seq("probe_id"))
-    adcCellTopK(codes, dtab, k)
+    adcRanked(adcCellTerms(codes, dtab), k)
   }
 
-  /** Shared serving stage of [[ivfPqTopK]] and [[searchIvfPqIndex]]:
-    * join the cell-blocked code table against the broadcast per-probe
-    * distance table (ONLY within each probe's consulted cells), roll
-    * the per-subspace terms up to ADC distances, and rank top-k —
-    * one implementation so the in-memory and persisted paths cannot
-    * diverge on the scoring or tie-break contract. `codes` carries
-    * (vec_id, sub, cid, cell); `dtab` (probe_id, sub, cid, pd2,
-    * pcell). */
-  private def adcCellTopK(codes: DataFrame, dtab: DataFrame,
-      k: Int): DataFrame = {
+  /** The (probe_id, vec_id, pd2) table terms shared by [[ivfPqTopK]]
+    * and the distributed-probe [[pqrRefined]]: the cell-blocked code
+    * table joined against the broadcast per-probe distance table, ONLY
+    * within each probe's consulted cells. `codes` carries (vec_id, sub,
+    * cid, cell); `dtab` (probe_id, sub, cid, pd2, pcell). */
+  private def adcCellTerms(codes: DataFrame, dtab: DataFrame): DataFrame =
+    codes.join(broadcast(dtab),
+        codes("sub") === dtab("sub") && codes("cid") === dtab("cid") &&
+          col("cell") === col("pcell") && col("probe_id") =!= col("vec_id"))
+      .select(col("probe_id"), col("vec_id"), col("pd2"))
+
+  /** Roll (probe_id, vec_id, pd2) table terms up to ADC distances and
+    * rank the top `k` per probe — one implementation so the in-memory
+    * and persisted serves, and the joined and looked-up terms, cannot
+    * diverge on the scoring or tie-break contract. */
+  private def adcRanked(terms: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // One shuffle, by probe, serves both the (probe, vector) rollup and
     // the per-probe ranking; a rollup hashed on (probe, vector) would
     // make the ranking shuffle again. The price: candidate rows move
     // without a map-side partial sum (m terms each; exact decimals, so
     // the sums are unchanged).
-    val scored = codes.join(broadcast(dtab),
-        codes("sub") === dtab("sub") && codes("cid") === dtab("cid") &&
-          col("cell") === col("pcell") && col("probe_id") =!= col("vec_id"))
-      .repartition(col("probe_id"))
+    val scored = terms.repartition(col("probe_id"))
       .groupBy(col("probe_id"), col("vec_id"))
       .agg(sum(round(col("pd2"), 6).cast("decimal(18,6)")).cast("double")
         .as("adist"))
@@ -2043,12 +2132,15 @@ object Similarity {
     val carry = src.columns
       .filterNot(c => c == "v" || c == "vec_id").map(col).toSeq
     src.select(Seq(col("vec_id")) ++ carry ++ Seq(col("v"),
-        explode(slice(array_sort(
-          distStructs(csLiteralFrom(entries), col("v"))), 1, n)).as("e")): _*)
+        explode(rankedCells(entries, n)).as("e")): _*)
       .select(Seq(col("vec_id")) ++ carry ++ Seq(col("e.cid").as("cell"),
-        zip_with(col("v"), element_at(cvm, col("e.cid")), (a, b) => a - b)
-          .as("rv")): _*)
+        cellResidual(cvm, col("e.cid")).as("rv")): _*)
   }
+
+  /** v − centroid(`cell`), the centroid looked up in [[centMap]]'s
+    * literal — plain double subtraction. */
+  private def cellResidual(cvm: Column, cell: Column): Column =
+    zip_with(col("v"), element_at(cvm, cell), (a, b) => a - b)
 
   /** Shared serve of the BY-RESIDUAL IVF-PQ composition (in-memory
     * [[ivfPqrTopK]] and persisted [[searchIvfPqIndex]] route here so
@@ -2073,19 +2165,80 @@ object Similarity {
     * at the single-level cell key: ADC-shortlist the probed cells to
     * `rerankDepth` candidates, fetch ONLY those candidates' floats,
     * exact 6-dp cosine. One definition so the modes cannot diverge on
-    * the determinism, shortlist, or deletion contracts. */
+    * the determinism, shortlist, or deletion contracts.
+    *
+    * The probe side takes one of two forms with the same rows. A
+    * LOCAL probe frame ([[localProbes]]) has its cell ranking,
+    * residuals and distance tables computed on the driver: the code
+    * scan gets a literal `cell IN (…)` filter, pruned at plan time,
+    * and each code row looks its terms up in one literal map
+    * ([[localAdcTerms]]), so no job builds or broadcasts the table.
+    * Any other frame broadcasts the table, and the cell equi-join
+    * prunes the stored scan by dynamic partition pruning. */
   private def pqrRefined(codes: DataFrame, cents: CentEntries,
       codebook: CodebookEntries, vecs: DataFrame, probes: DataFrame,
       m: Int, nprobe: Int, rerankDepth: Int): DataFrame = {
-    val dtab = adcDistTableWith(residualsWith(probes, cents, nprobe)
-      .select(col("vec_id").as("probe_id"), col("cell").as("pcell"),
-        col("rv")), Seq("pcell"), codebook, m)
+    // Per probed cell: the cell, then the probe residual's table as m
+    // per-sub arrays ([[residualsWith]]'s and [[adcDistTableWith]]'s
+    // expressions as one projection of the probe row).
+    val cvm = centMap(cents)
+    val tables = transform(transform(rankedCells(cents, nprobe), e =>
+        struct(e.getField("cid").as("pcell"),
+          cellResidual(cvm, e.getField("cid")).as("rv"))), c =>
+      struct(c.getField("pcell").as("pcell"),
+        adcTableOf(c.getField("rv"), codebook, m).as("t")))
+    val terms = localProbes(probes, tables) match {
+      case Some(lp) => localAdcTerms(codes, lp)
+      case None =>
+        val dtab = adcDistTableWith(residualsWith(probes, cents, nprobe)
+          .select(col("vec_id").as("probe_id"), col("cell").as("pcell"),
+            col("rv")), Seq("pcell"), codebook, m)
+        adcCellTerms(codes, dtab)
+    }
     // The shortlist is |probes|·rerankDepth rows — broadcast it so
     // the corpus-float fetch PROBES the corpus scan instead of
     // shuffling it (at 100 TB the floats never move; only shortlist
     // survivors flow out of the join).
-    refineExact(broadcast(adcCellTopK(codes, dtab, rerankDepth)
+    refineExact(broadcast(adcRanked(terms, rerankDepth)
       .select(col("probe_id"), col("neighbor_id"))), vecs, probes)
+  }
+
+  /** [[pqrRefined]]'s (probe_id, vec_id, pd2) table terms for LOCAL
+    * probes: the code scan cut to the probed cells by a literal filter,
+    * each code row looking up its (cell, sub, cid) in one literal map
+    * of the probes' distance tables — the rows the broadcast join
+    * matches, with no job to build or ship the table. Keys take the
+    * code table's column types, the join's comparison. */
+  private def localAdcTerms(codes: DataFrame,
+      lp: LocalProbes): DataFrame = {
+    val keyT = StructType(Seq("cell", "sub", "cid").map(n =>
+      StructField(n, codes.schema(n).dataType, nullable = false)))
+    val probeT = StructType(Seq(
+      StructField("probe_id", lp.schema.head.dataType, nullable = false),
+      StructField("pd2", DoubleType)))
+    val terms = for {
+      p <- lp.rows
+      c <- p.getSeq[Row](1)
+      (ts, s) <- c.getSeq[collection.Seq[Row]](1).zipWithIndex
+      t <- Option(ts).getOrElse(Nil)
+    } yield Row(Seq(c.get(0), s, t.get(0)).zip(keyT.map(_.dataType))
+      .map { case (v, dt) => castTo(v, dt) }: _*) -> Row(p.get(0), t.get(1))
+    val table = typedLiteral(terms.groupMap(_._1)(_._2),
+      MapType(keyT, ArrayType(probeT, containsNull = false),
+        valueContainsNull = false))
+    codes.filter(cellIn(lp.rows.flatMap(_.getSeq[Row](1).map(_.get(0)))))
+      .select(col("vec_id"), explode(try_element_at(table,
+        struct(col("cell"), col("sub"), col("cid")))).as("e"))
+      .filter(col("e.probe_id") =!= col("vec_id"))
+      .select(col("e.probe_id").as("probe_id"), col("vec_id"),
+        col("e.pd2").as("pd2"))
+  }
+
+  /** `v` as a value of type `dt` (a collected key converted to the
+    * type of the column it is compared with). */
+  private def castTo(v: Any, dt: DataType): Any = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    Cast(Literal(v), dt, Some("UTC")).eval()
   }
 
   /** BY-RESIDUAL IVF-PQ with an exact refine stage — the deployment
@@ -2284,8 +2437,10 @@ object Similarity {
     * `nprobe` nearest stored centroids, the per-(probe, cell)
     * distance table builds against the stored residual codebook, the
     * cell-partitioned code scan is pruned to the consulted cells
-    * (dynamic partition pruning off the broadcast probe-cell side,
-    * exactly like [[searchIvfIndex]]), and the ADC shortlist is
+    * ([[searchIvfIndex]]'s rule: a local probe frame prunes at plan
+    * time by a literal cell filter and looks its distance table up in
+    * a literal map; any other frame prunes by DPP off the broadcast
+    * probe-cell side), and the ADC shortlist is
     * re-ranked with exact cosine over `vecs` — the corpus floats,
     * which the layout itself never stores ([[bqRerankFromIndex]]'s
     * contract: the shortlist fetch is probe-bounded). Results are
@@ -2538,9 +2693,26 @@ object Similarity {
       // empty-corpus quantizer; every consumer yields zero rows from
       // it, matching the joined form's empty-join semantics.
       expr("CAST(array() AS array<struct<cid:int,cvec:array<double>>>)")
-    else array(entries.map { case (cid, cvec) =>
-      struct(lit(cid).as("cid"), array(cvec.map(lit(_)): _*).as("cvec"))
-    }: _*)
+    else typedLiteral(entries, ArrayType(StructType(Seq(
+      StructField("cid", typeOf(entries.head._1), nullable = false),
+      StructField("cvec", DoubleArray, nullable = false))),
+      containsNull = false))
+
+  private val DoubleArray = ArrayType(DoubleType, containsNull = false)
+
+  /** The Spark type of a collected key value (a cid or label). */
+  private def typeOf(v: Any): DataType =
+    org.apache.spark.sql.catalyst.expressions.Literal(v).dataType
+
+  /** A local value (Seqs, Maps, Rows or tuples, nested as `dataType`
+    * nests) as ONE typed literal node. A tree of per-element `lit`s
+    * (hundreds of nodes for a codebook) would be re-analyzed by every
+    * eager Dataset step that carries it; the values are the same. */
+  private def typedLiteral(value: Any, dataType: DataType): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(dataType)(value), dataType))
 
   /** (rounded L2², cid) structs of `v` against every centroid of a
     * [[csLiteral]] array — array_min picks the (distance asc, cid
@@ -2614,11 +2786,16 @@ object Similarity {
     // collected quantizer — no row_number window, no shuffle of the
     // src side at all (round-19 rewrite of the exploded join +
     // window form).
-    src.select(col("vec_id").as("probe_id"), posexplode(
-        slice(array_sort(distStructs(csLiteralFrom(cents), col("v"))), 1, n))
-        .as(Seq("i", "e")))
+    src.select(col("vec_id").as("probe_id"),
+        posexplode(rankedCells(cents, n)).as(Seq("i", "e")))
       .select(col("probe_id"), col("e.cid").as("cid"),
         (col("i") + 1).as("rn"))
+
+  /** The row's `n` nearest trained cells as (d2r, cid) structs in
+    * (rounded L2² asc, cid asc) order — the cell ranking every
+    * assignment, residual encode and local-probe cell cut reads. */
+  private def rankedCells(cents: CentEntries, n: Int): Column =
+    slice(array_sort(distStructs(csLiteralFrom(cents), col("v"))), 1, n)
 
   /** Rounded L2² of every `src` row against every trained centroid —
     * (probe_id, cid, d2r): [[trainedAssignRanked]]'s distance frame
@@ -3365,13 +3542,19 @@ object Similarity {
 
   /** Search a persisted [[writeIvfIndex]] layout: probes assign to
     * their `nprobe` nearest stored centroids, then join the
-    * cell-partitioned index on the cell key — Spark's dynamic partition
-    * pruning drives the scan from the (tiny) probe-cell set, so a
-    * serving query physically reads only the consulted cells'
-    * partitions, not the corpus (PipelineSpec pins both the
-    * bit-for-bit parity with [[ivfSearchTrained]] and the DPP filter
-    * in the plan). Exactly the contract of the in-memory path:
-    * rounded-cosine desc, neighbor asc, top-k per probe. */
+    * cell-partitioned index on the cell key, so a serving query
+    * physically reads only the consulted cells' partitions, not the
+    * corpus. How the scan is pruned depends on the probe frame, the
+    * rule every cell layout (flat, SQ8, IVF-BQ, IVF-PQ) follows. A
+    * LOCAL frame (a `Seq.toDF`, filtered or not) has its cells ranked
+    * on the driver and the scan gets a literal `cell IN (…)` filter,
+    * pruned at plan time ([[probedCellsOnly]]). Any other frame keeps
+    * Spark's dynamic partition pruning, driven from the (tiny)
+    * probe-cell side of the join. PipelineSpec pins the bit-for-bit
+    * parity with [[ivfSearchTrained]], the DPP filter in a
+    * distributed-probe plan, and the partitions a local probe reads.
+    * Exactly the contract of the in-memory path: rounded-cosine desc,
+    * neighbor asc, top-k per probe. */
   def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, k: Int, nprobe: Int = 1): DataFrame =
     searchIvfIndexImpl(spark, dir, probes, k, nprobe, None)
@@ -3440,7 +3623,7 @@ object Similarity {
     val pb = withNorm(probes).select(col("vec_id").as("probe_id"),
       col("v").as("pv"), col("nrm").as("pnrm"))
     pb.join(pcells, Seq("probe_id"))
-      .join(corpus,
+      .join(probedCellsOnly(corpus, probes, cents, nprobe),
         col("pcell") === col("cell") && col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
@@ -3519,8 +3702,8 @@ object Similarity {
   /** Serve maximum-inner-product top-k from a persisted
     * [[writeIvfSq8Index]] layout: probes assign to their `nprobe`
     * nearest stored centroids (same rounded-L2²/cid contract as the
-    * whole IVF family), the cell join prunes the scan to consulted
-    * partitions (DPP, as [[searchIvfIndex]]), and each candidate
+    * whole IVF family), the scan is pruned to the consulted
+    * partitions ([[searchIvfIndex]]'s rule), and each candidate
     * scores round(scale · ⟨p, q⟩, 6) — one codegen'd sequential dot
     * over the int codes widened to double, one multiply; the corpus-
     * side full-precision vectors are never read because the layout
@@ -3577,7 +3760,7 @@ object Similarity {
       .select(col("probe_id"), col("cid").as("pcell"))
     val pb = probes.select(col("vec_id").as("probe_id"), col("v").as("pv"))
     pb.join(pcells, Seq("probe_id"))
-      .join(idx,
+      .join(probedCellsOnly(idx, probes, cents, nprobe),
         col("pcell") === col("cell") && col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         round(col("scale") *

@@ -1040,17 +1040,6 @@ object TextAnalysis {
     else None
   }
 
-  /** Union of the shards' tombstones, or None when no shard ever
-    * deleted (plans unchanged for delete-free layouts). Each shard's
-    * table is canonical — [[deleteFromInvertedIndex]] merges on write
-    * — and a doc lives wholly in one shard, so the union needs no
-    * dedup shuffle before the stats aggregate. */
-  private def unionTombstones(spark: org.apache.spark.sql.SparkSession,
-      dirs: Seq[String]): Option[DataFrame] = {
-    val ts = dirs.flatMap(shardTombstones(spark, _))
-    if (ts.isEmpty) None else Some(ts.reduce(_.unionByName(_)))
-  }
-
   /** One opened [[writeInvertedIndex]] shard: its directory and the
     * [[IndexSnapshot]] of its current generation, checked against the
     * serve's bucketing (serving at a different bucketing than the
@@ -1079,7 +1068,11 @@ object TextAnalysis {
     sh.snap.data[java.lang.Boolean]("tombstones")(
       Boolean.box(shardTombstones(spark, sh.dir).isDefined))
 
-  /** [[unionTombstones]] over opened shards. */
+  /** Union of the opened shards' tombstones, or None when no shard
+    * ever deleted (plans unchanged for delete-free layouts). Each
+    * shard's table is canonical — [[deleteFromInvertedIndex]] merges
+    * on write — and a doc lives wholly in one shard, so the union
+    * needs no dedup before a mask or the stats aggregate. */
   private def openTombstones(spark: org.apache.spark.sql.SparkSession,
       shards: Seq[Shard]): Option[DataFrame] = {
     val ts = shards.filter(tombstoned(spark, _))
@@ -1119,14 +1112,18 @@ object TextAnalysis {
     * lexical-overlap view serving COMPOSITIONS (hybrid RRF from
     * indexes) read: one row per (doc, term) by construction, with
     * tombstoned docs anti-joined out exactly as in the BM25 serve, so
-    * a composition can never resurrect a deleted document. */
+    * a composition can never resurrect a deleted document. The dir
+    * opens as the BM25 serve opens it: its sidecar must say
+    * `layout=inverted`, and the postings schema and tombstone presence
+    * come from the index's snapshot, so a warm call infers nothing. */
   private[operators] def maskedPostingPairs(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val post = spark.read.parquet(s"$dir/postings")
+    val sh = Shard(dir, IndexSnapshot.open(spark, dir,
+      "layout" -> "inverted", "fmt" -> "1"))
+    val post = shardTable(spark, sh, "postings")
       .select(col("doc_id"), col("term"))
-    unionTombstones(spark, Seq(dir))
-      .map(t => post.join(
-        broadcast(t.select(col("doc_id")).distinct()),
+    openTombstones(spark, Seq(sh))
+      .map(t => post.join(broadcast(t.select(col("doc_id"))),
         Seq("doc_id"), "left_anti"))
       .getOrElse(post)
   }
@@ -1201,7 +1198,7 @@ object TextAnalysis {
     * bit-identical to one index over the union corpus (PipelineSpec
     * pins it; the gated twin shares text_bm25's oracle). Every shard's
     * postings scan keeps its own static bucket pruning; the union adds
-    * no shuffle before the per-term df aggregate. At 100 TB this is
+    * no shuffle before the per-term df count. At 100 TB this is
     * the difference between re-indexing the corpus per ingest batch
     * and indexing only the new batch. */
   def searchInvertedIndexShards(spark: org.apache.spark.sql.SparkSession,
@@ -1233,7 +1230,11 @@ object TextAnalysis {
     val tf = tombs.map(tb => tf0.join(broadcast(tb.select(col("doc_id"))),
         Seq("doc_id"), "left_anti"))
       .getOrElse(tf0)
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    // df is a window count over the masked postings in the scoring
+    // pass itself: one postings scan, where an aggregate broadcast back
+    // into the scoring join would read them twice.
+    val byTerm = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("term"))
     val avgdl = totDl.cast("double") / nDocs.cast("double")
     val idf = log(lit(1.0) +
       (nDocs.cast("double") - col("df").cast("double") + lit(0.5)) /
@@ -1241,7 +1242,7 @@ object TextAnalysis {
     val weight = idf * (col("tf").cast("double") * lit(k1 + 1.0)) /
       (col("tf").cast("double") +
         lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
-    tf.join(broadcast(df), "term")
+    tf.withColumn("df", count(lit(1)).over(byTerm))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"),
         sum(round(weight, 6).cast("decimal(18,6)")).cast("double").as("score"))

@@ -1522,6 +1522,37 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("BM25 index serve reads its postings once") {
+    // df is counted in the scoring pass, so the executed plan scans the
+    // postings once — with and without tombstones to mask. Scores stay
+    // equal to the corpus scan over the live documents.
+    import graft.operators.TextAnalysis
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val terms = Seq("hash", "join", "spark")
+    val helper = new AdaptiveSparkPlanHelper {}
+    withTempDir("graft_inv_once") { dir =>
+      TextAnalysis.writeInvertedIndex(docs, dir, 8)
+      def check(leg: String, live: org.apache.spark.sql.DataFrame): Unit = {
+        val served = TextAnalysis.searchInvertedIndex(spark, dir, terms, 8)
+        val got = served.collect().toSet
+        assert(got.nonEmpty && got === TextAnalysis.bm25(live, terms)
+          .collect().toSet, s"$leg: index serve differs from the corpus scan")
+        val scans = helper.collect(served.queryExecution.executedPlan) {
+          case f: FileSourceScanExec
+              if f.relation.location.rootPaths
+                .exists(_.toString.endsWith("/postings")) => f
+        }
+        assert(scans.size === 1,
+          s"$leg: the serve scans the postings ${scans.size} times")
+      }
+      check("build", docs)
+      val dead = docs.filter($"doc_id" % 7 === 0).select($"doc_id")
+      TextAnalysis.deleteFromInvertedIndex(spark, dead, dir)
+      check("delete", docs.join(dead, Seq("doc_id"), "left_anti"))
+    }
+  }
+
   test("ivfCellStats: totals reconcile and a skewed corpus reads as imbalanced") {
     import graft.operators.Similarity
     val vecs = Similarity.vectors(Tables.embeddings(spark, sfDir))
@@ -1645,6 +1676,85 @@ class PipelineSpec extends SparkSpec {
       val plan = served.queryExecution.executedPlan.toString
       assert(plan.toLowerCase.contains("dynamicpruning"),
         "code scan lost its dynamic partition pruning")
+    }
+  }
+
+  test("persisted cell layouts: a local-probe serve reads only its probed " +
+      "cells and equals the distributed-probe serve") {
+    // A probe frame built on the driver (a local relation) is served with
+    // its probed cells as a literal partition filter; a probe frame read
+    // from files keeps the broadcast joins and DPP. Both must return the
+    // same rows bit for bit, and the local serve's stored scan must read
+    // exactly the probed partitions: one probe at nprobe 2 consults two
+    // distinct cells. Checked on the build, after an append, and after a
+    // delete, for each cell-partitioned layout.
+    import graft.operators.Similarity
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    val vecs = Similarity.vectors(Tables.embeddings(spark, sfDir))
+      .select($"vec_id", $"v")
+    val cents = Similarity.kmeansTrain(vecs, 8, 1)
+    val (base, batch) = (vecs.filter($"vec_id" % 4 =!= 1),
+      vecs.filter($"vec_id" % 4 === 1))
+    def local(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    val oneProbe = vecs.filter($"vec_id" === 3)
+    val probes = vecs.filter($"vec_id" < 40 && $"vec_id" % 9 === 2)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def partitionsRead(served: DataFrame, table: String): Seq[Long] =
+      helper.collect(served.queryExecution.executedPlan) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths
+              .exists(_.toString.endsWith(s"/$table")) =>
+          f.metrics("numPartitions").value
+      }
+    case class Layout(name: String, table: String, write: String => Unit,
+        append: String => Unit, serve: (String, DataFrame) => DataFrame)
+    val layouts = Seq(
+      Layout("ivf_flat", "index", Similarity.writeIvfIndex(base, cents, _),
+        Similarity.appendIvfIndex(spark, batch, _),
+        Similarity.searchIvfIndex(spark, _, _, 3, nprobe = 2)),
+      Layout("ivf_sq8", "index", Similarity.writeIvfSq8Index(base, cents, _),
+        Similarity.appendIvfSq8Index(spark, batch, _),
+        Similarity.searchIvfSq8Index(spark, _, _, 3, nprobe = 2)),
+      Layout("ivf_bq", "codes", Similarity.writeIvfBqIndex(base, cents, _),
+        Similarity.appendIvfBqIndex(spark, batch, _),
+        Similarity.searchIvfBqIndex(spark, _, vecs, _, k = 3, nprobe = 2)),
+      Layout("ivf_pq", "codes",
+        Similarity.writeIvfPqIndex(base, _, quantizer = Some(vecs)),
+        Similarity.appendIvfPqIndex(spark, batch, _),
+        Similarity.searchIvfPqIndex(spark, _, vecs, _, 3, nprobe = 2)))
+    layouts.foreach { l =>
+      withTempDir(s"graft_local_${l.name}") { dir =>
+        def check(leg: String): Array[org.apache.spark.sql.Row] = {
+          val served = l.serve(dir, local(oneProbe))
+          val got = served.collect()
+          val want = l.serve(dir, oneProbe).collect()
+          assert(got.nonEmpty && got.toSet === want.toSet,
+            s"${l.name} $leg: the local-probe serve differs from the " +
+              "distributed-probe serve")
+          val read = partitionsRead(served, l.table)
+          assert(read.nonEmpty, s"${l.name} $leg: no scan of ${l.table}")
+          assert(read.max === 2, s"${l.name} $leg: a one-probe nprobe-2 " +
+            s"serve read ${read.max} cell partitions; it probes 2")
+          assert(l.serve(dir, local(probes)).collect().toSet ===
+            l.serve(dir, probes).collect().toSet,
+            s"${l.name} $leg: local and distributed multi-probe serves differ")
+          got
+        }
+        l.write(dir)
+        val onDisk = new java.io.File(s"$dir/${l.table}").listFiles()
+          .count(_.getName.startsWith("cell="))
+        assert(onDisk > 2, s"${l.name}: fixture holds $onDisk cells")
+        check("build")
+        l.append(dir)
+        val victim = check("append").head.getAs[Long]("neighbor_id")
+        Similarity.deleteFromIvfIndex(spark, Seq(victim).toDF("vec_id"), dir)
+        assert(!check("delete").exists(_.getAs[Long]("neighbor_id") == victim),
+          s"${l.name}: a deleted neighbor was served")
+      }
     }
   }
 

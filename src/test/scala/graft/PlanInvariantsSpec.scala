@@ -360,10 +360,10 @@ class PlanInvariantsSpec extends SparkSpec {
           name -> (built, collected)
         }.toMap
         info(s"serve jobs (build, collect): $counts")
-        assert(counts === Map("ann" -> (0, 6), "bm25" -> (0, 4),
-          "phrase" -> (0, 3), "bq" -> (0, 6), "ivf_bq" -> (0, 6),
+        assert(counts === Map("ann" -> (0, 4), "bm25" -> (0, 3),
+          "phrase" -> (0, 3), "bq" -> (0, 5), "ivf_bq" -> (0, 5),
           "ivf_flat" -> (0, 4), "ivf_sq8" -> (0, 4), "imi" -> (0, 4),
-          "imi_pq" -> (0, 8)))
+          "imi_pq" -> (0, 7)))
       } finally sc.removeSparkListener(listener)
     }
   }
