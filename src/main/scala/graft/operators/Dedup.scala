@@ -586,15 +586,15 @@ object Dedup {
     * merge-compatible filters and a mis-parameterized serve fails
     * loudly instead of probing disjoint hash spaces. */
   def writeBloomIndex(history: DataFrame, dir: String, shards: Int = 8,
-      expectedItems: Long = 1000000L, fpp: Double = 0.01): Unit = {
-    shardedBloomFilters(history, shards, expectedItems, fpp)
-      .toDF("shard", "filter")
-      .write.mode("overwrite").parquet(dir)
-    IndexMeta.write(history.sparkSession, dir,
-      "layout" -> "bloom", "shards" -> shards.toString,
-      "expectedItems" -> expectedItems.toString, "fpp" -> fpp.toString,
-      "fmt" -> "1")
-  }
+      expectedItems: Long = 1000000L, fpp: Double = 0.01): Unit =
+    Bloom.build(history.sparkSession, dir, "shards" -> shards.toString,
+        "expectedItems" -> expectedItems.toString, "fpp" -> fpp.toString)(
+      Seq("filters" -> shardedBloomFilters(history, shards, expectedItems,
+        fpp).toDF("shard", "filter")))
+
+  // fmt 2 moved the filter rows from the dir root into `filters/`.
+  private val Bloom = Layout(Seq("layout" -> "bloom", "fmt" -> "2"),
+    Seq("shards", "expectedItems", "fpp"), Seq("filters" -> Nil))
 
   /** APPEND a history batch to a stored [[writeBloomIndex]] layout:
     * the batch's per-shard filters land beside the old rows
@@ -609,16 +609,11 @@ object Dedup {
     * unchanged. */
   def appendBloomIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, dir: String): Unit = {
-    val meta = IndexMeta.read(spark, dir)
-    require(meta.get("layout").contains("bloom"),
-      s"$dir is not a bloom layout")
-    require(meta.get("fmt").contains("1"),
-      s"bloom layout at $dir has fmt=${meta.get("fmt")} but this " +
-        "reader serves fmt=1 — rebuild with writeBloomIndex")
-    shardedBloomFilters(batch, meta("shards").toInt,
-      meta("expectedItems").toLong, meta("fpp").toDouble)
-      .toDF("shard", "filter")
-      .write.mode("append").parquet(dir)
+    val open = Bloom.open(spark, dir)
+    open.append("filters", shardedBloomFilters(batch,
+      open.param("shards").toInt, open.param("expectedItems").toLong,
+      open.param("fpp").toDouble).toDF("shard", "filter"),
+      "appendBloomIndex")
   }
 
   /** Serve the cross-run exact dedup from a stored [[writeBloomIndex]]
@@ -628,17 +623,12 @@ object Dedup {
   def bloomPrefilterFromIndex(spark: org.apache.spark.sql.SparkSession,
       incoming: DataFrame, history: DataFrame, dir: String): DataFrame = {
     import spark.implicits._
-    val meta = IndexMeta.read(spark, dir)
-    require(meta.get("layout").contains("bloom"),
-      s"$dir is not a bloom layout")
-    require(meta.get("fmt").contains("1"),
-      s"bloom layout at $dir has fmt=${meta.get("fmt")} but this " +
-        "reader serves fmt=1 — rebuild with writeBloomIndex")
+    val open = Bloom.open(spark, dir)
     bloomProbeSharded(
-      spark.read.parquet(dir)
+      open.table("filters")
         .select(col("shard").cast("int"), col("filter"))
         .as[(Int, Array[Byte])],
-      incoming, history, meta("shards").toInt)
+      incoming, history, open.param("shards").toInt)
   }
 
   /** The distributed per-shard filter table behind
@@ -712,14 +702,25 @@ object Dedup {
     * [[lshIncrementalPairs]] over the same split. */
   def writeLshIndex(sigs: DataFrame, dir: String,
       bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand,
-      sep: String = ""): Unit = {
+      sep: String = ""): Unit =
+    Lsh.build(sigs.sparkSession, dir, banding(bands, rowsPerBand, sep): _*)(
+      Seq("buckets" -> lshRows(sigs, bands, rowsPerBand, sep)))
+
+  // fmt 2 moved the bucket rows from the dir root into `buckets/` and
+  // added the `layout` key.
+  private val Lsh = Layout(Seq("layout" -> "lsh", "fmt" -> "2"),
+    Seq("bands", "rowsPerBand", "sep"), Seq("buckets" -> Nil))
+
+  private def banding(bands: Int, rowsPerBand: Int,
+      sep: String): Seq[(String, String)] =
+    Seq("bands" -> bands.toString, "rowsPerBand" -> rowsPerBand.toString,
+      "sep" -> sep)
+
+  /** The (doc_id, bucket) index rows of `sigs`. */
+  private def lshRows(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+      sep: String): DataFrame =
     sigs.select(col("doc_id"),
       bandBuckets(bands, rowsPerBand, sep).as("bucket"))
-      .write.mode("overwrite").parquet(dir)
-    IndexMeta.write(sigs.sparkSession, dir, "bands" -> bands.toString,
-      "rowsPerBand" -> rowsPerBand.toString, "sep" -> sep,
-      "fmt" -> "1")
-  }
 
   /** APPEND a batch of base documents to a stored [[writeLshIndex]]
     * layout — the add half of the dedup index lifecycle (the base
@@ -736,41 +737,27 @@ object Dedup {
     * live copy after the append. */
   def appendLshIndex(spark: org.apache.spark.sql.SparkSession,
       newSigs: DataFrame, dir: String, bands: Int = DefaultBands,
-      rowsPerBand: Int = DefaultRowsPerBand, sep: String = ""): Unit = {
-    IndexMeta.requireMatch(spark, dir, "fmt" -> "1",
-      "bands" -> bands.toString,
-      "rowsPerBand" -> rowsPerBand.toString, "sep" -> sep)
-    newSigs.select(col("doc_id"),
-      bandBuckets(bands, rowsPerBand, sep).as("bucket"))
-      .write.mode("append").parquet(dir)
-  }
+      rowsPerBand: Int = DefaultRowsPerBand, sep: String = ""): Unit =
+    Lsh.open(spark, dir, banding(bands, rowsPerBand, sep): _*)
+      .append("buckets", lshRows(newSigs, bands, rowsPerBand, sep),
+        "appendLshIndex")
 
   /** DELETE documents from a stored [[writeLshIndex]] base — retracted
     * or GC'd base docs must stop producing candidate pairs against
     * future shards. Index rows are per-doc independent (a doc's
     * buckets derive from its signature alone), so dropping its rows
     * is EXACTLY equivalent to having built the index without it
-    * (spec-pinned bit-for-bit); the rewrite stages to a sibling dir
-    * and swaps via [[FsOps.swapInto]] (rename-aside, every filesystem
-    * result checked), carrying the [[IndexMeta]] sidecar along —
-    * the [[Similarity.compactIvfIndex]] commit discipline. The
-    * deletion batch broadcasts; one linear pass over the index. */
+    * (spec-pinned bit-for-bit); the rewrite is a staged replace of the
+    * `buckets/` table ([[OpenedLayout.replace]]: rename-aside, every
+    * filesystem result checked). The deletion batch broadcasts; one
+    * linear pass over the index. */
   def deleteFromLshIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
-    val meta = IndexMeta.read(spark, dir)
+    val open = Lsh.open(spark, dir)
     val del = ids.select(col("doc_id").cast("long").as("doc_id"))
       .distinct()
-    // The LSH layout stages to a SIBLING (the whole dir is the swap
-    // unit), so the entry sweep is a targeted delete of the sibling
-    // rather than FsOps.clearStaging over the dir's children.
-    val staging = s"${dir.stripSuffix("/")}_next"
-    FsOps.deleteIfExists(FsOps.fsOf(spark, dir),
-      new org.apache.hadoop.fs.Path(staging))
-    spark.read.parquet(dir)
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(staging)
-    IndexMeta.write(spark, staging, meta.toSeq: _*)
-    FsOps.swapInto(FsOps.fsOf(spark, dir), staging, dir)
+    open.replace("buckets" -> open.table("buckets")
+      .join(broadcast(del), Seq("doc_id"), "left_anti"))
   }
 
   /** Cross-side LSH candidates of a NEW shard against a stored
@@ -790,14 +777,10 @@ object Dedup {
   def lshIncrementalFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newSigs: DataFrame, bands: Int = DefaultBands,
       rowsPerBand: Int = DefaultRowsPerBand, sep: String = ""): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "fmt" -> "1",
-      "bands" -> bands.toString,
-      "rowsPerBand" -> rowsPerBand.toString, "sep" -> sep)
-    val base = spark.read.parquet(dir)
-      .select(col("doc_id").as("base_id"), col("bucket"))
-    newSigs
-      .select(col("doc_id").as("new_id"),
-        bandBuckets(bands, rowsPerBand, sep).as("bucket"))
+    val base = Lsh.open(spark, dir, banding(bands, rowsPerBand, sep): _*)
+      .table("buckets").select(col("doc_id").as("base_id"), col("bucket"))
+    lshRows(newSigs, bands, rowsPerBand, sep)
+      .select(col("doc_id").as("new_id"), col("bucket"))
       .join(base, Seq("bucket"))
       .select(col("new_id"), col("base_id"))
       .distinct()
@@ -1271,12 +1254,14 @@ object Dedup {
       window: Int = 16, winnowW: Int = 8): Unit = {
     require(winnowW >= 1 && winnowW <= window,
       s"winnowW $winnowW must be in [1, window=$window]")
-    winnowFps(history, window, winnowW)
-      .write.mode("overwrite").parquet(s"$dir/fps")
-    IndexMeta.write(history.sparkSession, dir,
-      "layout" -> "substring_fp", "window" -> window.toString,
-      "winnowW" -> winnowW.toString, "fmt" -> "1")
+    SubstringFp.build(history.sparkSession, dir, "window" -> window.toString,
+      "winnowW" -> winnowW.toString)(
+      Seq("fps" -> winnowFps(history, window, winnowW)))
   }
+
+  private val SubstringFp = Layout(
+    Seq("layout" -> "substring_fp", "fmt" -> "1"), Seq("window", "winnowW"),
+    Seq("fps" -> Nil))
 
   /** APPEND a history batch to a stored [[writeSubstringFpIndex]]
     * layout: the batch fingerprints under the SIDECAR's (window,
@@ -1290,14 +1275,9 @@ object Dedup {
     * span_id), so the serve is idempotent under retry. */
   def appendSubstringFpIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "substring_fp",
-      "fmt" -> "1")
-    val meta = IndexMeta.read(spark, dir)
-    val rows = winnowFps(batch, meta("window").toInt,
-      meta("winnowW").toInt)
-    FsOps.requireAppendColumns(spark, s"$dir/fps", rows,
-      "appendSubstringFpIndex")
-    rows.write.mode("append").parquet(s"$dir/fps")
+    val open = SubstringFp.open(spark, dir)
+    open.append("fps", winnowFps(batch, open.param("window").toInt,
+      open.param("winnowW").toInt), "appendSubstringFpIndex")
   }
 
   /** [[substringSpansAgainst]] served from a stored
@@ -1321,18 +1301,16 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, incoming: DataFrame,
       history: DataFrame, dir: String, minSpan: Int = 40,
       maxBucket: Int = 1 << 20): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "substring_fp",
-      "fmt" -> "1")
-    val meta = IndexMeta.read(spark, dir)
-    val window = meta("window").toInt
-    val winnowW = meta("winnowW").toInt
+    val open = SubstringFp.open(spark, dir)
+    val window = open.param("window").toInt
+    val winnowW = open.param("winnowW").toInt
     requireSpanBound(window, winnowW, minSpan)
     def bucketed(fps: DataFrame) =
       fps.select(struct(col("doc_id"), col("pos")).as("m"),
         struct(col("h"), col("win")).as("bucket"))
     val matched = saltedKeyedCross(
         bucketed(winnowFps(incoming, window, winnowW)),
-        bucketed(spark.read.parquet(s"$dir/fps")), maxBucket)
+        bucketed(open.table("fps")), maxBucket)
       .select(col("m_a.doc_id").as("id_a"), col("m_b.doc_id").as("id_b"),
         (col("m_a.pos") - col("m_b.pos")).as("delta"),
         col("m_a.pos").as("pos_a"))

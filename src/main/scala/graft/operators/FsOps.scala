@@ -36,15 +36,17 @@ private[graft] object FsOps {
 
   /** Sweep crash-left STAGING children out of an index layout dir.
     * Every staged rewrite in this engine writes to a child named
-    * `_staging`, `*_next`, `*_compacting`, or `*_empty` before its
-    * commit rename — a crash between the staging write and the swap
-    * leaves that child behind. Such leftovers are correctness-inert
-    * (serves read named live subpaths) but leak storage and make the
-    * layout dir non-canonical for anything inventorying it, so every
-    * op that stages calls this at ENTRY, before its own staging
-    * write. Single-writer discipline is assumed (as everywhere in the
-    * commit paths): sweeping while another writer is mid-stage would
-    * delete its staging.
+    * `*_next`, `*_compacting` or `*_empty` before its commit rename,
+    * and the chunk store materializes its chunk table to
+    * `chunks_scratch` before writing from it — a crash between the
+    * staging write and the swap (or the scratch drop) leaves that child
+    * behind. Such leftovers are correctness-inert (serves read named
+    * live subpaths) but leak storage and make the layout dir
+    * non-canonical for anything inventorying it, so every write leg
+    * calls this at ENTRY ([[OpenedLayout.commit]], [[Layout.build]]),
+    * before its own staging write. Single-writer discipline is assumed
+    * (as everywhere in the commit paths): sweeping while another writer
+    * is mid-stage would delete its staging.
     *
     * Two children are deliberately NOT swept:
     *   - `*_old` — [[swapInto]]'s rename-aside, and the documented
@@ -59,11 +61,12 @@ private[graft] object FsOps {
     *     the only copy of pending state). Deleting it would convert a
     *     recoverable crash into data loss, so the sweep fails loudly
     *     and asks for manual recovery instead.
-    * `_staging` (the exact name) is always safe: it is a scratch
-    * materialization feeding append-mode writes into live tables,
-    * never a swap source, so it is never the sole copy of anything.
+    * `*_scratch` children and `_staging` (the exact name, which older
+    * builds used and Spark's file source hides) are always safe: they
+    * are scratch materializations feeding writes into live tables,
+    * never a swap source, so they are never the sole copy of anything.
     * No live table ever matches these names — they are reserved
-    * staging suffixes. */
+    * staging names. */
   def clearStaging(fs: FileSystem, dir: String): Unit = {
     val d = new Path(dir)
     if (fs.exists(d)) {
@@ -71,7 +74,8 @@ private[graft] object FsOps {
       val names = children.map(_.getPath.getName).toSet
       children.foreach { st =>
         val n = st.getPath.getName
-        if (n == "_staging") deleteIfExists(fs, st.getPath)
+        if (n == "_staging" || n.endsWith("_scratch"))
+          deleteIfExists(fs, st.getPath)
         else Seq("_next", "_compacting", "_empty")
           .find(n.endsWith).foreach { suf =>
             val base = n.stripSuffix(suf)
@@ -102,30 +106,33 @@ private[graft] object FsOps {
     checkedRename(fs, stagingPath, livePath)
     deleteIfExists(fs, old)
   }
-  /** Loud schema contract on the metadata-carrying append legs (the
-    * NB model, the substring-fp layout; the vector layouts check
-    * [[requireColumns]] against their opened schema — every layout
-    * that persists ALL input columns so metadata rides beside the
-    * row for the filtered serves): the frame about to be appended must
-    * carry exactly the stored table's column set. A parquet append
-    * with a different set would not fail — it would leave
-    * mixed-schema files behind, and the filtered serve would read
-    * nulls (or miss the predicate column entirely) on half the index.
-    * Checked BEFORE the drained-placeholder sweep so a fully-drained
-    * table's schema (preserved by the zero-row placeholder) still
-    * gates the batch. Skipped only when the table does not exist at
-    * all (nothing to diverge from). */
-  def requireAppendColumns(
-      spark: org.apache.spark.sql.SparkSession, tableDir: String,
-      batch: DataFrame, leg: String): Unit = {
-    val fs = fsOf(spark, tableDir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(tableDir)))
-      requireColumns(spark.read.parquet(tableDir).schema, batch, leg)
+  /** Whether the parquet table at `dir` holds any row, read from its
+    * files' footers on the driver (no Spark job); false when absent. */
+  def hasRows(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".") && {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount > 0 finally r.close()
+      }
+    }
   }
 
-  /** [[requireAppendColumns]] against an already-known stored schema
-    * (an opened [[IndexSnapshot]] holds it), so the gate runs no
-    * schema-inference job. */
+  /** Loud schema contract on every append leg ([[OpenedLayout.append]]
+    * and the NB model's batch overwrite gate through it against the
+    * schema their opened layout holds): the frame about to be appended
+    * must carry exactly the stored table's column set. Layouts persist
+    * ALL input columns so metadata rides beside the row for the
+    * filtered serves, and a parquet append with a different set would
+    * not fail — it would leave mixed-schema files behind, and the
+    * filtered serve would read nulls (or miss the predicate column
+    * entirely) on half the index. The vector append checks it BEFORE
+    * its drained-placeholder sweep, so a fully-drained table's schema
+    * (preserved by the zero-row placeholder) still gates the batch. */
   def requireColumns(storedSchema: org.apache.spark.sql.types.StructType,
       batch: DataFrame, leg: String): Unit = {
     // Name AND type, order-insensitive: a batch with matching names

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
 /** One-row JSON sidecar for persisted index layouts (`_graft_meta
@@ -69,14 +70,15 @@ private[graft] object IndexMeta {
       expected: (String, String)*): Unit =
     check(dir, read(spark, dir), expected)
 
-  /** [[requireMatch]] against an already-read sidecar. */
+  /** [[requireMatch]] against an already-read sidecar; `hint` names
+    * what a sidecar of the expected kind records. */
   def check(dir: String, got: Map[String, String],
-      expected: Seq[(String, String)]): Unit =
+      expected: Seq[(String, String)], hint: String = ""): Unit =
     expected.foreach { case (k, v) =>
       require(got.get(k).contains(v),
         s"index at $dir was built with $k=" +
           s"${got.getOrElse(k, "<absent>")} but the serve requested " +
-          s"$k=$v — serve with the build config or rebuild the index")
+          s"$k=$v$hint — serve with the build config or rebuild the index")
     }
 }
 
@@ -147,13 +149,10 @@ private[graft] object IndexSnapshot {
     def data[T <: AnyRef](key: String)(f: => T): T = d.fold(f)(_(key)(f))
   }
 
-  /** The sidecar of `dir` checked against `expected` (the
-    * [[IndexMeta.requireMatch]] contract), with the memoized state of
-    * its current generation. */
+  /** The memoized state of the generation `meta`, the sidecar just
+    * read from `dir`, names. */
   def open(spark: SparkSession, dir: String,
-      expected: (String, String)*): Snapshot = {
-    val meta = IndexMeta.read(spark, dir)
-    IndexMeta.check(dir, meta, expected)
+      meta: Map[String, String]): Snapshot =
     (meta.get(QuantizerGen), meta.get(DataGen)) match {
       case (Some(qt), Some(dt)) =>
         val p = new Path(dir)
@@ -172,7 +171,6 @@ private[graft] object IndexSnapshot {
         new Snapshot(meta, Some(e.quantizer), Some(e.data))
       case _ => new Snapshot(meta, None, None)
     }
-  }
 
   /** Drops every memoized generation; the next serve of each index
     * derives its values afresh (the cold-cache baseline in tests). */
@@ -194,4 +192,167 @@ private[graft] object IndexSnapshot {
           (meta + (DataGen -> token())).toSeq.sortBy(_._1): _*)
     }
   }
+}
+
+/** One persisted index layout: the fixed fields its sidecar records
+  * and every leg checks (`layout` first, then `fmt` and any fixed
+  * shape such as BQ's `bits`), the build parameters its sidecar must
+  * also record, its tables with their partition keys, and the schema
+  * of its tombstone table when it has one. Every table sits in a
+  * subdir: a layout's root holds only its sidecar and tombstones, which
+  * must not sit inside a parquet table's own listing.
+  *
+  * The three shared write legs — [[build]], [[OpenedLayout.append]]
+  * and [[OpenedLayout.replace]] — and the one open are all that reads
+  * or writes a sidecar; a leg only one layout has composes them inside
+  * [[OpenedLayout.commit]]. */
+private[graft] final case class Layout(sidecar: Seq[(String, String)],
+    params: Seq[String], tables: Seq[(String, Seq[String])],
+    tombstones: Option[StructType] = None) {
+  def name: String = sidecar.head._2
+
+  /** The partition keys of `table`; none for a table not listed. */
+  def keys(table: String): Seq[String] =
+    tables.collectFirst { case (`table`, k) => k }.getOrElse(Nil)
+
+  /** Open `dir`'s current generation as this layout, failing loudly
+    * unless its sidecar records the fixed fields, the given build
+    * parameters and every declared parameter key. */
+  def open(spark: SparkSession, dir: String,
+      params: (String, String)*): OpenedLayout =
+    openRead(spark, dir, IndexMeta.read(spark, dir), params)
+
+  private[operators] def openRead(spark: SparkSession, dir: String,
+      meta: Map[String, String],
+      params: Seq[(String, String)]): OpenedLayout = {
+    val records = (sidecar.map(_._1) ++ this.params).mkString(", ")
+    IndexMeta.check(dir, meta, sidecar ++ params,
+      s" (a $name sidecar records $records)")
+    this.params.foreach(k => require(meta.contains(k),
+      s"index at $dir has no `$k` key in its sidecar — not a $name " +
+        "layout (or a sidecar copied from another layout); rebuild it"))
+    new OpenedLayout(spark, dir, this, IndexSnapshot.open(spark, dir, meta))
+  }
+
+  /** The build leg: sweep crash-left staging and the previous
+    * generation's tombstones (a rebuild supersedes prior deletions),
+    * run `tables` (which may first write quantizer tables of its own),
+    * write each returned table partitioned by its keys, then the
+    * sidecar with fresh generation tokens ([[IndexSnapshot]]). */
+  def build(spark: SparkSession, dir: String, params: (String, String)*)(
+      tables: => Seq[(String, DataFrame)]): Unit = {
+    require(this.params.forall(k => params.exists(_._1 == k)),
+      s"a $name build must record ${this.params.mkString(", ")}")
+    val fs = FsOps.fsOf(spark, dir)
+    FsOps.clearStaging(fs, dir)
+    FsOps.deleteIfExists(fs, new Path(dir, "tombstones"))
+    tables.foreach { case (t, rows) =>
+      rows.write.mode("overwrite").partitionBy(keys(t): _*)
+        .parquet(s"$dir/$t")
+    }
+    IndexMeta.write(spark, dir,
+      sidecar ++ params ++ IndexSnapshot.buildTokens(): _*)
+  }
+}
+
+private[graft] object Layout {
+  /** Open `dir` as whichever of `layouts` its sidecar names. */
+  def openAny(spark: SparkSession, dir: String,
+      layouts: Seq[Layout]): OpenedLayout = {
+    val meta = IndexMeta.read(spark, dir)
+    val name = meta.getOrElse("layout", "<absent>")
+    val layout = layouts.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"index at $dir has " +
+        s"layout=$name; this leg applies to " +
+        layouts.map(_.name).sorted.mkString(", ")))
+    layout.openRead(spark, dir, meta, Nil)
+  }
+}
+
+/** One opened generation of a persisted [[Layout]]: `dir`'s sidecar,
+  * checked at open, and the values every leg derives from the stored
+  * tables, held by the index's [[IndexSnapshot]] so each is derived
+  * once per generation:
+  *  - each table's schema (quantizer-keyed: a write rewrites rows,
+  *    never columns), so a table reads with no schema-inference job
+  *    and an append gates on it;
+  *  - tombstone presence (data-keyed), read from the tombstone
+  *    table's parquet footers, so it costs no job either.
+  * On an index already opened since its last write, building a serve
+  * frame therefore runs no Spark job.
+  *
+  * Write legs run inside [[commit]]: crash-left staging is swept at
+  * entry and a fresh data token is written after the leg's last data
+  * write, so a leg made of several writes (an append that also
+  * reconciles tombstones, a compaction) writes its token once, last. */
+private[graft] final class OpenedLayout private[operators] (
+    val spark: SparkSession, val dir: String, val layout: Layout,
+    snap: IndexSnapshot.Snapshot) {
+  private var depth = 0
+  private def fs = FsOps.fsOf(spark, dir)
+
+  def path(table: String): String = s"$dir/$table"
+
+  /** A build parameter the sidecar records. */
+  def param(key: String): String = snap.meta(key)
+
+  /** A value that changes only when the index is rebuilt. */
+  def quantizer[T <: AnyRef](key: String)(f: => T): T =
+    snap.quantizer(key)(f)
+
+  /** A value that changes with any write to the index. */
+  def data[T <: AnyRef](key: String)(f: => T): T = snap.data(key)(f)
+
+  def schema(table: String): StructType =
+    snap.quantizer(s"$table.schema")(spark.read.parquet(path(table)).schema)
+
+  /** `table` read with its held schema. */
+  def table(table: String): DataFrame =
+    spark.read.schema(schema(table)).parquet(path(table))
+
+  /** The tombstone table when it holds any row: never deleted, or
+    * drained, plans no mask. */
+  def tombstones: Option[DataFrame] =
+    layout.tombstones.filter(_ => data[java.lang.Boolean]("tombstones")(
+      Boolean.box(FsOps.hasRows(spark, path("tombstones")))))
+      .map(spark.read.schema(_).parquet(path("tombstones")))
+
+  /** Run the write leg `body`: sweep staging at entry, write a new data
+    * token after it. Nested commits write one token, at the end of the
+    * outermost. */
+  def commit[T](body: => T): T = {
+    if (depth == 0) FsOps.clearStaging(fs, dir)
+    depth += 1
+    val r = try body finally depth -= 1
+    if (depth == 0) IndexSnapshot.bumpData(spark, dir)
+    r
+  }
+
+  /** Fail unless `rows` carries exactly `table`'s stored column set
+    * and types ([[FsOps.requireColumns]]). */
+  def gate(table: String, rows: DataFrame, leg: String): Unit =
+    FsOps.requireColumns(schema(table), rows, leg)
+
+  /** The append leg: gate `rows` on the held schema, append them
+    * partitioned by the table's keys, then write a new data token. */
+  def append(table: String, rows: DataFrame, leg: String): Unit = commit {
+    gate(table, rows, leg)
+    rows.write.mode("append").partitionBy(layout.keys(table): _*)
+      .parquet(path(table))
+  }
+
+  /** The staged replace leg: write each table's new rows to
+    * `<table>_next`, then — every Spark action done — swap them in, in
+    * the given order, then write a new data token. */
+  def replace(tables: (String, DataFrame)*): Unit = commit {
+    tables.foreach { case (t, rows) =>
+      rows.write.mode("overwrite").partitionBy(layout.keys(t): _*)
+        .parquet(path(s"${t}_next"))
+    }
+    tables.foreach { case (t, _) => swap(s"${t}_next", t) }
+  }
+
+  /** Promote the staged child `staging` to `table` ([[FsOps.swapInto]]). */
+  def swap(staging: String, table: String): Unit =
+    FsOps.swapInto(fs, path(staging), path(table))
 }

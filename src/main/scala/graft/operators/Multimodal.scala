@@ -478,42 +478,44 @@ object Multimodal {
     * can never dedup against the stored ones, so it fails loudly. */
   def writeChunkStore(documents: DataFrame, dir: String, window: Int = 8,
       divisor: Int = 32): Unit = {
-    writeChunkLegs(documents, dir, window, divisor, "overwrite",
-      identity)
-    IndexMeta.write(documents.sparkSession, dir,
-      "layout" -> "chunk_store", "window" -> window.toString,
-      "divisor" -> divisor.toString, "fmt" -> "1")
+    val spark = documents.sparkSession
+    ChunkStore.build(spark, dir, "window" -> window.toString,
+        "divisor" -> divisor.toString) {
+      val (manifest, store) = chunkTables(documents, dir, window, divisor)
+      Seq("manifest" -> manifest, "store" -> store)
+    }
+    dropChunkScratch(spark, dir)
   }
 
+  private val ChunkStore = Layout(
+    Seq("layout" -> "chunk_store", "fmt" -> "1"), Seq("window", "divisor"),
+    Seq("manifest" -> Nil, "store" -> Nil))
+
   /** Shared build/append machinery: the chunk table (spans + payload)
-    * materializes ONCE to a staging dir — the per-byte window-hash
+    * materializes ONCE to `chunks_scratch` — the per-byte window-hash
     * digest work is the dominant cost, and the manifest and store legs
-    * are two separate write actions that would each replay it — then
-    * both legs derive from the re-read (the manifest leg column-prunes
-    * the payload away), and staging is removed. `storeFilter` lets the
-    * append leg drop already-stored hashes before payload ships. */
-  private def writeChunkLegs(documents: DataFrame, dir: String,
-      window: Int, divisor: Int, mode: String,
-      storeFilter: DataFrame => DataFrame): Unit = {
-    val spark = documents.sparkSession
-    FsOps.clearStaging(FsOps.fsOf(spark, dir), dir)
-    val staging = s"$dir/_staging"
+    * are two separate write actions that would each replay it — and
+    * both legs derive from the re-read: the manifest rows (the
+    * payload column-pruned away) and one store row per distinct hash.
+    * The leg drops the scratch after its writes; a crash-left one is
+    * swept at the next leg's entry. */
+  private def chunkTables(documents: DataFrame, dir: String,
+      window: Int, divisor: Int): (DataFrame, DataFrame) = {
+    val scratch = s"$dir/chunks_scratch"
     cdcSpans(documents, window, divisor)
       .select(col("doc_id"), col("chunk_no"), col("chunk_hash"),
         expr("substring(text, cstart, chunk_len)").as("chunk"))
-      .write.mode("overwrite").parquet(staging)
-    val ch = spark.read.parquet(staging)
-    ch.select(col("doc_id"), col("chunk_no"), col("chunk_hash"))
-      .write.mode(mode).parquet(s"$dir/manifest")
-    storeFilter(
+      .write.mode("overwrite").parquet(scratch)
+    val ch = documents.sparkSession.read.parquet(scratch)
+    (ch.select(col("doc_id"), col("chunk_no"), col("chunk_hash")),
       ch.select(col("chunk_hash"), col("chunk"))
         .groupBy(col("chunk_hash")).agg(min(col("chunk")).as("chunk")))
-      .write.mode(mode).parquet(s"$dir/store")
-    // Checked staging cleanup: a silently-failed delete would leave
-    // the staging dir to shadow-collide with the next build's.
-    FsOps.deleteIfExists(FsOps.fsOf(spark, staging),
-      new org.apache.hadoop.fs.Path(staging))
   }
+
+  private def dropChunkScratch(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Unit =
+    FsOps.deleteIfExists(FsOps.fsOf(spark, dir),
+      new org.apache.hadoop.fs.Path(s"$dir/chunks_scratch"))
 
   /** Incrementally add a corpus batch to a [[writeChunkStore]] layout:
     * the batch's manifest rows append, but only chunks whose hash the
@@ -526,12 +528,16 @@ object Multimodal {
   def appendChunkStore(spark: org.apache.spark.sql.SparkSession,
       documents: DataFrame, dir: String, window: Int = 8,
       divisor: Int = 32): Unit = {
-    IndexMeta.requireMatch(spark, dir,
-      "layout" -> "chunk_store", "window" -> window.toString,
-      "divisor" -> divisor.toString, "fmt" -> "1")
-    val known = spark.read.parquet(s"$dir/store").select(col("chunk_hash"))
-    writeChunkLegs(documents, dir, window, divisor, "append",
-      _.join(known, Seq("chunk_hash"), "left_anti"))
+    val open = ChunkStore.open(spark, dir, "window" -> window.toString,
+      "divisor" -> divisor.toString)
+    val known = open.table("store").select(col("chunk_hash"))
+    open.commit {
+      val (manifest, store) = chunkTables(documents, dir, window, divisor)
+      open.append("manifest", manifest, "appendChunkStore")
+      open.append("store", store.join(known, Seq("chunk_hash"), "left_anti"),
+        "appendChunkStore")
+      dropChunkScratch(spark, dir)
+    }
   }
 
   /** DELETE documents from a [[writeChunkStore]] layout and sweep the
@@ -546,30 +552,21 @@ object Multimodal {
     *
     * Scale shape: the deletion batch broadcasts into the manifest
     * anti-join; the sweep is one hash-keyed semi-join of the store
-    * against the kept manifest's distinct hashes. Both rewrites stage
-    * to sibling dirs and swap via [[FsOps.swapInto]] (rename-aside,
-    * every filesystem result checked; all Spark actions complete
-    * before any mutation), the same commit discipline as
-    * [[Similarity.compactIvfIndex]]. */
+    * against the kept manifest's distinct hashes. Both rewrites are
+    * one staged replace ([[OpenedLayout.replace]]: rename-aside, every
+    * filesystem result checked; all Spark actions complete before any
+    * mutation), the manifest swapped in first. */
   def deleteDocsFromChunkStore(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "chunk_store",
-      "fmt" -> "1")
-    val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
+    val open = ChunkStore.open(spark, dir)
     val del = ids.select(col("doc_id").cast("long").as("doc_id"))
       .distinct()
-    val man = spark.read.parquet(s"$dir/manifest")
-    val keep = man.join(broadcast(del), Seq("doc_id"), "left_anti")
-    val manStaging = s"$dir/manifest_next"
-    keep.write.mode("overwrite").parquet(manStaging)
-    val storeStaging = s"$dir/store_next"
-    spark.read.parquet(s"$dir/store")
-      .join(keep.select(col("chunk_hash")).distinct(),
-        Seq("chunk_hash"), "left_semi")
-      .write.mode("overwrite").parquet(storeStaging)
-    FsOps.swapInto(fs, manStaging, s"$dir/manifest")
-    FsOps.swapInto(fs, storeStaging, s"$dir/store")
+    val keep = open.table("manifest")
+      .join(broadcast(del), Seq("doc_id"), "left_anti")
+    open.replace("manifest" -> keep,
+      "store" -> open.table("store")
+        .join(keep.select(col("chunk_hash")).distinct(),
+          Seq("chunk_hash"), "left_semi"))
   }
 
   /** Reassemble every document from the store and prove it byte-exact:
@@ -584,9 +581,9 @@ object Multimodal {
     * rebuilt — bounded by max doc size, the same envelope as parsing
     * it in the first place. */
   def reconstructFromStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    spark.read.parquet(s"$dir/manifest")
-      .join(spark.read.parquet(s"$dir/store"), Seq("chunk_hash"))
+      dir: String): DataFrame = {
+    val open = ChunkStore.open(spark, dir)
+    open.table("manifest").join(open.table("store"), Seq("chunk_hash"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(length(col("chunk"))).cast("bigint").as("doc_len"),
@@ -594,6 +591,7 @@ object Multimodal {
           |  transform(array_sort(collect_list(struct(chunk_no, chunk))),
           |            s -> s.chunk)) as binary))""".stripMargin)
           .as("r_hash"))
+  }
 
   /** Frame sampling for "video" payloads: split the byte stream into
     * fixed-size frames and keep every `stride`-th one. Pure column ops

@@ -527,7 +527,7 @@ object Similarity {
     * full-drain placeholder stays harmlessly beside the appended rows. */
   def appendBqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs: DataFrame, dir: String): Unit =
-    appendRows(openLayout(spark, dir, BqLayout), vecs, bqCodeRows(vecs),
+    appendRows(BqLayout.open(spark, dir), vecs, bqCodeRows(vecs),
       "appendBqIndex")
 
   /** Tombstone-DELETE from the BQ layout — the tombstone table is
@@ -539,7 +539,7 @@ object Similarity {
     * under-returning k). [[compactBqIndex]] reclaims the space. */
   def deleteFromBqIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit =
-    deleteRows(openLayout(spark, dir, BqLayout), ids)
+    deleteRows(BqLayout.open(spark, dir), ids)
 
   /** Compact the BQ layout: [[compactLayout]]'s whole-table rewrite —
     * the codes are NOT cell-partitioned, so the unit of rewrite is the
@@ -595,7 +595,7 @@ object Similarity {
   private def bqRefinedFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, probes: DataFrame, shortlist: Int,
       pred: Option[Column]): DataFrame =
-    bqRefinedStage(bqHamFlat(openLayout(spark, dir, BqLayout).liveRows(pred),
+    bqRefinedStage(bqHamFlat(BqLayout.open(spark, dir).liveRows(pred),
       probes), vecs, probes, shortlist)
 
   /** The Hamming frame of the flat-BQ serves: broadcast probe codes
@@ -685,7 +685,7 @@ object Similarity {
     * (the gated twin shares the monolithic oracle). */
   def appendIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    val open = openLayout(spark, dir, IvfBqLayout)
+    val open = IvfBqLayout.open(spark, dir)
     appendRows(open, vecs2, ivfBqCodeRows(vecs2, open.cents),
       "appendIvfBqIndex")
   }
@@ -695,7 +695,7 @@ object Similarity {
     * dir must hold an IVF-BQ layout. */
   def deleteFromIvfBqIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit =
-    deleteRows(openLayout(spark, dir, IvfBqLayout), ids)
+    deleteRows(IvfBqLayout.open(spark, dir), ids)
 
   /** Compaction for the IVF-BQ layout: the affected-cell rewrite of
     * [[compactLayout]] over the cell-partitioned code table. */
@@ -756,7 +756,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       vecs: DataFrame, probes: DataFrame, shortlist: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
-    val open = openLayout(spark, dir, IvfBqLayout)
+    val open = IvfBqLayout.open(spark, dir)
     bqRefinedStage(ivfBqHam(open.liveRows(pred), open.cents, probes, nprobe),
       vecs, probes, shortlist)
   }
@@ -1198,7 +1198,7 @@ object Similarity {
     * [[appendRows]], with the rest of the shared append leg. */
   def appendImiIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    val open = openLayout(spark, dir, ImiLayout)
+    val open = ImiLayout.open(spark, dir)
     appendRows(open, vecs2, withInlinePair(withNorm(vecs2), open.halves),
       "appendImiIndex")
   }
@@ -1257,7 +1257,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val open = openLayout(spark, dir, ImiLayout)
+    val open = ImiLayout.open(spark, dir)
     val assigned = inlineProbePairsRanked(probes, open.halves, nprobe)
       .select(col("probe_id"), col("l0"), col("l1"))
     imiScored(probes, assigned, open.liveRows(pred))
@@ -1467,7 +1467,7 @@ object Similarity {
     * mismatched `m` loudly. */
   def appendImiPqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String, m: Int = 4): Unit = {
-    val open = openLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
+    val open = ImiPqLayout.open(spark, dir, "m" -> m.toString)
     appendRows(open, vecs2, pqCodeRows(open.codebook,
       inlinePairResiduals(vecs2, open.halves), vecs2, m,
       ImiPqLayout.partKeys), "appendImiPqIndex")
@@ -1540,7 +1540,7 @@ object Similarity {
       vecs: DataFrame, probes: DataFrame, m: Int, nprobe: Int,
       rerankDepth: Int, pred: Option[Column], k: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val open = openLayout(spark, dir, ImiPqLayout, "m" -> m.toString)
+    val open = ImiPqLayout.open(spark, dir, "m" -> m.toString)
     val assigned = inlineProbePairsRanked(probes, open.halves, nprobe)
       .select(col("probe_id"), col("l0"), col("l1"))
     imiPqRefined(open.liveRows(pred), open.codebook, open.halves, vecs,
@@ -1723,33 +1723,25 @@ object Similarity {
   def knnJoinFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // Presence is part of the contract: a sidecar WITHOUT the key
+    // The open requires the `nprobe` key: a sidecar WITHOUT it
     // (hand-copied from another layout, say) must fail loudly, not
     // silently serve at the reduced-recall default of 1 — exactly the
     // failure the sidecar exists to prevent.
-    val meta = IndexMeta.read(spark, dir)
-    require(meta.contains("nprobe"),
-      s"index at $dir has no `nprobe` key in its meta sidecar — not " +
-        "a knn-assignment index layout (or a sidecar copied from " +
-        "another layout); rebuild the index with writeKnnAssignIndex")
-    require(meta.get("fmt").forall(_ == "1"),
-      s"index at $dir has fmt=${meta.get("fmt")} but this reader " +
-        "serves fmt=1 knn-assignment layouts — the layout format " +
-        "changed; rebuild the index with writeKnnAssignIndex")
-    val builtNprobe = meta("nprobe").toInt
+    val open = KnnAssignLayout.open(spark, dir)
+    val builtNprobe = open.param("nprobe").toInt
     require(nprobe <= builtNprobe,
       s"index at $dir stores assignment ranks up to $builtNprobe but " +
         s"the serve requested nprobe=$nprobe — rebuild the index at " +
         "the higher rank (serving reduced recall silently is not an " +
         "option)")
-    val ranked0 = spark.read.parquet(s"$dir/assign")
+    val ranked0 = open.table(KnnAssignLayout.table)
     // Tombstone mask, both roles at once: a deleted vector's rows key
     // on its own probe_id, so one anti-join removes it from the rn=1
     // corpus blocking AND the probe expansion — it neither probes nor
     // serves as a neighbor. Deletion under the ORIGINAL quantizer
     // (stored assignments unchanged), the same contract as the IVF
     // tombstones.
-    val ranked = readTombstones(spark, dir)
+    val ranked = open.tombstones
       .map(t => ranked0.join(
         broadcast(t.withColumnRenamed("vec_id", "probe_id")),
         Seq("probe_id"), "left_anti"))
@@ -2426,7 +2418,7 @@ object Similarity {
     // levels: coarse centroids AND residual codebook are fixed once
     // trained), so the appended union is bit-identical to the
     // monolithic build — FAISS's `add` contract at by_residual=true.
-    val open = openLayout(spark, dir, IvfPqLayout, "m" -> m.toString)
+    val open = IvfPqLayout.open(spark, dir, "m" -> m.toString)
     appendRows(open, vecs2, pqCodeRows(open.codebook,
       residualsWith(vecs2, open.cents, 1), vecs2, m, IvfPqLayout.partKeys),
       "appendIvfPqIndex")
@@ -2495,7 +2487,7 @@ object Similarity {
       vecs: DataFrame, probes: DataFrame, m: Int, nprobe: Int,
       rerankDepth: Int, pred: Option[Column], k: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val open = openLayout(spark, dir, IvfPqLayout, "m" -> m.toString)
+    val open = IvfPqLayout.open(spark, dir, "m" -> m.toString)
     pqrRefined(open.liveRows(pred), open.cents, open.codebook, vecs, probes,
       m, nprobe, open.rerankDepth(rerankDepth, k, m))
   }
@@ -2646,7 +2638,7 @@ object Similarity {
     *
     * The persisted layouts never reach it with a frame worth keeping:
     * every serve, append and compaction of the seven vector layouts
-    * goes through [[openLayout]], whose [[IndexSnapshot]] holds the
+    * goes through [[Layout.open]], whose [[IndexSnapshot]] holds the
     * collected centroids, IMI halves and PQ codebook beside the
     * stored table schemas, tombstone presence and occupancy — values
     * derived from the stored tables, never DataFrames or results, and
@@ -3090,20 +3082,9 @@ object Similarity {
     * [[appendRows]] clears its tombstone after the data commits. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    val open = openLayout(spark, dir, IvfFlatLayout)
+    val open = IvfFlatLayout.open(spark, dir)
     appendRows(open, vecs2, withInlineCell(withNorm(vecs2), open.cents),
       "appendIvfIndex")
-  }
-
-  /** One tombstoned layout: the fixed fields its sidecar records and
-    * every lifecycle leg checks, its row table under the index dir,
-    * and the keys that table is partitioned by (none, the coarse
-    * `cell`, or the IMI pair `c0`, `c1`). Build parameters such as
-    * PQ's `m` ride beside the fixed fields. */
-  private final case class VectorLayout(sidecar: Seq[(String, String)],
-      table: String, partKeys: Seq[String]) {
-    def name: String = sidecar.head._2
-    def rows(dir: String): String = s"$dir/$table"
   }
 
   // BQ fmt=2: the code table lives under `codes/` (fmt 1, pre-r14,
@@ -3114,81 +3095,73 @@ object Similarity {
   // garbage); IMI-PQ fmt=2 marks code rows that carry metadata. The
   // flat and SQ8 layouts both store an `index/` table, so the layout
   // key keeps an append or serve against the wrong one from merging
-  // mismatched schemas. Every table sits in a subdir: the root holds
-  // the sidecar and the tombstone table, which must not sit inside a
-  // parquet table's own listing.
-  private val BqLayout = VectorLayout(
+  // mismatched schemas. Each vector layout has one row table (`codes`,
+  // `index` or `assign`), partitioned by none, the coarse `cell`, or
+  // the IMI pair `c0`, `c1`; quantizer tables (`centroids`,
+  // `codebook`) sit beside it, written by the layout's own build.
+  private val TombstoneSchema =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vec_id",
+        org.apache.spark.sql.types.LongType)))
+
+  private def vectorLayout(sidecar: Seq[(String, String)], table: String,
+      partKeys: Seq[String], params: String*): Layout =
+    Layout(sidecar, params, Seq(table -> partKeys), Some(TombstoneSchema))
+
+  private val BqLayout = vectorLayout(
     Seq("layout" -> "bq", "bits" -> "64", "fmt" -> "2"), "codes", Nil)
-  private val IvfBqLayout = VectorLayout(
+  private val IvfBqLayout = vectorLayout(
     Seq("layout" -> "ivf_bq", "bits" -> "64", "fmt" -> "1"), "codes",
     Seq("cell"))
-  private val IvfFlatLayout = VectorLayout(
+  private val IvfFlatLayout = vectorLayout(
     Seq("layout" -> "ivf_flat", "fmt" -> "1"), "index", Seq("cell"))
-  private val IvfSq8Layout = VectorLayout(
+  private val IvfSq8Layout = vectorLayout(
     Seq("layout" -> "ivf_sq8", "bits" -> "8", "fmt" -> "1"), "index",
     Seq("cell"))
-  private val IvfPqLayout = VectorLayout(
-    Seq("layout" -> "ivf_pq", "fmt" -> "2"), "codes", Seq("cell"))
-  private val ImiLayout = VectorLayout(
+  private val IvfPqLayout = vectorLayout(
+    Seq("layout" -> "ivf_pq", "fmt" -> "2"), "codes", Seq("cell"),
+    "m", "codebookK", "kCells")
+  private val ImiLayout = vectorLayout(
     Seq("layout" -> "imi", "fmt" -> "1"), "index", Seq("c0", "c1"))
-  private val ImiPqLayout = VectorLayout(
-    Seq("layout" -> "imi_pq", "fmt" -> "2"), "codes", Seq("c0", "c1"))
-  private val KnnAssignLayout = VectorLayout(
-    Seq("layout" -> "knn_assign", "fmt" -> "1"), "assign", Nil)
+  private val ImiPqLayout = vectorLayout(
+    Seq("layout" -> "imi_pq", "fmt" -> "2"), "codes", Seq("c0", "c1"),
+    "m", "codebookK")
+  private val KnnAssignLayout = vectorLayout(
+    Seq("layout" -> "knn_assign", "fmt" -> "1"), "assign", Nil, "nprobe")
 
-  /** Sidecar layouts whose ids [[deleteFromIvfIndex]] may tombstone. */
-  private val TombstonedLayouts =
-    Seq(BqLayout, IvfBqLayout, IvfFlatLayout, IvfSq8Layout, IvfPqLayout,
-      ImiLayout, ImiPqLayout, KnnAssignLayout).map(_.name).toSet
+  /** Layouts whose ids [[deleteFromIvfIndex]] may tombstone. */
+  private val TombstonedLayouts = Seq(BqLayout, IvfBqLayout, IvfFlatLayout,
+    IvfSq8Layout, IvfPqLayout, ImiLayout, ImiPqLayout, KnnAssignLayout)
 
-  /** One opened generation of a persisted vector layout: `dir`'s
-    * sidecar checked against the layout's fixed fields and the
-    * caller's build parameters, and every value the serve, append and
-    * compaction legs derive from the stored tables, held by the
-    * index's [[IndexSnapshot]] so it is derived once per generation:
-    *  - the schema of the row table, the one table still read as a
-    *    frame (quantizer-keyed: an append must match it, a compaction
-    *    keeps it);
-    *  - the collected quantizer — cell centroids, IMI halves, PQ
-    *    codebook — so no leg past the build reads a quantizer table
-    *    as a frame;
-    *  - tombstone presence and live occupancy (data-keyed).
-    * On an index already opened since its last write, building a
-    * serve frame therefore runs no Spark job. */
-  private final class OpenedLayout(
-      val spark: org.apache.spark.sql.SparkSession, val dir: String,
-      val layout: VectorLayout,
-      snap: IndexSnapshot.Snapshot) {
-    private def stored(table: String): DataFrame =
-      spark.read.parquet(s"$dir/$table")
+  /** A vector layout's one row table and its partition keys. */
+  private implicit final class RowTable(val layout: Layout) extends AnyVal {
+    def table: String = layout.tables.head._1
+    def partKeys: Seq[String] = layout.tables.head._2
+  }
 
-    def rowSchema: org.apache.spark.sql.types.StructType =
-      snap.quantizer(s"${layout.table}.schema")(stored(layout.table).schema)
-
+  /** The vector legs' view of an opened layout ([[OpenedLayout]] holds
+    * the sidecar check, table schemas and tombstone presence): the
+    * collected quantizer — cell centroids, IMI halves, PQ codebook —
+    * so no leg past the build reads a quantizer table as a frame, the
+    * masked row table, and the occupancy-derived re-rank depth. */
+  private implicit final class OpenedVectors(val open: OpenedLayout)
+      extends AnyVal {
     def cents: CentEntries =
-      snap.quantizer("centroids")(collectCents(stored("centroids"), "dim"))
+      open.quantizer("centroids")(collectCents(open.table("centroids"), "dim"))
 
     def halves: Seq[CentEntries] =
-      snap.quantizer("halves")(collectHalvesUncached(stored("centroids")))
+      open.quantizer("halves")(collectHalvesUncached(open.table("centroids")))
 
     def codebook: CodebookEntries =
-      snap.quantizer("codebook")(collectCodebook(stored("codebook")))
-
-    /** A non-empty tombstone table exists: never deleted, or drained by
-      * a compaction, plans no mask (an empty one would still cost a
-      * broadcast job per serve). */
-    def tombstoned: Boolean = snap.data[java.lang.Boolean]("tombstones")(
-      Boolean.box(readTombstones(spark, dir).exists(!_.isEmpty)))
+      open.quantizer("codebook")(collectCodebook(open.table("codebook")))
 
     /** The row table read with its held schema, the optional metadata
       * predicate, then one broadcast anti-join against the tombstones
       * when any exist. The predicate commutes with the mask (both row
       * filters). */
     def liveRows(pred: Option[Column] = None): DataFrame = {
-      val rows = pred.foldLeft(spark.read.schema(rowSchema)
-        .parquet(layout.rows(dir)))(_ filter _)
-      if (!tombstoned) rows
-      else readTombstones(spark, dir).fold(rows)(t =>
+      val rows = pred.foldLeft(open.table(open.layout.table))(_ filter _)
+      open.tombstones.fold(rows)(t =>
         rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
     }
 
@@ -3203,20 +3176,11 @@ object Similarity {
       * just because few rows match. */
     def rerankDepth(requested: Int, k: Int, m: Int): Int =
       if (requested != AutoRerankDepth) requested
-      else suggestedRerankDepth(snap.data[java.lang.Long]("occupancy")(
+      else suggestedRerankDepth(open.data[java.lang.Long]("occupancy")(
         Long.box(maxOccupancy(liveRows()
-          .groupBy(layout.partKeys.map(col): _*)
+          .groupBy(open.layout.partKeys.map(col): _*)
           .agg(expr(s"count(1) div $m").as("n_vectors"))))), k)
   }
-
-  /** Open `dir`'s current generation as `layout`, failing loudly
-    * unless its sidecar records the layout's fixed fields and the
-    * given build parameters. */
-  private def openLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, layout: VectorLayout,
-      params: (String, String)*): OpenedLayout =
-    new OpenedLayout(spark, dir, layout,
-      IndexSnapshot.open(spark, dir, layout.sidecar ++ params: _*))
 
   /** The `rerankDepth` precondition of the persisted PQ serves, then
     * the per-probe top-k of their `refined` frame. */
@@ -3244,61 +3208,45 @@ object Similarity {
   private def storedCents(cents: DataFrame, dir: String): CentEntries =
     collectCents(storedQuantizer(cents, dir, "centroids"), "dim")
 
-  /** The build leg of every tombstoned layout: clear the previous
-    * generation's tombstones, run `rows` (which writes the layout's
-    * quantizer tables, if any, and returns the row frame), write the
-    * rows partitioned by the layout's keys, then the sidecar with fresh
-    * generation tokens ([[IndexSnapshot]]). */
+  /** The build leg of every vector layout ([[Layout.build]]): `rows`
+    * writes the layout's quantizer tables, if any, and returns the row
+    * frame. */
   private def buildLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, layout: VectorLayout, params: (String, String)*)(
-      rows: => DataFrame): Unit = {
-    clearTombstones(spark, dir)
-    rows.write.mode("overwrite").partitionBy(layout.partKeys: _*)
-      .parquet(layout.rows(dir))
-    IndexMeta.write(spark, dir,
-      layout.sidecar ++ params ++ IndexSnapshot.buildTokens(): _*)
-  }
+      dir: String, layout: Layout, params: (String, String)*)(
+      rows: => DataFrame): Unit =
+    layout.build(spark, dir, params: _*)(Seq(layout.table -> rows))
 
   /** The append leg of every vector layout: gate `rows` on the opened
     * layout's stored column set (rows carry metadata for the filtered
     * serves, so a mismatched batch must fail at entry, not leave
     * mixed-schema files), clear a full-drain placeholder, append
     * partitioned by the layout's keys, clear the tombstones of
-    * re-added `batch` ids, then write a new data token. */
-  private def appendRows(open: OpenedLayout, batch: DataFrame,
-      rows: DataFrame, leg: String): Unit = {
-    import open.{dir, layout, spark}
-    val table = layout.rows(dir)
-    FsOps.requireColumns(open.rowSchema, rows, leg)
-    layout.partKeys.headOption.foreach(clearDrainedPlaceholder(spark, table, _))
-    rows.write.mode("append").partitionBy(layout.partKeys: _*).parquet(table)
-    reconcileTombstonesAfterAppend(spark, dir, batch.select(col("vec_id")))
-    IndexSnapshot.bumpData(spark, dir)
-  }
-
-  /** Shared by the append legs: anti-join the appended ids out of the
-    * tombstone table (staged + checked swap), so a delete-then-re-add
+    * re-added `batch` ids, then write a new data token.
+    *
+    * The tombstone reconciliation anti-joins the appended ids out of
+    * the tombstone table (staged replace), so a delete-then-re-add
     * serves the re-added rows and a later compaction cannot drop
-    * them. Runs AFTER the data append commits — a crash in the window
-    * leaves the new rows masked (retryable), never stale rows
+    * them. It runs AFTER the data append commits — a crash in the
+    * window leaves the new rows masked (retryable), never stale rows
     * visible. Caller contract (FAISS's `add` has the same one — ids
     * are not membership-checked): re-adding an id whose deleted rows
     * are still physically present (deleted but not yet compacted)
     * would leave duplicate rows once unmasked; compact first
     * (PipelineSpec's re-add pins exercise exactly that flow). */
-  private def reconcileTombstonesAfterAppend(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: DataFrame): Unit =
-    readTombstones(spark, dir).foreach { t =>
-      FsOps.clearStaging(FsOps.fsOf(spark, dir), dir)
-      val appended = ids
+  private def appendRows(open: OpenedLayout, batch: DataFrame,
+      rows: DataFrame, leg: String): Unit = open.commit {
+    val table = open.layout.table
+    open.gate(table, rows, leg)
+    open.layout.partKeys.headOption.foreach(
+      clearDrainedPlaceholder(open.spark, open.path(table), _))
+    open.append(table, rows, leg)
+    open.tombstones.foreach { t =>
+      val appended = batch
         .select(col("vec_id").cast("long").as("vec_id")).distinct()
-      val staging = s"$dir/tombstones_next"
-      t.join(broadcast(appended), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(staging)
-      FsOps.swapInto(FsOps.fsOf(spark, dir), staging,
-        s"$dir/tombstones")
+      open.replace("tombstones" ->
+        t.join(broadcast(appended), Seq("vec_id"), "left_anti"))
     }
+  }
 
   /** Tombstone-DELETE vectors from a persisted vector layout (any of
     * the seven, or a [[writeKnnAssignIndex]] table) — the removal half
@@ -3312,44 +3260,15 @@ object Similarity {
     * otherwise "succeed" and mask nothing. The layout's compaction
     * reclaims the space and drains the table. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, dir: String): Unit = {
-    val name = IndexMeta.read(spark, dir).getOrElse("layout", "<absent>")
-    require(TombstonedLayouts(name),
-      s"index at $dir has layout=$name, which has no tombstone " +
-        s"table; deletes apply to ${TombstonedLayouts.toSeq.sorted
-          .mkString(", ")}")
-    writeTombstones(spark, ids, dir)
-  }
-
-  /** The delete leg of a layout-named delete: [[deleteFromIvfIndex]]
-    * on a dir the open has already checked to hold that layout. */
-  private def deleteRows(open: OpenedLayout, ids: DataFrame): Unit =
-    writeTombstones(open.spark, ids, open.dir)
+      ids: DataFrame, dir: String): Unit =
+    deleteRows(Layout.openAny(spark, dir, TombstonedLayouts), ids)
 
   /** Append `ids` to the tombstone table, then write a new data token. */
-  private def writeTombstones(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, dir: String): Unit = {
-    ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      .write.mode("append").parquet(s"$dir/tombstones")
-    IndexSnapshot.bumpData(spark, dir)
-  }
-
-  /** A REBUILD supersedes prior deletions: stale tombstones under the
-    * target dir would wrongly mask ids present in the new index. Every
-    * write entry point clears them first — through the CHECKED delete
-    * (a false-returning `fs.delete` with the path still present would
-    * leave stale tombstones silently masking rows in the next build,
-    * exactly the failure class FsOps exists to kill). */
-  private def clearTombstones(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Every rebuild entry routes through here, so the rebuild also
-    // sweeps staging left by a crashed compact/delete of the OLD
-    // index generation.
-    FsOps.clearStaging(fs, dir)
-    FsOps.deleteIfExists(fs, p)
-  }
+  private def deleteRows(open: OpenedLayout, ids: DataFrame): Unit =
+    open.commit {
+      ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
+        .write.mode("append").parquet(open.path("tombstones"))
+    }
 
   /** Partition-dir segment for a value, escaped exactly as Spark's
     * partitioned writes escape it (ExternalCatalogUtils.escapePathName
@@ -3397,22 +3316,6 @@ object Similarity {
     }
   }
 
-  private val TombstoneSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType)))
-
-  /** The tombstone table if one exists, else an empty frame — read
-    * with an explicit schema so a drained (zero-part-file) table after
-    * [[compactLayout]] still reads cleanly. */
-  private def readTombstones(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.schema(TombstoneSchema).parquet(p.toString))
-    else None
-  }
-
   /** The partition leaf dirs under `root` for `keys`, relative to it
     * (`cell=3`, `c0=1/c1=2`); none when `root` is absent. */
   private def partitionLeaves(fs: org.apache.hadoop.fs.FileSystem,
@@ -3427,8 +3330,8 @@ object Similarity {
     }.map(_.stripPrefix("/"))
 
   /** The compaction leg of every vector layout: open the layout (its
-    * sidecar check and held row schema), drop the tombstoned rows from the row table and drain the
-    * tombstone table.
+    * sidecar check and held row schema), drop the tombstoned rows from
+    * the row table and drain the tombstone table.
     * Reclamation never changes a result: the compacted serve equals the
     * masked serve it replaces (oracle-gated per layout).
     *
@@ -3454,22 +3357,22 @@ object Similarity {
     * second, the data token last. A crash after the row commit leaves
     * tombstones naming rows that are already gone — harmless for
     * serves, and an append that re-adds one of those ids clears it
-    * ([[reconcileTombstonesAfterAppend]]). The reverse order would
-    * unmask the deleted rows if the row swap then crashed. A crash
-    * before the token write leaves JVMs that had opened the index on
-    * their old derived values until the next write ([[IndexSnapshot]]);
-    * re-running the compaction recovers. */
+    * ([[appendRows]]). The reverse order would unmask the deleted rows
+    * if the row swap then crashed. A crash before the token write
+    * leaves JVMs that had opened the index on their old derived values
+    * until the next write ([[IndexSnapshot]]); re-running the
+    * compaction recovers. */
   private def compactLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, layout: VectorLayout): Unit = {
+      dir: String, layout: Layout): Unit = {
     import org.apache.hadoop.fs.Path
-    val open = openLayout(spark, dir, layout)
+    val open = layout.open(spark, dir)
     val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    readTombstones(spark, dir).foreach { tombs =>
-      val table = layout.rows(dir)
+    open.commit(open.tombstones.foreach { tombs =>
+      val name = layout.table
+      val table = open.path(name)
       val staging = s"${table}_compacting"
       val keys = layout.partKeys
-      val rows = spark.read.schema(open.rowSchema).parquet(table)
+      val rows = open.table(name)
       // Both rewrites report whether no row survived anywhere.
       def rewriteWhole(): Boolean = {
         rows.join(broadcast(tombs), Seq("vec_id"), "left_anti")
@@ -3477,7 +3380,7 @@ object Similarity {
         // A full drain can leave the staged write with no data file.
         val hasData = fs.listStatus(new Path(staging))
           .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        if (hasData) FsOps.swapInto(fs, staging, table)
+        if (hasData) open.swap(s"${name}_compacting", name)
         !hasData
       }
       def rewriteLeaves(): Boolean = {
@@ -3499,32 +3402,28 @@ object Similarity {
         val drained = emptied.nonEmpty &&
           ((partitionLeaves(fs, table, keys) -- emptied) ++ staged).isEmpty
         if (!drained) {
-          staged.foreach { name =>
-            val dest = new Path(s"$table/$name")
+          staged.foreach { leaf =>
+            val dest = new Path(s"$table/$leaf")
             FsOps.deleteIfExists(fs, dest)
             fs.mkdirs(dest.getParent)
-            FsOps.checkedRename(fs, new Path(s"$staging/$name"), dest)
+            FsOps.checkedRename(fs, new Path(s"$staging/$leaf"), dest)
           }
-          emptied.foreach(name =>
-            FsOps.deleteIfExists(fs, new Path(s"$table/$name")))
+          emptied.foreach(leaf =>
+            FsOps.deleteIfExists(fs, new Path(s"$table/$leaf")))
         }
         drained
       }
       if (if (keys.isEmpty) rewriteWhole() else rewriteLeaves()) {
         // The placeholder is staged while the source files are still in
         // place; partition keys ride in it as plain columns.
-        val emptyStaging = s"${table}_empty"
-        rows.limit(0).write.mode("overwrite").parquet(emptyStaging)
-        FsOps.swapInto(fs, emptyStaging, table)
+        rows.limit(0).write.mode("overwrite").parquet(s"${table}_empty")
+        open.swap(s"${name}_empty", name)
       }
       FsOps.deleteIfExists(fs, new Path(staging))
       // The tombstone table drains to zero rows but stays present, so a
       // later serve reads an empty mask, not a missing path.
-      val tombStaging = s"$dir/tombstones_next"
-      tombs.limit(0).write.mode("overwrite").parquet(tombStaging)
-      FsOps.swapInto(fs, tombStaging, s"$dir/tombstones")
-    }
-    IndexSnapshot.bumpData(spark, dir)
+      open.replace("tombstones" -> tombs.limit(0))
+    })
   }
 
   /** Physically compact a persisted [[writeIvfIndex]] layout: the
@@ -3605,7 +3504,7 @@ object Similarity {
   private def ivfScoredFromIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, nprobe: Int, pred: Option[Column]): DataFrame = {
-    val open = openLayout(spark, dir, IvfFlatLayout)
+    val open = IvfFlatLayout.open(spark, dir)
     ivfScored(probes, open.cents, open.liveRows(pred), nprobe)
   }
 
@@ -3681,7 +3580,7 @@ object Similarity {
     * for re-added ids reconcile after the data append commits. */
   def appendIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
-    val open = openLayout(spark, dir, IvfSq8Layout)
+    val open = IvfSq8Layout.open(spark, dir)
     appendRows(open, vecs2, sq8Rows(withInlineCell(vecs2, open.cents)),
       "appendIvfSq8Index")
   }
@@ -3691,7 +3590,7 @@ object Similarity {
     * contract applied to the SQ8 dir, which must hold an SQ8 layout. */
   def deleteFromIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit =
-    deleteRows(openLayout(spark, dir, IvfSq8Layout), ids)
+    deleteRows(IvfSq8Layout.open(spark, dir), ids)
 
   /** Compaction for the SQ8 layout: the affected-cell rewrite of
     * [[compactLayout]] over the (vec_id, scale, q, cell) table. */
@@ -3728,7 +3627,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, k: Int, nprobe: Int,
       pred: Option[Column]): DataFrame = {
-    val open = openLayout(spark, dir, IvfSq8Layout)
+    val open = IvfSq8Layout.open(spark, dir)
     topKPerProbe(sq8ScoredFrom(open.liveRows(pred), open.cents, probes,
       nprobe), k, "ip_r")
   }
@@ -3780,7 +3679,7 @@ object Similarity {
   def searchIvfSq8IndexRange(spark: org.apache.spark.sql.SparkSession,
       dir: String, probes: DataFrame, tau: Double,
       nprobe: Int = 1): DataFrame = {
-    val open = openLayout(spark, dir, IvfSq8Layout)
+    val open = IvfSq8Layout.open(spark, dir)
     sq8ScoredFrom(open.liveRows(), open.cents, probes, nprobe)
       .filter(col("ip_r") >= tau)
   }

@@ -146,12 +146,13 @@ object Sketches {
     * to match, because a serve-time k larger than the stored rank
     * would silently truncate every estimate's sample window. */
   def writeKmvSynopses(df: DataFrame, key: Column, group: Column,
-      dir: String, k: Int = 64): Unit = {
-    kmvSynopsis(df.select(group.as("grp"), h48(key).as("h")), k)
-      .write.mode("overwrite").parquet(dir)
-    IndexMeta.write(df.sparkSession, dir, "layout" -> "kmv",
-      "k" -> k.toString, "fmt" -> "1")
-  }
+      dir: String, k: Int = 64): Unit =
+    Kmv.build(df.sparkSession, dir, "k" -> k.toString)(Seq("synopses" ->
+      kmvSynopsis(df.select(group.as("grp"), h48(key).as("h")), k)))
+
+  // fmt 2 moved the synopsis rows from the dir root into `synopses/`.
+  private val Kmv = Layout(Seq("layout" -> "kmv", "fmt" -> "2"), Seq("k"),
+    Seq("synopses" -> Nil))
 
   /** Pairwise set algebra over STORED synopses — union, intersection,
     * and difference cardinalities plus Jaccard for every unordered
@@ -174,9 +175,7 @@ object Sketches {
     * is answered from kilobytes. */
   def kmvSetOps(spark: org.apache.spark.sql.SparkSession, dir: String,
       k: Int = 64): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "kmv",
-      "k" -> k.toString, "fmt" -> "1")
-    val syn = spark.read.parquet(dir)
+    val syn = Kmv.open(spark, dir, "k" -> k.toString).table("synopses")
     val ests = kmvEstimate(syn, k)
     val grps = syn.select(col("grp")).distinct()
     val pairs = grps.select(col("grp").as("ga"))

@@ -305,20 +305,21 @@ object TextAnalysis {
     * token — sums are not duplicate-insensitive, unlike the
     * fingerprint and bloom layouts where duplicate rows are harmless
     * by construction. */
-  def nbWriteModel(docs: DataFrame, dir: String): Unit = {
-    val toks = docs.select(col("label"),
-      explode(split(col("text"), " ")).as("tok"))
-    toks.groupBy(col("label"), col("tok")).agg(count(lit(1)).as("c_lt"))
-      .withColumn("batch", lit(0))
-      .write.partitionBy("batch").mode("overwrite")
-      .parquet(s"$dir/counts")
-    docs.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
-      .withColumn("batch", lit(0))
-      .write.partitionBy("batch").mode("overwrite")
-      .parquet(s"$dir/docstats")
-    IndexMeta.write(docs.sparkSession, dir,
-      "layout" -> "nb_model", "fmt" -> "2")
-  }
+  def nbWriteModel(docs: DataFrame, dir: String): Unit =
+    NbModel.build(docs.sparkSession, dir)(nbTables(docs, 0))
+
+  private val NbModel = Layout(Seq("layout" -> "nb_model", "fmt" -> "2"),
+    Nil, Seq("counts" -> Seq("batch"), "docstats" -> Seq("batch")))
+
+  /** The (label, tok, c_lt) count rows and the (label, n_docs) prior
+    * rows of `docs`, tagged with `batch`. */
+  private def nbTables(docs: DataFrame, batch: Int): Seq[(String, DataFrame)] =
+    Seq("counts" -> docs.select(col("label"),
+        explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("label"), col("tok")).agg(count(lit(1)).as("c_lt"))
+      .withColumn("batch", lit(batch)),
+    "docstats" -> docs.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
+      .withColumn("batch", lit(batch)))
 
   /** APPEND a labeled batch to a stored [[nbWriteModel]] layout under
     * an explicit `batchId` (> 0; the base build owns batch 0): the
@@ -349,29 +350,17 @@ object TextAnalysis {
     * on a colliding positive id). */
   def nbAppendModel(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, dir: String, batchId: Int): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "nb_model",
-      "fmt" -> "2")
+    val open = NbModel.open(spark, dir)
     require(batchId > 0,
       s"nbAppendModel: batchId must be > 0 (got $batchId) — batch 0 " +
         "belongs to the base build and compaction's folded form")
-    val toks = batch.select(col("label"),
-      explode(split(col("text"), " ")).as("tok"))
-    val counts = toks.groupBy(col("label"), col("tok"))
-      .agg(count(lit(1)).as("c_lt"))
-      .withColumn("batch", lit(batchId))
-    val stats = batch.groupBy(col("label"))
-      .agg(count(lit(1)).as("n_docs"))
-      .withColumn("batch", lit(batchId))
-    FsOps.requireAppendColumns(spark,
-      s"$dir/counts", counts, "nbAppendModel")
-    FsOps.requireAppendColumns(spark,
-      s"$dir/docstats", stats, "nbAppendModel")
-    counts.write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$dir/counts")
-    stats.write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$dir/docstats")
+    val tables = nbTables(batch, batchId)
+    tables.foreach { case (t, rows) => open.gate(t, rows, "nbAppendModel") }
+    open.commit(tables.foreach { case (t, rows) =>
+      rows.write.partitionBy("batch")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").parquet(open.path(t))
+    })
   }
 
   /** Classify a corpus against a STORED [[nbWriteModel]] layout — the
@@ -383,15 +372,19 @@ object TextAnalysis {
     * by construction (one shared frame). */
   def nbClassifyFromModel(spark: org.apache.spark.sql.SparkSession,
       incoming: DataFrame, dir: String): DataFrame = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "nb_model",
-      "fmt" -> "2")
-    nbScore(incoming,
-      spark.read.parquet(s"$dir/counts")
-        .groupBy(col("label"), col("tok"))
-        .agg(sum(col("c_lt")).as("c_lt")),
-      spark.read.parquet(s"$dir/docstats")
-        .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs")))
+    val open = NbModel.open(spark, dir)
+    nbScore(incoming, nbCounts(open), nbPriors(open))
   }
+
+  /** The stored count rows re-aggregated per (label, tok). */
+  private def nbCounts(open: OpenedLayout): DataFrame =
+    open.table("counts").groupBy(col("label"), col("tok"))
+      .agg(sum(col("c_lt")).as("c_lt"))
+
+  /** The stored prior rows re-aggregated per label. */
+  private def nbPriors(open: OpenedLayout): DataFrame =
+    open.table("docstats").groupBy(col("label"))
+      .agg(sum(col("n_docs")).as("n_docs"))
 
   /** DELETE an appended batch from a stored [[nbWriteModel]] layout —
     * source retraction (a shard found contaminated, a takedown
@@ -412,21 +405,19 @@ object TextAnalysis {
   def nbDeleteBatch(spark: org.apache.spark.sql.SparkSession,
       dir: String, batchId: Int): Unit = {
     import org.apache.hadoop.fs.Path
-    IndexMeta.requireMatch(spark, dir, "layout" -> "nb_model",
-      "fmt" -> "2")
+    val open = NbModel.open(spark, dir)
     require(batchId > 0,
       s"nbDeleteBatch: batchId must be > 0 (got $batchId) — batch 0 " +
         "is the base build; retract it by rebuilding the model")
     val fs = FsOps.fsOf(spark, dir)
-    val c = new Path(s"$dir/counts/batch=$batchId")
-    val d = new Path(s"$dir/docstats/batch=$batchId")
-    require(fs.exists(c) || fs.exists(d),
+    val parts = NbModel.tables.map { case (t, _) =>
+      new Path(open.path(s"$t/batch=$batchId")) }
+    require(parts.exists(fs.exists),
       s"nbDeleteBatch: batch $batchId is not present in the layout — " +
         "either it was never appended, it was already deleted, or a " +
         "compaction folded it into batch 0 (per-batch provenance is " +
         "gone after nbCompactModel; retract by rebuild)")
-    FsOps.deleteIfExists(fs, c)
-    FsOps.deleteIfExists(fs, d)
+    open.commit(parts.foreach(FsOps.deleteIfExists(fs, _)))
   }
 
   /** Compact a stored [[nbWriteModel]] layout: fold the rows that
@@ -438,7 +429,7 @@ object TextAnalysis {
     * the counts table on every classify, and k appends make that
     * shuffle k× wider than the model it encodes.
     *
-    * Staged whole-table swaps ([[FsOps.swapInto]], the flat-layout
+    * Staged whole-table swaps ([[OpenedLayout.replace]], the flat-layout
     * compaction convention — the model is labels × vocab, never
     * corpus-sized, so a full rewrite is cheap). Unlike the tombstoned
     * ANN layouts there is NO crash-window ordering hazard here: both
@@ -451,26 +442,10 @@ object TextAnalysis {
     * re-add rows the fold already absorbed (see [[nbAppendModel]]). */
   def nbCompactModel(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir, "layout" -> "nb_model",
-      "fmt" -> "2")
-    val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    val countsStaging = s"$dir/counts_compacting"
-    spark.read.parquet(s"$dir/counts")
-      .groupBy(col("label"), col("tok"))
-      .agg(sum(col("c_lt")).as("c_lt"))
-      .withColumn("batch", lit(0))
-      .write.partitionBy("batch").mode("overwrite")
-      .parquet(countsStaging)
-    FsOps.swapInto(fs, countsStaging, s"$dir/counts")
-    val statsStaging = s"$dir/docstats_compacting"
-    spark.read.parquet(s"$dir/docstats")
-      .groupBy(col("label"))
-      .agg(sum(col("n_docs")).as("n_docs"))
-      .withColumn("batch", lit(0))
-      .write.partitionBy("batch").mode("overwrite")
-      .parquet(statsStaging)
-    FsOps.swapInto(fs, statsStaging, s"$dir/docstats")
+    val open = NbModel.open(spark, dir)
+    open.replace(
+      "counts" -> nbCounts(open).withColumn("batch", lit(0)),
+      "docstats" -> nbPriors(open).withColumn("batch", lit(0)))
   }
 
   /** BPE merge-rule TRAINING (Sennrich et al. 2016, arXiv:1508.07909):
@@ -913,14 +888,9 @@ object TextAnalysis {
     */
   def writeInvertedIndex(documents: DataFrame, dir: String,
       nBuckets: Int = 64): Unit = {
-    // A rebuild supersedes any prior deletions: stale tombstones left
-    // under the target dir would wrongly mask (and double-subtract)
-    // docs present in the NEW index. Checked delete — a false return
-    // with the path still present must fail loudly, not leave the
-    // stale mask in place (FsOps's discipline).
-    val tp = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    FsOps.deleteIfExists(
-      FsOps.fsOf(documents.sparkSession, dir), tp)
+    // The build leg also drops prior tombstones: stale ones left under
+    // the target dir would wrongly mask (and double-subtract) docs
+    // present in the NEW index.
     val words = documents
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -930,24 +900,26 @@ object TextAnalysis {
     // ranked (BM25, tf only) and positional (phrase) queries; tf is
     // derivable as size(positions) but stays materialized so ranked
     // serving never touches the arrays.
-    words.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .join(dl, "doc_id")
-      .withColumn("tbucket", Sampling.hashBucket(col("term"), nBuckets))
-      .write.mode("overwrite").partitionBy("tbucket")
-      .parquet(s"$dir/postings")
-    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"),
-        lit(nBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
-    // Sidecar: serving at a different bucketing than the build would
-    // prune to the WRONG partitions and silently return partial
-    // results; a future postings reshape bumps fmt so stale dirs are
-    // rejected loudly instead of mis-served.
-    IndexMeta.write(documents.sparkSession, dir, Seq(
-      "layout" -> "inverted", "nBuckets" -> nBuckets.toString,
-      "fmt" -> "1") ++ IndexSnapshot.buildTokens(): _*)
+    Inverted.build(documents.sparkSession, dir,
+        "nBuckets" -> nBuckets.toString)(Seq(
+      "postings" -> words.groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf"),
+          sort_array(collect_list(col("pos"))).as("positions"))
+        .join(dl, "doc_id")
+        .withColumn("tbucket", Sampling.hashBucket(col("term"), nBuckets)),
+      "stats" -> dl.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("tot_dl"), lit(nBuckets).as("n_buckets"))))
   }
+
+  /** The BM25 layout. Its sidecar records `nBuckets`: serving at a
+    * different bucketing than the build would prune to the WRONG
+    * partitions and silently return partial results; a future postings
+    * reshape bumps fmt so stale dirs are rejected loudly instead of
+    * mis-served. Tombstones are canonical (doc_id, dl) rows. */
+  private val Inverted = Layout(Seq("layout" -> "inverted", "fmt" -> "1"),
+    Seq("nBuckets"), Seq("postings" -> Seq("tbucket"), "stats" -> Nil),
+    Some(org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id LONG, dl BIGINT")))
 
   /** DELETE documents from a persisted [[writeInvertedIndex]] layout —
     * the tombstone path: the deleted docs' `(doc_id, dl)` land in a
@@ -962,28 +934,20 @@ object TextAnalysis {
     * one broadcast anti-join, bounded by the deletion volume. */
   def deleteFromInvertedIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    IndexMeta.requireMatch(spark, dir, "layout" -> "inverted",
-      "fmt" -> "1")
+    val open = Inverted.open(spark, dir)
     val del = ids.select(col("doc_id").cast("long").as("doc_id"))
       .distinct()
-    val batch = spark.read.parquet(s"$dir/postings")
+    val batch = open.table("postings")
       .join(broadcast(del), Seq("doc_id"))
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
     // Merge-on-write: the stored table stays CANONICAL (one row per
     // deleted doc) so the serve-side stats aggregate needs no dedup
     // shuffle — a repeated delete collapses here, at delete time,
-    // where a tiny rewrite is free. Staged sibling + rename, never
-    // overwrite a table being read.
-    val merged = shardTombstones(spark, dir)
+    // where a tiny rewrite is free. Staged replace, never overwrite a
+    // table being read.
+    open.replace("tombstones" -> open.tombstones
       .map(_.unionByName(batch)).getOrElse(batch)
-      .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-    FsOps.clearStaging(FsOps.fsOf(spark, dir), dir)
-    val staging = s"$dir/tombstones_next"
-    merged.write.mode("overwrite").parquet(staging)
-    FsOps.swapInto(FsOps.fsOf(spark, dir), staging,
-      s"$dir/tombstones")
-    IndexSnapshot.bumpData(spark, dir)
+      .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
   }
 
   /** Drain the tombstones of a [[deleteFromInvertedIndex]]'d layout by
@@ -1001,85 +965,35 @@ object TextAnalysis {
   def compactInvertedIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    IndexMeta.requireMatch(spark, dir, "layout" -> "inverted",
-      "fmt" -> "1")
-    val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    shardTombstones(spark, dir).foreach { tombs =>
-      val kept = spark.read.parquet(s"$dir/postings")
-        .join(broadcast(tombs.select(col("doc_id"))), Seq("doc_id"),
-          "left_anti")
-      val newStats = spark.read.parquet(s"$dir/stats")
-        .crossJoin(broadcast(tombs.agg(
-          count(lit(1)).as("del_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("del_dl"))))
-        .select((col("n_docs") - col("del_docs")).as("n_docs"),
-          (col("tot_dl") - col("del_dl")).as("tot_dl"),
-          col("n_buckets"))
-      kept.write.mode("overwrite").partitionBy("tbucket")
-        .parquet(s"$dir/postings_next")
-      newStats.write.mode("overwrite").parquet(s"$dir/stats_next")
-      Seq("postings", "stats").foreach { t =>
-        FsOps.swapInto(fs, s"$dir/${t}_next", s"$dir/$t")
-      }
-      FsOps.deleteIfExists(fs, new Path(s"$dir/tombstones"))
-    }
-    IndexSnapshot.bumpData(spark, dir)
+    val open = Inverted.open(spark, dir)
+    open.commit(open.tombstones.foreach { tombs =>
+      open.replace(
+        "postings" -> open.table("postings")
+          .join(broadcast(tombs.select(col("doc_id"))), Seq("doc_id"),
+            "left_anti"),
+        "stats" -> open.table("stats")
+          .crossJoin(broadcast(tombs.agg(
+            count(lit(1)).as("del_docs"),
+            coalesce(sum(col("dl")), lit(0L)).as("del_dl"))))
+          .select((col("n_docs") - col("del_docs")).as("n_docs"),
+            (col("tot_dl") - col("del_dl")).as("tot_dl"),
+            col("n_buckets")))
+      FsOps.deleteIfExists(FsOps.fsOf(spark, dir),
+        new Path(open.path("tombstones")))
+    })
   }
-
-  private val TombSchema = "doc_id LONG, dl BIGINT"
-
-  /** A shard's tombstone table if present — explicit schema so a
-    * zero-part-file table reads cleanly (the
-    * [[graft.operators.Similarity]] readTombstones discipline). */
-  private def shardTombstones(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.schema(TombSchema).parquet(p.toString))
-    else None
-  }
-
-  /** One opened [[writeInvertedIndex]] shard: its directory and the
-    * [[IndexSnapshot]] of its current generation, checked against the
-    * serve's bucketing (serving at a different bucketing than the
-    * build would prune to the wrong partitions). */
-  private final case class Shard(dir: String, snap: IndexSnapshot.Snapshot)
 
   private def openShards(spark: org.apache.spark.sql.SparkSession,
-      dirs: Seq[String], nBuckets: Int): Seq[Shard] =
-    dirs.map(d => Shard(d, IndexSnapshot.open(spark, d,
-      "layout" -> "inverted", "nBuckets" -> nBuckets.toString,
-      "fmt" -> "1")))
-
-  /** A shard's sub-table read with the schema its build stored (a
-    * delete or compaction rewrites rows, never columns) — no
-    * schema-inference job per request. */
-  private def shardTable(spark: org.apache.spark.sql.SparkSession,
-      sh: Shard, table: String): DataFrame = {
-    val path = s"${sh.dir}/$table"
-    spark.read.schema(sh.snap.quantizer(s"$table.schema")(
-      spark.read.parquet(path).schema)).parquet(path)
-  }
-
-  /** Whether a shard has a tombstone table — part of its generation. */
-  private def tombstoned(spark: org.apache.spark.sql.SparkSession,
-      sh: Shard): Boolean =
-    sh.snap.data[java.lang.Boolean]("tombstones")(
-      Boolean.box(shardTombstones(spark, sh.dir).isDefined))
+      dirs: Seq[String], nBuckets: Int): Seq[OpenedLayout] =
+    dirs.map(Inverted.open(spark, _, "nBuckets" -> nBuckets.toString))
 
   /** Union of the opened shards' tombstones, or None when no shard
     * ever deleted (plans unchanged for delete-free layouts). Each
     * shard's table is canonical — [[deleteFromInvertedIndex]] merges
     * on write — and a doc lives wholly in one shard, so the union
     * needs no dedup before a mask or the stats aggregate. */
-  private def openTombstones(spark: org.apache.spark.sql.SparkSession,
-      shards: Seq[Shard]): Option[DataFrame] = {
-    val ts = shards.filter(tombstoned(spark, _))
-      .map(sh => spark.read.schema(TombSchema)
-        .parquet(s"${sh.dir}/tombstones"))
-    if (ts.isEmpty) None else Some(ts.reduce(_.unionByName(_)))
-  }
+  private def openTombstones(shards: Seq[OpenedLayout]): Option[DataFrame] =
+    shards.flatMap(_.tombstones).reduceOption(_.unionByName(_))
 
   /** One shard's corpus-stat sums and, when it has tombstones, its
     * deleted docs' (count, Σdl) — each sum None where SQL's sum is
@@ -1088,22 +1002,19 @@ object TextAnalysis {
   private final case class ShardStats(nDocs: Option[Long],
       totDl: Option[Long], deleted: Option[(Long, Long)])
 
-  private def shardStats(spark: org.apache.spark.sql.SparkSession,
-      sh: Shard): ShardStats =
-    sh.snap.data("stats") {
+  private def shardStats(sh: OpenedLayout): ShardStats =
+    sh.data("stats") {
       // The stats table is one row per build: collected and summed
       // here, with SQL's sum rules (NULLs skipped; all NULL is NULL).
-      val raw = shardTable(spark, sh, "stats")
+      val raw = sh.table("stats")
         .select(col("n_docs"), col("tot_dl")).collect()
       def total(i: Int) = {
         val xs = raw.filterNot(_.isNullAt(i)).map(_.getLong(i))
         if (xs.isEmpty) None else Some(xs.sum)
       }
-      val del = if (!tombstoned(spark, sh)) None else {
-        val r = spark.read.schema(TombSchema)
-          .parquet(s"${sh.dir}/tombstones")
-          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
-        Some((r.getLong(0), r.getLong(1)))
+      val del = sh.tombstones.map { t =>
+        val r = t.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
+        (r.getLong(0), r.getLong(1))
       }
       ShardStats(total(0), total(1), del)
     }
@@ -1118,11 +1029,9 @@ object TextAnalysis {
     * come from the index's snapshot, so a warm call infers nothing. */
   private[operators] def maskedPostingPairs(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val sh = Shard(dir, IndexSnapshot.open(spark, dir,
-      "layout" -> "inverted", "fmt" -> "1"))
-    val post = shardTable(spark, sh, "postings")
-      .select(col("doc_id"), col("term"))
-    openTombstones(spark, Seq(sh))
+    val sh = Inverted.open(spark, dir)
+    val post = sh.table("postings").select(col("doc_id"), col("term"))
+    sh.tombstones
       .map(t => post.join(broadcast(t.select(col("doc_id"))),
         Seq("doc_id"), "left_anti"))
       .getOrElse(post)
@@ -1144,9 +1053,9 @@ object TextAnalysis {
     require(dirs.nonEmpty, "at least one index shard required")
     require(phrase.nonEmpty, "phrase must have at least one term")
     val shards = openShards(spark, dirs, nBuckets)
-    val tombs = openTombstones(spark, shards)
+    val tombs = openTombstones(shards)
     val legs = phrase.zipWithIndex.map { case (t, i) =>
-      val postings = shards.map(sh => shardTable(spark, sh, "postings")
+      val postings = shards.map(sh => sh.table("postings")
           .filter(col("tbucket") === lit(Sampling.hashBucketLocal(t,
             nBuckets)) && col("term") === t)
           .select(col("doc_id"), col("positions")))
@@ -1208,21 +1117,21 @@ object TextAnalysis {
     val shards = openShards(spark, dirs, nBuckets)
     val buckets = terms.map(t => Sampling.hashBucketLocal(t, nBuckets))
       .distinct
-    val tombs = openTombstones(spark, shards)
+    val tombs = openTombstones(shards)
     // Corpus stats are scalars of the opened generations: the shards'
     // (n_docs, Σdl) sums, minus — when any shard deleted — the deleted
     // docs' exact (count, Σdl), so idf and avgdl equal an index
     // rebuilt without them. Integer sums, combined with SQL's NULL
     // rules, so the literals equal the one-row aggregate the serve
     // used to cross-join per request.
-    val st = shards.map(shardStats(spark, _))
+    val st = shards.map(shardStats)
     val deleted = st.flatMap(_.deleted)
     def total(raw: Seq[Option[Long]], del: Seq[Long]) =
       (if (raw.forall(_.isEmpty)) None else Some(raw.flatten.sum - del.sum))
         .map(lit(_)).getOrElse(lit(null).cast("long"))
     val nDocs = total(st.map(_.nDocs), deleted.map(_._1))
     val totDl = total(st.map(_.totDl), deleted.map(_._2))
-    val tf0 = shards.map(sh => shardTable(spark, sh, "postings")
+    val tf0 = shards.map(sh => sh.table("postings")
         .filter(col("tbucket").isin(buckets: _*) &&
           col("term").isin(terms: _*))
         .select(col("term"), col("doc_id"), col("tf"), col("dl")))
@@ -1615,10 +1524,18 @@ object TextAnalysis {
         col("rnk"))
   }
 
-  private def spellKeysDir(dir: String) =
-    s"${dir.stripSuffix("/")}/keys"
-  private def spellStatsDir(dir: String) =
-    s"${dir.stripSuffix("/")}/stats"
+  private val SymSpell = Layout(
+    Seq("layout" -> "symspell", "edits" -> "1", "fmt" -> "1"), Nil,
+    Seq("keys" -> Nil, "stats" -> Nil))
+
+  /** The (variant, word) key rows and (word, freq) stat rows of
+    * `documents`' vocabulary, keys first. */
+  private def spellTables(documents: DataFrame): Seq[(String, DataFrame)] = {
+    val vocab = spellVocab(documents)
+    Seq("keys" -> vocab.select(col("word"),
+        explode(spellKeys(col("word"))).as("variant")),
+      "stats" -> vocab.select(col("word"), col("freq")))
+  }
 
   /** Persist the SymSpell layout as TWO tables under `dir` — the
     * inverted-index discipline applied to spell serving:
@@ -1626,16 +1543,8 @@ object TextAnalysis {
     * dedup-at-serve, and `stats/` (word, freq), additive. The
     * sidecar pins the edit radius the keys were generated for — a
     * serve at a different radius would silently miss candidates. */
-  def writeSpellIndex(documents: DataFrame, dir: String): Unit = {
-    val vocab = spellVocab(documents)
-    vocab.select(col("word"),
-        explode(spellKeys(col("word"))).as("variant"))
-      .write.mode("overwrite").parquet(spellKeysDir(dir))
-    vocab.select(col("word"), col("freq"))
-      .write.mode("overwrite").parquet(spellStatsDir(dir))
-    IndexMeta.write(documents.sparkSession, dir,
-      "layout" -> "symspell", "edits" -> "1", "fmt" -> "1")
-  }
+  def writeSpellIndex(documents: DataFrame, dir: String): Unit =
+    SymSpell.build(documents.sparkSession, dir)(spellTables(documents))
 
   /** APPEND a document batch to a stored [[writeSpellIndex]] layout.
     * Key rows are per-word independent (duplicates collapse in the
@@ -1654,20 +1563,16 @@ object TextAnalysis {
     * build/append sequence can produce. */
   def appendSpellIndex(spark: org.apache.spark.sql.SparkSession,
       documents: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir,
-      "layout" -> "symspell", "edits" -> "1", "fmt" -> "1")
-    val vocab = spellVocab(documents)
-    vocab.select(col("word"),
-        explode(spellKeys(col("word"))).as("variant"))
-      .write.mode("append").parquet(spellKeysDir(dir))
-    vocab.select(col("word"), col("freq"))
-      .write.mode("append").parquet(spellStatsDir(dir))
+    val open = SymSpell.open(spark, dir)
+    open.commit(spellTables(documents).foreach { case (t, rows) =>
+      open.append(t, rows, "appendSpellIndex")
+    })
   }
 
   /** DELETE words from a stored [[writeSpellIndex]] layout — the
     * vocabulary-curation path (a word is retracted, its keys must
     * stop producing candidates). Both tables rewrite without the
-    * tombstoned words and swap via [[FsOps.swapInto]] (the
+    * tombstoned words and swap in ([[OpenedLayout.replace]], the
     * compaction commit discipline; deletion batch broadcasts, one
     * linear pass per table). Physically removed, so a later re-add
     * via [[appendSpellIndex]] needs no tombstone reconciliation —
@@ -1679,18 +1584,11 @@ object TextAnalysis {
     * them. */
   def deleteFromSpellIndex(spark: org.apache.spark.sql.SparkSession,
       words: DataFrame, dir: String): Unit = {
-    IndexMeta.requireMatch(spark, dir,
-      "layout" -> "symspell", "edits" -> "1", "fmt" -> "1")
+    val open = SymSpell.open(spark, dir)
     val del = words.select(col("word")).distinct()
-    val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    Seq(spellKeysDir(dir), spellStatsDir(dir)).foreach { table =>
-      val staging = s"${table}_next"
-      spark.read.parquet(table)
-        .join(broadcast(del), Seq("word"), "left_anti")
-        .write.mode("overwrite").parquet(staging)
-      FsOps.swapInto(fs, staging, table)
-    }
+    open.replace(SymSpell.tables.map { case (t, _) =>
+      t -> open.table(t).join(broadcast(del), Seq("word"), "left_anti")
+    }: _*)
   }
 
   /** Serve spell candidates from a stored [[writeSpellIndex]] layout —
@@ -1698,10 +1596,8 @@ object TextAnalysis {
     * variant strings round-trip parquet exactly; spec-pinned). */
   def searchSpellIndex(spark: org.apache.spark.sql.SparkSession,
       documents: DataFrame, dir: String, k: Int = 3): DataFrame = {
-    IndexMeta.requireMatch(spark, dir,
-      "layout" -> "symspell", "edits" -> "1", "fmt" -> "1")
-    spellServe(spellProbes(documents),
-      spark.read.parquet(spellKeysDir(dir)),
-      spark.read.parquet(spellStatsDir(dir)), k)
+    val open = SymSpell.open(spark, dir)
+    spellServe(spellProbes(documents), open.table("keys"),
+      open.table("stats"), k)
   }
 }

@@ -86,6 +86,72 @@ class IndexMetaSpec extends SparkSpec {
     }
   }
 
+  test("every LSH leg refuses a substring_fp dir naming `layout` and leaves it untouched") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val docs = Tables.documents(spark, sfDir)
+    val sigs = Dedup.minhashSignaturesV2(docs)
+    withTempDir("graft_lsh_wrong") { dir =>
+      Dedup.writeSubstringFpIndex(docs.filter($"doc_id" < 50), dir)
+      def listing(): Set[String] = {
+        val root = java.nio.file.Paths.get(dir)
+        val walk = java.nio.file.Files.walk(root)
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.map(root.relativize(_).toString).toSet
+        } finally walk.close()
+      }
+      val before = (listing(), IndexMeta.read(spark, dir))
+      val legs = Seq[(String, () => Unit)](
+        "append" -> (() => Dedup.appendLshIndex(spark, sigs, dir)),
+        "delete" -> (() => Dedup.deleteFromLshIndex(spark,
+          Seq(1L).toDF("doc_id"), dir)),
+        "serve" -> (() => Dedup.lshIncrementalFromIndex(spark, dir, sigs)
+          .collect()))
+      for ((leg, run) <- legs) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("layout"),
+          s"LSH $leg on a substring_fp dir failed without naming layout: " +
+            e.getMessage)
+        assert((listing(), IndexMeta.read(spark, dir)) === before,
+          s"a refused LSH $leg changed the substring_fp dir")
+      }
+    }
+  }
+
+  test("chunk-store build and append stage where Spark does not hide the files") {
+    // A staging child Spark's file source treats as hidden (a leading
+    // `_`) logs "All paths were ignored" on every re-read of it.
+    import spark.implicits._
+    import graft.operators.Multimodal
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-hidden-paths", null, null,
+        true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("All paths were ignored")) warnings.add(m)
+      }
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    try {
+      val docs = Tables.documents(spark, sfDir)
+      withTempDir("graft_chunk_scratch") { dir =>
+        Multimodal.writeChunkStore(docs.filter($"doc_id" < 50), dir)
+        Multimodal.appendChunkStore(spark,
+          docs.filter($"doc_id" >= 50 && $"doc_id" < 60), dir)
+        assert(new java.io.File(dir).list().toSet
+            .filterNot(_.contains(IndexMeta.Name)) === Set("manifest", "store"),
+          "the chunk-store legs left a staging child behind")
+      }
+    } finally root.removeAppender("graft-hidden-paths")
+    assert(warnings.isEmpty, s"hidden staging paths: ${warnings.peek}")
+  }
+
   test("FsOps.swapInto promotes staging and clears a leftover _old dir") {
     withTempDir("graft_fsops") { root =>
       val fs = FsOps.fsOf(spark, root)
@@ -433,6 +499,119 @@ class IndexMetaSpec extends SparkSpec {
       TextAnalysis.writeInvertedIndex(docs.filter($"doc_id" % 2 === 0), dir, 8)
       val rebuilt = warmEqualsCold("rebuild")((bm25Serve(dir), phraseServe(dir)))
       assert(ids(rebuilt._1, "doc_id").forall(_ % 2 == 0))
+    }
+  }
+
+  /** One write leg of a [[LayoutCase]] and whether the serve after it
+    * must differ from the serve before it. */
+  private case class Leg(name: String, write: String => Unit,
+      changes: Boolean = true)
+
+  /** A persisted layout's write legs, in order (the first builds), and
+    * one serve of it. */
+  private case class LayoutCase(name: String,
+      serve: String => Set[org.apache.spark.sql.Row], legs: Seq[Leg])
+
+  /** The text, dedup, sketch and chunk layouts, each with every write
+    * leg it has. */
+  private lazy val layoutCases: Seq[LayoutCase] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, explode, expr, length}
+    import graft.operators.{Dedup, Multimodal, Sketches, TextAnalysis}
+    val docs = Tables.documents(spark, sfDir)
+    val labeled = docs.select($"doc_id", $"source".as("label"), $"text")
+    val corpus = Dedup.augmentCorpus(docs)
+    val sigs = Dedup.minhashSignaturesV2(corpus)
+    val (base, shard) =
+      (sigs.filter($"doc_id" < 100000), sigs.filter($"doc_id" >= 100000))
+    def shingles(d: org.apache.spark.sql.DataFrame) =
+      d.filter(length(col("text")) >= 8).select(col("source"),
+        explode(expr("transform(sequence(1, length(text) - 7), " +
+          "i -> substring(text, i, 8))")).as("sh"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    def spellServe(d: String) =
+      rows(TextAnalysis.searchSpellIndex(spark, docs, d))
+    Seq(
+      LayoutCase("symspell", spellServe, Seq(
+        Leg("build", TextAnalysis.writeSpellIndex(docs.filter($"doc_id" % 2 === 0), _)),
+        Leg("append", TextAnalysis.appendSpellIndex(spark,
+          docs.filter($"doc_id" % 2 =!= 0), _)),
+        Leg("delete", d => TextAnalysis.deleteFromSpellIndex(spark,
+          spellServe(d).map(_.getAs[String]("word")).toSeq.sorted.take(3)
+            .toDF("word"), d)),
+        Leg("rebuild", TextAnalysis.writeSpellIndex(
+          docs.filter($"doc_id" % 3 =!= 0), _)))),
+      LayoutCase("nb_model",
+        d => rows(TextAnalysis.nbClassifyFromModel(spark,
+          docs.select($"doc_id", $"text"), d)), Seq(
+        Leg("build", TextAnalysis.nbWriteModel(labeled.filter($"doc_id" % 2 === 0), _)),
+        Leg("append", TextAnalysis.nbAppendModel(spark,
+          labeled.filter($"doc_id" % 2 =!= 0), _, 1)),
+        Leg("delete", TextAnalysis.nbDeleteBatch(spark, _, 1)),
+        Leg("append again", TextAnalysis.nbAppendModel(spark,
+          labeled.filter($"doc_id" % 4 === 1), _, 2)),
+        Leg("compact", TextAnalysis.nbCompactModel(spark, _),
+          changes = false),
+        Leg("rebuild", TextAnalysis.nbWriteModel(
+          labeled.filter($"doc_id" % 3 =!= 0), _)))),
+      LayoutCase("substring_fp",
+        d => rows(Dedup.substringSpansAgainstIndex(spark,
+          docs.filter($"doc_id" % 10 === 0), docs, d)), Seq(
+        Leg("build", Dedup.writeSubstringFpIndex(
+          docs.filter($"doc_id" % 10 === 1), _)),
+        Leg("append", Dedup.appendSubstringFpIndex(spark,
+          docs.filter($"doc_id" % 10 === 2), _)),
+        Leg("rebuild", Dedup.writeSubstringFpIndex(
+          docs.filter($"doc_id" % 10 === 3), _)))),
+      LayoutCase("chunk_store",
+        d => rows(Multimodal.reconstructFromStore(spark, d)), Seq(
+        Leg("build", Multimodal.writeChunkStore(docs.filter($"doc_id" < 50), _)),
+        Leg("append", Multimodal.appendChunkStore(spark,
+          docs.filter($"doc_id" >= 50 && $"doc_id" < 60), _)),
+        Leg("delete", Multimodal.deleteDocsFromChunkStore(spark,
+          docs.filter($"doc_id" % 5 === 0).select($"doc_id"), _)),
+        Leg("rebuild", Multimodal.writeChunkStore(
+          docs.filter($"doc_id" >= 60 && $"doc_id" < 90), _)))),
+      LayoutCase("bloom",
+        d => rows(Dedup.bloomPrefilterFromIndex(spark,
+          docs.filter($"doc_id" < 100), docs, d)), Seq(
+        Leg("build", Dedup.writeBloomIndex(docs.filter($"doc_id" % 2 === 0), _,
+          shards = 4)),
+        Leg("append", Dedup.appendBloomIndex(spark,
+          docs.filter($"doc_id" % 4 === 1), _)),
+        Leg("rebuild", Dedup.writeBloomIndex(docs.filter($"doc_id" % 3 === 0), _,
+          shards = 4)))),
+      LayoutCase("lsh",
+        d => rows(Dedup.lshIncrementalFromIndex(spark, d, shard, sep = "|")),
+        Seq(
+        Leg("build", Dedup.writeLshIndex(base.filter($"doc_id" % 2 === 0), _,
+          sep = "|")),
+        Leg("append", Dedup.appendLshIndex(spark,
+          base.filter($"doc_id" % 2 =!= 0), _, sep = "|")),
+        Leg("delete", Dedup.deleteFromLshIndex(spark,
+          base.filter($"doc_id" % 5 === 0).select($"doc_id"), _)),
+        Leg("rebuild", Dedup.writeLshIndex(base.filter($"doc_id" % 3 === 0), _,
+          sep = "|")))),
+      LayoutCase("kmv", d => rows(Sketches.kmvSetOps(spark, d, k = 16)), Seq(
+        Leg("build", Sketches.writeKmvSynopses(
+          shingles(docs.filter($"doc_id" % 2 === 0)), col("sh"),
+          col("source"), _, k = 16)),
+        Leg("rebuild", Sketches.writeKmvSynopses(
+          shingles(docs.filter($"doc_id" % 3 === 0)), col("sh"),
+          col("source"), _, k = 16)))))
+  }
+
+  test("text, dedup, sketch and chunk layouts: warm serves equal cold-cache serves after every write") {
+    for (c <- layoutCases) withTempDir(s"graft_snap_${c.name}") { dir =>
+      c.legs.foldLeft(Option.empty[Set[org.apache.spark.sql.Row]]) {
+        (before, leg) =>
+          leg.write(dir)
+          val step = s"${c.name} ${leg.name}"
+          val after = warmEqualsCold(step)(c.serve(dir))
+          before.foreach(b => assert((after != b) == leg.changes,
+            s"$step: the serve ${if (leg.changes) "did not change" else "changed"}"))
+          Some(after)
+      }
     }
   }
 

@@ -610,7 +610,7 @@ class PipelineSpec extends SparkSpec {
     // rides beside the vector for the filtered serves). A raw parquet
     // append with a different column set would not fail — it would
     // leave mixed-schema files the filtered serve reads as nulls on
-    // half the index. requireAppendColumns turns that documented
+    // half the index. The append gate turns that documented
     // hazard into an entry-time rejection, and the rejected batch
     // must leave the stored layout untouched.
     import graft.operators.Similarity
@@ -2884,7 +2884,7 @@ class PipelineSpec extends SparkSpec {
         .collect().toSet
       assert(got === want,
         "serve diverged after sweeping planted staging dirs")
-      // Rebuild entry (via clearTombstones) sweeps too.
+      // Rebuild entry (Layout.build) sweeps too.
       val planted2 = plant(dir, "codes_compacting", "tombstones_next")
       Similarity.writeBqIndex(vecs, dir)
       planted2.foreach(d =>

@@ -298,7 +298,9 @@ class PlanInvariantsSpec extends SparkSpec {
     // already served since its last write, building a request's frame
     // must therefore run NO job, and the collect's job count is pinned
     // at its current value: a job added to either half shows here.
-    import graft.operators.{Similarity, TextAnalysis}
+    import graft.operators.{Dedup, Multimodal, Similarity, Sketches,
+      TextAnalysis}
+    import org.apache.spark.sql.functions.{col, explode, expr, length}
     val s = spark
     import s.implicits._
     val sc = spark.sparkContext
@@ -329,6 +331,27 @@ class PlanInvariantsSpec extends SparkSpec {
       Similarity.writeIvfSq8Index(vecs, cents, s"$root/ivf_sq8")
       Similarity.writeImiIndex(labeled, imiCents, s"$root/imi")
       Similarity.writeImiPqIndex(labeled, imiCents, s"$root/imi_pq")
+      val docs = Tables.documents(spark, sfDir)
+      val sigs = Dedup.minhashSignaturesV2(docs)
+      val shingles = docs.filter(length(col("text")) >= 8)
+        .select(col("source"), explode(expr("transform(sequence(1, " +
+          "length(text) - 7), i -> substring(text, i, 8))")).as("sh"))
+      TextAnalysis.writeSpellIndex(docs, s"$root/symspell")
+      TextAnalysis.nbWriteModel(
+        docs.select($"doc_id", $"source".as("label"), $"text"), s"$root/nb")
+      Dedup.writeSubstringFpIndex(docs.filter($"doc_id" < 50),
+        s"$root/substring_fp")
+      Multimodal.writeChunkStore(docs.filter($"doc_id" < 50),
+        s"$root/chunk_store")
+      Dedup.writeBloomIndex(docs, s"$root/bloom", shards = 4)
+      Dedup.writeLshIndex(sigs.filter($"doc_id" < 100), s"$root/lsh",
+        sep = "|")
+      Sketches.writeKmvSynopses(shingles, col("sh"), col("source"),
+        s"$root/kmv", k = 16)
+      val (incoming, history) =
+        (docs.filter($"doc_id" < 20), docs.filter($"doc_id" < 50))
+      val (classified, shard) =
+        (docs.select($"doc_id", $"text"), sigs.filter($"doc_id" >= 100))
       // One serving request: a single local probe vector.
       val probe = Seq((-1L, vecs.filter($"vec_id" === 3).head.getSeq[Double](1)))
         .toDF("vec_id", "v")
@@ -350,7 +373,20 @@ class PlanInvariantsSpec extends SparkSpec {
         "imi" -> (() => Similarity.searchImiIndex(spark, s"$root/imi", probe,
           5)),
         "imi_pq" -> (() => Similarity.searchImiPqIndex(spark, s"$root/imi_pq",
-          labeled, probe, 5, rerankDepth = Similarity.AutoRerankDepth)))
+          labeled, probe, 5, rerankDepth = Similarity.AutoRerankDepth)),
+        "symspell" -> (() => TextAnalysis.searchSpellIndex(spark, docs,
+          s"$root/symspell")),
+        "nb_model" -> (() => TextAnalysis.nbClassifyFromModel(spark,
+          classified, s"$root/nb")),
+        "substring_fp" -> (() => Dedup.substringSpansAgainstIndex(spark,
+          incoming, history, s"$root/substring_fp")),
+        "chunk_store" -> (() => Multimodal.reconstructFromStore(spark,
+          s"$root/chunk_store")),
+        "bloom" -> (() => Dedup.bloomPrefilterFromIndex(spark, incoming,
+          docs, s"$root/bloom")),
+        "lsh" -> (() => Dedup.lshIncrementalFromIndex(spark, s"$root/lsh",
+          shard, sep = "|")),
+        "kmv" -> (() => Sketches.kmvSetOps(spark, s"$root/kmv", k = 16)))
       serves.foreach(_._2().collect()) // opens every index
       sc.addSparkListener(listener)
       try {
@@ -363,7 +399,9 @@ class PlanInvariantsSpec extends SparkSpec {
         assert(counts === Map("ann" -> (0, 4), "bm25" -> (0, 3),
           "phrase" -> (0, 3), "bq" -> (0, 5), "ivf_bq" -> (0, 5),
           "ivf_flat" -> (0, 4), "ivf_sq8" -> (0, 4), "imi" -> (0, 4),
-          "imi_pq" -> (0, 7)))
+          "imi_pq" -> (0, 7), "symspell" -> (0, 8), "nb_model" -> (0, 18),
+          "substring_fp" -> (0, 13), "chunk_store" -> (0, 3), "bloom" -> (0, 5),
+          "lsh" -> (0, 3), "kmv" -> (0, 6)))
       } finally sc.removeSparkListener(listener)
     }
   }
