@@ -323,7 +323,7 @@ case class WinnowFingerprints(child: Expression, window: Int,
 object CdcKernel {
   /** Fixed public constants (69069: the classic Marsaglia LCG
     * multiplier; 1e9+7: the ubiquitous prime modulus). Recorded
-    * implicitly in the chunk-store sidecar via the scheme's
+    * implicitly in the chunk-store log entry via the scheme's
     * window/divisor — changing them is a re-chunk, same as changing
     * the window. */
   val Base = 69069L

@@ -530,8 +530,6 @@ object Dedup {
     }, s"bloomPrefilterShardedNew needs an integral doc_id (the cogroup " +
       s"carries it as long); got $idType — " +
       s"use bloomPrefilterNew for non-numeric ids")
-    val spark = history.sparkSession
-    import spark.implicits._
     bloomProbeSharded(
       shardedBloomFilters(history, shards, expectedItems, fpp),
       incoming, history, shards)
@@ -544,7 +542,7 @@ object Dedup {
     * bloom insertion is deterministic bit-setting, so the merged
     * filter is bit-identical to one built over the union (the append
     * leg's whole correctness argument; mergeInPlace fails loudly on
-    * incompatible sizes, which the sidecar gate already prevents).
+    * incompatible sizes, which the log gate already prevents).
     * The bloom-positive slice anti-joins history text to kill false
     * positives — output is EXACT regardless of fpp. */
   private def bloomProbeSharded(
@@ -581,14 +579,14 @@ object Dedup {
     * filter_bytes) table — the sketch family's membership member
     * getting the same lifecycle as HLL/KMV/CMS/quantile synopses. In a
     * standing pipeline this table lives next to the corpus and each
-    * arriving shard probes it without re-reading history; the sidecar
+    * arriving shard probes it without re-reading history; the log entry
     * pins (shards, expectedItems, fpp) so appended batches build
     * merge-compatible filters and a mis-parameterized serve fails
     * loudly instead of probing disjoint hash spaces. */
   def writeBloomIndex(history: DataFrame, dir: String, shards: Int = 8,
       expectedItems: Long = 1000000L, fpp: Double = 0.01): Unit =
     Bloom.build(history.sparkSession, dir, "shards" -> shards.toString,
-        "expectedItems" -> expectedItems.toString, "fpp" -> fpp.toString)(
+        "expectedItems" -> expectedItems.toString, "fpp" -> fpp.toString)(_ =>
       Seq("filters" -> shardedBloomFilters(history, shards, expectedItems,
         fpp).toDF("shard", "filter")))
 
@@ -598,15 +596,15 @@ object Dedup {
 
   /** APPEND a history batch to a stored [[writeBloomIndex]] layout:
     * the batch's per-shard filters land beside the old rows
-    * (sidecar-gated parameters ⇒ merge-compatible sizes), and the
+    * (log-gated parameters ⇒ merge-compatible sizes), and the
     * serve OR-merges rows per shard — bit-identical to a filter built
     * over the union, so the gated query shares the monolithic oracle.
     * No tombstones exist for this layout by construction: a Bloom
     * filter cannot unlearn (bits are shared), so deletion means
-    * rebuild — documented, like HLL's max-stability. Retrying a
-    * crashed append is safe: a duplicated batch's filter rows
-    * OR-merge idempotently (x | x = x), so the served filter is
-    * unchanged. */
+    * rebuild — documented, like HLL's max-stability. Appending a
+    * batch twice (an at-least-once redelivery) is safe: a duplicated
+    * batch's filter rows OR-merge idempotently (x | x = x), so the
+    * served filter is unchanged. */
   def appendBloomIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, dir: String): Unit = {
     val open = Bloom.open(spark, dir)
@@ -703,7 +701,7 @@ object Dedup {
   def writeLshIndex(sigs: DataFrame, dir: String,
       bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand,
       sep: String = ""): Unit =
-    Lsh.build(sigs.sparkSession, dir, banding(bands, rowsPerBand, sep): _*)(
+    Lsh.build(sigs.sparkSession, dir, banding(bands, rowsPerBand, sep): _*)(_ =>
       Seq("buckets" -> lshRows(sigs, bands, rowsPerBand, sep)))
 
   // fmt 2 moved the bucket rows from the dir root into `buckets/` and
@@ -730,7 +728,7 @@ object Dedup {
     * bit-for-bit equivalent to having built the index over the union
     * up front (spec-pinned) — no merge step, no rewrite, just new
     * `(doc_id, bucket)` rows landing beside the old files. The
-    * banding parameters MUST match the stored build (sidecar-gated):
+    * banding parameters MUST match the stored build (log-gated):
     * mismatched buckets would silently never collide. No tombstone
     * reconciliation is needed here — [[deleteFromLshIndex]] removes
     * rows PHYSICALLY, so a deleted-then-re-added doc has exactly one
@@ -747,10 +745,9 @@ object Dedup {
     * future shards. Index rows are per-doc independent (a doc's
     * buckets derive from its signature alone), so dropping its rows
     * is EXACTLY equivalent to having built the index without it
-    * (spec-pinned bit-for-bit); the rewrite is a staged replace of the
-    * `buckets/` table ([[OpenedLayout.replace]]: rename-aside, every
-    * filesystem result checked). The deletion batch broadcasts; one
-    * linear pass over the index. */
+    * (spec-pinned bit-for-bit); the rewrite replaces the `buckets/`
+    * table's files in one entry ([[OpenedLayout.replace]]). The
+    * deletion batch broadcasts; one linear pass over the index. */
   def deleteFromLshIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
     val open = Lsh.open(spark, dir)
@@ -767,7 +764,7 @@ object Dedup {
     * [[lshIncrementalPairs]] contract. The banding parameters MUST
     * match the ones the index was built with — bucket ids embed the
     * band number and signature rows, so a mismatched serve would join
-    * disjoint keyspaces and return nothing; the [[IndexMeta]] sidecar
+    * disjoint keyspaces and return nothing; the [[IndexMeta]] log entry
     * written at build makes that a LOUD `require` failure here instead
     * of a silent empty result. One bucket-keyed shuffle of
     * |shard|·bands + |base index| rows; base text and signatures are
@@ -1246,7 +1243,7 @@ object Dedup {
     * byte, each 16 + window bytes — written flat (no partition key: a
     * full-corpus matcher shuffles by fingerprint anyway, so a
     * directory key would prune nothing and only fragment files). The
-    * sidecar pins (window, winnowW) so an appended batch fingerprints
+    * log entry pins (window, winnowW) so an appended batch fingerprints
     * in the same space and a mis-parameterized serve fails loudly. No
     * tombstones: dedup history only grows; removing a doc from
     * history means rebuild (the [[writeBloomIndex]] contract). */
@@ -1255,7 +1252,7 @@ object Dedup {
     require(winnowW >= 1 && winnowW <= window,
       s"winnowW $winnowW must be in [1, window=$window]")
     SubstringFp.build(history.sparkSession, dir, "window" -> window.toString,
-      "winnowW" -> winnowW.toString)(
+      "winnowW" -> winnowW.toString)(_ =>
       Seq("fps" -> winnowFps(history, window, winnowW)))
   }
 
@@ -1270,9 +1267,10 @@ object Dedup {
     * the fleet's name+type append contract. Winnowing is
     * per-document, so append(B) after write(A) is bit-identical to
     * write(A ∪ B) (the gated row's oracle is the monolithic replay).
-    * Retrying a crashed append duplicates fps rows; matches and merged
-    * spans are unchanged (duplicate matches land in the same
-    * span_id), so the serve is idempotent under retry. */
+    * Appending a batch twice (an at-least-once redelivery) duplicates
+    * fps rows; matches and merged spans are unchanged (duplicate
+    * matches land in the same span_id), so the serve is idempotent
+    * under redelivery. */
   def appendSubstringFpIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, dir: String): Unit = {
     val open = SubstringFp.open(spark, dir)
@@ -1295,7 +1293,7 @@ object Dedup {
     * under-covers the index — a matched reference document whose
     * bytes are absent — fails LOUDLY at execution (`raise_error` in
     * the extension refine), never silently drops the span
-    * (spec-pinned): the sidecar philosophy, a mis-parameterized serve
+    * (spec-pinned): the loud-mismatch rule, a mis-parameterized serve
     * must not return partial results. */
   def substringSpansAgainstIndex(
       spark: org.apache.spark.sql.SparkSession, incoming: DataFrame,

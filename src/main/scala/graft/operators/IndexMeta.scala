@@ -1,68 +1,203 @@
 package graft.operators
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** One-row JSON sidecar for persisted index layouts (`_graft_meta
-  * .json` — underscore-prefixed, so parquet directory listings ignore
-  * it like `_SUCCESS`): records the build parameters an index's serve
-  * leg must match, and lets the serve FAIL LOUDLY on a mismatched
-  * config instead of silently joining disjoint keyspaces (the repo's
-  * non-convergence discipline, applied to build/serve coupling).
-  * Written through the Hadoop FileSystem API so the sidecar lands on
-  * whatever filesystem the index does. */
+/** One file of a live table: its path relative to the index dir, and
+  * the length and modification time it had when its leg committed. */
+private[graft] final case class LiveFile(path: String, length: Long,
+    mtime: Long)
+
+/** One table of a generation: its schema (as JSON), its partition keys
+  * and the files it is made of. An empty table is an empty file list. */
+private[graft] final case class LiveTable(schemaJson: String,
+    keys: Seq[String], files: Seq[LiveFile]) {
+  @com.fasterxml.jackson.annotation.JsonIgnore def schema: StructType =
+    DataType.fromJson(schemaJson).asInstanceOf[StructType]
+}
+
+/** One entry of an index's generation log: entry `n` names the layout's
+  * fields (layout, fmt, shape and build parameters), the entry number
+  * `build` of the last (re)build and the id that build drew, and every
+  * table with its live files, tombstones included. */
+private[graft] final case class LogEntry(n: Long,
+    fields: Map[String, String], build: Long, buildId: String,
+    tables: Map[String, LiveTable])
+
+/** The generation log of a persisted index layout: `<dir>/_graft_log/
+  * <n>.json`, one write-once entry per committed write leg.
+  *
+  * THE LOG ENTRY IS THE COMMIT. A write leg only ever adds files: it
+  * writes them to a private staging child of the dir, moves them into
+  * the table tree under fresh names, and then creates entry n+1 with
+  * overwrite off, complete or absent ([[publish]]). Until that entry
+  * exists no reader lists the new files; once it exists every reader
+  * that opens the index reads exactly the files it lists. No listed
+  * file is renamed, overwritten or deleted by a leg, so a serve reads
+  * the one generation it opened even while the next one commits. A
+  * crash anywhere before the entry leaves the previous generation
+  * served, bit for bit; re-running the leg is the recovery. Two legs
+  * that opened the same generation race for the same entry number, and
+  * the one that loses throws, naming it.
+  *
+  * Superseded files stay on disk for [[GraceMillis]], the grace a serve
+  * that opened an older generation has to finish reading it (Spark's
+  * file-sink log cleanup delay is the same ten minutes). An entry is
+  * live while it is the latest and for the grace after its successor
+  * was written; each commit then deletes every entry that is no longer
+  * live and every file under the dir that no live entry lists and that
+  * is older than the grace ([[collectGarbage]]). Crash leftovers — a
+  * staging child, moved but never committed files, a scratch table —
+  * go the same way.
+  *
+  * Entries are written and read through the Hadoop FileSystem API, so
+  * the log lands on whatever filesystem the index does. */
 private[graft] object IndexMeta {
-  val Name = "_graft_meta.json"
+  /** The log dir, a child of every index dir. */
+  val Name = "_graft_log"
+  /** How long a superseded generation, and any unlisted file, survives. */
+  val GraceMillis: Long = 10 * 60 * 1000L
+  private[operators] val StagePrefix = "_graft_stage-"
+  private val EntryFile = """(\d+)\.json""".r
+  private val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
 
-  // JSON string escaping, both directions: a parameter value holding
-  // a quote or backslash (a custom LSH `sep`, say) must round-trip
-  // exactly — an unescaped write would produce a sidecar whose regex
-  // parse silently drops or mangles fields, and requireMatch would
-  // then compare against garbage, defeating the loud-mismatch
-  // contract it exists for.
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String): String =
-    """\\(.)""".r.replaceAllIn(s,
-      m => java.util.regex.Matcher.quoteReplacement(m.group(1)))
+  private def logDir(dir: String) = new Path(dir, Name)
 
-  def write(spark: SparkSession, dir: String,
-      fields: (String, String)*): Unit = {
-    val path = new Path(dir, Name)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(fields
-      .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-      .mkString("{", ",", "}")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  /** The committed entries of `dir`'s log, oldest first. */
+  private def entries(fs: FileSystem, dir: String): Seq[(Long, FileStatus)] =
+    if (!fs.exists(logDir(dir))) Nil
+    else fs.listStatus(logDir(dir)).toSeq.flatMap(st =>
+      st.getPath.getName match {
+        case EntryFile(n) => Some(n.toLong -> st)
+        case _ => None
+      }).sortBy(_._1)
+
+  private def load(fs: FileSystem, dir: String, n: Long): LogEntry = {
+    val in = fs.open(new Path(logDir(dir), s"$n.json"))
+    try mapper.readValue(in.readAllBytes(), classOf[LogEntry]) finally in.close()
   }
 
-  def read(spark: SparkSession, dir: String): Map[String, String] = {
-    val path = new Path(dir, Name)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path),
-      s"no $Name under $dir — not a graft index layout (or an index " +
-        "built before meta sidecars; rebuild it)")
-    // Write legs rewrite the sidecar in place to bump its generation
-    // token, so a serve can catch it mid-write: a torn read (cut short,
-    // or failing its checksum) is retried briefly, never parsed.
-    def load(): Option[String] = {
-      val in = fs.open(path)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        .filter(t => t.startsWith("{") && t.endsWith("}"))
-      catch { case _: org.apache.hadoop.fs.ChecksumException => None }
-      finally in.close()
+  /** The latest entry of `dir`'s log, if it has one. */
+  private[operators] def latestOption(fs: FileSystem,
+      dir: String): Option[LogEntry] =
+    entries(fs, dir).lastOption.flatMap { case (n, _) =>
+      try Some(load(fs, dir, n))
+      // GC drops an entry only once a newer one exists: read that one.
+      catch { case _: java.io.FileNotFoundException => latestOption(fs, dir) }
     }
-    val txt = Iterator.iterate(load())(_ => { Thread.sleep(20); load() })
-      .take(50).collectFirst { case Some(t) => t }
-      .getOrElse(sys.error(s"$Name under $dir is not a complete JSON " +
-        "object — a torn or corrupt sidecar; rebuild the index"))
-    // Token = any run of non-quote chars or escaped chars, so an
-    // escaped quote stays inside its field instead of ending it.
-    """"((?:[^"\\]|\\.)+)":"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(txt)
-      .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
+
+  /** The latest entry of `dir`'s log; fails loudly naming rebuild when
+    * the dir has no log. */
+  def latest(spark: SparkSession, dir: String): LogEntry =
+    latestOption(FsOps.fsOf(spark, dir), dir).getOrElse(
+      throw new IllegalArgumentException(s"no generation log ($Name) " +
+        s"under $dir — not a graft index layout, or one written before " +
+        "the log; rebuild it"))
+
+  /** Create entry `e.n` of `dir`'s log, complete or absent: the bytes go
+    * to a hidden temp file first, which is then published under the
+    * entry's name only if no entry of that number exists (a hard link
+    * on the local filesystem, a non-overwriting rename elsewhere).
+    * False when another leg committed that number first. */
+  private def publish(fs: FileSystem, dir: String, e: LogEntry): Boolean = {
+    val raw = fs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    val dst = new Path(logDir(dir), s"${e.n}.json")
+    val tmp = new Path(logDir(dir), s".${e.n}.json.${java.util.UUID.randomUUID}.tmp")
+    raw.mkdirs(logDir(dir))
+    val out = raw.create(tmp, false)
+    try out.write(mapper.writeValueAsBytes(e)) finally out.close()
+    try raw match {
+      case local: org.apache.hadoop.fs.RawLocalFileSystem =>
+        try {
+          java.nio.file.Files.createLink(local.pathToFile(dst).toPath,
+            local.pathToFile(tmp).toPath)
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      case other => !other.exists(dst) && other.rename(tmp, dst)
+    } finally FsOps.deleteIfExists(raw, tmp)
+  }
+
+  /** Commit `e` as the next entry of `dir`'s log, then collect garbage;
+    * throws when another leg committed entry `e.n` first. */
+  private[operators] def commit(fs: FileSystem, dir: String,
+      e: LogEntry): Unit = {
+    if (!publish(fs, dir, e))
+      throw new java.util.ConcurrentModificationException(
+        s"another write committed entry ${e.n} of $dir's log first; this " +
+          "leg committed nothing — re-run it against the new generation")
+    collectGarbage(fs, dir, e)
+  }
+
+  /** Delete every entry of `dir`'s log that is no longer live (neither
+    * `latest` nor superseded less than [[GraceMillis]] ago), and every
+    * file under `dir` that no live entry lists and that is older than
+    * the grace, then the dirs that leaves empty. */
+  private def collectGarbage(fs: FileSystem, dir: String,
+      latest: LogEntry): Unit = {
+    val cutoff = System.currentTimeMillis() - GraceMillis
+    val log = entries(fs, dir).filter(_._1 < latest.n)
+    val superseded = log.zip(log.drop(1).map(_._2.getModificationTime) :+
+      Long.MaxValue)
+    val (live, dead) = superseded.partition(_._2 > cutoff)
+    val listed = (latest +: live.flatMap { case ((n, _), _) =>
+      try Some(load(fs, dir, n))
+      catch { case _: java.io.FileNotFoundException => None }
+    }).flatMap(_.tables.values.flatMap(_.files.map(_.path))).toSet
+    dead.foreach { case ((_, st), _) => FsOps.deleteIfExists(fs, st.getPath) }
+    // Sweeps the dir `p` (at `rel` under `dir`) and returns whether it
+    // removed anything there and whether `p` is now empty. A dir left
+    // empty goes if this sweep emptied it or it is older than the grace.
+    def sweep(p: Path, rel: String): (Boolean, Boolean) = {
+      val children =
+        try fs.listStatus(p).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      val gone = children.map { st =>
+        val r = if (rel.isEmpty) st.getPath.getName
+          else s"$rel/${st.getPath.getName}"
+        if (st.isDirectory) r != Name && {
+          val (removed, empty) = sweep(st.getPath, r)
+          empty && (removed || st.getModificationTime < cutoff) &&
+            (try fs.delete(st.getPath, false)
+            catch { case _: java.io.IOException => false })
+        } else !listed(r) && st.getModificationTime < cutoff && {
+          FsOps.deleteIfExists(fs, st.getPath)
+          true
+        }
+      }
+      (gone.contains(true), gone.forall(identity))
+    }
+    sweep(new Path(dir), "")
+    // Temp entries a crash left behind.
+    if (fs.exists(logDir(dir))) fs.listStatus(logDir(dir)).foreach { st =>
+      if (st.getPath.getName.startsWith(".") &&
+          st.getModificationTime < cutoff)
+        FsOps.deleteIfExists(fs, st.getPath)
+    }
+  }
+
+  /** The latest entry's fields. */
+  def read(spark: SparkSession, dir: String): Map[String, String] =
+    latest(spark, dir).fields
+
+  /** Commit an entry whose fields are `fields` and whose tables are the
+    * latest entry's, unchanged (a first entry, with no table, in a dir
+    * without a log). */
+  def write(spark: SparkSession, dir: String,
+      fields: (String, String)*): Unit = {
+    val fs = FsOps.fsOf(spark, dir)
+    val e = latestOption(fs, dir).fold(LogEntry(0, fields.toMap, 0,
+      java.util.UUID.randomUUID.toString, Map.empty))(l =>
+      l.copy(n = l.n + 1, fields = fields.toMap))
+    commit(fs, dir, e)
   }
 
   /** Fail unless every `expected` key matches the stored value. */
@@ -70,8 +205,8 @@ private[graft] object IndexMeta {
       expected: (String, String)*): Unit =
     check(dir, read(spark, dir), expected)
 
-  /** [[requireMatch]] against an already-read sidecar; `hint` names
-    * what a sidecar of the expected kind records. */
+  /** [[requireMatch]] against already-read fields; `hint` names what a
+    * layout of the expected kind records. */
   def check(dir: String, got: Map[String, String],
       expected: Seq[(String, String)], hint: String = ""): Unit =
     expected.foreach { case (k, v) =>
@@ -80,6 +215,95 @@ private[graft] object IndexMeta {
           s"${got.getOrElse(k, "<absent>")} but the serve requested " +
           s"$k=$v$hint — serve with the build config or rebuild the index")
     }
+
+  private[operators] def statuses(fs: FileSystem, dir: String,
+      files: Seq[LiveFile]): Seq[FileStatus] = {
+    val root = fs.makeQualified(new Path(dir))
+    files.map(f => new FileStatus(f.length, false, 1, 32L << 20, f.mtime,
+      new Path(root, f.path)))
+  }
+
+  /** A frame over exactly `t`'s files, read with its held schema. */
+  private[graft] def frame(spark: SparkSession, dir: String,
+      name: String, t: LiveTable): DataFrame = {
+    val fs = FsOps.fsOf(spark, dir)
+    frameOf(spark, fs.makeQualified(new Path(dir, name)),
+      statuses(fs, dir, t.files), t.schema, t.keys)
+  }
+
+  /** A parquet frame over exactly `files` under the qualified `root`
+    * ([[LogFileIndex]]) with `schema`: no listing and no schema
+    * inference, so building it runs no job. */
+  private[operators] def frameOf(spark: SparkSession, root: Path,
+      files: Seq[FileStatus], schema: StructType,
+      keys: Seq[String]): DataFrame = {
+    val index = new LogFileIndex(spark, root, files, Some(schema), keys)
+    val part = index.partitionSchema
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, part,
+      StructType(schema.filterNot(f => part.fieldNames.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** `t` with every field, at any depth, nullable — the schema a parquet
+    * read of rows written from `t` reports. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      true)
+    case o => o
+  }
+
+  /** A new write leg of `layout` on `dir` over the generation `base`; a
+    * `rebuild` leg carries none of `base`'s tables. */
+  private[operators] def leg(spark: SparkSession, dir: String,
+      layout: Layout, base: Option[LogEntry], rebuild: Boolean): WriteLeg =
+    new WriteLeg(spark, dir, layout, base, rebuild,
+      new Path(dir, StagePrefix + java.util.UUID.randomUUID))
+
+  /** The schema a parquet read of `rows`, written partitioned by `keys`
+    * to the `staged` files under `root`, reports: the data columns, all
+    * nullable, then the partition columns with the types Spark infers
+    * from the files' dirs (the frame's own type when no file was
+    * written). Deriving it from the write costs no job. */
+  private[operators] def derivedSchema(spark: SparkSession, rows: DataFrame,
+      keys: Seq[String], root: Path, staged: Seq[FileStatus]): StructType = {
+    val inferred =
+      if (keys.isEmpty || staged.isEmpty) new StructType()
+      else new LogFileIndex(spark, root, staged, None, Nil).partitionSchema
+    val byName = rows.schema.fields.map(f => f.name -> f).toMap
+    nullable(StructType(rows.schema.filterNot(f => keys.contains(f.name)) ++
+      keys.map(k => inferred.find(_.name == k).getOrElse(byName(k)))))
+      .asInstanceOf[StructType]
+  }
+}
+
+/** A file index over a fixed list of file statuses, the way Spark's
+  * `MetadataLogFileIndex` serves a file sink's log: nothing is listed,
+  * partition values come from the files' `key=value` dirs under `root`,
+  * and a table with no file still has its partition columns. */
+private[graft] final class LogFileIndex(spark: SparkSession, val root: Path,
+    files: Seq[FileStatus], schema: Option[StructType], keys: Seq[String])
+    extends PartitioningAwareFileIndex(spark, Map.empty, schema) {
+  override val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+    mutable.LinkedHashMap(files.map(f => f.getPath -> f): _*)
+  override val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    files.toArray.groupBy(_.getPath.getParent)
+  override def rootPaths: Seq[Path] = Seq(root)
+  override def refresh(): Unit = ()
+  private lazy val spec = {
+    val inferred = inferPartitioning()
+    if (inferred.partitionColumns.nonEmpty || keys.isEmpty) inferred
+    else PartitionSpec(StructType(keys.map(k => schema.get(k))), Nil)
+  }
+  override def partitionSpec(): PartitionSpec = spec
+  private lazy val paths = files.map(_.getPath).toSet
+  override def equals(o: Any): Boolean = o match {
+    case l: LogFileIndex => l.root == root && l.paths == paths
+    case _ => false
+  }
+  override def hashCode: Int = root.hashCode
 }
 
 /** Serve-side state of a persisted index that only a write can change,
@@ -87,40 +311,23 @@ private[graft] object IndexMeta {
   * next write — the way a search engine reuses one opened searcher
   * between refreshes instead of re-reading its segments per query.
   *
-  * Every write leg stores fresh random tokens in the [[IndexMeta]]
-  * sidecar after its data commits: a (re)build writes a new
-  * QUANTIZER token and a new DATA token ([[buildTokens]]); an append,
-  * delete or compaction writes a new data token only ([[bumpData]]),
-  * since the quantizer is fixed once trained. A serve reads the
-  * sidecar (the read [[IndexMeta.requireMatch]] already makes) and
-  * reuses a memoized value only under the token it was derived under,
-  * so a write by any session or JVM retires it at the next serve.
+  * A generation is (build id, entry number) of the log entry a serve
+  * opened ([[IndexMeta]]): values derived from the quantizer live as
+  * long as the build id, values derived from the data as long as the
+  * entry. Entries are write-once, so a write by any session or JVM
+  * retires them at the next open.
   *
-  * Memoized values are plain local values — sub-table schemas,
-  * collected quantizer entries, occupancy and corpus-stat scalars,
-  * tombstone presence — never DataFrames or results, and each is
-  * derived on first use. Quantizer-keyed values survive data writes;
-  * data-keyed values are re-derived after each. A sidecar without
-  * tokens (written by an older build) memoizes nothing: every value is
-  * derived afresh per serve, exactly as before tokens existed. The
+  * Memoized values are plain local values — collected quantizer
+  * entries, occupancy and corpus-stat scalars, tombstone presence —
+  * never DataFrames or results, and each is derived on first use. The
   * cache holds at most [[Bound]] index directories, least recently
   * opened evicted first; concurrent serves may derive one value twice
-  * (identical either way) but never see a half-built entry.
-  *
-  * A write leg that dies between its data commit and its token write
-  * leaves the old tokens in place, so serves in a JVM that had already
-  * opened the index keep the old derived values until the next write;
-  * re-running the failed leg (the documented recovery for every leg)
-  * writes the token. */
+  * (identical either way) but never see a half-built entry. */
 private[graft] object IndexSnapshot {
-  val QuantizerGen = "quantizer_gen"
-  val DataGen = "data_gen"
   private val Bound = 16
 
-  private def token(): String = java.util.UUID.randomUUID().toString
-
-  /** Values derived under one token. */
-  private final class Memo(val token: String) {
+  /** Values derived under one generation. */
+  private final class Memo {
     private val values =
       new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
     def apply[T <: AnyRef](key: String)(f: => T): T =
@@ -130,171 +337,134 @@ private[graft] object IndexSnapshot {
       }.asInstanceOf[T]
   }
 
-  private final class Entry(val quantizer: Memo, val data: Memo)
+  private final class Gen(val buildId: String, val quantizer: Memo,
+      val n: Long, val data: Memo)
 
-  private val cache = new java.util.LinkedHashMap[String, Entry](
+  private val cache = new java.util.LinkedHashMap[String, Gen](
       Bound, 0.75f, true) {
     override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Entry]): Boolean = size() > Bound
+        e: java.util.Map.Entry[String, Gen]): Boolean = size() > Bound
   }
 
-  /** One opened generation of an index: its sidecar fields and the
-    * memoized values derived from its quantizer or data. */
-  final class Snapshot private[IndexSnapshot] (
-      val meta: Map[String, String], q: Option[Memo], d: Option[Memo]) {
+  /** The memoized values of one opened generation. */
+  final class Snapshot private[IndexSnapshot] (q: Memo, d: Memo) {
     /** A value that changes only when the index is rebuilt. */
-    def quantizer[T <: AnyRef](key: String)(f: => T): T =
-      q.fold(f)(_(key)(f))
+    def quantizer[T <: AnyRef](key: String)(f: => T): T = q(key)(f)
     /** A value that changes with any write to the index. */
-    def data[T <: AnyRef](key: String)(f: => T): T = d.fold(f)(_(key)(f))
+    def data[T <: AnyRef](key: String)(f: => T): T = d(key)(f)
   }
 
-  /** The memoized state of the generation `meta`, the sidecar just
-    * read from `dir`, names. */
-  def open(spark: SparkSession, dir: String,
-      meta: Map[String, String]): Snapshot =
-    (meta.get(QuantizerGen), meta.get(DataGen)) match {
-      case (Some(qt), Some(dt)) =>
-        val p = new Path(dir)
-        val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .makeQualified(p).toString
-        val e = cache.synchronized {
-          val old = Option(cache.get(key))
-          val q = old.map(_.quantizer).filter(_.token == qt)
-          val d = old.filter(_ => q.isDefined).map(_.data)
-            .filter(_.token == dt)
-          val e = new Entry(q.getOrElse(new Memo(qt)),
-            d.getOrElse(new Memo(dt)))
-          cache.put(key, e)
-          e
-        }
-        new Snapshot(meta, Some(e.quantizer), Some(e.data))
-      case _ => new Snapshot(meta, None, None)
-    }
+  /** The memoized state of the generation `e` of the index at `dir` (a
+    * qualified path). */
+  def open(dir: String, e: LogEntry): Snapshot = cache.synchronized {
+    val old = Option(cache.get(dir)).filter(_.buildId == e.buildId)
+    val q = old.fold(new Memo)(_.quantizer)
+    val d = old.filter(_.n == e.n).fold(new Memo)(_.data)
+    cache.put(dir, new Gen(e.buildId, q, e.n, d))
+    new Snapshot(q, d)
+  }
 
   /** Drops every memoized generation; the next serve of each index
     * derives its values afresh (the cold-cache baseline in tests). */
   def clear(): Unit = cache.synchronized(cache.clear())
-
-  /** Fresh tokens for the sidecar a (re)build writes. */
-  def buildTokens(): Seq[(String, String)] =
-    Seq(QuantizerGen -> token(), DataGen -> token())
-
-  /** A fresh data token for `dir`'s sidecar, called after a data write
-    * commits. Sidecars without tokens, and dirs without a sidecar,
-    * are left as they are. */
-  def bumpData(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, IndexMeta.Name)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-      val meta = IndexMeta.read(spark, dir)
-      if (meta.contains(DataGen))
-        IndexMeta.write(spark, dir,
-          (meta + (DataGen -> token())).toSeq.sortBy(_._1): _*)
-    }
-  }
 }
 
-/** One persisted index layout: the fixed fields its sidecar records
-  * and every leg checks (`layout` first, then `fmt` and any fixed
-  * shape such as BQ's `bits`), the build parameters its sidecar must
-  * also record, its tables with their partition keys, and the schema
-  * of its tombstone table when it has one. Every table sits in a
-  * subdir: a layout's root holds only its sidecar and tombstones, which
-  * must not sit inside a parquet table's own listing.
+/** One persisted index layout: the fixed fields its log entries record
+  * and every leg checks (`layout` first, then `fmt` and any fixed shape
+  * such as BQ's `bits`), the build parameters its entries must also
+  * record, its tables with their partition keys, and the schema of its
+  * tombstone table when it has one.
   *
-  * The three shared write legs — [[build]], [[OpenedLayout.append]]
-  * and [[OpenedLayout.replace]] — and the one open are all that reads
-  * or writes a sidecar; a leg only one layout has composes them inside
-  * [[OpenedLayout.commit]]. */
-private[graft] final case class Layout(sidecar: Seq[(String, String)],
+  * [[build]] and [[OpenedLayout.commit]] are the only write legs: every
+  * leg stages new files through a [[WriteLeg]] and commits one log
+  * entry ([[IndexMeta]]). */
+private[graft] final case class Layout(fields: Seq[(String, String)],
     params: Seq[String], tables: Seq[(String, Seq[String])],
     tombstones: Option[StructType] = None) {
-  def name: String = sidecar.head._2
+  def name: String = fields.head._2
 
   /** The partition keys of `table`; none for a table not listed. */
   def keys(table: String): Seq[String] =
     tables.collectFirst { case (`table`, k) => k }.getOrElse(Nil)
 
-  /** Open `dir`'s current generation as this layout, failing loudly
-    * unless its sidecar records the fixed fields, the given build
+  /** Open `dir`'s latest generation as this layout, failing loudly
+    * unless its entry records the fixed fields, the given build
     * parameters and every declared parameter key. */
   def open(spark: SparkSession, dir: String,
       params: (String, String)*): OpenedLayout =
-    openRead(spark, dir, IndexMeta.read(spark, dir), params)
+    openEntry(spark, dir, IndexMeta.latest(spark, dir), params)
 
-  private[operators] def openRead(spark: SparkSession, dir: String,
-      meta: Map[String, String],
-      params: Seq[(String, String)]): OpenedLayout = {
-    val records = (sidecar.map(_._1) ++ this.params).mkString(", ")
-    IndexMeta.check(dir, meta, sidecar ++ params,
-      s" (a $name sidecar records $records)")
-    this.params.foreach(k => require(meta.contains(k),
-      s"index at $dir has no `$k` key in its sidecar — not a $name " +
-        "layout (or a sidecar copied from another layout); rebuild it"))
-    new OpenedLayout(spark, dir, this, IndexSnapshot.open(spark, dir, meta))
+  private[operators] def openEntry(spark: SparkSession, dir: String,
+      e: LogEntry, params: Seq[(String, String)]): OpenedLayout = {
+    val records = (fields.map(_._1) ++ this.params).mkString(", ")
+    IndexMeta.check(dir, e.fields, fields ++ params,
+      s" (a $name layout records $records)")
+    this.params.foreach(k => require(e.fields.contains(k),
+      s"index at $dir has no `$k` key in its log entry — not a $name " +
+        "layout (or fields copied from another layout); rebuild it"))
+    val fs = FsOps.fsOf(spark, dir)
+    new OpenedLayout(spark, dir, this, e,
+      IndexSnapshot.open(fs.makeQualified(new Path(dir)).toString, e))
   }
 
-  /** The build leg: sweep crash-left staging and the previous
-    * generation's tombstones (a rebuild supersedes prior deletions),
-    * run `tables` (which may first write quantizer tables of its own),
-    * write each returned table partitioned by its keys, then the
-    * sidecar with fresh generation tokens ([[IndexSnapshot]]). */
+  /** The build leg: run `tables` (which may first write quantizer tables
+    * of its own through the leg), write each returned table partitioned
+    * by its keys, then commit an entry that holds only what this leg
+    * wrote — an empty tombstone table too, since a rebuild supersedes
+    * prior deletions — under a fresh build id. A dir that holds files
+    * but no log is refused, untouched; one that holds only the staging
+    * child of a first build that crashed is built over. */
   def build(spark: SparkSession, dir: String, params: (String, String)*)(
-      tables: => Seq[(String, DataFrame)]): Unit = {
+      tables: WriteLeg => Seq[(String, DataFrame)]): Unit = {
     require(this.params.forall(k => params.exists(_._1 == k)),
       s"a $name build must record ${this.params.mkString(", ")}")
     val fs = FsOps.fsOf(spark, dir)
-    FsOps.clearStaging(fs, dir)
-    FsOps.deleteIfExists(fs, new Path(dir, "tombstones"))
-    tables.foreach { case (t, rows) =>
-      rows.write.mode("overwrite").partitionBy(keys(t): _*)
-        .parquet(s"$dir/$t")
+    val base = IndexMeta.latestOption(fs, dir)
+    val d = new Path(dir)
+    require(base.isDefined || !fs.exists(d) || fs.listStatus(d)
+        .forall(_.getPath.getName.startsWith(IndexMeta.StagePrefix)),
+      s"$dir holds files but no generation log (${IndexMeta.Name}) — an " +
+        "index written before the log, or not an index; remove it and " +
+        "rebuild")
+    val leg = IndexMeta.leg(spark, dir, this, base, rebuild = true)
+    leg.run {
+      tables(leg).foreach { case (t, rows) => leg.write(t, rows) }
+      leg.commit((fields ++ params).toMap)
     }
-    IndexMeta.write(spark, dir,
-      sidecar ++ params ++ IndexSnapshot.buildTokens(): _*)
   }
 }
 
 private[graft] object Layout {
-  /** Open `dir` as whichever of `layouts` its sidecar names. */
+  /** Open `dir` as whichever of `layouts` its latest entry names. */
   def openAny(spark: SparkSession, dir: String,
       layouts: Seq[Layout]): OpenedLayout = {
-    val meta = IndexMeta.read(spark, dir)
-    val name = meta.getOrElse("layout", "<absent>")
+    val e = IndexMeta.latest(spark, dir)
+    val name = e.fields.getOrElse("layout", "<absent>")
     val layout = layouts.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"index at $dir has " +
         s"layout=$name; this leg applies to " +
         layouts.map(_.name).sorted.mkString(", ")))
-    layout.openRead(spark, dir, meta, Nil)
+    layout.openEntry(spark, dir, e, Nil)
   }
 }
 
-/** One opened generation of a persisted [[Layout]]: `dir`'s sidecar,
-  * checked at open, and the values every leg derives from the stored
+/** One opened generation of a persisted [[Layout]]: the log entry `entry`
+  * of `dir`, checked at open, and the values every leg derives from its
   * tables, held by the index's [[IndexSnapshot]] so each is derived
-  * once per generation:
-  *  - each table's schema (quantizer-keyed: a write rewrites rows,
-  *    never columns), so a table reads with no schema-inference job
-  *    and an append gates on it;
-  *  - tombstone presence (data-keyed), read from the tombstone
-  *    table's parquet footers, so it costs no job either.
-  * On an index already opened since its last write, building a serve
-  * frame therefore runs no Spark job.
+  * once per generation. Tables read exactly the files the entry lists,
+  * with the schema it records, and tombstone presence is read from the
+  * listed tombstone files' parquet footers; on an index already opened
+  * since its last write, building a serve frame therefore runs no Spark
+  * job.
   *
-  * Write legs run inside [[commit]]: crash-left staging is swept at
-  * entry and a fresh data token is written after the leg's last data
-  * write, so a leg made of several writes (an append that also
-  * reconciles tombstones, a compaction) writes its token once, last. */
+  * Every write leg runs inside [[commit]], which commits one entry on
+  * top of this generation. */
 private[graft] final class OpenedLayout private[operators] (
     val spark: SparkSession, val dir: String, val layout: Layout,
-    snap: IndexSnapshot.Snapshot) {
-  private var depth = 0
-  private def fs = FsOps.fsOf(spark, dir)
+    val entry: LogEntry, snap: IndexSnapshot.Snapshot) {
 
-  def path(table: String): String = s"$dir/$table"
-
-  /** A build parameter the sidecar records. */
-  def param(key: String): String = snap.meta(key)
+  /** A build parameter the entry records. */
+  def param(key: String): String = entry.fields(key)
 
   /** A value that changes only when the index is rebuilt. */
   def quantizer[T <: AnyRef](key: String)(f: => T): T =
@@ -303,56 +473,170 @@ private[graft] final class OpenedLayout private[operators] (
   /** A value that changes with any write to the index. */
   def data[T <: AnyRef](key: String)(f: => T): T = snap.data(key)(f)
 
-  def schema(table: String): StructType =
-    snap.quantizer(s"$table.schema")(spark.read.parquet(path(table)).schema)
+  private def live(table: String): LiveTable =
+    entry.tables.getOrElse(table, throw new IllegalArgumentException(
+      s"index at $dir has no table $table in entry ${entry.n}"))
 
   /** `table` read with its held schema. */
   def table(table: String): DataFrame =
-    spark.read.schema(schema(table)).parquet(path(table))
+    IndexMeta.frame(spark, dir, table, live(table))
 
   /** The tombstone table when it holds any row: never deleted, or
     * drained, plans no mask. */
   def tombstones: Option[DataFrame] =
     layout.tombstones.filter(_ => data[java.lang.Boolean]("tombstones")(
-      Boolean.box(FsOps.hasRows(spark, path("tombstones")))))
-      .map(spark.read.schema(_).parquet(path("tombstones")))
+      Boolean.box(FsOps.hasRows(spark, IndexMeta.statuses(
+        FsOps.fsOf(spark, dir), dir, live("tombstones").files)))))
+      .map(_ => table("tombstones"))
 
-  /** Run the write leg `body`: sweep staging at entry, write a new data
-    * token after it. Nested commits write one token, at the end of the
-    * outermost. */
-  def commit[T](body: => T): T = {
-    if (depth == 0) FsOps.clearStaging(fs, dir)
-    depth += 1
-    val r = try body finally depth -= 1
-    if (depth == 0) IndexSnapshot.bumpData(spark, dir)
-    r
-  }
-
-  /** Fail unless `rows` carries exactly `table`'s stored column set
-    * and types ([[FsOps.requireColumns]]). */
-  def gate(table: String, rows: DataFrame, leg: String): Unit =
-    FsOps.requireColumns(schema(table), rows, leg)
-
-  /** The append leg: gate `rows` on the held schema, append them
-    * partitioned by the table's keys, then write a new data token. */
-  def append(table: String, rows: DataFrame, leg: String): Unit = commit {
-    gate(table, rows, leg)
-    rows.write.mode("append").partitionBy(layout.keys(table): _*)
-      .parquet(path(table))
-  }
-
-  /** The staged replace leg: write each table's new rows to
-    * `<table>_next`, then — every Spark action done — swap them in, in
-    * the given order, then write a new data token. */
-  def replace(tables: (String, DataFrame)*): Unit = commit {
-    tables.foreach { case (t, rows) =>
-      rows.write.mode("overwrite").partitionBy(layout.keys(t): _*)
-        .parquet(path(s"${t}_next"))
+  /** Run the write leg `body` on top of this generation and commit its
+    * files as the next entry; the fields stay as they are. */
+  def commit[T](body: WriteLeg => T): T = {
+    val leg = IndexMeta.leg(spark, dir, layout, Some(entry), rebuild = false)
+    leg.run {
+      val r = body(leg)
+      leg.commit(entry.fields)
+      r
     }
-    tables.foreach { case (t, _) => swap(s"${t}_next", t) }
   }
 
-  /** Promote the staged child `staging` to `table` ([[FsOps.swapInto]]). */
-  def swap(staging: String, table: String): Unit =
-    FsOps.swapInto(fs, path(staging), path(table))
+  /** The append leg: gate `rows` on the held schema and add them,
+    * partitioned by the table's keys. */
+  def append(table: String, rows: DataFrame, leg: String): Unit =
+    commit(_.append(table, rows, leg))
+
+  /** The replace leg: each table's files become its new rows'. */
+  def replace(tables: (String, DataFrame)*): Unit =
+    commit(l => tables.foreach { case (t, rows) => l.replace(t, rows) })
+}
+
+/** The files one write leg adds and drops. Each [[write]] stages rows
+  * under the leg's private child of the dir; [[commit]] moves the staged
+  * files into the table tree, then commits an entry listing the base
+  * generation's files minus the dropped ones plus the added ones. A leg
+  * records exactly its own files, never a racing writer's. */
+private[graft] final class WriteLeg private[operators] (
+    spark: SparkSession, dir: String, layout: Layout,
+    base: Option[LogEntry], rebuild: Boolean, stage: Path) {
+  private val fs = FsOps.fsOf(spark, dir)
+  private var writes = 0
+  // table -> (schema, keys, staged files with their path under the table)
+  private val added =
+    mutable.LinkedHashMap.empty[String, (StructType, Seq[String],
+      mutable.Buffer[(FileStatus, String)])]
+  private val dropped = mutable.Map.empty[String, String => Boolean]
+  // table -> the root and files of its last write
+  private val lastStaged = mutable.Map.empty[String, (Path, Seq[FileStatus])]
+
+  private def staging(name: String): Path = {
+    writes += 1
+    new Path(stage, s"$writes/$name")
+  }
+
+  /** The data files under the qualified `root`, each with its path
+    * relative to it. */
+  private def listed(root: Path): Seq[(FileStatus, String)] = {
+    val prefix = root.toUri.getPath.length + 1
+    def walk(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap(st =>
+      if (st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith(".")) Nil
+      else if (st.isDirectory) walk(st.getPath) else Seq(st))
+    if (!fs.exists(root)) Nil
+    else walk(root).map(st => st -> st.getPath.toUri.getPath.substring(prefix))
+  }
+
+  private def baseTable(table: String): Option[LiveTable] =
+    base.filterNot(_ => rebuild).flatMap(_.tables.get(table))
+
+  /** Add `rows` to `table`, partitioned by its keys. */
+  def write(table: String, rows: DataFrame): Unit = {
+    val keys = baseTable(table).fold(layout.keys(table))(_.keys)
+    val out = fs.makeQualified(staging(table))
+    rows.write.mode("overwrite").partitionBy(keys: _*).parquet(out.toString)
+    val files = listed(out)
+    val (_, _, buf) = added.getOrElseUpdate(table,
+      (baseTable(table).fold(IndexMeta.derivedSchema(spark, rows, keys, out,
+        files.map(_._1)))(_.schema), keys, mutable.Buffer.empty))
+    buf ++= files
+    lastStaged(table) = out -> files.map(_._1)
+  }
+
+  /** [[write]] after gating `rows` on the base generation's schema. */
+  def append(table: String, rows: DataFrame, leg: String): Unit = {
+    baseTable(table).foreach(t => FsOps.requireColumns(t.schema, rows, leg))
+    write(table, rows)
+  }
+
+  /** Drop the base generation's files of `table` whose path under the
+    * table root `p` accepts. */
+  def drop(table: String)(p: String => Boolean): Unit =
+    dropped(table) = dropped.get(table).fold(p)(q => f => q(f) || p(f))
+
+  /** [[drop]] every file under the partition dir `leaf` (`batch=3`,
+    * `c0=1/c1=2`). */
+  def dropLeaf(table: String, leaf: String): Unit =
+    drop(table)(_.startsWith(s"$leaf/"))
+
+  /** `table`'s files become `rows`'. */
+  def replace(table: String, rows: DataFrame): Unit = {
+    drop(table)(_ => true)
+    write(table, rows)
+  }
+
+  /** The rows this leg last staged for `table`, read back (a build's
+    * quantizer tables, encoded against exactly the stored values). */
+  def staged(table: String): DataFrame = {
+    val (schema, keys, _) = added(table)
+    val (root, files) = lastStaged(table)
+    IndexMeta.frameOf(spark, root, files, schema, keys)
+  }
+
+  /** `rows` written once to a scratch table of this leg and read back,
+    * so several writes derive from one computation; never committed. */
+  def scratch(name: String, rows: DataFrame): DataFrame = {
+    val out = fs.makeQualified(staging(name))
+    rows.write.mode("overwrite").parquet(out.toString)
+    IndexMeta.frameOf(spark, out, listed(out).map(_._1),
+      IndexMeta.derivedSchema(spark, rows, Nil, out, Nil), Nil)
+  }
+
+  /** Run `body`, then drop the staging child, whatever happened. */
+  private[operators] def run[T](body: => T): T =
+    try body finally FsOps.deleteIfExists(fs, stage)
+
+  /** Move the staged files into the table tree and commit the next
+    * entry with `fields`: a rebuild's entry holds only this leg's
+    * tables, any other entry the base generation's with this leg's
+    * drops and additions. */
+  private[operators] def commit(fields: Map[String, String]): Unit = {
+    val parents = mutable.Set.empty[Path]
+    val moved = added.map { case (t, (schema, keys, files)) =>
+      t -> LiveTable(schema.json, keys, files.map { case (st, rel) =>
+        val dst = new Path(dir, s"$t/$rel")
+        if (parents.add(dst.getParent)) fs.mkdirs(dst.getParent)
+        FsOps.checkedRename(fs, st.getPath, dst)
+        LiveFile(s"$t/$rel", st.getLen, st.getModificationTime)
+      }.toSeq)
+    }
+    // Every Spark action of the leg is done: its scratch goes before the
+    // commit sweeps the dir.
+    FsOps.deleteIfExists(fs, stage)
+    val kept = base.filterNot(_ => rebuild).fold(Map.empty[String, LiveTable])(
+      _.tables.map { case (t, lt) => t -> lt.copy(files = lt.files.filterNot(
+        f => dropped.get(t).exists(_(f.path.stripPrefix(s"$t/"))))) })
+    val drained = if (!rebuild) Map.empty[String, LiveTable]
+      else layout.tombstones.map(s => "tombstones" -> LiveTable(s.json, Nil, Nil)).toMap
+    val n = base.fold(0L)(_.n + 1)
+    val (build, buildId) = base.filterNot(_ => rebuild).fold(
+      (n, java.util.UUID.randomUUID.toString))(b => (b.build, b.buildId))
+    val e = LogEntry(n, fields, build, buildId, drained ++ kept ++
+      moved.map { case (t, lt) =>
+        t -> kept.get(t).fold(lt)(k => k.copy(files = k.files ++ lt.files)) })
+    try IndexMeta.commit(fs, dir, e)
+    catch { case lost: java.util.ConcurrentModificationException =>
+      moved.values.foreach(_.files.foreach(f =>
+        FsOps.deleteIfExists(fs, new Path(dir, f.path))))
+      throw lost
+    }
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -473,18 +473,16 @@ object Multimodal {
     * payload-bearing shuffle carries each DISTINCT chunk once (min()
     * picks the payload deterministically; equal hashes ⇒ equal bytes);
     * the manifest write is a map-side projection, no shuffle. The
-    * chunking parameters are recorded in the [[IndexMeta]] sidecar —
+    * chunking parameters are recorded in the [[IndexMeta]] log entry —
     * an append with different parameters would produce chunks that
     * can never dedup against the stored ones, so it fails loudly. */
   def writeChunkStore(documents: DataFrame, dir: String, window: Int = 8,
       divisor: Int = 32): Unit = {
-    val spark = documents.sparkSession
-    ChunkStore.build(spark, dir, "window" -> window.toString,
-        "divisor" -> divisor.toString) {
-      val (manifest, store) = chunkTables(documents, dir, window, divisor)
+    ChunkStore.build(documents.sparkSession, dir,
+        "window" -> window.toString, "divisor" -> divisor.toString) { leg =>
+      val (manifest, store) = chunkTables(documents, leg, window, divisor)
       Seq("manifest" -> manifest, "store" -> store)
     }
-    dropChunkScratch(spark, dir)
   }
 
   private val ChunkStore = Layout(
@@ -492,30 +490,21 @@ object Multimodal {
     Seq("manifest" -> Nil, "store" -> Nil))
 
   /** Shared build/append machinery: the chunk table (spans + payload)
-    * materializes ONCE to `chunks_scratch` — the per-byte window-hash
-    * digest work is the dominant cost, and the manifest and store legs
-    * are two separate write actions that would each replay it — and
-    * both legs derive from the re-read: the manifest rows (the
-    * payload column-pruned away) and one store row per distinct hash.
-    * The leg drops the scratch after its writes; a crash-left one is
-    * swept at the next leg's entry. */
-  private def chunkTables(documents: DataFrame, dir: String,
+    * materializes ONCE to a scratch table of the write leg — the
+    * per-byte window-hash digest work is the dominant cost, and the
+    * manifest and store legs are two separate write actions that would
+    * each replay it — and both legs derive from the re-read: the
+    * manifest rows (the payload column-pruned away) and one store row
+    * per distinct hash. The scratch goes with the leg's staging child. */
+  private def chunkTables(documents: DataFrame, leg: WriteLeg,
       window: Int, divisor: Int): (DataFrame, DataFrame) = {
-    val scratch = s"$dir/chunks_scratch"
-    cdcSpans(documents, window, divisor)
+    val ch = leg.scratch("chunks", cdcSpans(documents, window, divisor)
       .select(col("doc_id"), col("chunk_no"), col("chunk_hash"),
-        expr("substring(text, cstart, chunk_len)").as("chunk"))
-      .write.mode("overwrite").parquet(scratch)
-    val ch = documents.sparkSession.read.parquet(scratch)
+        expr("substring(text, cstart, chunk_len)").as("chunk")))
     (ch.select(col("doc_id"), col("chunk_no"), col("chunk_hash")),
       ch.select(col("chunk_hash"), col("chunk"))
         .groupBy(col("chunk_hash")).agg(min(col("chunk")).as("chunk")))
   }
-
-  private def dropChunkScratch(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    FsOps.deleteIfExists(FsOps.fsOf(spark, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/chunks_scratch"))
 
   /** Incrementally add a corpus batch to a [[writeChunkStore]] layout:
     * the batch's manifest rows append, but only chunks whose hash the
@@ -531,12 +520,11 @@ object Multimodal {
     val open = ChunkStore.open(spark, dir, "window" -> window.toString,
       "divisor" -> divisor.toString)
     val known = open.table("store").select(col("chunk_hash"))
-    open.commit {
-      val (manifest, store) = chunkTables(documents, dir, window, divisor)
-      open.append("manifest", manifest, "appendChunkStore")
-      open.append("store", store.join(known, Seq("chunk_hash"), "left_anti"),
+    open.commit { leg =>
+      val (manifest, store) = chunkTables(documents, leg, window, divisor)
+      leg.append("manifest", manifest, "appendChunkStore")
+      leg.append("store", store.join(known, Seq("chunk_hash"), "left_anti"),
         "appendChunkStore")
-      dropChunkScratch(spark, dir)
     }
   }
 
@@ -552,10 +540,8 @@ object Multimodal {
     *
     * Scale shape: the deletion batch broadcasts into the manifest
     * anti-join; the sweep is one hash-keyed semi-join of the store
-    * against the kept manifest's distinct hashes. Both rewrites are
-    * one staged replace ([[OpenedLayout.replace]]: rename-aside, every
-    * filesystem result checked; all Spark actions complete before any
-    * mutation), the manifest swapped in first. */
+    * against the kept manifest's distinct hashes. Both rewrites commit
+    * in one entry ([[OpenedLayout.replace]]). */
   def deleteDocsFromChunkStore(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit = {
     val open = ChunkStore.open(spark, dir)

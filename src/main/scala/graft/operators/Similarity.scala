@@ -459,7 +459,7 @@ object Similarity {
          |  IF(element_at(v, i + $lo) >= CAST(0 AS DOUBLE),
          |     shiftleft(CAST(1 AS BIGINT), i - 1), CAST(0 AS BIGINT))),
          |CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin)
-    // The packing width is fixed at 64 (two 32-bit halves; the sidecar
+    // The packing width is fixed at 64 (two 32-bit halves; the log entry
     // records bits=64). A shorter vector would silently encode its
     // missing dims as 0-bits (element_at past the end is null → the
     // else branch) and a longer one would silently drop dims beyond
@@ -505,7 +505,7 @@ object Similarity {
     * the code table, the same lifecycle discipline as the flat/SQ8/PQ
     * rungs. A rebuild clears stale tombstones first. */
   def writeBqIndex(vecs: DataFrame, dir: String): Unit =
-    buildLayout(vecs.sparkSession, dir, BqLayout)(bqCodeRows(vecs))
+    buildLayout(vecs.sparkSession, dir, BqLayout)(_ => bqCodeRows(vecs))
 
   /** The stored code-row frame of the flat BQ build/append legs:
     * (vec_id, code0, code1, metadata…) — non-vector input columns
@@ -523,8 +523,7 @@ object Similarity {
   /** APPEND a vector batch's codes to a stored [[writeBqIndex]]
     * layout — per-vector rows, so build-half + append-half IS the
     * monolithic table (same rows, any file split); the gated query
-    * shares the monolithic oracle. The table is unpartitioned, so a
-    * full-drain placeholder stays harmlessly beside the appended rows. */
+    * shares the monolithic oracle. */
   def appendBqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs: DataFrame, dir: String): Unit =
     appendRows(BqLayout.open(spark, dir), vecs, bqCodeRows(vecs),
@@ -660,8 +659,8 @@ object Similarity {
     * rewrite. */
   def writeIvfBqIndex(vecs: DataFrame, cents: DataFrame,
       dir: String): Unit =
-    buildLayout(vecs.sparkSession, dir, IvfBqLayout) {
-      ivfBqCodeRows(vecs, storedCents(cents, dir))
+    buildLayout(vecs.sparkSession, dir, IvfBqLayout) { leg =>
+      ivfBqCodeRows(vecs, storedCents(cents, leg))
     }
 
   /** The stored code-row frame of the IVF-BQ build/append legs:
@@ -1178,14 +1177,14 @@ object Similarity {
     * same codebooks (spec-pinned). */
   def writeImiIndex(vecs: DataFrame, cents: DataFrame,
       dir: String): Unit =
-    buildLayout(vecs.sparkSession, dir, ImiLayout) {
+    buildLayout(vecs.sparkSession, dir, ImiLayout) { leg =>
       // All input columns persist (metadata like `label` rides beside
       // the vector), so [[searchImiIndexWhere]]'s predicate pushes to
       // the stored scan — the same filtered-serve contract as the flat
       // layout. The pair assignment is inline on the corpus row
       // ([[withInlinePair]]) — no aggregate, no re-attach join.
       withInlinePair(withNorm(vecs),
-        collectHalves(storedQuantizer(cents, dir, "centroids")))
+        collectHalves(storedQuantizer(cents, leg, "centroids")))
     }
 
   /** APPEND a corpus batch to a persisted [[writeImiIndex]] layout:
@@ -1437,11 +1436,11 @@ object Similarity {
       quantizer: Option[DataFrame] = None): Unit = {
     val spark = vecs.sparkSession
     buildLayout(spark, dir, ImiPqLayout, "m" -> m.toString,
-        "codebookK" -> codebookK.toString) {
+        "codebookK" -> codebookK.toString) { leg =>
       // Fused inline encode (round 19): assignment + residual in one
       // projection on the corpus row — no per-vector argmin aggregate,
       // no re-attach join.
-      val halves = collectHalves(storedQuantizer(cents, dir, "centroids"))
+      val halves = collectHalves(storedQuantizer(cents, leg, "centroids"))
       val rcorp = inlinePairResiduals(vecs, halves)
       // The default (quantizer = batch) REUSES the batch's own residual
       // frame for codebook training — computing the same assignment
@@ -1450,7 +1449,7 @@ object Similarity {
         .getOrElse(rcorp)
       val codebook = collectCodebook(storedQuantizer(
         codebookOf(qres.select(col("vec_id"), col("rv").as("v")), m,
-          codebookK), dir, "codebook"))
+          codebookK), leg, "codebook"))
       pqCodeRows(codebook, rcorp, vecs, m, ImiPqLayout.partKeys)
     }
   }
@@ -1463,7 +1462,7 @@ object Similarity {
     * to the monolithic build (spec-pinned). Since fmt 2 the code rows
     * carry the input's metadata columns for the filtered serve, so the
     * batch gates on the stored column set ([[appendRows]]) like every
-    * metadata-carrying append leg; the sidecar still rejects a
+    * metadata-carrying append leg; the log entry still rejects a
     * mismatched `m` loudly. */
   def appendImiPqIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String, m: Int = 4): Unit = {
@@ -1704,7 +1703,7 @@ object Similarity {
   def writeKnnAssignIndex(vecs: DataFrame, dir: String,
       nprobe: Int = 1): Unit =
     buildLayout(vecs.sparkSession, dir, KnnAssignLayout,
-      "nprobe" -> nprobe.toString)(assignCellsRanked(vecs, vecs, nprobe))
+      "nprobe" -> nprobe.toString)(_ => assignCellsRanked(vecs, vecs, nprobe))
 
   /** [[knnJoinIndexed]] served from a [[writeKnnAssignIndex]] table:
     * identical scoring/tie-break contract, but the assignment pass is
@@ -1712,7 +1711,7 @@ object Similarity {
     * rows expand the probe side (`nprobe` may be LOWERED below the
     * built rank to trade recall for scan fraction without rebuilding;
     * asking for MORE than the index stored fails loudly via the
-    * [[IndexMeta]] sidecar — raising recall beyond the build requires
+    * [[IndexMeta]] log entry — raising recall beyond the build requires
     * a rebuild, the same contract as re-training an IVF quantizer,
     * and serving reduced recall silently is exactly the failure a
     * recall-gated deployment must not absorb).
@@ -1723,10 +1722,10 @@ object Similarity {
   def knnJoinFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecs: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // The open requires the `nprobe` key: a sidecar WITHOUT it
+    // The open requires the `nprobe` key: an entry WITHOUT it
     // (hand-copied from another layout, say) must fail loudly, not
     // silently serve at the reduced-recall default of 1 — exactly the
-    // failure the sidecar exists to prevent.
+    // failure the log entry exists to prevent.
     val open = KnnAssignLayout.open(spark, dir)
     val builtNprobe = open.param("nprobe").toInt
     require(nprobe <= builtNprobe,
@@ -2366,20 +2365,20 @@ object Similarity {
       codebookK: Int = 8, kCells: Int = 8, iters: Int = 2,
       quantizer: Option[DataFrame] = None): Unit =
     buildLayout(vecs.sparkSession, dir, IvfPqLayout, "m" -> m.toString,
-        "codebookK" -> codebookK.toString, "kCells" -> kCells.toString) {
+        "codebookK" -> codebookK.toString, "kCells" -> kCells.toString) { leg =>
       val qsrc = quantizer.getOrElse(vecs)
       // Same build discipline as [[writeIvfIndex]]: persist the trained
       // centroids FIRST and assign against the re-read table, so the
       // Lloyd trajectory runs once instead of once per downstream
       // action (exact: parquet round-trips the means).
-      val cents = storedCents(kmeansTrain(qsrc, kCells, iters), dir)
+      val cents = storedCents(kmeansTrain(qsrc, kCells, iters), leg)
       // BY-RESIDUAL ([[ivfPqrTopK]]'s encoding): the codebook trains on
       // the quantizer corpus's residuals against the STORED centroids,
       // and every vector's code encodes v − centroid(cell).
       val qres = residualsWith(qsrc, cents, 1)
         .select(col("vec_id"), col("rv").as("v"))
       val codebook = collectCodebook(storedQuantizer(
-        codebookOf(qres, m, codebookK), dir, "codebook"))
+        codebookOf(qres, m, codebookK), leg, "codebook"))
       pqCodeRows(codebook, residualsWith(vecs, cents, 1), vecs, m,
         IvfPqLayout.partKeys)
     }
@@ -2408,7 +2407,7 @@ object Similarity {
     * matrix's last append cell: new vectors assign cells against the
     * STORED centroids and encode against the STORED codebook (the
     * quantizer is fixed once trained — FAISS's `add` contract; the
-    * sidecar makes a mismatched `m` a loud failure, since codes under
+    * log entry makes a mismatched `m` a loud failure, since codes under
     * a different sub-vector split would silently score garbage).
     * Same tombstone reconciliation as the IVF append: a re-added id's
     * tombstone clears AFTER the data append commits. */
@@ -2479,7 +2478,7 @@ object Similarity {
     * then [[pqrRefined]] — one read path so the modes cannot diverge
     * on masking order or the scoring contract. Serving at a different
     * sub-vector split than the build would slice probe vectors against
-    * codes that mean something else — the sidecar makes it a loud
+    * codes that mean something else — the log entry makes it a loud
     * failure instead of silent garbage, and fmt=2 rejects a
     * pre-residual (raw-code) dir the same way. */
   private def pqrRefinedFromIndex(
@@ -2642,11 +2641,10 @@ object Similarity {
     * collected centroids, IMI halves and PQ codebook beside the
     * stored table schemas, tombstone presence and occupancy — values
     * derived from the stored tables, never DataFrames or results, and
-    * held only while the sidecar's generation tokens are unchanged.
-    * That is no cross-run result cache either: the query suite
-    * rebuilds each index on every run, the rebuild writes fresh
-    * tokens, and nothing derived from an earlier run is ever
-    * served. */
+    * held only while the index's log entry is unchanged. That is no
+    * cross-run result cache either: the query suite rebuilds each
+    * index on every run, the rebuild draws a fresh build id, and
+    * nothing derived from an earlier run is ever served. */
   private val quantizerMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, Map[String, AnyRef]]())
 
@@ -2837,18 +2835,6 @@ object Similarity {
   private def imiTrainedAsSubCents(cents: Seq[DataFrame]): DataFrame =
     Seq(0, 1).map(s => cents(s).select(lit(s).as("sub"),
       col("cid").as("clabel"), (col("dim") - 1).as("pos"), col("cmean")))
-      .reduce(_ unionByName _)
-
-  /** Sub-distance frame of `src` against TRAINED half-quantizers —
-    * the label-free analog of [[imiSubDistancesAgainst]], same
-    * (probe_id, sub, clabel, d2r) shape so the pair/argmin helpers
-    * serve both trainings. */
-  private def imiTrainedSubD(cents: Seq[DataFrame],
-      src: DataFrame): DataFrame =
-    Seq(0, 1).map(s =>
-      trainedDistances(imiHalf(src, s), cents(s))
-        .select(col("probe_id"), lit(s).as("sub"),
-          col("cid").as("clabel"), col("d2r")))
       .reduce(_ unionByName _)
 
   /** The PRODUCTION multi-index: [[imiTopK]] with the half codebooks
@@ -3060,11 +3046,11 @@ object Similarity {
     * precomputed at index time (`nrm` column), so serving never
     * re-reduces the vectors. */
   def writeIvfIndex(vecs: DataFrame, cents: DataFrame, dir: String): Unit =
-    buildLayout(vecs.sparkSession, dir, IvfFlatLayout) {
+    buildLayout(vecs.sparkSession, dir, IvfFlatLayout) { leg =>
       // Inline rank-1 assignment on the row ([[withInlineCell]],
       // round 20) — the separate assignment frame + corpus-sized
       // re-attach join on vec_id are gone; same argmin, same rows.
-      withInlineCell(withNorm(vecs), storedCents(cents, dir))
+      withInlineCell(withNorm(vecs), storedCents(cents, leg))
     }
 
   /** APPEND a new corpus batch to a persisted [[writeIvfIndex]] layout
@@ -3079,7 +3065,7 @@ object Similarity {
     * Re-TRAINING the quantizer, by contrast, is a rebuild — new cells
     * re-bucket everything, same rule as the streaming-dedup family
     * switch. An append of a previously deleted vec_id is a re-add:
-    * [[appendRows]] clears its tombstone after the data commits. */
+    * [[appendRows]] clears its tombstone in the same entry. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
     val open = IvfFlatLayout.open(spark, dir)
@@ -3104,9 +3090,9 @@ object Similarity {
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType)))
 
-  private def vectorLayout(sidecar: Seq[(String, String)], table: String,
+  private def vectorLayout(fields: Seq[(String, String)], table: String,
       partKeys: Seq[String], params: String*): Layout =
-    Layout(sidecar, params, Seq(table -> partKeys), Some(TombstoneSchema))
+    Layout(fields, params, Seq(table -> partKeys), Some(TombstoneSchema))
 
   private val BqLayout = vectorLayout(
     Seq("layout" -> "bq", "bits" -> "64", "fmt" -> "2"), "codes", Nil)
@@ -3140,7 +3126,7 @@ object Similarity {
   }
 
   /** The vector legs' view of an opened layout ([[OpenedLayout]] holds
-    * the sidecar check, table schemas and tombstone presence): the
+    * the entry check, table schemas and tombstone presence): the
     * collected quantizer — cell centroids, IMI halves, PQ codebook —
     * so no leg past the build reads a quantizer table as a frame, the
     * masked row table, and the occupancy-derived re-rank depth. */
@@ -3191,13 +3177,13 @@ object Similarity {
     topKPerProbe(refined, k)
   }
 
-  /** A build's quantizer table written under `dir` and read back, so
-    * the build's rows encode against exactly the stored values (and
-    * `df`, often a live training lineage, runs once). */
-  private def storedQuantizer(df: DataFrame, dir: String,
+  /** A build's quantizer table staged by its leg and read back, so the
+    * build's rows encode against exactly the stored values (and `df`,
+    * often a live training lineage, runs once). */
+  private def storedQuantizer(df: DataFrame, leg: WriteLeg,
       table: String): DataFrame = {
-    df.write.mode("overwrite").parquet(s"$dir/$table")
-    df.sparkSession.read.parquet(s"$dir/$table")
+    leg.write(table, df)
+    leg.staged(table)
   }
 
   /** [[storedQuantizer]] for trained (cid, dim, cmean) cell centroids,
@@ -3205,45 +3191,40 @@ object Similarity {
     * in-query (knnJoinIndexed's note), but a build is exactly the
     * "materialize outside the query" case; parquet round-trips the
     * means exactly, so the assignment is bit-identical either way. */
-  private def storedCents(cents: DataFrame, dir: String): CentEntries =
-    collectCents(storedQuantizer(cents, dir, "centroids"), "dim")
+  private def storedCents(cents: DataFrame, leg: WriteLeg): CentEntries =
+    collectCents(storedQuantizer(cents, leg, "centroids"), "dim")
 
   /** The build leg of every vector layout ([[Layout.build]]): `rows`
-    * writes the layout's quantizer tables, if any, and returns the row
-    * frame. */
+    * stages the layout's quantizer tables, if any, through the leg and
+    * returns the row frame. */
   private def buildLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, layout: Layout, params: (String, String)*)(
-      rows: => DataFrame): Unit =
-    layout.build(spark, dir, params: _*)(Seq(layout.table -> rows))
+      rows: WriteLeg => DataFrame): Unit =
+    layout.build(spark, dir, params: _*)(leg =>
+      Seq(layout.table -> rows(leg)))
 
   /** The append leg of every vector layout: gate `rows` on the opened
     * layout's stored column set (rows carry metadata for the filtered
     * serves, so a mismatched batch must fail at entry, not leave
-    * mixed-schema files), clear a full-drain placeholder, append
-    * partitioned by the layout's keys, clear the tombstones of
-    * re-added `batch` ids, then write a new data token.
+    * mixed-schema files), add them partitioned by the layout's keys and
+    * clear the tombstones of re-added `batch` ids — one entry, so a
+    * serve sees both or neither.
     *
     * The tombstone reconciliation anti-joins the appended ids out of
-    * the tombstone table (staged replace), so a delete-then-re-add
-    * serves the re-added rows and a later compaction cannot drop
-    * them. It runs AFTER the data append commits — a crash in the
-    * window leaves the new rows masked (retryable), never stale rows
-    * visible. Caller contract (FAISS's `add` has the same one — ids
-    * are not membership-checked): re-adding an id whose deleted rows
-    * are still physically present (deleted but not yet compacted)
-    * would leave duplicate rows once unmasked; compact first
-    * (PipelineSpec's re-add pins exercise exactly that flow). */
+    * the tombstone table, so a delete-then-re-add serves the re-added
+    * rows and a later compaction cannot drop them. Caller contract
+    * (FAISS's `add` has the same one — ids are not membership-checked):
+    * re-adding an id whose deleted rows are still physically present
+    * (deleted but not yet compacted) would leave duplicate rows once
+    * unmasked; compact first (PipelineSpec's re-add pins exercise
+    * exactly that flow). */
   private def appendRows(open: OpenedLayout, batch: DataFrame,
-      rows: DataFrame, leg: String): Unit = open.commit {
-    val table = open.layout.table
-    open.gate(table, rows, leg)
-    open.layout.partKeys.headOption.foreach(
-      clearDrainedPlaceholder(open.spark, open.path(table), _))
-    open.append(table, rows, leg)
+      rows: DataFrame, leg: String): Unit = open.commit { l =>
+    l.append(open.layout.table, rows, leg)
     open.tombstones.foreach { t =>
       val appended = batch
         .select(col("vec_id").cast("long").as("vec_id")).distinct()
-      open.replace("tombstones" ->
+      l.replace("tombstones",
         t.join(broadcast(appended), Seq("vec_id"), "left_anti"))
     }
   }
@@ -3255,29 +3236,25 @@ object Similarity {
     * (`tombstones/`), the index files are untouched, and every serve
     * masks them with one broadcast anti-join — O(|deletes|) serve
     * overhead, zero rewrite cost, exactly the tombstone contract every
-    * LSM-shaped store uses. The dir's sidecar is checked first: a
-    * delete aimed at a mistyped path or another kind of index would
-    * otherwise "succeed" and mask nothing. The layout's compaction
-    * reclaims the space and drains the table. */
+    * LSM-shaped store uses. The dir's log is checked first: a delete
+    * aimed at a mistyped path or another kind of index would otherwise
+    * "succeed" and mask nothing. The layout's compaction reclaims the
+    * space and drains the table. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, dir: String): Unit =
     deleteRows(Layout.openAny(spark, dir, TombstonedLayouts), ids)
 
-  /** Append `ids` to the tombstone table, then write a new data token. */
+  /** Add `ids` to the tombstone table. */
   private def deleteRows(open: OpenedLayout, ids: DataFrame): Unit =
-    open.commit {
-      ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-        .write.mode("append").parquet(open.path("tombstones"))
-    }
+    open.commit(_.write("tombstones",
+      ids.select(col("vec_id").cast("long").as("vec_id")).distinct()))
 
   /** Partition-dir segment for a value, escaped exactly as Spark's
     * partitioned writes escape it (ExternalCatalogUtils.escapePathName
-    * — the writer-side codec), so the compaction rename/delete loops
-    * match the ON-DISK dir names even for string labels needing URI
-    * escaping (space, '/', '='). Raw interpolation would silently
-    * miss such dirs: an emptied-partition delete or a full-drain
-    * check acting on a name that doesn't exist. Int labels (the only
-    * ones today) escape to themselves, so this is a no-op for them. */
+    * — the writer-side codec), so the compaction's file-list cut
+    * matches the stored dir names even for string labels needing URI
+    * escaping (space, '/', '='). Int labels (the only ones today)
+    * escape to themselves. */
   private def partSegment(colName: String, v: Any): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val s = Option(v).map(_.toString)
@@ -3285,145 +3262,48 @@ object Similarity {
     s"$colName=${ExternalCatalogUtils.escapePathName(s)}"
   }
 
-  /** A FULL-DRAIN compaction replaces a partitioned table with a
-    * zero-row NON-partitioned placeholder file at the table root
-    * ([[compactLayout]]'s drained branch — a partitioned write of zero
-    * rows would leave no parquet footer at all and the next read would
-    * fail schema inference). A later partitioned APPEND would write
-    * `key=` dirs BESIDE that root file, and the next read of the table
-    * fails Spark's partition discovery (mixed partition depths) — so
-    * every partitioned append clears the placeholder first. Root-level
-    * data files with no `key=` sibling (`key` is the table's first
-    * partition key) can ONLY be the drained marker (every build/append
-    * writes partitioned), so the whole table dir is safe to drop; with
-    * any `key=` dir present the table is live and nothing is touched,
-    * whatever stray root files sit beside it. */
-  private def clearDrainedPlaceholder(
-      spark: org.apache.spark.sql.SparkSession, tableDir: String,
-      key: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(tableDir)
-    val fs = FsOps.fsOf(spark, tableDir)
-    if (fs.exists(p)) {
-      val entries = fs.listStatus(p)
-      val hasParts = entries.exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith(s"$key="))
-      val rootData = entries.exists(s => s.isFile && {
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      })
-      if (!hasParts && rootData) FsOps.deleteIfExists(fs, p)
-    }
-  }
-
-  /** The partition leaf dirs under `root` for `keys`, relative to it
-    * (`cell=3`, `c0=1/c1=2`); none when `root` is absent. */
-  private def partitionLeaves(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, keys: Seq[String]): Set[String] =
-    keys.foldLeft(Set("")) { (parents, key) =>
-      parents.flatMap { rel =>
-        val p = new org.apache.hadoop.fs.Path(root + rel)
-        if (!fs.exists(p)) Nil
-        else fs.listStatus(p).map(_.getPath.getName)
-          .filter(_.startsWith(s"$key=")).map(n => s"$rel/$n")
-      }
-    }.map(_.stripPrefix("/"))
-
   /** The compaction leg of every vector layout: open the layout (its
-    * sidecar check and held row schema), drop the tombstoned rows from
-    * the row table and drain the tombstone table.
+    * log entry and held row schema), drop the tombstoned rows from the
+    * row table and drain the tombstone table, in one entry.
     * Reclamation never changes a result: the compacted serve equals the
     * masked serve it replaces (oracle-gated per layout).
     *
     * The unit of rewrite follows the partition keys. An unpartitioned
-    * table (flat BQ, 16 B/vector) is rewritten whole and swapped in. A
-    * partitioned table rewrites only the leaves (`cell=N` or
-    * `c0=X/c1=Y`) that hold tombstoned rows — untouched leaves are
-    * never read or written. The survivors stage to a sibling dir, and
-    * each leaf is replaced by a checked delete plus a checked rename: a
-    * driver-side metadata loop bounded by the quantizer's cell count
-    * (the commit shape of Spark's own dynamic-partition protocol), never
-    * data through the driver. There is no rename-aside: a transient
-    * `cell=N_old` sibling would match the partition-dir pattern and
-    * corrupt a concurrent partitioned read. A leaf whose rows all died
-    * is deleted outright, so tombstones always drain fully. A
-    * compaction that leaves no row at all swaps in a zero-row
-    * schema-preserving file at the table root instead, so the table
-    * still reads ([[clearDrainedPlaceholder]] clears it before the next
-    * partitioned append).
-    *
-    * CRASH-WINDOW ORDER: staging left by a crashed leg is swept at
-    * entry; the compacted rows commit first, the tombstone drain
-    * second, the data token last. A crash after the row commit leaves
-    * tombstones naming rows that are already gone — harmless for
-    * serves, and an append that re-adds one of those ids clears it
-    * ([[appendRows]]). The reverse order would unmask the deleted rows
-    * if the row swap then crashed. A crash before the token write
-    * leaves JVMs that had opened the index on their old derived values
-    * until the next write ([[IndexSnapshot]]); re-running the
-    * compaction recovers. */
+    * table (flat BQ, 16 B/vector) is rewritten whole. A partitioned
+    * table rewrites only the leaves (`cell=N` or `c0=X/c1=Y`) that hold
+    * tombstoned rows: their keys are collected (a metadata-sized list
+    * bounded by the quantizer's cell count), their survivors are read
+    * through a literal partition filter and written as new files, and
+    * the entry swaps the leaves' old files for those — file-list
+    * arithmetic; untouched leaves are never read or written. A leaf
+    * whose rows all died gets no new file, so it simply leaves the
+    * list, and a compaction that leaves no row at all commits an empty
+    * table whose schema the entry keeps. */
   private def compactLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, layout: Layout): Unit = {
-    import org.apache.hadoop.fs.Path
     val open = layout.open(spark, dir)
-    val fs = FsOps.fsOf(spark, dir)
-    open.commit(open.tombstones.foreach { tombs =>
-      val name = layout.table
-      val table = open.path(name)
-      val staging = s"${table}_compacting"
-      val keys = layout.partKeys
+    open.tombstones.foreach { tombs =>
+      val (name, keys) = (layout.table, layout.partKeys)
       val rows = open.table(name)
-      // Both rewrites report whether no row survived anywhere.
-      def rewriteWhole(): Boolean = {
-        rows.join(broadcast(tombs), Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(staging)
-        // A full drain can leave the staged write with no data file.
-        val hasData = fs.listStatus(new Path(staging))
-          .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        if (hasData) open.swap(s"${name}_compacting", name)
-        !hasData
-      }
-      def rewriteLeaves(): Boolean = {
-        val affected = rows.join(broadcast(tombs), Seq("vec_id"))
-          .select(keys.map(col): _*).distinct()
-        val rewritten = rows.join(broadcast(affected), keys)
-          .join(broadcast(tombs), Seq("vec_id"), "left_anti")
-        // Leaves with NO survivors are deleted below instead of
-        // rewritten. Leaf count is quantizer-bounded, so collecting
-        // them is a metadata-sized driver list.
-        val emptied = affected
-          .join(rewritten.select(keys.map(col): _*).distinct(), keys,
-            "left_anti")
-          .collect().map(r => keys.indices
-            .map(i => partSegment(keys(i), r.get(i))).mkString("/")).toSet
-        rewritten.write.mode("overwrite").partitionBy(keys: _*)
-          .parquet(staging)
-        val staged = partitionLeaves(fs, staging, keys)
-        val drained = emptied.nonEmpty &&
-          ((partitionLeaves(fs, table, keys) -- emptied) ++ staged).isEmpty
-        if (!drained) {
-          staged.foreach { leaf =>
-            val dest = new Path(s"$table/$leaf")
-            FsOps.deleteIfExists(fs, dest)
-            fs.mkdirs(dest.getParent)
-            FsOps.checkedRename(fs, new Path(s"$staging/$leaf"), dest)
+      open.commit { leg =>
+        if (keys.isEmpty)
+          leg.replace(name, rows.join(broadcast(tombs), Seq("vec_id"),
+            "left_anti"))
+        else {
+          val affected = rows.join(broadcast(tombs), Seq("vec_id"))
+            .select(keys.map(col): _*).distinct().collect()
+          if (affected.nonEmpty) {
+            leg.write(name, rows.filter(affected.map(r => keys.indices
+                .map(i => col(keys(i)) <=> lit(r.get(i))).reduce(_ && _))
+                .reduce(_ || _))
+              .join(broadcast(tombs), Seq("vec_id"), "left_anti"))
+            affected.foreach(r => leg.dropLeaf(name, keys.indices
+              .map(i => partSegment(keys(i), r.get(i))).mkString("/")))
           }
-          emptied.foreach(leaf =>
-            FsOps.deleteIfExists(fs, new Path(s"$table/$leaf")))
         }
-        drained
+        leg.drop("tombstones")(_ => true)
       }
-      if (if (keys.isEmpty) rewriteWhole() else rewriteLeaves()) {
-        // The placeholder is staged while the source files are still in
-        // place; partition keys ride in it as plain columns.
-        rows.limit(0).write.mode("overwrite").parquet(s"${table}_empty")
-        open.swap(s"${name}_empty", name)
-      }
-      FsOps.deleteIfExists(fs, new Path(staging))
-      // The tombstone table drains to zero rows but stays present, so a
-      // later serve reads an empty mask, not a missing path.
-      open.replace("tombstones" -> tombs.limit(0))
-    })
+    }
   }
 
   /** Physically compact a persisted [[writeIvfIndex]] layout: the
@@ -3566,10 +3446,10 @@ object Similarity {
     * standard SQ serve. */
   def writeIvfSq8Index(vecs: DataFrame, cents: DataFrame,
       dir: String): Unit =
-    buildLayout(vecs.sparkSession, dir, IvfSq8Layout) {
+    buildLayout(vecs.sparkSession, dir, IvfSq8Layout) { leg =>
       // Inline assignment + metadata carry ([[withInlineCell]] under
       // [[sq8Rows]]' projection, round 20) — no re-attach join.
-      sq8Rows(withInlineCell(vecs, storedCents(cents, dir)))
+      sq8Rows(withInlineCell(vecs, storedCents(cents, leg)))
     }
 
   /** APPEND a batch to a persisted [[writeIvfSq8Index]] layout — the
@@ -3577,7 +3457,7 @@ object Similarity {
     * uses the STORED centroids and the scale is per-vector, so
     * write(A) then append(B) is row-for-row equal to write(A ∪ B)
     * under the same quantizer (spec-pinned bit-for-bit). Tombstones
-    * for re-added ids reconcile after the data append commits. */
+    * for re-added ids reconcile in the same entry. */
   def appendIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       vecs2: DataFrame, dir: String): Unit = {
     val open = IvfSq8Layout.open(spark, dir)

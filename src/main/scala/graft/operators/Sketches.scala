@@ -142,12 +142,12 @@ object Sketches {
     * of the KMV family: each group ships its k smallest 48-bit hashes
     * (BIGINTs, parquet-exact) and every later set question is answered
     * from the store without re-scanning data. The `k` used at build is
-    * recorded in the [[IndexMeta]] sidecar; [[kmvSetOps]] requires it
+    * recorded in the [[IndexMeta]] log entry; [[kmvSetOps]] requires it
     * to match, because a serve-time k larger than the stored rank
     * would silently truncate every estimate's sample window. */
   def writeKmvSynopses(df: DataFrame, key: Column, group: Column,
       dir: String, k: Int = 64): Unit =
-    Kmv.build(df.sparkSession, dir, "k" -> k.toString)(Seq("synopses" ->
+    Kmv.build(df.sparkSession, dir, "k" -> k.toString)(_ => Seq("synopses" ->
       kmvSynopsis(df.select(group.as("grp"), h48(key).as("h")), k)))
 
   // fmt 2 moved the synopsis rows from the dir root into `synopses/`.

@@ -297,8 +297,8 @@ object TextAnalysis {
     * append invalidates. Model size is labels × vocab, never corpus.
     *
     * Both tables are PARTITIONED by an integer `batch` id (the base
-    * build is batch 0) — the whole point of the layout: an append is
-    * a dynamic OVERWRITE of its own batch partition, so the
+    * build is batch 0) — the whole point of the layout: an append
+    * REPLACES the files of its own batch partition, so the
     * at-least-once redelivery that `foreachBatch` ingest implies
     * replaces the batch's rows instead of stacking a second copy.
     * A plain `mode("append")` here would double-count every replayed
@@ -306,7 +306,7 @@ object TextAnalysis {
     * fingerprint and bloom layouts where duplicate rows are harmless
     * by construction. */
   def nbWriteModel(docs: DataFrame, dir: String): Unit =
-    NbModel.build(docs.sparkSession, dir)(nbTables(docs, 0))
+    NbModel.build(docs.sparkSession, dir)(_ => nbTables(docs, 0))
 
   private val NbModel = Layout(Seq("layout" -> "nb_model", "fmt" -> "2"),
     Nil, Seq("counts" -> Seq("batch"), "docstats" -> Seq("batch")))
@@ -329,12 +329,11 @@ object TextAnalysis {
     * New labels just appear; gates through the fleet's name+type
     * append contract.
     *
-    * IDEMPOTENT under redelivery: the write is a dynamic partition
-    * OVERWRITE of exactly `batch=<id>`, so a streaming micro-batch
-    * replayed after a crash — including a crash BETWEEN the counts
-    * and docstats writes, which transiently leaves likelihoods and
-    * priors trained on different corpora — converges to one copy of
-    * the batch in both tables once the replay lands (spec-pinned).
+    * IDEMPOTENT under redelivery: one entry replaces the files of
+    * exactly `batch=<id>` in both tables, so a streaming micro-batch
+    * replayed after a crash converges to one copy of the batch
+    * (spec-pinned), and a crash before the entry leaves the model as
+    * it was.
     * The one discipline the caller owes: never reuse a batchId for
     * DIFFERENT data, and only run [[nbCompactModel]] (which folds all
     * partitions into batch 0) from a quiesced maintenance window — a
@@ -354,12 +353,9 @@ object TextAnalysis {
     require(batchId > 0,
       s"nbAppendModel: batchId must be > 0 (got $batchId) — batch 0 " +
         "belongs to the base build and compaction's folded form")
-    val tables = nbTables(batch, batchId)
-    tables.foreach { case (t, rows) => open.gate(t, rows, "nbAppendModel") }
-    open.commit(tables.foreach { case (t, rows) =>
-      rows.write.partitionBy("batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(open.path(t))
+    open.commit(leg => nbTables(batch, batchId).foreach { case (t, rows) =>
+      leg.dropLeaf(t, s"batch=$batchId")
+      leg.append(t, rows, "nbAppendModel")
     })
   }
 
@@ -399,25 +395,23 @@ object TextAnalysis {
     * as is an id [[nbCompactModel]] has already folded away — the
     * compaction trade is retraction granularity for serve-side
     * re-agg width, and losing provenance silently honoring a retract
-    * would be a lie. A crash between the two partition deletes heals
-    * on replay (either remaining dir satisfies the presence gate);
-    * only a replay of an already-COMPLETE delete throws, visibly. */
+    * would be a lie. One entry drops the batch's files from both
+    * tables; a replay of a committed delete throws, visibly. */
   def nbDeleteBatch(spark: org.apache.spark.sql.SparkSession,
       dir: String, batchId: Int): Unit = {
-    import org.apache.hadoop.fs.Path
     val open = NbModel.open(spark, dir)
     require(batchId > 0,
       s"nbDeleteBatch: batchId must be > 0 (got $batchId) — batch 0 " +
         "is the base build; retract it by rebuilding the model")
-    val fs = FsOps.fsOf(spark, dir)
-    val parts = NbModel.tables.map { case (t, _) =>
-      new Path(open.path(s"$t/batch=$batchId")) }
-    require(parts.exists(fs.exists),
+    val leaf = s"batch=$batchId"
+    require(NbModel.tables.exists { case (t, _) =>
+      open.entry.tables(t).files.exists(_.path.startsWith(s"$t/$leaf/")) },
       s"nbDeleteBatch: batch $batchId is not present in the layout — " +
         "either it was never appended, it was already deleted, or a " +
         "compaction folded it into batch 0 (per-batch provenance is " +
         "gone after nbCompactModel; retract by rebuild)")
-    open.commit(parts.foreach(FsOps.deleteIfExists(fs, _)))
+    open.commit(leg => NbModel.tables.foreach { case (t, _) =>
+      leg.dropLeaf(t, leaf) })
   }
 
   /** Compact a stored [[nbWriteModel]] layout: fold the rows that
@@ -429,14 +423,10 @@ object TextAnalysis {
     * the counts table on every classify, and k appends make that
     * shuffle k× wider than the model it encodes.
     *
-    * Staged whole-table swaps ([[OpenedLayout.replace]], the flat-layout
-    * compaction convention — the model is labels × vocab, never
-    * corpus-sized, so a full rewrite is cheap). Unlike the tombstoned
-    * ANN layouts there is NO crash-window ordering hazard here: both
-    * tables are pure additive counts and the serve re-aggregates, so
-    * a crash between the two swaps leaves a mixed compacted/raw model
-    * that still serves exactly. The one ordering constraint lives on
-    * the INGEST side, not here: compaction folds every batch
+    * One whole-table replace of both tables ([[OpenedLayout.replace]]
+    * — the model is labels × vocab, never corpus-sized, so a full
+    * rewrite is cheap). The one ordering constraint lives on the
+    * INGEST side, not here: compaction folds every batch
     * partition into batch 0, so it must run from a quiesced window —
     * a streaming replay of a pre-compaction batchId afterwards would
     * re-add rows the fold already absorbed (see [[nbAppendModel]]). */
@@ -888,9 +878,8 @@ object TextAnalysis {
     */
   def writeInvertedIndex(documents: DataFrame, dir: String,
       nBuckets: Int = 64): Unit = {
-    // The build leg also drops prior tombstones: stale ones left under
-    // the target dir would wrongly mask (and double-subtract) docs
-    // present in the NEW index.
+    // A rebuild's entry lists no prior tombstone: stale ones would
+    // wrongly mask (and double-subtract) docs present in the NEW index.
     val words = documents
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -901,7 +890,7 @@ object TextAnalysis {
     // derivable as size(positions) but stays materialized so ranked
     // serving never touches the arrays.
     Inverted.build(documents.sparkSession, dir,
-        "nBuckets" -> nBuckets.toString)(Seq(
+        "nBuckets" -> nBuckets.toString)(_ => Seq(
       "postings" -> words.groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf"),
           sort_array(collect_list(col("pos"))).as("positions"))
@@ -911,7 +900,7 @@ object TextAnalysis {
         sum(col("dl")).as("tot_dl"), lit(nBuckets).as("n_buckets"))))
   }
 
-  /** The BM25 layout. Its sidecar records `nBuckets`: serving at a
+  /** The BM25 layout. Its log entry records `nBuckets`: serving at a
     * different bucketing than the build would prune to the WRONG
     * partitions and silently return partial results; a future postings
     * reshape bumps fmt so stale dirs are rejected loudly instead of
@@ -943,8 +932,7 @@ object TextAnalysis {
     // Merge-on-write: the stored table stays CANONICAL (one row per
     // deleted doc) so the serve-side stats aggregate needs no dedup
     // shuffle — a repeated delete collapses here, at delete time,
-    // where a tiny rewrite is free. Staged replace, never overwrite a
-    // table being read.
+    // where a tiny rewrite is free.
     open.replace("tombstones" -> open.tombstones
       .map(_.unionByName(batch)).getOrElse(batch)
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
@@ -953,33 +941,29 @@ object TextAnalysis {
   /** Drain the tombstones of a [[deleteFromInvertedIndex]]'d layout by
     * rewriting postings and stats without the deleted docs — the
     * segment-merge analog: serve overhead returns to zero and the
-    * space reclaims. This is a FULL postings rewrite (staged, whole-
-    * dir swap after all Spark actions complete): a deleted doc's terms
+    * space reclaims. This is a FULL postings rewrite in one entry
+    * with the stats and the tombstone drain: a deleted doc's terms
     * hash across most buckets, so an affected-bucket-only rewrite
     * rarely skips anything — unlike the ANN cell layout where
     * deletions cluster. Stats subtract the tombstoned docs' exact
     * (count, Σdl), bit-identical to the serve-time adjustment, so a
     * compacted serve equals the masked serve equals a rebuild
-    * (spec-pinned). Whole-dir swap also retires empty buckets, so
-    * there is no retention corner here. */
+    * (spec-pinned). A bucket left with no posting leaves the list. */
   def compactInvertedIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val open = Inverted.open(spark, dir)
-    open.commit(open.tombstones.foreach { tombs =>
-      open.replace(
-        "postings" -> open.table("postings")
+    open.tombstones.foreach(tombs => open.commit { leg =>
+      leg.replace("postings", open.table("postings")
           .join(broadcast(tombs.select(col("doc_id"))), Seq("doc_id"),
-            "left_anti"),
-        "stats" -> open.table("stats")
+            "left_anti"))
+      leg.replace("stats", open.table("stats")
           .crossJoin(broadcast(tombs.agg(
             count(lit(1)).as("del_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("del_dl"))))
           .select((col("n_docs") - col("del_docs")).as("n_docs"),
             (col("tot_dl") - col("del_dl")).as("tot_dl"),
             col("n_buckets")))
-      FsOps.deleteIfExists(FsOps.fsOf(spark, dir),
-        new Path(open.path("tombstones")))
+      leg.drop("tombstones")(_ => true)
     })
   }
 
@@ -1024,7 +1008,7 @@ object TextAnalysis {
     * indexes) read: one row per (doc, term) by construction, with
     * tombstoned docs anti-joined out exactly as in the BM25 serve, so
     * a composition can never resurrect a deleted document. The dir
-    * opens as the BM25 serve opens it: its sidecar must say
+    * opens as the BM25 serve opens it: its log entry must say
     * `layout=inverted`, and the postings schema and tombstone presence
     * come from the index's snapshot, so a warm call infers nothing. */
   private[operators] def maskedPostingPairs(
@@ -1541,10 +1525,10 @@ object TextAnalysis {
     * inverted-index discipline applied to spell serving:
     * `keys/` (variant, word), per-word independent and
     * dedup-at-serve, and `stats/` (word, freq), additive. The
-    * sidecar pins the edit radius the keys were generated for — a
+    * log entry pins the edit radius the keys were generated for — a
     * serve at a different radius would silently miss candidates. */
   def writeSpellIndex(documents: DataFrame, dir: String): Unit =
-    SymSpell.build(documents.sparkSession, dir)(spellTables(documents))
+    SymSpell.build(documents.sparkSession, dir)(_ => spellTables(documents))
 
   /** APPEND a document batch to a stored [[writeSpellIndex]] layout.
     * Key rows are per-word independent (duplicates collapse in the
@@ -1553,35 +1537,24 @@ object TextAnalysis {
     * to the monolithic build — spec-pinned, and the gated query
     * shares the monolithic oracle. Sidecar-gated edit radius.
     *
-    * Crash-window contract (keys WRITE FIRST, deliberately): a crash
-    * between the two writes leaves appended keys without their stats
-    * rows — existing words' duplicate keys vanish in the serve's
-    * DISTINCT and a new word without a stats row drops at the freq
-    * inner join, so the serve is exactly the PRE-append state; the
-    * retry is then safe. The reverse order would serve inflated
-    * frequencies for existing words in the window — a state NO
-    * build/append sequence can produce. */
+    * Both tables' rows commit in one entry, so a serve never sees
+    * keys without their frequencies or the reverse. */
   def appendSpellIndex(spark: org.apache.spark.sql.SparkSession,
       documents: DataFrame, dir: String): Unit = {
     val open = SymSpell.open(spark, dir)
-    open.commit(spellTables(documents).foreach { case (t, rows) =>
-      open.append(t, rows, "appendSpellIndex")
+    open.commit(leg => spellTables(documents).foreach { case (t, rows) =>
+      leg.append(t, rows, "appendSpellIndex")
     })
   }
 
   /** DELETE words from a stored [[writeSpellIndex]] layout — the
     * vocabulary-curation path (a word is retracted, its keys must
     * stop producing candidates). Both tables rewrite without the
-    * tombstoned words and swap in ([[OpenedLayout.replace]], the
-    * compaction commit discipline; deletion batch broadcasts, one
-    * linear pass per table). Physically removed, so a later re-add
-    * via [[appendSpellIndex]] needs no tombstone reconciliation —
-    * exactly equivalent to a rebuild without the words
-    * (spec-pinned bit-for-bit). Crash window: the keys table swaps
-    * first, so a crash before the stats swap leaves orphaned stats
-    * rows for the deleted words — harmless, the serve is keys-driven
-    * and already returns the post-delete answer; the retry drains
-    * them. */
+    * tombstoned words, in one entry ([[OpenedLayout.replace]];
+    * deletion batch broadcasts, one linear pass per table). Physically
+    * removed, so a later re-add via [[appendSpellIndex]] needs no
+    * tombstone reconciliation — exactly equivalent to a rebuild
+    * without the words (spec-pinned bit-for-bit). */
   def deleteFromSpellIndex(spark: org.apache.spark.sql.SparkSession,
       words: DataFrame, dir: String): Unit = {
     val open = SymSpell.open(spark, dir)

@@ -2309,7 +2309,7 @@ object PipelineQueries {
     // INCREMENTAL substring-span dedup — the persisted fingerprint
     // layout's full lifecycle in one row: write the index on half the
     // reference slice, APPEND the other half against the stored
-    // sidecar (window/winnowW pinned, name+type append gate), then
+    // log (window/winnowW pinned, name+type append gate), then
     // serve the corpus's spans FROM THE FILES — history fingerprints
     // are read, never recomputed; the history frame supplies only the
     // extension refine's bytes. Winnowing is per-document, so the
@@ -3156,7 +3156,7 @@ object PipelineQueries {
         .orderBy("probe_term", "rnk")),
 
     // The same serve from the PERSISTED keys/stats layout
-    // (sidecar-gated edit radius) — shares text_spell_candidates'
+    // (log-gated edit radius) — shares text_spell_candidates'
     // oracle: BIGINT freq and the variant strings round-trip parquet
     // exactly.
     "text_spell_serve" -> ((s, d) => {
@@ -3183,7 +3183,7 @@ object PipelineQueries {
     }),
 
     // Spell-index delete leg: tombstone the length-8+ vocabulary
-    // words (physically rewritten out of both tables, staged swap).
+    // words (physically rewritten out of both tables in one entry).
     // Probes still derive from the full corpus — the oracle is the
     // replay with the vocabulary (index side) filtered, equivalent
     // to a rebuild without the words.
@@ -3379,7 +3379,7 @@ object PipelineQueries {
 
     // NB model COMPACTION: write the even half, append the odd half
     // (counts table now holds up to two rows per key), COMPACT — the
-    // staged whole-table swap folds to one row per key; the serve's
+    // whole-table replace folds to one row per key; the serve's
     // per-key re-aggregation is the identity on that form, so the
     // classify is bit-identical to the uncompacted serve and the
     // oracle is simply the monolithic train scoring the plain corpus.
@@ -3545,7 +3545,7 @@ object PipelineQueries {
     // Incremental growth of the stored LSH base — the add half of the
     // dedup index lifecycle: half the base builds the index, the
     // other half APPENDS (per-doc bucket rows land beside the old
-    // files, sidecar-gated parameters), and the shard serves against
+    // files, log-gated parameters), and the shard serves against
     // the union. Index rows are per-doc, so the served pairs are
     // bit-identical to the monolithic dedup_lsh_persist build and
     // gate against the same replay.
@@ -3565,7 +3565,7 @@ object PipelineQueries {
 
     // DELETION from the stored LSH base: every fifth base doc is
     // retracted before the shard serves — its buckets drop from the
-    // index (staged rewrite, meta sidecar carried), so it can never
+    // index (one replace entry, fields carried), so it can never
     // produce a candidate pair again. Index rows are per-doc, so
     // deletion ≡ rebuilding without those docs (spec-pinned); the
     // oracle is the incremental replay with the deleted base ids
@@ -4399,7 +4399,7 @@ object PipelineQueries {
     }),
 
     // BQ layout PERSISTED: the 16-byte/vector code table written +
-    // sidecar-gated; the serve is bit-identical to the in-memory path
+    // log-gated; the serve is bit-identical to the in-memory path
     // (BIGINT codes round-trip parquet exactly) — shares its oracle.
     "sim_bq_persist" -> ((s, d) => {
       val vecs = Similarity.vectors(Tables.embeddings(s, d))
@@ -4473,7 +4473,7 @@ object PipelineQueries {
     }),
 
     // COMPACTION of the BQ layout, oracle-gated: rewrite the code
-    // table without the tombstoned rows (whole-dir staged swap), drain
+    // table without the tombstoned rows (whole-table replace), drain
     // the tombstones, serve. The compacted serve is bit-identical to
     // the masked serve by the layout contract, so the row gates
     // against sim_bq_delete's exact replay — physical reclamation must
@@ -4650,8 +4650,8 @@ object PipelineQueries {
     }),
 
     // COMPACTION of the cell-blocked BQ layout — the per-cell replace
-    // shape (affected partitions rewritten one at a time) rather than
-    // the whole-dir swap; same contract, same oracle as its delete.
+    // shape (only the affected partitions rewritten) rather than
+    // the whole-table rewrite; same contract, same oracle as its delete.
     "sim_ivfbq_compact" -> ((s, d) => {
       val vecs = Similarity.vectors(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"))

@@ -3,11 +3,12 @@ package graft
 import graft.operators.{FsOps, IndexMeta}
 import org.apache.hadoop.fs.Path
 
-/** The index-sidecar contract: build parameters round-trip EXACTLY
+/** The generation-log contract: build parameters round-trip EXACTLY
   * (including JSON metacharacters — an LSH `sep` of `"` or `\` must
-  * not mangle the sidecar, or requireMatch silently compares against
-  * garbage), presence failures are loud, and the checked-filesystem
-  * helpers every swap site routes through actually check. */
+  * not mangle an entry, or requireMatch silently compares against
+  * garbage), presence failures are loud, a lost entry serves the
+  * previous generation, racing writers fail loudly, and superseded
+  * files go only after the grace. */
 class IndexMetaSpec extends SparkSpec {
 
   test("meta sidecar round-trips quotes, backslashes and unicode exactly") {
@@ -152,29 +153,6 @@ class IndexMetaSpec extends SparkSpec {
     assert(warnings.isEmpty, s"hidden staging paths: ${warnings.peek}")
   }
 
-  test("FsOps.swapInto promotes staging and clears a leftover _old dir") {
-    withTempDir("graft_fsops") { root =>
-      val fs = FsOps.fsOf(spark, root)
-      val live = s"$root/table"
-      val staging = s"$root/table_next"
-      fs.mkdirs(new Path(live))
-      fs.create(new Path(live, "a.txt"), true).close()
-      fs.mkdirs(new Path(staging))
-      fs.create(new Path(staging, "b.txt"), true).close()
-      // Leftover from a "crashed" earlier swap must not block.
-      fs.mkdirs(new Path(s"${live}_old"))
-      FsOps.swapInto(fs, staging, live)
-      assert(fs.exists(new Path(live, "b.txt")),
-        "staging contents must be live after the swap")
-      assert(!fs.exists(new Path(live, "a.txt")),
-        "old live contents must be gone after the swap")
-      assert(!fs.exists(new Path(s"${live}_old")),
-        "the aside dir must be cleaned up")
-      assert(!fs.exists(new Path(staging)),
-        "the staging dir must be consumed")
-    }
-  }
-
   test("every persisted layout records a fmt key and every lifecycle " +
       "leg rejects a mismatched one loudly") {
     // The BQ layout learned this the hard way (r14: a layout reshape
@@ -291,40 +269,6 @@ class IndexMetaSpec extends SparkSpec {
           s"layout $name served from a fmt=99 dir without naming fmt " +
             s"in its failure: $e")
       }
-    }
-  }
-
-  test("FsOps.clearStaging spares the _old recovery copy and refuses " +
-      "to sweep a staging child whose live base is missing") {
-    withTempDir("graft_fsops_cs") { root =>
-      val fs = FsOps.fsOf(spark, root)
-      def mk(name: String): Path = {
-        val p = new Path(s"$root/$name")
-        fs.mkdirs(p)
-        fs.create(new Path(p, "x.txt"), true).close()
-        p
-      }
-      // Normal crash-left staging: base table present → swept.
-      val base = mk("codes")
-      val next = mk("codes_next")
-      val comp = mk("codes_compacting")
-      val scratch = mk("_staging")
-      // The rename-aside recovery copy: must NEVER be swept here.
-      val old = mk("codes_old")
-      FsOps.clearStaging(fs, root)
-      assert(fs.exists(base) && fs.exists(old),
-        "clearStaging must not touch the live table or its _old copy")
-      assert(!fs.exists(next) && !fs.exists(comp) && !fs.exists(scratch),
-        "staging children beside a live base must be swept")
-      // Mid-swap crash signature: staging present, live base ABSENT —
-      // the staging (or _old) may be the only full copy. Refuse loudly.
-      val orphan = mk("tombstones_next")
-      val e = intercept[RuntimeException] { FsOps.clearStaging(fs, root) }
-      assert(e.getMessage.contains("no live base") &&
-        e.getMessage.contains("tombstones"),
-        s"expected the manual-recovery refusal, got: ${e.getMessage}")
-      assert(fs.exists(orphan),
-        "the orphaned staging child must survive the refusal")
     }
   }
 
@@ -661,26 +605,234 @@ class IndexMetaSpec extends SparkSpec {
     }
   }
 
-  test("a sidecar without generation tokens memoizes nothing") {
+  // ---- the generation log: lost commits, racing writers, GC ----------
+
+  private def ivfFlat: VectorCase = vectorCases.find(_.name == "ivf_flat").get
+
+  /** Every path under `dir`, relative to it, without checksum files. */
+  private def listing(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(root.relativize(_).toString)
+        .filterNot(p => p.isEmpty || p.endsWith(".crc")).toSet
+    } finally walk.close()
+  }
+
+  /** Each table's live files in the latest entry of `dir`'s log. */
+  private def liveFileSets(dir: String): Map[String, Set[String]] =
+    IndexMeta.latest(spark, dir).tables.map { case (t, lt) =>
+      t -> lt.files.map(_.path).toSet }
+
+  /** The file of the newest entry of `dir`'s log. */
+  private def newestEntry(dir: String): java.io.File =
+    new java.io.File(dir, IndexMeta.Name).listFiles()
+      .filter(_.getName.matches("""\d+\.json"""))
+      .maxBy(_.getName.stripSuffix(".json").toLong)
+
+  /** One write leg over a prepared dir, and a serve of the dir. */
+  private case class CrashCase(name: String, setup: String => Unit,
+      leg: String => Unit, serve: String => Set[org.apache.spark.sql.Row])
+
+  test("a leg whose log entry is lost serves the old generation; re-running commits") {
     import spark.implicits._
-    import graft.operators.IndexSnapshot
-    val labeled = graft.operators.Similarity.vectors(
-      Tables.embeddings(spark, sfDir))
-    for (c <- vectorCases.filter(c => Set("ivf_pq", "ivf_flat")(c.name)))
-      withTempDir(s"graft_snap_legacy_${c.name}") { dir =>
-        c.build(labeled, dir)
-        // A sidecar as an older build wrote it: no generation tokens.
-        IndexMeta.write(spark, dir, (IndexMeta.read(spark, dir) --
-          Seq(IndexSnapshot.QuantizerGen, IndexSnapshot.DataGen)).toSeq: _*)
-        val first = c.serve(dir)
-        val victims = ids(first, "neighbor_id").toSeq.sorted.take(3)
-        c.delete(victims.toDF("vec_id"), dir)
-        assert(!IndexMeta.read(spark, dir).contains(IndexSnapshot.DataGen),
-          s"${c.name}: a write leg must not add tokens to a token-less sidecar")
-        val after = c.serve(dir)
-        assert(ids(after, "neighbor_id").intersect(victims.toSet).isEmpty,
-          s"${c.name}: a token-less index must re-derive its state on " +
-            "every serve")
+    import graft.operators.TextAnalysis
+    val flat = ivfFlat
+    val docs = Tables.documents(spark, sfDir)
+    val labeled = docs.select($"doc_id", $"source".as("label"), $"text")
+    val (even, odd) =
+      (annVecs.filter($"vec_id" % 2 === 0), annVecs.filter($"vec_id" % 2 =!= 0))
+    val victims = annVecs.filter($"vec_id" % 5 === 0).select($"vec_id")
+    val docVictims = docs.filter($"doc_id" % 3 === 0).select($"doc_id")
+    def nbServe(d: String) = TextAnalysis.nbClassifyFromModel(spark,
+      docs.select($"doc_id", $"text"), d).collect().toSet
+    def spellServe(d: String) =
+      TextAnalysis.searchSpellIndex(spark, docs, d).collect().toSet
+    def nbBase(d: String): Unit = {
+      TextAnalysis.nbWriteModel(labeled.filter($"doc_id" % 2 === 0), d)
+      TextAnalysis.nbAppendModel(spark, labeled.filter($"doc_id" % 4 === 1),
+        d, 1)
+    }
+    val cases = Seq(
+      CrashCase("rebuild", flat.build(even, _), flat.build(odd, _), flat.serve),
+      CrashCase("vector append",
+        d => { flat.build(even, d); flat.delete(odd.select($"vec_id"), d) },
+        flat.append(odd, _), flat.serve),
+      CrashCase("vector delete", flat.build(annVecs, _), flat.delete(victims, _),
+        flat.serve),
+      CrashCase("leaf compaction",
+        d => { flat.build(annVecs, d); flat.delete(victims, d) }, flat.compact,
+        flat.serve),
+      CrashCase("inverted delete", TextAnalysis.writeInvertedIndex(docs, _, 8),
+        TextAnalysis.deleteFromInvertedIndex(spark, docVictims, _), bm25Serve),
+      CrashCase("inverted compaction", d => {
+          TextAnalysis.writeInvertedIndex(docs, d, 8)
+          TextAnalysis.deleteFromInvertedIndex(spark, docVictims, d)
+        }, TextAnalysis.compactInvertedIndex(spark, _), bm25Serve),
+      CrashCase("NB batch overwrite", nbBase, TextAnalysis.nbAppendModel(spark,
+        labeled.filter($"doc_id" % 4 === 3), _, 1), nbServe),
+      CrashCase("NB batch delete", nbBase, TextAnalysis.nbDeleteBatch(spark, _, 1),
+        nbServe),
+      CrashCase("symspell delete", TextAnalysis.writeSpellIndex(docs, _),
+        TextAnalysis.deleteFromSpellIndex(spark, Seq("the", "of").toDF("word"), _),
+        spellServe))
+    for (c <- cases) withTempDir(s"graft_crash_${c.name.replace(' ', '_')}") {
+      dir =>
+        c.setup(dir)
+        val (before, filesBefore) = (c.serve(dir), liveFileSets(dir))
+        c.leg(dir)
+        val (after, filesAfter) = (c.serve(dir), liveFileSets(dir))
+        assert(filesAfter != filesBefore, s"${c.name}: the leg listed no new file")
+        // The state a crash between the leg's file moves and its commit
+        // leaves: every new file on disk, no entry naming them.
+        assert(newestEntry(dir).delete())
+        assert(c.serve(dir) === before,
+          s"${c.name}: a leg without its entry changed the serve")
+        assert(liveFileSets(dir) === filesBefore, c.name)
+        c.leg(dir)
+        assert(c.serve(dir) === after,
+          s"${c.name}: re-running the leg did not commit its generation")
+    }
+  }
+
+  test("a dir holding only a pre-log sidecar fails every leg naming rebuild, untouched") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    val flat = ivfFlat
+    val docs = Tables.documents(spark, sfDir)
+    withTempDir("graft_prelog") { dir =>
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "_graft_meta.json"),
+        """{"layout":"ivf_flat","fmt":"1"}""".getBytes("UTF-8"))
+      val before = listing(dir)
+      val ids = Seq(1L, 2L)
+      val legs = Seq[(String, () => Unit)](
+        "build" -> (() => flat.build(annVecs, dir)),
+        "append" -> (() => flat.append(annVecs, dir)),
+        "delete" -> (() => flat.delete(ids.toDF("vec_id"), dir)),
+        "compact" -> (() => flat.compact(dir)),
+        "serve" -> (() => flat.serve(dir)),
+        "inverted build" -> (() => TextAnalysis.writeInvertedIndex(docs, dir, 8)),
+        "inverted delete" -> (() =>
+          TextAnalysis.deleteFromInvertedIndex(spark, ids.toDF("doc_id"), dir)),
+        "inverted compaction" -> (() =>
+          TextAnalysis.compactInvertedIndex(spark, dir)),
+        "NB append" -> (() => TextAnalysis.nbAppendModel(spark,
+          docs.select($"doc_id", $"source".as("label"), $"text"), dir, 1)),
+        "NB delete" -> (() => TextAnalysis.nbDeleteBatch(spark, dir, 1)),
+        "spell delete" -> (() => TextAnalysis.deleteFromSpellIndex(spark,
+          Seq("the").toDF("word"), dir)),
+        "fields" -> (() => IndexMeta.read(spark, dir)))
+      for ((leg, run) <- legs) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("rebuild"),
+          s"$leg on a pre-log dir failed without naming rebuild: ${e.getMessage}")
+        assert(listing(dir) === before, s"$leg changed a pre-log dir")
       }
+    }
+    // A first build that crashed leaves only its staging child: the next
+    // build goes ahead.
+    withTempDir("graft_first_crash") { dir =>
+      val junk = new java.io.File(dir, "_graft_stage-crashed/1/index/part-0.parquet")
+      junk.getParentFile.mkdirs()
+      java.nio.file.Files.write(junk.toPath, Array[Byte](1, 2, 3))
+      flat.build(annVecs, dir)
+      assert(flat.serve(dir).nonEmpty)
+    }
+  }
+
+  test("racing appends each commit or name the entry they lost; no committed row is lost") {
+    import spark.implicits._
+    val flat = ivfFlat
+    withTempDir("graft_race_append") { dir =>
+      flat.build(annVecs.filter($"vec_id" % 7 === 0), dir)
+      val results = (1 to 3).flatMap { round =>
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        try {
+          val start = new java.util.concurrent.CountDownLatch(1)
+          val legs = Seq(2 * round - 1, 2 * round).map { slice =>
+            val batch = annVecs.filter($"vec_id" % 7 === slice)
+            val ids = batch.select($"vec_id").as[Long].collect().toSet
+            ids -> pool.submit(new java.util.concurrent.Callable[Option[String]] {
+              def call(): Option[String] = {
+                start.await()
+                try { flat.append(batch, dir); None }
+                catch { case e: java.util.ConcurrentModificationException =>
+                  Some(e.getMessage) }
+              }
+            })
+          }
+          start.countDown()
+          legs.map { case (ids, f) =>
+            ids -> f.get(10, java.util.concurrent.TimeUnit.MINUTES) }
+        } finally pool.shutdownNow()
+      }
+      val stored = liveTable(dir, "index")
+        .select($"vec_id").as[Long].collect().toSet
+      results.foreach {
+        case (ids, None) =>
+          assert(ids.subsetOf(stored), "a committed append's rows are missing")
+        case (ids, Some(msg)) =>
+          assert("""entry \d+""".r.findFirstIn(msg).isDefined,
+            s"a losing append did not name the entry it lost: $msg")
+          assert(ids.intersect(stored).isEmpty,
+            "a losing append's rows were served")
+      }
+      assert(results.count(_._2.isEmpty) >= 3, "a round committed nothing")
+      info(s"${results.count(_._2.isDefined)} of 6 appends lost their race")
+    }
+  }
+
+  test("a write past the grace drops dead entries, unlisted files and emptied dirs") {
+    import spark.implicits._
+    val flat = ivfFlat
+    withTempDir("graft_gc") { dir =>
+      flat.build(annVecs, dir)
+      val victims = annVecs.filter($"vec_id" % 5 === 0).select($"vec_id")
+      flat.delete(victims, dir)
+      flat.compact(dir)
+      def plant(rel: String): java.io.File = {
+        val f = new java.io.File(dir, rel)
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
+        f
+      }
+      // What a crashed leg leaves: its staging child, and a moved file
+      // no entry lists.
+      val leftovers = Seq(plant("_graft_stage-crashed/1/index/part-0.parquet"),
+        plant("index/cell=0/part-uncommitted.parquet"))
+      val fs = FsOps.fsOf(spark, dir)
+      val aged = System.currentTimeMillis() - 2 * IndexMeta.GraceMillis
+      listing(dir).foreach(p => fs.setTimes(new Path(dir, p), aged, -1))
+      val young = plant("index/part-young.parquet")
+      val live = IndexMeta.latest(spark, dir)
+      val liveFiles = live.tables.values.flatMap(_.files).toSeq.map(f =>
+        f -> fs.getFileStatus(new Path(dir, f.path)).getModificationTime)
+      assert(liveFiles.nonEmpty && listing(dir).contains("tombstones"))
+      flat.append(annVecs.filter($"vec_id" % 5 === 0), dir)
+      val entries = new java.io.File(dir, IndexMeta.Name).list().toSet
+      assert(entries === Set(s"${live.n}.json", s"${live.n + 1}.json"),
+        "entries superseded before the grace must go; the one the write " +
+          "superseded stays for its own grace")
+      leftovers.foreach(f => assert(!f.exists(), s"$f outlived the grace"))
+      assert(young.exists(), "an unlisted file younger than the grace was deleted")
+      assert(!listing(dir).contains("tombstones") &&
+        !listing(dir).exists(_.startsWith("_graft_stage")),
+        "an emptied dir survived the sweep")
+      val listed = (IndexMeta.latest(spark, dir).tables.values ++
+        live.tables.values).flatMap(_.files.map(_.path)).toSet
+      val files = listing(dir).filter(p => new java.io.File(dir, p).isFile &&
+        !p.startsWith(IndexMeta.Name))
+      assert(files -- listed === Set("index/part-young.parquet"),
+        "files no live entry lists outlived the grace")
+      liveFiles.foreach { case (f, mtime) =>
+        val st = fs.getFileStatus(new Path(dir, f.path))
+        assert(st.getLen == f.length && st.getModificationTime == mtime,
+          s"the live file ${f.path} was touched")
+      }
+      assert(listing(dir).forall(p => !new java.io.File(dir, p).isDirectory ||
+        new java.io.File(dir, p).list().nonEmpty), "an empty dir survived")
+    }
   }
 }

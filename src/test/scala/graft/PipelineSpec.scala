@@ -405,10 +405,10 @@ class PipelineSpec extends SparkSpec {
         nprobe = 2).collect().toSet
       assert(compacted === wantMasked,
         "compaction changed a served result")
-      assert(spark.read.parquet(s"$dir/index")
+      assert(liveTable(dir, "index")
         .filter($"vec_id" === victim).count() === 0,
         "compaction left the tombstoned row's files on disk")
-      assert(spark.read.parquet(s"$dir/tombstones").count() === 0,
+      assert(liveTable(dir, "tombstones").count() === 0,
         "compaction did not drain the tombstone table")
     }
     withTempDir("graft_imi_spec_app") { dir =>
@@ -451,7 +451,7 @@ class PipelineSpec extends SparkSpec {
     val vecs = clusteredVecs()
     withTempDir("graft_imi_prune") { dir =>
       Similarity.writeImiIndex(vecs, Similarity.imiSubCentroids(vecs), dir)
-      val onDisk = spark.read.parquet(s"$dir/index")
+      val onDisk = liveTable(dir, "index")
         .select($"c0", $"c1").distinct().count()
       assert(onDisk === 8, s"fixture holds $onDisk pair leaves, not 8")
       val served = Similarity.searchImiIndex(spark, dir,
@@ -498,10 +498,10 @@ class PipelineSpec extends SparkSpec {
         nprobe = 2).collect().toSet
       assert(compacted === wantMasked,
         "compaction changed a served result")
-      assert(spark.read.parquet(s"$dir/index")
+      assert(liveTable(dir, "index")
         .filter($"vec_id" === victim).count() === 0,
         "compaction left the tombstoned row's files on disk")
-      assert(spark.read.parquet(s"$dir/tombstones").count() === 0,
+      assert(liveTable(dir, "tombstones").count() === 0,
         "compaction did not drain the tombstone table")
     }
     withTempDir("graft_imi_life_app") { dir =>
@@ -566,7 +566,7 @@ class PipelineSpec extends SparkSpec {
       // integer metadata (fmt 2: the input's non-vector columns ride
       // beside the codes for the filtered serve) — no float/vector
       // column anywhere in the index table.
-      assert(spark.read.parquet(s"$dir/codes").columns.toSet ===
+      assert(liveTable(dir, "codes").columns.toSet ===
         Set("vec_id", "sub", "cid", "label", "c0", "c1"),
         "code table must hold codes + metadata + pair keys, never floats")
       // A deleted id can never be NOMINATED (masked before the ADC
@@ -584,10 +584,10 @@ class PipelineSpec extends SparkSpec {
       assert(Similarity.searchImiPqIndex(spark, dir, vecs, probes, 3)
         .collect().toSet === wantMasked,
         "compaction changed a served result")
-      assert(spark.read.parquet(s"$dir/codes")
+      assert(liveTable(dir, "codes")
         .filter($"vec_id" === victim).count() === 0,
         "compaction left the tombstoned row's code files on disk")
-      assert(spark.read.parquet(s"$dir/tombstones").count() === 0,
+      assert(liveTable(dir, "tombstones").count() === 0,
         "compaction did not drain the tombstone table")
     }
     withTempDir("graft_imipq_spec_app") { dir =>
@@ -617,14 +617,14 @@ class PipelineSpec extends SparkSpec {
     val vecs = clusteredVecs()
     withTempDir("graft_imi_appcols") { dir =>
       Similarity.writeImiIndex(vecs, Similarity.imiSubCentroids(vecs), dir)
-      val storedCols = spark.read.parquet(s"$dir/index").columns.toSet
+      val storedCols = liveTable(dir, "index").columns.toSet
       val e = intercept[IllegalArgumentException] {
         // Missing the `label` metadata column the index was built with.
         Similarity.appendImiIndex(spark, vecs.select($"vec_id", $"v"), dir)
       }
       assert(e.getMessage.contains("does not match the stored index schema"),
         s"wrong rejection message: ${e.getMessage}")
-      assert(spark.read.parquet(s"$dir/index").columns.toSet === storedCols,
+      assert(liveTable(dir, "index").columns.toSet === storedCols,
         "rejected append must leave the stored schema untouched")
       // Matching NAMES with a different TYPE is the same corruption
       // class (mixed-type parquet files that fail or silently coerce
@@ -658,14 +658,14 @@ class PipelineSpec extends SparkSpec {
       // fmt 2 — its append leg gates through the same contract.
       Similarity.writeImiPqIndex(vecs, Similarity.imiSubCentroids(vecs),
         dir)
-      val storedCols = spark.read.parquet(s"$dir/codes").columns.toSet
+      val storedCols = liveTable(dir, "codes").columns.toSet
       val e = intercept[IllegalArgumentException] {
         Similarity.appendImiPqIndex(spark, vecs.select($"vec_id", $"v"),
           dir)
       }
       assert(e.getMessage.contains("does not match the stored index schema"),
         s"wrong rejection message: ${e.getMessage}")
-      assert(spark.read.parquet(s"$dir/codes").columns.toSet === storedCols,
+      assert(liveTable(dir, "codes").columns.toSet === storedCols,
         "rejected append must leave the stored code schema untouched")
       assert(Similarity.searchImiPqIndexWhere(spark, dir, vecs,
           vecs.filter($"vec_id" % 100 < 2), 3, $"label" % 2 === 0)
@@ -1049,10 +1049,10 @@ class PipelineSpec extends SparkSpec {
       TextAnalysis.nbAppendModel(spark, batch, dir, batchId = 1)
       val want = TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
         .orderBy("doc_id").collect().toSeq
-      val wantRows = spark.read.parquet(s"$dir/counts").count()
+      val wantRows = liveTable(dir, "counts").count()
       // the redelivery: same batchId, same data — partition overwrite
       TextAnalysis.nbAppendModel(spark, batch, dir, batchId = 1)
-      assert(spark.read.parquet(s"$dir/counts").count() === wantRows,
+      assert(liveTable(dir, "counts").count() === wantRows,
         "replayed batch must replace its partition, not append beside it")
       val after = TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
         .orderBy("doc_id").collect().toSeq
@@ -1063,17 +1063,19 @@ class PipelineSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         TextAnalysis.nbAppendModel(spark, batch, dir, batchId = 0)
       }
-      // crash-window healing: a crash BETWEEN the counts and docstats
-      // writes leaves likelihoods trained on more data than priors
-      // (simulated by deleting the batch's docstats partition); the
-      // at-least-once replay of the same batchId must converge the
-      // model back to one consistent copy
-      val lost = new java.io.File(s"$dir/docstats/batch=1")
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      rmTree(lost)
-      assert(!lost.exists, "fixture: docstats/batch=1 must be gone")
+      // crash-window healing: a crash before a replay's log entry
+      // (simulated by deleting the newest entry) leaves the model as it
+      // was, and the at-least-once replay of the same batchId must
+      // converge the model back to one consistent copy
+      TextAnalysis.nbAppendModel(spark, docs.filter($"doc_id" === 3L), dir,
+        batchId = 1)
+      val log = new java.io.File(dir, graft.operators.IndexMeta.Name)
+      assert(log.listFiles().filter(_.getName.endsWith(".json"))
+        .maxBy(_.getName.stripSuffix(".json").toLong).delete(),
+        "fixture: the newest log entry must be gone")
+      assert(TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
+        .orderBy("doc_id").collect().toSeq === want,
+        "a replay without its log entry changed the model")
       TextAnalysis.nbAppendModel(spark, batch, dir, batchId = 1)
       val healed = TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
         .orderBy("doc_id").collect().toSeq
@@ -1137,16 +1139,16 @@ class PipelineSpec extends SparkSpec {
         batchId = 1)
       val before = TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
         .orderBy("doc_id").collect()
-      val rawCounts = spark.read.parquet(s"$dir/counts").count()
+      val rawCounts = liveTable(dir, "counts").count()
       TextAnalysis.nbCompactModel(spark, dir)
-      val compCounts = spark.read.parquet(s"$dir/counts")
+      val compCounts = liveTable(dir, "counts")
       // one row per (label, tok) after the fold — and strictly fewer
       // rows than the two stacked batches ("x" and others repeat)
       assert(compCounts.count() ===
         compCounts.select($"label", $"tok").distinct().count())
       assert(compCounts.count() < rawCounts,
         s"compaction did not shrink: $rawCounts -> ${compCounts.count()}")
-      assert(spark.read.parquet(s"$dir/docstats").count() === 2L)
+      assert(liveTable(dir, "docstats").count() === 2L)
       val after = TextAnalysis.nbClassifyFromModel(spark, incoming, dir)
         .orderBy("doc_id").collect()
       assert(after.toSeq === before.toSeq)
@@ -2822,10 +2824,9 @@ class PipelineSpec extends SparkSpec {
       val r2 = Similarity.bqRerankFromIndex(spark, dir, vecs, probes)
         .collect().toSet
       assert(r2 === r1, "compacted BQ serve diverged from the masked serve")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(liveTable(dir, "tombstones").isEmpty,
         "BQ tombstones not drained by compaction")
-      assert(spark.read.parquet(s"$dir/codes")
+      assert(liveTable(dir, "codes")
           .filter($"vec_id" % 7 === 0).isEmpty,
         "BQ compaction left deleted code rows behind")
       // FULL drain: delete everything, compact — the code table must
@@ -2835,7 +2836,7 @@ class PipelineSpec extends SparkSpec {
       // appended files harmlessly).
       Similarity.deleteFromBqIndex(spark, vecs.select($"vec_id"), dir)
       Similarity.compactBqIndex(spark, dir)
-      assert(spark.read.parquet(s"$dir/codes").isEmpty,
+      assert(liveTable(dir, "codes").isEmpty,
         "fully-drained BQ code table must read back as zero rows")
       assert(Similarity.bqRerankFromIndex(spark, dir, vecs, probes)
           .isEmpty, "a deleted row resurfaced after a full BQ drain")
@@ -2853,16 +2854,15 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("crash-left staging dirs are swept at op entry: compaction and " +
-      "rebuild remove them and the serve is bit-identical") {
-    import graft.operators.Similarity
+  test("unreferenced and uncommitted files under an index dir leave its serve unchanged") {
+    import graft.operators.{IndexMeta, Similarity}
     def plant(dir: String, names: String*): Seq[java.io.File] =
       names.map { n =>
         val d = new java.io.File(dir, n)
         d.mkdirs()
         val junk = new java.io.File(d, "part-junk.parquet")
         java.nio.file.Files.write(junk.toPath, Array[Byte](1, 2, 3))
-        d
+        junk
       }
     val vecs = Similarity.vectors(Tables.embeddings(spark, sfDir))
       .select($"vec_id", $"v")
@@ -2871,27 +2871,26 @@ class PipelineSpec extends SparkSpec {
       Similarity.writeBqIndex(vecs, dir)
       Similarity.deleteFromBqIndex(spark,
         vecs.filter($"vec_id" % 7 === 0).select($"vec_id"), dir)
-      val want = Similarity.bqRerankFromIndex(spark, dir, vecs, probes)
+      def serve() = Similarity.bqRerankFromIndex(spark, dir, vecs, probes)
         .collect().toSet
-      // Fakes of everything a crashed compact/delete could leave.
-      val planted = plant(dir, "codes_compacting", "tombstones_next",
-        "_staging", "codes_empty", "codes_old")
+      val want = serve()
+      // Unreadable files no entry lists, inside the tables and in a
+      // crashed leg's staging child: a serve never lists the dir.
+      val planted = plant(dir, "codes", "tombstones",
+        "_graft_stage-crashed/1/codes")
+      assert(serve() === want, "a planted unreferenced file changed the serve")
+      // An uncommitted leg: a compaction whose log entry never landed.
       Similarity.compactBqIndex(spark, dir)
-      planted.foreach(d =>
-        assert(!d.exists(), s"stale staging dir ${d.getName} survived " +
-          "the compaction entry sweep"))
-      val got = Similarity.bqRerankFromIndex(spark, dir, vecs, probes)
-        .collect().toSet
-      assert(got === want,
-        "serve diverged after sweeping planted staging dirs")
-      // Rebuild entry (Layout.build) sweeps too.
-      val planted2 = plant(dir, "codes_compacting", "tombstones_next")
+      val log = new java.io.File(dir, IndexMeta.Name)
+      assert(log.listFiles().filter(_.getName.endsWith(".json"))
+        .maxBy(_.getName.stripSuffix(".json").toLong).delete())
+      assert(serve() === want, "an uncommitted compaction changed the serve")
+      Similarity.compactBqIndex(spark, dir)
+      assert(serve() === want, "the re-run compaction changed the serve")
+      planted.foreach(f => assert(f.exists(),
+        s"$f was deleted before the log's grace"))
       Similarity.writeBqIndex(vecs, dir)
-      planted2.foreach(d =>
-        assert(!d.exists(), s"stale staging dir ${d.getName} survived " +
-          "the rebuild entry sweep"))
-      assert(Similarity.bqRerankFromIndex(spark, dir, vecs, probes)
-        .collect().nonEmpty)
+      assert(serve().nonEmpty)
     }
   }
 
@@ -2945,10 +2944,9 @@ class PipelineSpec extends SparkSpec {
         .collect().toSet
       assert(r2 === r1,
         "compacted IVF-BQ serve diverged from the masked serve")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(liveTable(dir, "tombstones").isEmpty,
         "IVF-BQ tombstones not drained by compaction")
-      assert(spark.read.parquet(s"$dir/codes")
+      assert(liveTable(dir, "codes")
           .filter($"vec_id" % 7 === 0).isEmpty,
         "IVF-BQ compaction left deleted code rows behind")
       // Layout gate: the flat-BQ searcher must refuse this dir.
@@ -2973,7 +2971,7 @@ class PipelineSpec extends SparkSpec {
       Similarity.writeIvfBqIndex(vecs, cents, dir)
       Similarity.deleteFromIvfBqIndex(spark, vecs.select($"vec_id"), dir)
       Similarity.compactIvfBqIndex(spark, dir)
-      assert(spark.read.parquet(s"$dir/codes").isEmpty,
+      assert(liveTable(dir, "codes").isEmpty,
         "fully-drained IVF-BQ code table must read back as zero rows")
       Similarity.appendIvfBqIndex(spark, batch, dir)
       val served = Similarity.searchIvfBqIndex(spark, dir, vecs, probes)
@@ -3147,11 +3145,10 @@ class PipelineSpec extends SparkSpec {
       val r2 = Similarity.searchIvfIndex(spark, dir, probes, 3,
         nprobe = 2).collect().toSet
       assert(r2 === r1, "compacted serve diverged from the masked serve")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(liveTable(dir, "tombstones").isEmpty,
         "tombstones not drained though every affected cell kept rows")
       // And the rows are physically gone, not just masked.
-      assert(spark.read.parquet(s"$dir/index")
+      assert(liveTable(dir, "index")
           .filter($"vec_id" % 7 === 0).isEmpty,
         "compaction left deleted rows in the index files")
     }
@@ -3168,7 +3165,7 @@ class PipelineSpec extends SparkSpec {
       Similarity.writeIvfSq8Index(vecs, cents, dir)
       // The stored code arrays are EXACTLY the gated per-dim
       // quantization — the layout and sim_quantize_int8 cannot diverge.
-      val stored = spark.read.parquet(s"$dir/index")
+      val stored = liveTable(dir, "index")
         .select($"vec_id", posexplode($"q").as(Seq("pos", "qv")))
         .select($"vec_id", ($"pos" + 1).as("dim"), $"qv")
         .as[(Long, Int, Int)].collect().toSet
@@ -3205,10 +3202,9 @@ class PipelineSpec extends SparkSpec {
       val r2 = Similarity.searchIvfSq8Index(spark, dir, probes, 3,
         nprobe = 2).collect().toSet
       assert(r2 === r1, "compacted SQ8 serve diverged from the masked serve")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(liveTable(dir, "tombstones").isEmpty,
         "SQ8 tombstones not drained though every affected cell kept rows")
-      assert(spark.read.parquet(s"$dir/index")
+      assert(liveTable(dir, "index")
           .filter($"vec_id" % 7 === 0).isEmpty,
         "SQ8 compaction left deleted rows in the index files")
       // Serving a non-SQ8 dir with the SQ8 searcher fails loudly (the
@@ -3241,10 +3237,9 @@ class PipelineSpec extends SparkSpec {
       val r2 = Similarity.searchIvfPqIndex(spark, dir, vecs, probes, 5)
         .collect().toSet
       assert(r2 === r1, "compacted PQ serve diverged from the masked serve")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(liveTable(dir, "tombstones").isEmpty,
         "PQ tombstones not drained though every affected cell kept rows")
-      assert(spark.read.parquet(s"$dir/codes")
+      assert(liveTable(dir, "codes")
           .filter($"vec_id" % 7 === 0).isEmpty,
         "PQ compaction left deleted rows in the code files")
     }
@@ -3310,10 +3305,11 @@ class PipelineSpec extends SparkSpec {
     withTempDir("graft_del_cell") { dir =>
       Similarity.writeIvfIndex(vecs, cents, dir)
       // Delete every vector of ONE cell while other cells survive:
-      // compaction must delete that cell's partition dir outright
+      // compaction must drop that cell's files from the live entry
       // (zero rows cannot be rewritten in) and still drain every
-      // tombstone — no retention corner.
-      val idx = spark.read.parquet(s"$dir/index")
+      // tombstone — no retention corner; the next write past the log's
+      // grace deletes the cell's dir.
+      val idx = liveTable(dir, "index")
       val victim = idx.groupBy($"cell").count()
         .orderBy($"count".asc, $"cell".asc).first().get(0)
       val doomed = idx.filter($"cell" === victim).select($"vec_id")
@@ -3321,18 +3317,26 @@ class PipelineSpec extends SparkSpec {
       val masked = Similarity.searchIvfIndex(spark, dir,
         vecs.filter($"vec_id" < 10), 3, nprobe = 2).collect().toSet
       Similarity.compactIvfIndex(spark, dir)
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/index/cell=$victim")),
-        "the emptied cell's partition dir must be deleted")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(!liveFiles(dir, "index").exists(_.startsWith(s"index/cell=$victim/")),
+        "the live entry still lists a file of the emptied cell")
+      assert(liveTable(dir, "tombstones").isEmpty,
         "tombstones must fully drain once the emptied cell's dir is gone")
       val compacted = Similarity.searchIvfIndex(spark, dir,
         vecs.filter($"vec_id" < 10), 3, nprobe = 2).collect().toSet
       assert(compacted === masked,
         "compacted serve diverged from the masked serve")
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      val aged = System.currentTimeMillis() -
+        2 * graft.operators.IndexMeta.GraceMillis
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().forEachRemaining(p =>
+        fs.setTimes(new org.apache.hadoop.fs.Path(p.toUri), aged, -1))
+      finally walk.close()
+      Similarity.deleteFromIvfIndex(spark, doomed, dir)
+      assert(!fs.exists(
+          new org.apache.hadoop.fs.Path(s"$dir/index/cell=$victim")),
+        "the emptied cell's partition dir must be deleted")
     }
   }
 
@@ -3347,10 +3351,9 @@ class PipelineSpec extends SparkSpec {
       // Full drain: the table swaps to a zero-row schema-preserving
       // file (readable — no schema-inference failure at serve time),
       // and the tombstones drain with it.
-      assert(spark.read.parquet(s"$dir/index").isEmpty,
+      assert(liveTable(dir, "index").isEmpty,
         "fully-drained index must read back as zero rows")
-      assert(spark.read.schema("vec_id LONG")
-          .parquet(s"$dir/tombstones").isEmpty,
+      assert(liveTable(dir, "tombstones").isEmpty,
         "tombstones must drain on a full-table compaction")
       val served = Similarity.searchIvfIndex(spark, dir,
         vecs.filter($"vec_id" < 5), 3, nprobe = 2)
@@ -3543,9 +3546,9 @@ class PipelineSpec extends SparkSpec {
           .as[(Long, Long, Double)].collect().toSet
         assert(compacted === want,
           "compacted BM25 serve diverged from the rebuilt index")
-        assert(!new java.io.File(s"$dirA/tombstones").exists(),
+        assert(liveFiles(dirA, "tombstones").isEmpty,
           "inverted-index compaction left the tombstone table")
-        assert(spark.read.parquet(s"$dirA/postings")
+        assert(liveTable(dirA, "postings")
             .filter($"doc_id" % 5 === 0).isEmpty,
           "compaction left deleted docs' postings")
       }
@@ -3608,7 +3611,7 @@ class PipelineSpec extends SparkSpec {
       // hashes — one payload per distinct chunk, nothing dropped,
       // nothing double-stored (the injected duplicates' chunks all
       // dedup against base).
-      val stored = spark.read.parquet(s"$dir/store").count()
+      val stored = liveTable(dir, "store").count()
       val distinctHashes = Multimodal.cdcChunks(corpus)
         .select($"chunk_hash").distinct().count()
       assert(stored === distinctHashes,
@@ -3644,7 +3647,7 @@ class PipelineSpec extends SparkSpec {
         !($"doc_id" < 100000 && $"doc_id" % 3 === 0))
       val want = Multimodal.cdcChunks(survivors)
         .select($"chunk_hash").distinct().count()
-      val got = spark.read.parquet(s"$dir/store").count()
+      val got = liveTable(dir, "store").count()
       assert(got === want,
         s"post-GC store holds $got chunks, surviving corpus references $want")
       // The deletion must have actually reclaimed something: deleted
@@ -3654,7 +3657,7 @@ class PipelineSpec extends SparkSpec {
       assert(got < before, "GC reclaimed nothing on a corpus with " +
         "uniquely-referenced deleted docs")
       // And the manifest no longer references any deleted doc.
-      assert(spark.read.parquet(s"$dir/manifest")
+      assert(liveTable(dir, "manifest")
           .filter($"doc_id" < 100000 && $"doc_id" % 3 === 0).isEmpty,
         "deleted docs survived in the manifest")
     }

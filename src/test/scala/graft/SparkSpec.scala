@@ -15,6 +15,16 @@ trait SparkSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** `table` of the persisted index at `dir`, as its live generation
+    * lists it (superseded files stay on disk for the log's grace). */
+  def liveTable(dir: String, table: String): org.apache.spark.sql.DataFrame =
+    graft.operators.IndexMeta.frame(spark, dir, table,
+      graft.operators.IndexMeta.latest(spark, dir).tables(table))
+
+  /** The live files of `table`, relative to the index dir. */
+  def liveFiles(dir: String, table: String): Seq[String] =
+    graft.operators.IndexMeta.latest(spark, dir).tables(table).files.map(_.path)
+
   /** [[SparkSpec.withTempDir]]: a fresh temp dir, recursively deleted
     * after `body`. */
   def withTempDir[A](prefix: String)(body: String => A): A =

@@ -990,16 +990,14 @@ class StreamingSpec extends SparkSpec {
   test("serve interleaved with compaction: every micro-batch either " +
       "reads a consistent table (the pinned serve result) or fails " +
       "loudly — never a half-swapped result") {
-    // The reader contract of FsOps.swapInto under concurrency: the
-    // no-live-table window is the single staging→live rename, so a
-    // concurrent serve sees the old table, the new table (identical
-    // by the compaction-parity pin), or a missing path that THROWS —
-    // it can never read half-swapped contents. Driven end-to-end: a
-    // background thread loops delete+compact on a live BQ layout
-    // (each iteration a real whole-dir swap) while micro-batches
-    // serve; every batch result that completes must equal the pinned
-    // masked serve, and any contention surfaces as an exception the
-    // batch retries — which must then succeed.
+    // The reader contract of the generation log under concurrency: a
+    // serve reads the files of the entry it opened, which no write leg
+    // moves or deletes, so it sees the old generation or the new one
+    // (identical by the compaction-parity pin) and never fails. Driven
+    // end-to-end: a background thread loops delete+compact on a live
+    // BQ layout (each iteration rewrites the whole table) while
+    // micro-batches serve; every batch must complete and equal the
+    // pinned masked serve.
     import graft.operators.Similarity
     val s = spark.newSession()
     import s.implicits._
@@ -1018,8 +1016,8 @@ class StreamingSpec extends SparkSpec {
       try {
         for (_ <- 1 to 4) {
           // Re-tombstoning already-absent ids is a no-op for the
-          // result; each compact still rewrites + swaps the table,
-          // opening a real rename window per iteration.
+          // result; each compact still rewrites the table and
+          // commits a new generation per iteration.
           Similarity.deleteFromBqIndex(s, ids, dir)
           Similarity.compactBqIndex(s, dir)
         }
@@ -1055,6 +1053,9 @@ class StreamingSpec extends SparkSpec {
       "post-compaction serve diverged from the pinned result")
     import scala.jdk.CollectionConverters._
     val recorded = outcomes.asScala.toSeq
+    assert(outcomes.asScala.count(_.isLeft) === 0,
+      s"a micro-batch serve failed while compaction ran (outcomes: " +
+        s"${recorded.filter(_.isLeft).take(20)})")
     val wrong = recorded.count(_ == Right(false))
     assert(wrong === 0,
       s"$wrong interleaved micro-batch serve(s) returned a " +
@@ -1067,13 +1068,10 @@ class StreamingSpec extends SparkSpec {
   test("serve interleaved with CELL-partitioned compaction (IVF): the " +
       "per-cell delete+rename windows never yield a half-swapped result") {
     // The cell-table compaction path has a DIFFERENT race shape than
-    // the BQ whole-dir swap: affected cells are replaced one at a time
-    // (checked delete + checked rename per `cell=` dir — rename-aside
-    // would corrupt partition discovery), so a concurrent reader can
-    // interleave with up to kCells windows per compaction. Contract is
-    // the same: masked serve ≡ compacted serve (parity pin), so every
-    // completed serve must equal the pinned result; a reader that
-    // catches a moved file fails LOUDLY and retries. Repeated
+    // the BQ whole-table rewrite: only the affected cells' files are
+    // replaced in the next entry. Contract is the same: masked serve ≡
+    // compacted serve (parity pin), so every serve must complete and
+    // equal the pinned result. Repeated
     // delete+compact of the same ids keeps the expected result
     // constant while still opening real tombstone-swap windows each
     // iteration.
@@ -1113,6 +1111,9 @@ class StreamingSpec extends SparkSpec {
     } finally compactor.join()
     assert(serveOnce() === Right(true),
       "post-compaction IVF serve diverged from the pinned result")
+    assert(outcomes.count(_.isLeft) === 0,
+      s"a serve failed while the writer ran (outcomes: " +
+        s"${outcomes.filter(_.isLeft).take(20)})")
     val wrong = outcomes.count(_ == Right(false))
     assert(wrong === 0,
       s"$wrong interleaved serve(s) returned a HALF-SWAPPED result " +
@@ -1124,13 +1125,10 @@ class StreamingSpec extends SparkSpec {
 
   test("serve interleaved with PAIR-partitioned compaction (IMI): the " +
       "two-level leaf replace windows never yield a half-swapped result") {
-    // Third swap shape in the reader contract: the multi-index
-    // compaction replaces NESTED leaf dirs (`c0=X/c1=Y`) one at a
-    // time, with parent-dir creation interleaved — more (and
-    // finer-grained) windows than the flat cell table, since k²
-    // virtual cells can be touched per compaction. Same contract:
-    // every completed serve equals the pinned masked result; a reader
-    // that catches a moved leaf fails LOUDLY and retries.
+    // Third rewrite shape in the reader contract: the multi-index
+    // compaction replaces the files of NESTED leaves (`c0=X/c1=Y`),
+    // up to k² virtual cells per compaction. Same contract: every
+    // serve completes and equals the pinned masked result.
     import graft.operators.Similarity
     val s = spark.newSession()
     import s.implicits._
@@ -1167,6 +1165,9 @@ class StreamingSpec extends SparkSpec {
     } finally compactor.join()
     assert(serveOnce() === Right(true),
       "post-compaction IMI serve diverged from the pinned result")
+    assert(outcomes.count(_.isLeft) === 0,
+      s"a serve failed while the writer ran (outcomes: " +
+        s"${outcomes.filter(_.isLeft).take(20)})")
     val wrong = outcomes.count(_ == Right(false))
     assert(wrong === 0,
       s"$wrong interleaved serve(s) returned a HALF-SWAPPED result " +
@@ -1184,9 +1185,8 @@ class StreamingSpec extends SparkSpec {
     // reads codes for the ADC shortlist and fetches floats only for
     // the shortlist, so a half-swapped window would surface as a
     // wrong shortlist (wrong top-k), not a missing column. Contract
-    // unchanged: every completed serve equals the pinned masked
-    // result; a reader that catches a moved leaf fails LOUDLY and
-    // retries.
+    // unchanged: every serve completes and equals the pinned masked
+    // result.
     import graft.operators.Similarity
     val s = spark.newSession()
     import s.implicits._
@@ -1222,6 +1222,9 @@ class StreamingSpec extends SparkSpec {
     } finally compactor.join()
     assert(serveOnce() === Right(true),
       "post-compaction Multi-D-ADC serve diverged from the pinned result")
+    assert(outcomes.count(_.isLeft) === 0,
+      s"a serve failed while the writer ran (outcomes: " +
+        s"${outcomes.filter(_.isLeft).take(20)})")
     val wrong = outcomes.count(_ == Right(false))
     assert(wrong === 0,
       s"$wrong interleaved serve(s) returned a HALF-SWAPPED result " +
@@ -1234,14 +1237,14 @@ class StreamingSpec extends SparkSpec {
   test("serve interleaved with SPELL-index delete rewrites: the " +
       "two-table staged swaps never yield a half-swapped result") {
     // The text-family swap shape: deleteFromSpellIndex rewrites BOTH
-    // the keys and stats tables (two sequential swapInto windows per
-    // delete), and the serve's inner join of keys⋈stats makes any
-    // cross-table tear VISIBLE if one were possible: a serve reading
-    // old keys with new stats (or vice versa) for the deleted words
-    // would change the candidate set. Contract as everywhere: every
-    // completed serve equals the pinned post-delete result, or fails
-    // loudly and the next try succeeds. Repeating the same delete
-    // keeps the expected result constant while opening real windows.
+    // the keys and stats tables in one entry per delete, and the
+    // serve's inner join of keys⋈stats makes any cross-table tear
+    // VISIBLE if one were possible: a serve reading old keys with new
+    // stats (or vice versa) for the deleted words would change the
+    // candidate set. Contract as everywhere: every serve completes and
+    // equals the pinned post-delete result. Repeating the same delete
+    // keeps the expected result constant while committing real
+    // generations.
     import graft.operators.TextAnalysis
     val s = spark.newSession()
     import s.implicits._
@@ -1270,6 +1273,9 @@ class StreamingSpec extends SparkSpec {
     } finally rewriter.join()
     assert(serveOnce() === Right(true),
       "post-rewrite spell serve diverged from the pinned result")
+    assert(outcomes.count(_.isLeft) === 0,
+      s"a serve failed while the writer ran (outcomes: " +
+        s"${outcomes.filter(_.isLeft).take(20)})")
     val wrong = outcomes.count(_ == Right(false))
     assert(wrong === 0,
       s"$wrong interleaved spell serve(s) returned a HALF-SWAPPED " +
@@ -1317,6 +1323,9 @@ class StreamingSpec extends SparkSpec {
     } finally rewriter.join()
     assert(serveOnce() === Right(true),
       "post-compaction BM25 serve diverged from the pinned result")
+    assert(outcomes.count(_.isLeft) === 0,
+      s"a serve failed while the writer ran (outcomes: " +
+        s"${outcomes.filter(_.isLeft).take(20)})")
     val wrong = outcomes.count(_ == Right(false))
     assert(wrong === 0,
       s"$wrong interleaved BM25 serve(s) returned a HALF-SWAPPED " +
@@ -1904,8 +1913,8 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Long, Long, String)].collect().toSet
       assert(want.nonEmpty && got === want,
         "streamed store must reassemble identically to the batch layout")
-      val gotStored = spark.read.parquet(s"$sDir/store").count()
-      val wantStored = spark.read.parquet(s"$bDir/store").count()
+      val gotStored = liveTable(sDir, "store").count()
+      val wantStored = liveTable(bDir, "store").count()
       assert(gotStored === wantStored,
         s"cross-batch dedup drifted: streamed store $gotStored chunks " +
           s"vs batch $wantStored")
